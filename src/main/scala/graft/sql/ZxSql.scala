@@ -2734,7 +2734,7 @@ object ZxSql {
     // regroup is a stateful streaming aggregation, which would break the
     // append-mode contract — and a 100k-entry interpreted probe per row is
     // slow, not wrong.
-    // Threshold MEASURED r15 (graft.tools.LmScoreProbe, sf0.1, 32 cpus,
+    // Threshold MEASURED r15 (VERDICT.md round 15, sf0.1, 32 cpus,
     // medians of 3; table padded with never-matching entries past the
     // corpus's 931 real bigrams): literal/joined sec = 931: 1.01/1.24,
     // 2000: 0.84/0.94, 5000: 1.02/0.89, 20000: 3.69/1.20 — crossover

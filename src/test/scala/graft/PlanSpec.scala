@@ -15,6 +15,28 @@ class PlanSpec extends AnyFunSuite {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(q == o, s"queries without oracle: ${q -- o}; orphan oracles: ${o -- q}")
+    // the registry is a Seq: a repeated name would silently shadow a row
+    val names = SparkEntry.rows.map(_.name)
+    assert(names.distinct == names,
+      s"duplicate row names: ${names.diff(names.distinct)}")
+    // a forward reference during object initialisation reads as null
+    val blank = SparkEntry.rows.filter(r => r.oracleSql == null || r.oracleSql.trim.isEmpty)
+    assert(blank.isEmpty, s"null or blank oracles: ${blank.map(_.name)}")
+    // every streaming replay runs a full lifecycle per call
+    val stProbe = SparkEntry.rows.filter(r => r.name.startsWith("st_") && !r.buildClass)
+    assert(stProbe.isEmpty, s"st_* rows outside the build class: ${stProbe.map(_.name)}")
+  }
+
+  test("tools harness: time runs a registry row, sql a catalog statement") {
+    val t = graft.tools.Harness.time(spark, dir, Seq("t1_time_scan"), runs = 1)
+    assert(t.errors.isEmpty, t.errors)
+    assert(t.rows.keys.toSeq == Seq("t1_time_scan") && t.rows("t1_time_scan")._1 > 0)
+    val good = "select sum(value), count(value) from events group by event_type"
+    val q = graft.tools.Harness.sql(spark, dir, Seq(good, "select x from no_such_table"),
+      runs = 1)
+    assert(q.rows.keys.toSeq == Seq("q0", "q1"))
+    // a failing statement is reported per run, not thrown
+    assert(q.errors.keys.toSeq == Seq("q1#run1"), q.errors)
   }
 
   test("time-range scan pushes the ns range into the parquet reader") {
