@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetFiles
 
 /** Write-side of the engine — the reference's storage commands re-expressed
   * as Parquet table management (SURVEY §2 S1-S4).
@@ -609,9 +610,7 @@ object EventStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = readManifestFile(fs, root, version)
     require(files.nonEmpty, s"readPinned: empty manifest under $path")
-    spark.read.option("basePath", path)
-      .option("mergeSchema", mergeSchema)
-      .parquet(files.map(f => path + "/" + f): _*)
+    readFiles(spark, path, files, mergeSchema)
   }
 
   /** Manifested compaction — same sizing policy as [[compact]], different
@@ -658,7 +657,7 @@ object EventStore {
           val staged = new org.apache.hadoop.fs.Path(root,
             "." + part + s".compact-staging-$gen")
           fs.delete(staged, true)
-          spark.read.parquet(files.map(_.toString): _*).coalesce(nOut)
+          readFiles(spark, partPath.toString, files.map(_.getName)).coalesce(nOut)
             .write.mode(SaveMode.Overwrite).parquet(staged.toString)
           val movedIn = fs.listStatus(staged)
             .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
@@ -829,8 +828,7 @@ object EventStore {
       case None           => true // unknown bounds — must admit
     })
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(df.schema(column).dataType ==
         org.apache.spark.sql.types.StringType,
       s"readPinnedWhereString: '$column' must be a string column, got " +
@@ -880,8 +878,7 @@ object EventStore {
       case None           => true // unknown bounds — must admit
     })
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.FloatType)
         .contains(df.schema(column).dataType),
@@ -1002,7 +999,7 @@ object EventStore {
     } else version
     val rel = readManifestFile(fs, root, v)
     val abs = rel.map(f => path + "/" + f)
-    val df = spark.read.option("basePath", path).parquet(abs: _*)
+    val df = readFiles(spark, path, rel)
     // STRING keys (c12c) ride the same two tiers through xxhash64: the
     // sidecar pins 8-byte hashes, never the strings (a doc-id tier would
     // otherwise cost the store's whole key column in sidecar bytes). A
@@ -1158,8 +1155,7 @@ object EventStore {
     val files = readManifestFile(fs, root, v)
     val kept = files.filter(f => keySets.get(f).forall(_.apply(key)))
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val filtered = readFiles(spark, path, bind)
       .filter(col(column) === lit(key))
     if (kept.nonEmpty) filtered else filtered.limit(0)
   }
@@ -1205,8 +1201,7 @@ object EventStore {
     val files = readManifestFile(fs, root, v)
     val kept = files.filter(f => keySets.get(f).forall(_.apply(probe)))
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val filtered = readFiles(spark, path, bind)
       .filter(col(column) === lit(key))
     if (kept.nonEmpty) filtered else filtered.limit(0)
   }
@@ -1248,8 +1243,7 @@ object EventStore {
     // every file pruned ⇒ provably empty result; bind one file so the
     // plan still carries the store's schema
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
         org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
@@ -1280,12 +1274,28 @@ object EventStore {
   }
 
   /** Bind a plan to an explicit subset of the store's files (relative
-    * paths, e.g. one side of [[manifestDiff]]). Partition columns still
-    * come from the directory names. */
-  def readFiles(spark: SparkSession, path: String, rel: Seq[String]): DataFrame = {
+    * paths, e.g. one side of [[manifestDiff]]) — the one entry point every
+    * pinned read goes through. Partition columns still come from the
+    * directory names (`basePath`). The file set is known, so opening it
+    * runs no Spark job: one driver-side listing per directory supplies the
+    * statuses, and one footer the schema — `mergeSchema` reads them all.
+    * A file missing from disk fails here, loudly, as `spark.read`'s path
+    * check does; it never silently drops rows. */
+  def readFiles(spark: SparkSession, path: String, rel: Seq[String],
+                mergeSchema: Boolean = false): DataFrame = {
     require(rel.nonEmpty, "readFiles: empty file list")
-    spark.read.option("basePath", path)
-      .parquet(rel.map(f => path + "/" + f): _*)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = rel.map(f => fs.makeQualified(new org.apache.hadoop.fs.Path(root, f)))
+    val listed = files.map(_.getParent).distinct.map { dir =>
+      val children = try fs.listStatus(dir) catch {
+        case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus]
+      }
+      dir -> children.map(st => st.getPath.getName -> st).toMap
+    }.toMap
+    val statuses = files.map(f => listed(f.getParent)
+      .getOrElse(f.getName, throw ParquetFiles.pathNotFound(f.toString)))
+    ParquetFiles.readKnown(spark, path, statuses, mergeSchema)
   }
 
   /** ROW-level change feed between two manifest versions — the CDC read

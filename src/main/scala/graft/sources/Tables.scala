@@ -1,20 +1,26 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetFiles
 
 /** Parquet table loaders for the driver testdata layout (TESTDATA.md).
   *
-  * Plain `spark.read.parquet` is deliberate: the vectorized Parquet reader +
-  * Catalyst pushdown replace the reference's entire storage layer (per-column
-  * redis processes, proc.rs:12-58) — columnar files on a distributed store
-  * ARE the "separated storage and computing layers" of README.md:4. At
-  * cluster scale the same loaders work against an object-store path; date
-  * partitioning of the events table would add directory-level pruning on top
-  * of the row-group stats we already get.
+  * A loader opens the file the way `spark.read.parquet` does — same
+  * driver-side listing, same relation, so the vectorized Parquet reader and
+  * Catalyst pushdown are untouched — but takes the schema from the file's
+  * footer on the driver ([[org.apache.spark.sql.graftbridge.ParquetFiles]])
+  * instead of in a Spark job: opening a table launches none, which is most
+  * of a small query's fixed cost. Columnar files on a distributed store
+  * replace the reference's entire storage layer (per-column redis
+  * processes, proc.rs:12-58) — they ARE the "separated storage and
+  * computing layers" of README.md:4. At cluster scale the same loaders work
+  * against an object-store path; date partitioning of the events table
+  * would add directory-level pruning on top of the row-group stats we
+  * already get.
   */
 object Tables {
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetFiles.read(s, s"$dir/$name.parquet")
 
   /** Scale-ADAPTIVE fan-out for CPU-heavy narrow work (opt guide §2: derive
     * partitioning from the input, never from a constant tuned for one box).
@@ -58,7 +64,8 @@ object Tables {
 
   /** The events table's `ts` physical encoding has varied across testdata
     * generations: parquet TIMESTAMP(NANOS) (read as LONG via the
-    * runtime-settable legacy conf), plain timestamp[us] without the UTC flag
+    * runtime-settable legacy conf, set before [[table]] converts the
+    * footer), plain timestamp[us] without the UTC flag
     * (read as TIMESTAMP_NTZ), or an already-zoned TimestampType. Normalize
     * every shape to a session-zoned TimestampType `ts` — the engine-wide
     * contract (windows, epoch-second casts, as-of joins all assume it) —
