@@ -30,9 +30,13 @@ object EventStore {
   def withEventIds(df: DataFrame, idCol: String = "event_id"): DataFrame =
     df.withColumn(idCol, monotonically_increasing_id())
 
+  /** The store's partition column, derived from the event time. */
+  private def withEventDate(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("event_date", to_date(col(tsCol)))
+
   /** S1: batch append into the date-partitioned store. */
   def append(df: DataFrame, path: String, tsCol: String = "ts"): Unit =
-    df.withColumn("event_date", to_date(col(tsCol)))
+    withEventDate(df, tsCol)
       .write.mode(SaveMode.Append)
       .partitionBy("event_date")
       .parquet(path)
@@ -46,7 +50,7 @@ object EventStore {
     * count ~= the cluster's target parallelism. */
   def appendBucketed(df: DataFrame, table: String, bucketCol: String,
                      buckets: Int = 32, tsCol: String = "ts"): Unit =
-    df.withColumn("event_date", to_date(col(tsCol)))
+    withEventDate(df, tsCol)
       .write.mode(SaveMode.Append)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
@@ -96,9 +100,7 @@ object EventStore {
     val affected = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
       .flatMap { p =>
-        val files = fs.listStatus(p.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith("."))
+        val files = fs.listStatus(p.getPath).filter(isDataFile)
         val bytes = files.map(_.getLen).sum
         val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
         if (files.length <= nOut) None
@@ -197,21 +199,19 @@ object EventStore {
       .filter(s => s.isDirectory && !s.getPath.getName.startsWith(".")
         && s.getPath.getName.contains("="))
       .flatMap { p =>
-        fs.listStatus(p.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith("."))
+        fs.listStatus(p.getPath).filter(isDataFile)
           .map(f => p.getPath.getName + "/" + f.getPath.getName)
       }
     // FLAT stores ([[createTable]] of a result with no timestamp column)
-    // keep their data files at the root — manifests (`_graft_manifest*`),
-    // markers (`_SUCCESS`) and locks/staging (dot-prefixed) are excluded
-    // by the same prefix rules the partition listing uses
-    val flat = listing
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-        && !f.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
+    // keep their data files at the root
+    val flat = listing.filter(isDataFile).map(_.getPath.getName)
     (partitioned ++ flat).sorted
   }
+
+  /** A data file, not a marker (`_SUCCESS`), manifest (`_graft_manifest*`),
+    * lock or staging entry (dot-prefixed). */
+  private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
 
   /** Files that only a MAINTENANCE commit may introduce to the manifest:
     * [[compactInPlace]]/[[clusterInPlace]] move their outputs into the
@@ -262,17 +262,11 @@ object EventStore {
     try body finally { fs.delete(lock, false); () }
   }
 
-  /** Commit `files` as the NEXT manifest version, under [[withCommitLock]].
-    * Manifest files are immutable once committed (write-tmp +
+  /** Commit `files` as the NEXT manifest version — caller MUST hold the
+    * commit lock. Manifest files are immutable once committed (write-tmp +
     * rename-to-fresh-name, version chosen inside the lock — never an
     * overwrite), which is what makes old versions time-travelable and the
-    * commit race-free. Returns the committed version. */
-  private def writeManifestFile(fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path,
-                                files: Seq[String]): Long =
-    withCommitLock(fs, root) { commitLocked(fs, root, files) }
-
-  /** The commit body — caller MUST hold the commit lock. `txn` records an
+    * commit race-free. Returns the committed version. `txn` records an
     * application transaction id INSIDE the commit (Delta's txn action):
     * the id becomes durable in exactly the same atomic rename that makes
     * the files visible, which is what gives [[appendCommitted]] its
@@ -303,6 +297,36 @@ object EventStore {
     next
   }
 
+  /** The rebasing commit every write but [[createTable]]'s and
+    * [[writeManifest]]'s goes through: under the commit lock, take the
+    * manifest AS OF COMMIT TIME (empty for a fresh store), remove
+    * `replaced`, add `added`, and commit the result with `txn`
+    * ([[commitLocked]]). Rebasing keeps files a concurrent committer added
+    * mid-run. It fails loudly, committing nothing, when a replaced file
+    * has left the manifest — a conflicting maintenance commit ran, and
+    * committing anyway would keep its copies AND ours of the same rows —
+    * or when the result is empty: dropping everything is [[reset]], and an
+    * empty manifest would break every pinned reader. Either way the
+    * moved-in files stay unmanifested debris for [[vacuum]]. */
+  private[graft] def commitRebased(fs: org.apache.hadoop.fs.FileSystem,
+                                   root: org.apache.hadoop.fs.Path, op: String,
+                                   replaced: Set[String], added: Seq[String],
+                                   txn: Option[(String, Long)] = None): Long =
+    withCommitLock(fs, root) {
+      val current = manifestVersions(fs, root).lastOption
+        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
+      val vanished = replaced -- current
+      require(vanished.isEmpty,
+        s"$op: files this operation replaced left the manifest mid-run " +
+          s"(concurrent maintenance?): ${vanished.take(3).mkString(", ")} — " +
+          "re-run against the new snapshot")
+      val next = current.filterNot(replaced) ++ added
+      require(next.nonEmpty,
+        s"$op: the commit would empty the store — use reset() to drop " +
+          "everything; an empty manifest would break every pinned reader")
+      commitLocked(fs, root, next, txn)
+    }
+
   private def readManifestText(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
                                version: Long): String = {
@@ -314,12 +338,26 @@ object EventStore {
     require(versions.contains(v),
       s"manifest v$version does not exist under $root (have: " +
         s"${versions.mkString(", ")}) — vacuumed past retention or never committed")
-    val p = manifestPath(fs, root, v)
+    readText(fs, manifestPath(fs, root, v))
+  }
+
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path): String = {
     val in = fs.open(p)
     try new String(
       org.apache.commons.io.IOUtils.toByteArray(in),
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()
   }
+
+  /** `version`, or the latest committed version for −1. */
+  private def resolveVersion(fs: org.apache.hadoop.fs.FileSystem,
+                             root: org.apache.hadoop.fs.Path,
+                             version: Long, op: String): Long =
+    if (version >= 0) version else {
+      val vs = manifestVersions(fs, root)
+      require(vs.nonEmpty, s"$op: no manifest under $root")
+      vs.last
+    }
 
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
@@ -365,21 +403,13 @@ object EventStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gen = nextGen()
-    val staged = new org.apache.hadoop.fs.Path(root, s".ingest-staging-$gen")
-    fs.delete(staged, true)
-    batch.withColumn("event_date", to_date(col(tsCol)))
-      .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-      .parquet(staged.toString)
-    val moved = moveStagedIn(fs, root, staged, "ingest", gen)
-    fs.delete(staged, true)
+    val moved = stagedWrite(fs, root, s".ingest-staging-$gen",
+      withEventDate(batch, tsCol), partitioned = true, "ingest", gen)
     // an empty batch moves nothing: commit nothing (a txn-only version
     // would burn a retention slot per idle tick — the round-8 lesson);
     // replaying an empty batch is a no-op anyway
-    if (moved.nonEmpty) withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
-      commitLocked(fs, root, current ++ moved, Some((app, batchId)))
-    }
+    if (moved.nonEmpty)
+      commitRebased(fs, root, "appendCommitted", Set.empty, moved, Some((app, batchId)))
     moved
   }
 
@@ -421,25 +451,8 @@ object EventStore {
     val partitioned = df.schema.fields.exists(f =>
       f.name == tsCol && f.dataType.typeName == "timestamp")
     val gen = nextGen()
-    val staged = new org.apache.hadoop.fs.Path(root, s".ctas-staging-$gen")
-    fs.delete(staged, true)
-    if (partitioned)
-      df.withColumn("event_date", to_date(col(tsCol)))
-        .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-        .parquet(staged.toString)
-    else df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    val moved =
-      if (partitioned) moveStagedIn(fs, root, staged, "ctas", gen)
-      else fs.listStatus(staged).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-        .map { f =>
-          val name = s"ctas-$gen-${f.getPath.getName}"
-          require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(root, name)),
-            s"createTable: moving ${f.getPath} into $root failed")
-          name
-        }
-    fs.delete(staged, true)
+    val moved = stagedWrite(fs, root, s".ctas-staging-$gen",
+      if (partitioned) withEventDate(df, tsCol) else df, partitioned, "ctas", gen)
     require(moved.nonEmpty,
       s"createTable: the statement produced no data files for $path — an " +
         "empty table has no schema to pin; gate less or skip the CTAS")
@@ -489,32 +502,11 @@ object EventStore {
       s"insertInto: $path is date-partitioned but the statement result " +
         s"has no timestamp '$tsCol' to derive partitions from")
     val gen = nextGen()
-    val staged = new org.apache.hadoop.fs.Path(root, s".ctas-staging-$gen")
-    fs.delete(staged, true)
-    if (partitioned)
-      df.withColumn("event_date", to_date(col(tsCol)))
-        .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-        .parquet(staged.toString)
-    else df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    val moved =
-      if (partitioned) moveStagedIn(fs, root, staged, "ctas", gen)
-      else fs.listStatus(staged).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-        .map { f =>
-          val name = s"ctas-$gen-${f.getPath.getName}"
-          require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(root, name)),
-            s"insertInto: moving ${f.getPath} into $root failed")
-          name
-        }
-    fs.delete(staged, true)
+    val moved = stagedWrite(fs, root, s".ctas-staging-$gen",
+      if (partitioned) withEventDate(df, tsCol) else df, partitioned, "ctas", gen)
     // an empty statement inserts nothing: no version burned (the
     // appendCommitted rule), the table is simply unchanged
-    if (moved.nonEmpty) withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
-      commitLocked(fs, root, current ++ moved)
-    }
+    if (moved.nonEmpty) commitRebased(fs, root, "insertInto", Set.empty, moved)
     moved
   }
 
@@ -653,46 +645,21 @@ object EventStore {
       val done = Future.sequence(affected.map { case (part, partPath, files, bytes, nOut) =>
         Future {
           // gen-suffixed: a concurrent compactor must never share (and
-          // then clean up) another run's staging dir — the nextGen() rule
-          val staged = new org.apache.hadoop.fs.Path(root,
-            "." + part + s".compact-staging-$gen")
-          fs.delete(staged, true)
-          readFiles(spark, partPath.toString, files.map(_.getName)).coalesce(nOut)
-            .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-          val movedIn = fs.listStatus(staged)
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-              && !f.getPath.getName.startsWith("."))
-            .map { f =>
-              val name = s"compact-$gen-${f.getPath.getName}"
-              require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(partPath, name)),
-                s"compactInPlace: moving ${f.getPath} into $partPath failed")
-              part + "/" + name
-            }.toSeq
-          fs.delete(staged, true)
-          (part, files.map(f => part + "/" + f.getName), movedIn,
+          // then clean up) another run's staging dir — the nextGen() rule.
+          // Flat: the partition column lives in the directory name.
+          val movedIn = stagedWrite(fs, root, "." + part + s".compact-staging-$gen",
+            readFiles(spark, partPath.toString, files.map(_.getName)).coalesce(nOut),
+            partitioned = false, "compact", gen, into = part)
+          (files.map(f => part + "/" + f.getName), movedIn,
             PartitionCompaction(part, files.length, bytes, movedIn.size))
         }
       })
       val results = Await.result(done, Duration.Inf)
-      val replaced = results.flatMap(_._2).toSet
-      val added = results.flatMap(_._3)
-      // the ONE commit point — an OPTIMISTIC rebase under the commit
-      // lock: the swap applies (remove replaced, add compacted) to the
-      // manifest AS OF COMMIT TIME, not as of the read above, so files a
-      // concurrent append committed mid-compaction survive the swap. If
-      // a file this compaction replaced has itself vanished from the
-      // manifest, a conflicting maintenance ran — fail loudly, leaving
-      // the compacted output as unmanifested garbage for vacuum.
-      withCommitLock(fs, root) {
-        val current = readManifestFile(fs, root)
-        val vanished = replaced -- current.toSet
-        require(vanished.isEmpty,
-          s"compactInPlace: files replaced by this compaction left the " +
-            s"manifest mid-run (concurrent maintenance?): " +
-            s"${vanished.take(3).mkString(", ")} — re-run against the new snapshot")
-        commitLocked(fs, root, current.filterNot(replaced) ++ added)
-      }
-      results.map(_._4).sortBy(_.partition)
+      // the ONE commit point: files a concurrent append committed
+      // mid-compaction survive the swap
+      commitRebased(fs, root, "compactInPlace",
+        results.flatMap(_._1).toSet, results.flatMap(_._2))
+      results.map(_._3).sortBy(_.partition)
     } finally pool.shutdown()
   }
 
@@ -743,11 +710,7 @@ object EventStore {
       "writeFileStats: no columns")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"writeFileStats: no manifest under $path")
-      vs.last
-    } else version
+    val v = resolveVersion(fs, root, version, "writeFileStats")
     val rel = readManifestFile(fs, root, v)
     val lines = columns.flatMap { c =>
       ZOrder.fileColumnStats(spark, rel.map(f => path + "/" + f), c)
@@ -803,38 +766,14 @@ object EventStore {
   def readPinnedWhereString(spark: SparkSession, path: String, column: String,
                             lo: String, hi: String, version: Long = -1L): DataFrame = {
     require(lo <= hi, s"readPinnedWhereString: empty range ['$lo', '$hi']")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhereString: no manifest under $path")
-      vs.last
-    } else version
-    val sp = statsPath(root, v)
-    require(fs.exists(sp),
-      s"readPinnedWhereString: no stats sidecar for manifest v$v under $path — " +
-        s"run writeFileStats(..., stringColumns = Seq(\"$column\")) after the commit")
-    val in = fs.open(sp)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val bounds = txt.linesIterator.collect {
+    readPruned(spark, path, version, "readPinnedWhereString", column, keys = false,
+        s"writeFileStats(..., stringColumns = Seq(\"$column\"))",
+        col(column) >= lit(lo) && col(column) <= lit(hi),
+        Some(dt => require(dt == org.apache.spark.sql.types.StringType,
+          s"readPinnedWhereString: '$column' must be a string column, got " + dt))) {
       case StrStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> (jsonUnescape(mn), jsonUnescape(mx))
-    }.toMap
-    val files = readManifestFile(fs, root, v)
-    val kept = files.filter(f => bounds.get(f) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None           => true // unknown bounds — must admit
-    })
-    val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = readFiles(spark, path, bind)
-    require(df.schema(column).dataType ==
-        org.apache.spark.sql.types.StringType,
-      s"readPinnedWhereString: '$column' must be a string column, got " +
-        df.schema(column).dataType)
-    val filtered = df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-    if (kept.nonEmpty) filtered else filtered.limit(0)
+        jsonUnescape(f) -> (jsonUnescape(mx) >= lo && jsonUnescape(mn) <= hi)
+    }
   }
 
   /** Double-stats-pruned pinned read (c8c): bind the plan to ONLY the
@@ -853,39 +792,16 @@ object EventStore {
         && lo <= hi,
       s"readPinnedWhereDouble: bounds must be finite with lo <= hi, " +
         s"got [$lo, $hi]")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhereDouble: no manifest under $path")
-      vs.last
-    } else version
-    val sp = statsPath(root, v)
-    require(fs.exists(sp),
-      s"readPinnedWhereDouble: no stats sidecar for manifest v$v under $path — " +
-        s"run writeFileStats(..., doubleColumns = Seq(\"$column\")) after the commit")
-    val in = fs.open(sp)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val bounds = txt.linesIterator.collect {
+    readPruned(spark, path, version, "readPinnedWhereDouble", column, keys = false,
+        s"writeFileStats(..., doubleColumns = Seq(\"$column\"))",
+        col(column) >= lit(lo) && col(column) <= lit(hi),
+        Some(dt => require(dt == org.apache.spark.sql.types.DoubleType ||
+            dt == org.apache.spark.sql.types.FloatType,
+          s"readPinnedWhereDouble: '$column' must be float/double, got " + dt))) {
+      // primitive IEEE compare
       case DblStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> ((mn.toDouble, mx.toDouble))
-    }.toMap
-    val files = readManifestFile(fs, root, v)
-    val kept = files.filter(f => bounds.get(f) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi // primitive IEEE compare
-      case None           => true // unknown bounds — must admit
-    })
-    val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = readFiles(spark, path, bind)
-    require(Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.FloatType)
-        .contains(df.schema(column).dataType),
-      s"readPinnedWhereDouble: '$column' must be float/double, got " +
-        df.schema(column).dataType)
-    val filtered = df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-    if (kept.nonEmpty) filtered else filtered.limit(0)
+        jsonUnescape(f) -> (mx.toDouble >= lo && mn.toDouble <= hi)
+    }
   }
 
   private def keysPath(root: org.apache.hadoop.fs.Path, v: Long) =
@@ -992,11 +908,7 @@ object EventStore {
       s"writeFileKeySets: bloomFpp must be in (0,1), got $bloomFpp")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"writeFileKeySets: no manifest under $path")
-      vs.last
-    } else version
+    val v = resolveVersion(fs, root, version, "writeFileKeySets")
     val rel = readManifestFile(fs, root, v)
     val abs = rel.map(f => path + "/" + f)
     val df = readFiles(spark, path, rel)
@@ -1008,10 +920,7 @@ object EventStore {
     // results stay exact; only scan width is probabilistic.
     val hashed = df.schema(column).dataType ==
       org.apache.spark.sql.types.StringType
-    require(hashed || Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-        .contains(df.schema(column).dataType),
+    require(hashed || IntegralTypes(df.schema(column).dataType),
       s"writeFileKeySets: '$column' must be integral or string, got " +
         df.schema(column).dataType)
     // absolute URI → manifest-relative name: input_file_name() returns a
@@ -1128,37 +1037,10 @@ object EventStore {
     * admitted (conservative) — then apply the row filter. Results equal
     * `readPinned(...).filter(column === key)` exactly. */
   def readPinnedPoint(spark: SparkSession, path: String, column: String,
-                      key: Long, version: Long = -1L): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedPoint: no manifest under $path")
-      vs.last
-    } else version
-    val kp = keysPath(root, v)
-    require(fs.exists(kp),
-      s"readPinnedPoint: no key-set sidecar for manifest v$v under $path — " +
-        s"run writeFileKeySets(..., \"$column\") after the commit")
-    val in = fs.open(kp)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val keySets: Map[String, Long => Boolean] = txt.linesIterator.collect {
-      case KeysLine(f, c, ks) if jsonUnescape(c) == column =>
-        val set = ks.split(',').filter(_.nonEmpty).map(_.toLong).toSet
-        jsonUnescape(f) -> ((k: Long) => set.contains(k))
-      case BloomLine(f, c, bk, bm) if jsonUnescape(c) == column =>
-        val bits = java.util.Base64.getDecoder.decode(bm)
-        jsonUnescape(f) -> ((k: Long) => bloomContains(bits, bk.toInt, k))
-    }.toMap
-    val files = readManifestFile(fs, root, v)
-    val kept = files.filter(f => keySets.get(f).forall(_.apply(key)))
-    val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = readFiles(spark, path, bind)
-      .filter(col(column) === lit(key))
-    if (kept.nonEmpty) filtered else filtered.limit(0)
-  }
+                      key: Long, version: Long = -1L): DataFrame =
+    readPruned(spark, path, version, "readPinnedPoint", column, keys = true,
+        s"writeFileKeySets(..., \"$column\")", col(column) === lit(key))(
+      memberOf(column, key, KeysLine, BloomLine))
 
   /** Membership-pruned point lookup on a STRING key column (c12c): the
     * sidecar pinned xxhash64 hashes ([[writeFileKeySets]] on a string
@@ -1170,40 +1052,25 @@ object EventStore {
   def readPinnedPointString(spark: SparkSession, path: String, column: String,
                             key: String, version: Long = -1L): DataFrame = {
     require(key != null, "readPinnedPointString: null key has no membership")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedPointString: no manifest under $path")
-      vs.last
-    } else version
-    val kp = keysPath(root, v)
-    require(fs.exists(kp),
-      s"readPinnedPointString: no key-set sidecar for manifest v$v under " +
-        s"$path — run writeFileKeySets(..., \"$column\") after the commit")
     // the probe hash must be EXACTLY the hash the writer's xxhash64
-    // column produced — compute it through the same Spark expression
-    // (one 1-row local-relation job, constant-folded, no cluster work)
-    val probe = spark.range(1)
-      .select(xxhash64(lit(key)).as("h")).head().getLong(0)
-    val in = fs.open(kp)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val keySets: Map[String, Long => Boolean] = txt.linesIterator.collect {
-      case HKeysLine(f, c, ks) if jsonUnescape(c) == column =>
-        val set = ks.split(',').filter(_.nonEmpty).map(_.toLong).toSet
-        jsonUnescape(f) -> ((k: Long) => set.contains(k))
-      case HBloomLine(f, c, bk, bm) if jsonUnescape(c) == column =>
-        val bits = java.util.Base64.getDecoder.decode(bm)
-        jsonUnescape(f) -> ((k: Long) => bloomContains(bits, bk.toInt, k))
-    }.toMap
-    val files = readManifestFile(fs, root, v)
-    val kept = files.filter(f => keySets.get(f).forall(_.apply(probe)))
-    val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = readFiles(spark, path, bind)
-      .filter(col(column) === lit(key))
-    if (kept.nonEmpty) filtered else filtered.limit(0)
+    // column produced: the same catalyst expression (seed 42, as
+    // functions.xxhash64 builds it), evaluated on the driver
+    val probe = new org.apache.spark.sql.catalyst.expressions.XxHash64(
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(key))).eval().asInstanceOf[Long]
+    readPruned(spark, path, version, "readPinnedPointString", column, keys = true,
+        s"writeFileKeySets(..., \"$column\")", col(column) === lit(key))(
+      memberOf(column, probe, HKeysLine, HBloomLine))
+  }
+
+  /** A key-set sidecar line's verdict on `key`: an exact set admits its
+    * members, a bloom everything it may hold (a miss proves absence). */
+  private def memberOf(column: String, key: Long, setLine: scala.util.matching.Regex,
+                       bloomLine: scala.util.matching.Regex)
+      : PartialFunction[String, (String, Boolean)] = {
+    case setLine(f, c, ks) if jsonUnescape(c) == column =>
+      jsonUnescape(f) -> ks.split(',').exists(k => k.nonEmpty && k.toLong == key)
+    case bloomLine(f, c, bk, bm) if jsonUnescape(c) == column =>
+      jsonUnescape(f) -> bloomContains(java.util.Base64.getDecoder.decode(bm), bk.toInt, key)
   }
 
   /** Stats-pruned pinned read: bind the plan to ONLY the manifest files
@@ -1215,42 +1082,49 @@ object EventStore {
     * [[writeFileStats]] for this version to exist; integral columns only
     * (enforced on the bound plan's schema). */
   def readPinnedWhere(spark: SparkSession, path: String, column: String,
-                      lo: Long, hi: Long, version: Long = -1L): DataFrame = {
+                      lo: Long, hi: Long, version: Long = -1L): DataFrame =
+    readPruned(spark, path, version, "readPinnedWhere", column, keys = false,
+        s"writeFileStats(..., Seq(\"$column\"))",
+        col(column) >= lit(lo) && col(column) <= lit(hi),
+        Some(dt => require(IntegralTypes(dt),
+          s"readPinnedWhere: '$column' must be integral (timestamps belong to " +
+            "date-partition pruning) — got " + dt))) {
+      case StatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
+        jsonUnescape(f) -> (mx.toLong >= lo && mn.toLong <= hi)
+    }
+
+  private val IntegralTypes = Set[org.apache.spark.sql.types.DataType](
+    org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
+    org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
+
+  /** The one sidecar-pruned read behind the five `readPinned*` filters:
+    * resolve `version`, require its sidecar (`keys` = the key-set one,
+    * else stats; `pin` names the call that writes it), parse each sidecar
+    * line through `admit` to a (file, admitted) verdict, and bind only the
+    * manifest files not rejected — a file without a line is admitted, so
+    * pruning is conservative. `check` vets `column`'s bound type, and
+    * `rows` is the row filter, so results equal
+    * `readPinned(...).filter(rows)` exactly. Every file pruned ⇒ provably
+    * empty result; one file is still bound so the plan carries the
+    * store's schema. */
+  private def readPruned(spark: SparkSession, path: String, version: Long,
+                         op: String, column: String, keys: Boolean, pin: String,
+                         rows: Column,
+                         check: Option[org.apache.spark.sql.types.DataType => Unit] = None)
+                        (admit: PartialFunction[String, (String, Boolean)]): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhere: no manifest under $path")
-      vs.last
-    } else version
-    val sp = statsPath(root, v)
-    require(fs.exists(sp),
-      s"readPinnedWhere: no stats sidecar for manifest v$v under $path — " +
-        s"run writeFileStats(..., Seq(\"$column\")) after the commit")
-    val in = fs.open(sp)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val ranges = txt.linesIterator.collect {
-      case StatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> (mn.toLong, mx.toLong)
-    }.toMap
+    val v = resolveVersion(fs, root, version, op)
+    val sidecar = if (keys) keysPath(root, v) else statsPath(root, v)
+    require(fs.exists(sidecar),
+      s"$op: no ${if (keys) "key-set" else "stats"} sidecar for manifest v$v " +
+        s"under $path — run $pin after the commit")
+    val verdicts = readText(fs, sidecar).linesIterator.collect(admit).toMap
     val files = readManifestFile(fs, root, v)
-    val kept = files.filter(f => ranges.get(f) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None           => true // unknown range — must admit
-    })
-    // every file pruned ⇒ provably empty result; bind one file so the
-    // plan still carries the store's schema
-    val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = readFiles(spark, path, bind)
-    require(Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-        .contains(df.schema(column).dataType),
-      s"readPinnedWhere: '$column' must be integral (timestamps belong to " +
-        "date-partition pruning) — got " + df.schema(column).dataType)
-    val filtered = df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+    val kept = files.filter(verdicts.getOrElse(_, true))
+    val df = readFiles(spark, path, if (kept.nonEmpty) kept else files.take(1))
+    check.foreach(_(df.schema(column).dataType))
+    val filtered = df.filter(rows)
     if (kept.nonEmpty) filtered else filtered.limit(0)
   }
 
@@ -1368,10 +1242,7 @@ object EventStore {
     val dfs = dst.getFileSystem(conf)
     require(!dfs.exists(dst) || dfs.listStatus(dst).isEmpty,
       s"cloneSnapshot: destination $dstPath is not empty")
-    val v = if (version >= 0) version
-      else manifestVersions(sfs, src).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"cloneSnapshot: $srcPath has no manifest"))
+    val v = resolveVersion(sfs, src, version, "cloneSnapshot")
     val rel = readManifestFile(sfs, src, v)
     require(rel.nonEmpty, s"cloneSnapshot: version $v lists no files")
     val sc = spark.sparkContext
@@ -1393,7 +1264,7 @@ object EventStore {
       }
     require(copied.value >= rel.size,
       s"cloneSnapshot: copy tasks reported ${copied.value} of ${rel.size} files")
-    withCommitLock(dfs, dst) { commitLocked(dfs, dst, rel) }
+    commitRebased(dfs, dst, "cloneSnapshot", Set.empty, rel)
     rel.size
   }
 
@@ -1405,7 +1276,7 @@ object EventStore {
   // 100 TB store eventually needs — with the same copy-on-write shape
   // table formats use: touched files are rewritten under maintenance
   // names, untouched files are never opened, and ONE manifest commit
-  // (optimistic rebase under the commit lock, like [[compactInPlace]])
+  // ([[commitRebased]], under the commit lock)
   // swaps the row change in atomically. Readers pinned to an old version
   // keep their snapshot; [[vacuum]] reclaims the replaced files later.
 
@@ -1441,30 +1312,42 @@ object EventStore {
   private[graft] def nextGen(): Long =
     ((System.currentTimeMillis() << 20) + genCounter.getAndIncrement()) & Long.MaxValue
 
-  /** Move every data file under `staged` (a hidden staging dir holding a
-    * date-partitioned write) into the live partition dirs under
-    * `prefix-gen-` maintenance names; returns the moved files' relative
-    * paths. Partition dirs an append never created yet are created here —
-    * a merge may insert into brand-new dates. */
-  private def moveStagedIn(fs: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path,
-                           staged: org.apache.hadoop.fs.Path,
-                           prefix: String, gen: Long): Seq[String] = {
-    val parts = fs.listStatus(staged).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    parts.flatMap { p =>
-      val live = new org.apache.hadoop.fs.Path(root, p.getPath.getName)
+  /** The one staged write: `df` goes to the hidden dir `staging` under
+    * `root` — date-partitioned on its `event_date` column when
+    * `partitioned`, flat otherwise — and its data files then move into the
+    * live store under `prefix-gen-` maintenance names: a partitioned write
+    * into the matching partition dirs (created when new — a merge may
+    * insert into brand-new dates), a flat one into the dir `into` (the
+    * root when empty). No live file is renamed away and nothing is visible
+    * before the caller's commit: a crash leaves only staging and
+    * unmanifested maintenance names, which [[writeManifest]] never adopts
+    * and [[vacuum]] reclaims. Returns the moved files' manifest-relative
+    * paths. */
+  private def stagedWrite(fs: org.apache.hadoop.fs.FileSystem,
+                          root: org.apache.hadoop.fs.Path, staging: String,
+                          df: DataFrame, partitioned: Boolean, prefix: String,
+                          gen: Long, into: String = ""): Seq[String] = {
+    val staged = new org.apache.hadoop.fs.Path(root, staging)
+    fs.delete(staged, true)
+    val writer = df.write.mode(SaveMode.Overwrite)
+    (if (partitioned) writer.partitionBy("event_date") else writer).parquet(staged.toString)
+    def moveIn(from: org.apache.hadoop.fs.Path, dir: String): Seq[String] = {
+      val live = if (dir.isEmpty) root else new org.apache.hadoop.fs.Path(root, dir)
       if (!fs.exists(live)) fs.mkdirs(live)
-      fs.listStatus(p.getPath)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-        .map { f =>
-          val name = s"$prefix-$gen-${f.getPath.getName}"
-          require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, name)),
-            s"$prefix: moving ${f.getPath} into $live failed")
-          p.getPath.getName + "/" + name
-        }.toSeq
+      fs.listStatus(from).toSeq.filter(isDataFile).map { f =>
+        val name = s"$prefix-$gen-${f.getPath.getName}"
+        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, name)),
+          s"$prefix: moving ${f.getPath} into $live failed")
+        if (dir.isEmpty) name else dir + "/" + name
+      }
     }
+    val moved =
+      if (partitioned) fs.listStatus(staged).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap(p => moveIn(p.getPath, p.getPath.getName))
+      else moveIn(staged, into)
+    fs.delete(staged, true)
+    moved
   }
 
   /** Copy-on-write MERGE (upsert) into the manifested store, with
@@ -1520,31 +1403,17 @@ object EventStore {
       val rowsDeleted = hits.values.sum
       // rewrite: ONLY the affected files, matching keys anti-joined out;
       // event_date is recomputed from tsCol exactly as append derives it
-      val rewritten = if (affected.isEmpty) Seq.empty[String] else {
-        val staged = new org.apache.hadoop.fs.Path(root, s".merge-rewrite-$gen")
-        fs.delete(staged, true)
-        readFiles(spark, path, affected).drop("event_date")
-          .join(keys, keyCols, "left_anti")
-          .withColumn("event_date", to_date(col(tsCol)))
-          .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-          .parquet(staged.toString)
-        val moved = moveStagedIn(fs, root, staged, "merge", gen)
-        fs.delete(staged, true)
-        moved
-      }
+      val rewritten = if (affected.isEmpty) Seq.empty[String] else
+        stagedWrite(fs, root, s".merge-rewrite-$gen", withEventDate(
+          readFiles(spark, path, affected).drop("event_date")
+            .join(keys, keyCols, "left_anti"), tsCol),
+          partitioned = true, "merge", gen)
       // insert: every update row, as a normal date-partitioned write
       val rowsInserted = upd.count()
-      val inserted = if (rowsInserted == 0) Seq.empty[String] else {
-        val staged = new org.apache.hadoop.fs.Path(root, s".merge-insert-$gen")
-        fs.delete(staged, true)
-        upd.withColumn("event_date", to_date(col(tsCol)))
-          .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-          .parquet(staged.toString)
-        val moved = moveStagedIn(fs, root, staged, "merge", gen)
-        fs.delete(staged, true)
-        moved
-      }
-      commitCow(fs, root, "mergeInto", affected.toSet, rewritten ++ inserted)
+      val inserted = if (rowsInserted == 0) Seq.empty[String] else
+        stagedWrite(fs, root, s".merge-insert-$gen", withEventDate(upd, tsCol),
+          partitioned = true, "merge", gen)
+      commitRebased(fs, root, "mergeInto", affected.toSet, rewritten ++ inserted)
       MergeStats(manifest.size - affected.size, affected.size, 0,
         inserted.size, rowsDeleted, rowsInserted)
     } finally upd.unpersist(blocking = false)
@@ -1587,35 +1456,14 @@ object EventStore {
     val dropped = manifest.filter(f => counts.get(f).exists { case (m, n) => m == n && n > 0 })
     val partial = manifest.filter(f => counts.get(f).exists { case (m, n) => m > 0 && m < n })
     val rowsDeleted = counts.values.map(_._1).sum
-    // FLAT stores rewrite without the partition round-trip — same COW
-    // protocol, root-level move-in
     val rewritten = if (partial.isEmpty) Seq.empty[String] else {
-      val staged = new org.apache.hadoop.fs.Path(root, s".delete-rewrite-$gen")
-      fs.delete(staged, true)
       val kept = readFiles(spark, path, partial)
         .filter(!coalesce(predicate, lit(false)))
-      val moved = if (partitioned) {
-        kept.drop("event_date")
-          .withColumn("event_date", to_date(col(tsCol)))
-          .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-          .parquet(staged.toString)
-        moveStagedIn(fs, root, staged, "delete", gen)
-      } else {
-        kept.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-        fs.listStatus(staged).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith("."))
-          .map { f =>
-            val name = s"delete-$gen-${f.getPath.getName}"
-            require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(root, name)),
-              s"deleteWhere: moving ${f.getPath} into $root failed")
-            name
-          }
-      }
-      fs.delete(staged, true)
-      moved
+      stagedWrite(fs, root, s".delete-rewrite-$gen",
+        if (partitioned) withEventDate(kept.drop("event_date"), tsCol) else kept,
+        partitioned, "delete", gen)
     }
-    commitCow(fs, root, "deleteWhere", (dropped ++ partial).toSet, rewritten)
+    commitRebased(fs, root, "deleteWhere", (dropped ++ partial).toSet, rewritten)
     MergeStats(manifest.size - dropped.size - partial.size, partial.size,
       dropped.size, 0, rowsDeleted, 0L)
   }
@@ -1670,8 +1518,6 @@ object EventStore {
     if (affected.isEmpty)
       return MergeStats(manifest.size, 0, 0, 0, 0L, 0L)
     val pred = coalesce(predicate, lit(false))
-    val staged = new org.apache.hadoop.fs.Path(root, s".merge-rewrite-$gen")
-    fs.delete(staged, true)
     val base = readFiles(spark, path, affected)
     val base2 = if (partitioned) base.drop("event_date") else base
     // ALL assignments evaluate against the OLD row (SQL semantics):
@@ -1691,31 +1537,17 @@ object EventStore {
     val updated = staged0.foldLeft(withTmp) { case (df, ((c, _), i)) =>
       df.withColumn(c, col(s"__set$i"))
     }.drop(staged0.map { case (_, i) => s"__set$i" }: _*)
-    val moved = if (partitioned) {
-      updated.withColumn("event_date", to_date(col(tsCol)))
-        .write.partitionBy("event_date").mode(SaveMode.Overwrite)
-        .parquet(staged.toString)
-      moveStagedIn(fs, root, staged, "merge", gen)
-    } else {
-      updated.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-      fs.listStatus(staged).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-        .map { f =>
-          val name = s"merge-$gen-${f.getPath.getName}"
-          require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(root, name)),
-            s"updateWhere: moving ${f.getPath} into $root failed")
-          name
-        }
-    }
-    fs.delete(staged, true)
-    commitCow(fs, root, "updateWhere", affected.toSet, moved)
+    val moved = stagedWrite(fs, root, s".merge-rewrite-$gen",
+      if (partitioned) withEventDate(updated, tsCol) else updated,
+      partitioned, "merge", gen)
+    commitRebased(fs, root, "updateWhere", affected.toSet, moved)
     MergeStats(manifest.size - affected.size, affected.size, 0, 0,
       0L, rowsMatched)
   }
 
-  /** Loud driver-memory guard on the COW DETECTION maps: both [[mergeInto]]
-    * and [[deleteWhere]] collect one constant-width (file, counts) row per
+  /** Loud driver-memory guard on the COW DETECTION maps: [[mergeInto]],
+    * [[deleteWhere]] and [[updateWhere]] collect one constant-width
+    * (file, counts) row per
     * manifested file — the same driver dimension as Spark's own FileIndex —
     * but at 10^6 files that map is ~100 MB and deserves the same explicit
     * budget the key-set sidecar has ([[writeFileKeySets]]), not an implicit
@@ -1730,33 +1562,8 @@ object EventStore {
       s"$op: the per-file detection map over $nFiles manifested files is " +
         s"~$est bytes on the driver, over driverBudgetBytes=" +
         s"$driverBudgetBytes — compact the store first (compact/" +
-        "compactManifested) or raise the budget deliberately")
+        "compactInPlace) or raise the budget deliberately")
   }
-
-  /** The shared copy-on-write commit: remove `replaced`, add `added`, as
-    * ONE manifest version under the commit lock — rebased onto the
-    * manifest AS OF COMMIT TIME so a concurrent append's files survive,
-    * failing loudly if a replaced file left the manifest mid-run
-    * (conflicting maintenance). An empty post-merge manifest is legal for
-    * a whole-store delete ONLY via an explicit empty commit — but an
-    * empty store breaks [[readPinned]]'s nonempty require, so refuse it
-    * loudly: a delete of everything is [[reset]], not a merge. */
-  private def commitCow(fs: org.apache.hadoop.fs.FileSystem,
-                        root: org.apache.hadoop.fs.Path, op: String,
-                        replaced: Set[String], added: Seq[String]): Long =
-    withCommitLock(fs, root) {
-      val current = readManifestFile(fs, root)
-      val vanished = replaced -- current.toSet
-      require(vanished.isEmpty,
-        s"$op: files this operation replaced left the manifest mid-run " +
-          s"(concurrent maintenance?): ${vanished.take(3).mkString(", ")} — " +
-          "re-run against the new snapshot")
-      val next = current.filterNot(replaced) ++ added
-      require(next.nonEmpty,
-        s"$op: the commit would empty the store — use reset() to drop " +
-          "everything; an empty manifest would break every pinned reader")
-      commitLocked(fs, root, next)
-    }
 
   /** Outcome of [[clusterInPlace]]. */
   final case class ClusterStats(filesBefore: Int, filesAfter: Int, bytes: Long)
@@ -1806,40 +1613,16 @@ object EventStore {
     val df = readPinned(spark, path)
     val ranges = ZOrder.columnRanges(df, zCols)
     val gen = nextGen()
-    val staged = new org.apache.hadoop.fs.Path(root, s".zorder-staging-$gen")
-    fs.delete(staged, true)
-    df.withColumn("__z",
-        ZOrder.zValueN(zCols.map(c => (col(c), ranges(c)))))
-      .repartitionByRange(nOut, col("event_date"), col("__z"))
-      .sortWithinPartitions(col("event_date"), col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("event_date").parquet(staged.toString)
-    val movedIn = fs.listStatus(staged).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .flatMap { p =>
-        val live = new org.apache.hadoop.fs.Path(root, p.getPath.getName)
-        fs.mkdirs(live)
-        fs.listStatus(p.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith("."))
-          .map { f =>
-            val name = s"zorder-$gen-${f.getPath.getName}"
-            require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, name)),
-              s"clusterInPlace: moving ${f.getPath} into $live failed")
-            p.getPath.getName + "/" + name
-          }
-      }
-    fs.delete(staged, true)
-    // the ONE commit point — optimistic rebase like compactInPlace's:
-    // the rewrite replaces exactly the file set it READ; files a
-    // concurrent append committed mid-rewrite are carried forward (they
-    // are simply not clustered yet — the next clusterInPlace picks them
-    // up).
-    withCommitLock(fs, root) {
-      val current = readManifestFile(fs, root)
-      commitLocked(fs, root, current.filterNot(manifest.toSet) ++ movedIn)
-    }
+    val movedIn = stagedWrite(fs, root, s".zorder-staging-$gen",
+      df.withColumn("__z", ZOrder.zValueN(zCols.map(c => (col(c), ranges(c)))))
+        .repartitionByRange(nOut, col("event_date"), col("__z"))
+        .sortWithinPartitions(col("event_date"), col("__z"))
+        .drop("__z"),
+      partitioned = true, "zorder", gen)
+    // the ONE commit point: the rewrite replaces exactly the file set it
+    // READ; files a concurrent append committed mid-rewrite are carried
+    // forward (not clustered yet — the next clusterInPlace picks them up)
+    commitRebased(fs, root, "clusterInPlace", manifest.toSet, movedIn)
     ClusterStats(manifest.size, movedIn.size, bytes)
   }
 
@@ -1877,7 +1660,9 @@ object EventStore {
     // error into a silent short read
     dropped.foreach { v =>
       fs.delete(manifestPath(fs, root, v), false)
-      fs.delete(statsPath(root, v), false) // sidecar dies with its version
+      // sidecars die with their version
+      fs.delete(statsPath(root, v), false)
+      fs.delete(keysPath(root, v), false)
     }
     // crashed-maintenance STAGING dirs past the same grace window: pure
     // scratch (their contents were either moved out or never committed).

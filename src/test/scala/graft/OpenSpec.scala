@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.JobCount
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
@@ -100,6 +100,34 @@ class OpenSpec extends AnyFunSuite {
       // two reads of one snapshot are the same relation (exchange reuse)
       assert(EventStore.readPinned(spark, dir).queryExecution.analyzed
         .sameResult(pinned.queryExecution.analyzed))
+      // every sidecar-pruned read opens with no job either: sidecar and
+      // manifest are read on the driver, and a string probe hashed there
+      val vStats = EventStore.manifestVersion(spark, dir)
+      EventStore.writeFileStats(spark, dir, Seq("user_id"),
+        stringColumns = Seq("event_type"), doubleColumns = Seq("value"))
+      EventStore.writeFileKeySets(spark, dir, "user_id")
+      EventStore.writeManifest(spark, dir) // one key-set sidecar per version
+      EventStore.writeFileKeySets(spark, dir, "event_type")
+      val user = pinned.agg(min("user_id")).head().getLong(0)
+      val etype = pinned.where(col("event_type").isNotNull)
+        .select("event_type").head().getString(0)
+      val reads: Seq[(String, () => DataFrame, Column)] = Seq(
+        ("readPinnedWhere", () => EventStore.readPinnedWhere(spark, dir, "user_id",
+          user, user + 20, vStats), col("user_id").between(user, user + 20)),
+        ("readPinnedWhereString", () => EventStore.readPinnedWhereString(spark, dir,
+          "event_type", etype, etype, vStats), col("event_type") === etype),
+        ("readPinnedWhereDouble", () => EventStore.readPinnedWhereDouble(spark, dir,
+          "value", 0.0, 10.0, vStats), col("value").between(0.0, 10.0)),
+        ("readPinnedPoint", () => EventStore.readPinnedPoint(spark, dir, "user_id",
+          user, vStats), col("user_id") === user),
+        ("readPinnedPointString", () => EventStore.readPinnedPointString(spark, dir,
+          "event_type", etype), col("event_type") === etype))
+      reads.foreach { case (name, read, rows) =>
+        var df: DataFrame = null
+        val jobs = JobCount(spark.sparkContext) { df = read(); df.schema }
+        assert(jobs == 0, s"$name over $nFiles files launched $jobs job(s)")
+        assert(df.collect().toSet == pinned.filter(rows).collect().toSet, name)
+      }
     }
   }
 

@@ -447,10 +447,20 @@ class StoreStreamSpec extends AnyFunSuite {
     val (mAdded, mRemoved) = EventStore.manifestDiff(spark, dir, v2, v3)
     assert(mAdded.nonEmpty && mRemoved.nonEmpty,
       "a compaction commit must be visible as rewrite, not append")
+    // both sidecars of a version live and die with it
+    def sidecars(v: Long) = Seq("stats", "keys")
+      .map(k => new java.io.File(dir, s"_graft_manifest.v$v.$k.jsonl"))
+    Seq(v1, v2).foreach { v =>
+      EventStore.writeFileStats(spark, dir, Seq("user_id"), version = v)
+      EventStore.writeFileKeySets(spark, dir, "user_id", version = v)
+      assert(sidecars(v).forall(_.exists))
+    }
     // retention: keep 2 versions → v1 falls out and FAILS LOUDLY, v2
     // (whose files the compaction replaced but retention protects) and
     // v3 both still read whole
     EventStore.vacuum(spark, dir, keepVersions = 2)
+    assert(!sidecars(v1).exists(_.exists), "a dropped version's sidecars must go")
+    assert(sidecars(v2).forall(_.exists), "a retained version's sidecars must stay")
     val e = intercept[IllegalArgumentException] {
       EventStore.readPinned(spark, dir, v1)
     }
@@ -462,6 +472,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val deleted = EventStore.vacuum(spark, dir, keepVersions = 1)
     assert(deleted.size == stats.map(_.filesBefore).sum,
       s"expected the ${stats.map(_.filesBefore).sum} replaced inputs, got $deleted")
+    assert(!sidecars(v2).exists(_.exists))
     assert(EventStore.readPinned(spark, dir).collect().toSet == fullRows)
   }
 
@@ -2376,6 +2387,43 @@ class StoreStreamSpec extends AnyFunSuite {
       assert(EventStore.manifestFiles(spark, dir, v).nonEmpty, s"version $v unreadable")
     }
   }
+  test("a compaction committing mid-z-order fails the rewrite loudly instead of double-counting") {
+    val local = Files.createTempDirectory("graft-cluster-race").toString + "/events"
+    // 300 events over three days, up to four files per day
+    val ev = spark.range(300).selectExpr("id AS event_id",
+      "timestamp_seconds(1704067200 + id * 600) AS ts", "id % 7 AS user_id",
+      "CAST(id AS DOUBLE) AS value")
+    EventStore.append(ev.repartition(4), local)
+    EventStore.writeManifest(spark, local)
+    val rows = ev.count()
+    val v0 = EventStore.manifestVersion(spark, local)
+    // the rewrite's first move-in runs one compaction: it commits the
+    // compacted copies of the very files the rewrite is replacing
+    val dir = RenameHookFs.path(spark.sparkContext.hadoopConfiguration, local)
+    var compacted = Seq.empty[EventStore.PartitionCompaction]
+    RenameHookFs.armOnce(_.startsWith("zorder-")) {
+      compacted = EventStore.compactInPlace(spark, dir)
+    }
+    val e = intercept[IllegalArgumentException](
+      EventStore.clusterInPlace(spark, dir, "user_id", "ts"))
+    assert(e.getMessage.contains("clusterInPlace") && e.getMessage.contains("left the manifest"),
+      e.getMessage)
+    assert(compacted.nonEmpty, "the injected compaction must have run")
+    assert(EventStore.manifestVersion(spark, local) == v0 + 1)
+    assert(EventStore.readPinned(spark, local).count() == rows,
+      "rows counted twice: the rewrite kept the compacted copies too")
+
+    // the shared commit itself: a replaced file the manifest no longer
+    // lists fails, and no version is committed
+    val root = new org.apache.hadoop.fs.Path(local)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stale = intercept[IllegalArgumentException](EventStore.commitRebased(fs, root,
+      "spec", Set("event_date=2024-01-01/gone.parquet"), Seq.empty))
+    assert(stale.getMessage.contains("left the manifest"), stale.getMessage)
+    assert(EventStore.manifestVersion(spark, local) == v0 + 1)
+    assert(EventStore.readPinned(spark, local).count() == rows)
+  }
+
   test("createTable / runCreate: CTAS lifecycle, layouts, collisions (round 14)") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-ctas").toString
