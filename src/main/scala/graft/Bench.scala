@@ -1,7 +1,9 @@
 package graft
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 object Bench {
   /** Force full evaluation: xxhash64 over EVERY output column, folded into
@@ -34,6 +36,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+    val durableOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     def session(): SparkSession =
       GraftSession.create(s"local[$cpus]", cpus.toInt)
   }
@@ -47,13 +50,20 @@ object Bench {
   }
 
   /** Per-row medians with the raw per-run seconds (execution order), the
-    * failed runs as `name#runN` → message, and each st_* lifecycle's
+    * failed runs as `name#runN` → message, each st_* lifecycle's
     * per-run micro-batch times (ms, triggerExecution per trigger — see
-    * StreamReplay.lastBatchMs). */
+    * StreamReplay.lastBatchMs), and per row the generated classes compiled
+    * over all its runs with the milliseconds compiling them took. */
   final case class Timings(
       rows: ListMap[String, (Double, Seq[Double])],
       errors: collection.Map[String, String],
-      streamMs: collection.Map[String, Seq[Seq[Long]]])
+      streamMs: collection.Map[String, Seq[Seq[Long]]],
+      codegen: ListMap[String, (Long, Double)])
+
+  /** Generated classes compiled in this JVM so far (codegen cache misses),
+    * and the milliseconds compiling them took. */
+  private def compiled(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
 
   // Per-query time = MEDIAN of `runs` back-to-back executions, state reset
   // between each — a single-shot time conflates the plan's cost with
@@ -68,6 +78,7 @@ object Bench {
     val results = rows.map { case (name, fn) =>
       // st_* rows replay under a dash-spelled name ("st_gap" → "st-gap")
       val replayKey = name.replace('_', '-')
+      val (classes0, ms0) = compiled()
       val timed = (1 to runs).map { i =>
         graft.streaming.StreamReplay.lastBatchMs.remove(replayKey)
         val t0 = System.nanoTime()
@@ -96,10 +107,40 @@ object Bench {
       // a 13s median of (40, 13, 0.3) means a slow PLAN, of (13, 13, 0.3)
       // a warm-up cliff — round 12's j6 outlier was unadjudicable because
       // the artifact only carried the one number
-      name -> (med, timed.map(_._1))
+      val (classes1, ms1) = compiled()
+      (name -> (med, timed.map(_._1)), name -> (classes1 - classes0, ms1 - ms0))
     }
-    Timings(ListMap.from(results), errors, streamMs)
+    Timings(ListMap.from(results.map(_._1)), errors, streamMs,
+      ListMap.from(results.map(_._2)))
   }
+
+  // 3-decimal (ms) precision: full-precision doubles tripled the line
+  // length and the harness tail buffer was truncating the JSON mid-string
+  // (rounds 7-8 recorded parsed:null) — ms resolution is below run-to-run
+  // noise anyway
+  private def r3(v: Double): String = BigDecimal(v)
+    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** A row-name → value JSON object, in row order. */
+  private def byRow[V](m: collection.Map[String, V])(value: V => String): String =
+    m.map { case (k, v) => "\"" + k + "\":" + value(v) }.mkString("{", ",", "}")
+
+  /** The per-row fields of the durable JSON: medians, per-run arrays (same
+    * order as execution — the self-adjudication evidence for any outlier
+    * median), errors, and the codegen compiles and milliseconds. */
+  def rowsJson(t: Timings): String = Seq(
+    "queries" -> byRow(t.rows)(v => r3(v._1)),
+    "runs_sec" -> byRow(t.rows)(_._2.map(r3).mkString("[", ",", "]")),
+    "errors" -> byRow(t.errors)(v => "\"" + v + "\""),
+    "codegen_classes" -> byRow(t.codegen)(_._1.toString),
+    "codegen_ms" -> byRow(t.codegen)(v => r3(v._2))
+  ).map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
+
+  /** Writes one JSON line to the durable results file. */
+  def writeDurable(line: String): Unit =
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(Env.durableOut), line + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write ${Env.durableOut}: ${e.getMessage}") }
 
   def main(args: Array[String]): Unit = {
     import Env._
@@ -170,42 +211,21 @@ object Bench {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
       ts(1)
     }
-    val Timings(results, errors, streamMs) =
-      timeRows(spark, sfDir, SparkEntry.queries.toSeq, runs)
-    // 3-decimal (ms) precision: full-precision doubles tripled the line
-    // length and the harness tail buffer was truncating the JSON mid-string
-    // (rounds 7-8 recorded parsed:null) — ms resolution is below run-to-run
-    // noise anyway
-    def r3(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // per-run arrays, same order as execution — the self-adjudication
-    // evidence for any outlier median (durable file only; tiny)
-    val runsSec = results.map { case (k, (_, rs)) =>
-      s"\"" + k + "\":" + rs.map(r3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    val timings = timeRows(spark, sfDir, SparkEntry.queries.toSeq, runs)
+    val Timings(results, errors, streamMs, _) = timings
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val buildClass = SparkEntry.rows.filter(_.buildClass).map(_.name)
     val buildJson = buildClass.map("\"" + _ + "\"").mkString("[", ",", "]")
     val buildTotal = buildClass.map(results(_)._1).sum
-    val streamJson = streamMs.map { case (k, runsArr) =>
-      s"\"" + k + "\":" + runsArr.map(_.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"runs_sec":$runsSec,"errors":$errs,"sf":"$sfDir","runs":$runs,"build_queries":$buildJson,"build_sec":${r3(buildTotal)},"calib_sec":${r3(calibSec)},"io_calib_sec":${r3(ioCalibSec)},"stream_calib_sec":${r3(streamCalibSec)},"stream_ms":$streamJson}"""
+    val streamJson = byRow(streamMs)(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec",${rowsJson(timings)},"sf":"$sfDir","runs":$runs,"build_queries":$buildJson,"build_sec":${r3(buildTotal)},"calib_sec":${r3(calibSec)},"io_calib_sec":${r3(ioCalibSec)},"stream_calib_sec":${r3(streamCalibSec)},"stream_ms":$streamJson}"""
     // The harness captures a bounded (~2000 char) stdout tail: three
     // rounds running, the full per-query line truncated there into an
     // unparseable fragment. stdout now gets a SHORT self-contained
     // summary (fits any tail buffer, still one parseable JSON object);
     // the complete per-query map lives ONLY in the durable file.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_errors":${errors.size},"build_n":${buildClass.size},"build_sec":${r3(buildTotal)},"calib_sec":${r3(calibSec)},"io_calib_sec":${r3(ioCalibSec)},"stream_calib_sec":${r3(streamCalibSec)},"queries_file":"$out"}""")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_errors":${errors.size},"build_n":${buildClass.size},"build_sec":${r3(buildTotal)},"calib_sec":${r3(calibSec)},"io_calib_sec":${r3(ioCalibSec)},"stream_calib_sec":${r3(streamCalibSec)},"queries_file":"$durableOut"}""")
+    writeDurable(line)
     spark.stop()
     // A bench with ANY deterministic per-query failure must not read as a
     // green measurement (round 8 recorded rc=0 over 8 errors).

@@ -332,13 +332,16 @@ object EventStream {
     * exactly-once guard is directly testable: skip if `app` already
     * committed `batchId` (post-crash replay of a published batch),
     * otherwise transactionally append. Returns true when the batch
-    * committed, false when skipped/empty. */
+    * committed, false when skipped/empty. An empty batch is not checked
+    * for up front (that is a job of its own that re-reads the batch):
+    * appending it writes no files, and `appendCommitted` commits nothing
+    * then. */
   def ingestBatch(batch: DataFrame, storePath: String, app: String,
                   batchId: Long, tsCol: String = Compiler.DefaultTsCol): Boolean = {
     val spark = batch.sparkSession
     val replayed = graft.sources.EventStore
       .lastTxn(spark, storePath, app).exists(_ >= batchId)
-    if (replayed || batch.isEmpty) false
+    if (replayed) false
     else graft.sources.EventStore
       .appendCommitted(batch, storePath, app, batchId, tsCol).nonEmpty
   }

@@ -15,7 +15,9 @@ import graft.sql.ZxSql
   * Sessions, the rows' data directory and the run count follow Bench's
   * environment contract (SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_RUNS), so a `time` number is directly comparable to the
-  * same row in a Bench run without paying the whole sweep. */
+  * same row in a Bench run without paying the whole sweep; `time` also
+  * writes its rows to Bench's durable file (SPARK_GRAFT_BENCH_OUT) with
+  * Bench's per-row fields. */
 object Harness {
   private val usage = "usage: Harness time <row>… | sql <sfDir> <stmt>… | " +
     "plan <row>… | smoke"
@@ -24,8 +26,11 @@ object Harness {
     import Bench.Env._
     // each command reports whether every run succeeded
     val command: SparkSession => Boolean = args.toList match {
-      case "time" :: names if names.nonEmpty =>
-        time(_, sfDir, names, runs).errors.isEmpty
+      case "time" :: names if names.nonEmpty => s => {
+        val t = time(s, sfDir, names, runs)
+        Bench.writeDurable(s"""{"metric":"time",${Bench.rowsJson(t)},"sf":"$sfDir","runs":$runs}""")
+        t.errors.isEmpty
+      }
       case "sql" :: dir :: stmts if stmts.nonEmpty =>
         sql(_, dir, stmts, runs).errors.isEmpty
       case "plan" :: names if names.nonEmpty => s => { plan(s, sfDir, names); true }

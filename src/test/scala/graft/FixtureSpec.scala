@@ -13,17 +13,10 @@ import graft.operators.GapWindows
   * /root/reference/fixtures/test.cmd). String-typed on purpose — the
   * reference stores every value as a string (lib.rs:31); null = absent key. */
 object SparkFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Built and registered once, before any suite plans a query, so every
+    * suite runs under the same planner strategy, functions and codegen
+    * cache whatever order the suites run in. */
+  lazy val spark: SparkSession = GraftSession.create("local[4]", 4, "graft-test")
 
   val schema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),

@@ -332,7 +332,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 500)
     // mismatched lengths yield NULL, like zip_with's null padding
-    graft.GraftSession.register(SparkFixture.spark)
     val r = SparkFixture.spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D)) AS d").head()
     assert(r.isNullAt(0))

@@ -512,7 +512,6 @@ class SqlSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.functions.TextFunctions
-    graft.GraftSession.register(spark)
     val quant = spark.sql("SELECT quantize_int8(array(0.5D, -1.2D, 0.0D)) AS q")
       .head().getSeq[Double](0)
     assert(quant == Seq(64.0, -127.0, 0.0), "round + clamp")

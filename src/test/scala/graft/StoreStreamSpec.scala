@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -576,7 +577,13 @@ class StoreStreamSpec extends AnyFunSuite {
       .select("event_id", "ts", "user_id", "value")
     val app = "ingest:" + base + "/ckpt"
     import graft.streaming.EventStream
-    assert(EventStream.ingestBatch(src, store, app, 0L))
+    // a commit is one Spark job, the write: no emptiness check runs first
+    var committed = false
+    val jobs = JobCount(spark.sparkContext) {
+      committed = EventStream.ingestBatch(src, store, app, 0L)
+    }
+    assert(committed)
+    assert(jobs == 1, s"a non-empty ingestBatch launched $jobs jobs")
     val rows = src.count()
     assert(EventStore.readPinned(spark, store).count() == rows)
     assert(EventStore.lastTxn(spark, store, app).contains(0L))
@@ -587,6 +594,10 @@ class StoreStreamSpec extends AnyFunSuite {
     // a NEW batch id commits normally, txn advances with it
     assert(EventStream.ingestBatch(src.limit(5), store, app, 1L))
     assert(EventStore.readPinned(spark, store).count() == rows + 5)
+    assert(EventStore.lastTxn(spark, store, app).contains(1L))
+    // an empty batch commits nothing: no manifest version, no txn
+    assert(!EventStream.ingestBatch(src.limit(0), store, app, 2L))
+    assert(EventStore.manifestVersion(spark, store) == 1L)
     assert(EventStore.lastTxn(spark, store, app).contains(1L))
     // a second app's txns are independent
     assert(EventStore.lastTxn(spark, store, "ingest:other").isEmpty)
