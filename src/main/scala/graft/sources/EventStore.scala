@@ -161,30 +161,21 @@ object EventStore {
   // commit point; vacuum reclaims unmanifested bytes after a grace window
   // longer than the longest running query.
 
-  private val ManifestName = "_graft_manifest.json" // legacy unversioned name
   private val ManifestVersioned = """^_graft_manifest\.v(\d+)\.json$""".r
 
-  private def manifestVersionPath(root: org.apache.hadoop.fs.Path, v: Long) =
+  private def manifestPath(root: org.apache.hadoop.fs.Path, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.json")
 
-  /** All committed manifest versions under the store, ascending. A legacy
-    * unversioned `_graft_manifest.json` reads as version 0. */
+  /** All committed manifest versions under the store, ascending, from one
+    * listing; a missing root is an empty store. */
   private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path): Seq[Long] = {
-    if (!fs.exists(root)) return Seq.empty // fresh store: no versions yet
-    val versioned = fs.listStatus(root).toSeq.filter(_.isFile)
-      .map(_.getPath.getName)
-      .collect { case ManifestVersioned(v) => v.toLong }
-    val legacy = if (fs.exists(new org.apache.hadoop.fs.Path(root, ManifestName)))
-      Seq(0L) else Seq.empty
-    (legacy ++ versioned).distinct.sorted
+    val listing = try fs.listStatus(root) catch {
+      case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus]
+    }
+    listing.toSeq.filter(_.isFile).map(_.getPath.getName)
+      .collect { case ManifestVersioned(v) => v.toLong }.sorted
   }
-
-  private def manifestPath(fs: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path, v: Long) =
-    if (v == 0L && !fs.exists(manifestVersionPath(root, 0L)))
-      new org.apache.hadoop.fs.Path(root, ManifestName)
-    else manifestVersionPath(root, v)
 
   /** Visible data files, as `partitionDir/fileName` relative paths.
     * Hidden (dot-prefixed) directories — maintenance staging and the
@@ -209,7 +200,7 @@ object EventStore {
   }
 
   /** A data file, not a marker (`_SUCCESS`), manifest (`_graft_manifest*`),
-    * lock or staging entry (dot-prefixed). */
+    * temp file or staging entry (dot-prefixed). */
   private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
     st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
 
@@ -223,65 +214,55 @@ object EventStore {
     * double-counted next to the originals they never replaced. */
   private val MaintenanceFile = """(?:compact|zorder|merge|delete|ingest|ctas)-\d+-.*""".r
 
-  /** Serialize manifest commits: an exclusive-create lock file arbitrates,
-    * because a plain rename-to-destination OVERWRITES on local/POSIX
-    * filesystems — two racing committers would both "succeed" at the same
-    * version and one commit would be silently lost. Under the lock the
-    * committer recomputes the next version from a fresh listing, so the
-    * lost-update window is closed on any filesystem whose exclusive
-    * create is atomic (HDFS, object stores with preconditions; local FS
-    * to within `File#createNewFile` semantics). A crash while holding the
-    * lock blocks later commits LOUDLY — the error names the lock and its
-    * age so an operator can remove a stale one. */
-  private def withCommitLock[A](fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path)(body: => A): A = {
-    val lock = new org.apache.hadoop.fs.Path(root, ".manifest.lock")
-    // Local scheme: Hadoop's LocalFileSystem.create(overwrite = false) is
-    // an exists-CHECK followed by a create — NOT atomic. Two same-machine
-    // committers could both claim the lock and silently collide on one
-    // version (caught by the threaded race spec, round 10). POSIX
-    // O_CREAT|O_EXCL via File#createNewFile IS atomic; HDFS's create(…,
-    // false) is atomic server-side, so the FS call stays for remote
-    // schemes.
-    val claimed =
-      if (fs.getScheme == "file")
-        try new java.io.File(fs.makeQualified(lock).toUri.getPath).createNewFile()
-        catch { case _: java.io.IOException => false }
-      else
-        try { fs.create(lock, false).close(); true }
-        catch { case _: java.io.IOException => false }
-    if (!claimed) {
-      val age =
-        try System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime
-        catch { case _: java.io.IOException => -1L }
-      throw new IllegalStateException(
-        s"manifest commit lock $lock is held (age ${age}ms) — a concurrent " +
-          "committer is mid-commit; retry after it finishes, or delete the " +
-          "lock file if its holder crashed")
+  /** Lost version races one commit survives: each loss means another
+    * commit landed meanwhile. */
+  private val MaxCommitAttempts = 1000
+
+  /** The one manifest commit: the file set `build` derives from the
+    * latest manifest (None for a fresh store) becomes the NEXT version,
+    * with `txn` in its header; returns the version and the files.
+    * Versions are immutable, which makes old ones time-travelable, and the
+    * version file's name is the only arbiter: [[publish]] refuses an
+    * existing name, so of the committers racing for version N exactly one
+    * wins. A loser re-reads the latest manifest, runs `build` — and its
+    * checks — again, and tries N+1, so no caller sees contention; a
+    * committer that dies blocks nobody and leaves at most a temp file for
+    * [[vacuum]]. Any other `IOException` propagates unretried: its outcome
+    * is unknown, and a retry could commit the same files twice. `txn` is
+    * an application transaction id (Delta's txn action), durable in the
+    * same step that makes the files visible — [[appendCommitted]]'s
+    * exactly-once contract. */
+  private def commit(fs: org.apache.hadoop.fs.FileSystem,
+                     root: org.apache.hadoop.fs.Path, op: String,
+                     txn: Option[(String, Long)] = None)
+                    (build: Option[Seq[String]] => Seq[String]): (Long, Seq[String]) = {
+    @annotation.tailrec
+    def attempt(n: Int): (Long, Seq[String]) = {
+      val latest = manifestVersions(fs, root).lastOption
+      val next = latest.fold(0L)(_ + 1L)
+      val files = build(latest.map(readManifestFile(fs, root, _)))
+      if (publish(fs, root, next, files, txn)) (next, files)
+      else if (n >= MaxCommitAttempts) throw new IllegalStateException(
+        s"$op: lost the race for a manifest version under $root " +
+          s"$MaxCommitAttempts times in a row — far more concurrent commits " +
+          "than one store takes; nothing was committed")
+      else attempt(n + 1)
     }
-    try body finally { fs.delete(lock, false); () }
+    attempt(1)
   }
 
-  /** Commit `files` as the NEXT manifest version — caller MUST hold the
-    * commit lock. Manifest files are immutable once committed (write-tmp +
-    * rename-to-fresh-name, version chosen inside the lock — never an
-    * overwrite), which is what makes old versions time-travelable and the
-    * commit race-free. Returns the committed version. `txn` records an
-    * application transaction id INSIDE the commit (Delta's txn action):
-    * the id becomes durable in exactly the same atomic rename that makes
-    * the files visible, which is what gives [[appendCommitted]] its
-    * exactly-once restart contract — there is no window where one is
-    * committed without the other. */
-  private def commitLocked(fs: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path,
-                           files: Seq[String],
-                           txn: Option[(String, Long)] = None): Long = {
-    val next = manifestVersions(fs, root).lastOption.getOrElse(-1L) + 1L
-    // per-attempt unique tmp name: even a misbehaving double-claimed lock
-    // (a broken FS) can then at worst fail a rename loudly, never have two
-    // writers interleave bytes into ONE tmp file
+  /** Install `files` (and `txn`) as manifest version `v` unless another
+    * committer took it first (false). A per-attempt temp file is written,
+    * then installed by a step that never overwrites: on `file:` a hard
+    * link (POSIX `link(2)` is atomic and fails on an existing name, where a
+    * local rename replaces it), elsewhere `rename`, which HDFS refuses onto
+    * an existing file. Object stores are NOT covered: S3A's rename is an
+    * overwriting copy, so racing committers there can lose a version. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+                      root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String],
+                      txn: Option[(String, Long)]): Boolean = {
     val tmp = new org.apache.hadoop.fs.Path(root,
-      s".manifest-v$next-${Thread.currentThread().getId}-${System.nanoTime()}.tmp")
+      s".manifest-v$v-${Thread.currentThread().getId}-${System.nanoTime()}.tmp")
     val txnPart = txn.map { case (app, b) =>
       s"""\"txn\": {\"app\": \"${jsonEscape(app)}\", \"batch\": $b}, """
     }.getOrElse("")
@@ -291,30 +272,38 @@ object EventStore {
       .mkString(s"{$txnPart\"files\": [", ",\n", "]}")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    require(fs.rename(tmp, manifestVersionPath(root, next)),
-      s"writeManifest: could not commit manifest v$next under $root " +
-        "(a concurrent writer took the version?) — retry the commit")
-    next
+    val local = fs.getScheme == "file"
+    def nio(p: org.apache.hadoop.fs.Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+    val won =
+      if (local)
+        try { java.nio.file.Files.createLink(nio(manifestPath(root, v)), nio(tmp)); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      else fs.rename(tmp, manifestPath(root, v))
+    // once the version is decided the temp name is scratch: a failed
+    // delete leaves debris for vacuum, and must not report a landed
+    // commit as failed
+    if (local || !won)
+      try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+    won
   }
 
   /** The rebasing commit every write but [[createTable]]'s and
-    * [[writeManifest]]'s goes through: under the commit lock, take the
-    * manifest AS OF COMMIT TIME (empty for a fresh store), remove
-    * `replaced`, add `added`, and commit the result with `txn`
-    * ([[commitLocked]]). Rebasing keeps files a concurrent committer added
-    * mid-run. It fails loudly, committing nothing, when a replaced file
-    * has left the manifest — a conflicting maintenance commit ran, and
-    * committing anyway would keep its copies AND ours of the same rows —
-    * or when the result is empty: dropping everything is [[reset]], and an
-    * empty manifest would break every pinned reader. Either way the
-    * moved-in files stay unmanifested debris for [[vacuum]]. */
+    * [[writeManifest]]'s goes through ([[commit]]): take the manifest AS
+    * OF COMMIT TIME (empty for a fresh store), remove `replaced`, add
+    * `added`, and commit the result with `txn`. Rebasing keeps files a
+    * concurrent committer added mid-run. It fails loudly, committing
+    * nothing, when a replaced file has left the manifest — a conflicting
+    * maintenance commit ran, and committing anyway would keep its copies
+    * AND ours of the same rows — or when the result is empty: dropping
+    * everything is [[reset]], and an empty manifest would break every
+    * pinned reader. Either way the moved-in files stay unmanifested debris
+    * for [[vacuum]]. Returns the committed version. */
   private[graft] def commitRebased(fs: org.apache.hadoop.fs.FileSystem,
                                    root: org.apache.hadoop.fs.Path, op: String,
                                    replaced: Set[String], added: Seq[String],
                                    txn: Option[(String, Long)] = None): Long =
-    withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
+    commit(fs, root, op, txn) { latest =>
+      val current = latest.getOrElse(Seq.empty)
       val vanished = replaced -- current
       require(vanished.isEmpty,
         s"$op: files this operation replaced left the manifest mid-run " +
@@ -324,8 +313,8 @@ object EventStore {
       require(next.nonEmpty,
         s"$op: the commit would empty the store — use reset() to drop " +
           "everything; an empty manifest would break every pinned reader")
-      commitLocked(fs, root, next, txn)
-    }
+      next
+    }._1
 
   private def readManifestText(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
@@ -338,7 +327,7 @@ object EventStore {
     require(versions.contains(v),
       s"manifest v$version does not exist under $root (have: " +
         s"${versions.mkString(", ")}) — vacuumed past retention or never committed")
-    readText(fs, manifestPath(fs, root, v))
+    readText(fs, manifestPath(root, v))
   }
 
   private def readText(fs: org.apache.hadoop.fs.FileSystem,
@@ -383,7 +372,7 @@ object EventStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     manifestVersions(fs, root).reverseIterator.map { v =>
-      TxnHeader.findFirstMatchIn(readManifestText(fs, root, v))
+      TxnHeader.findFirstMatchIn(readText(fs, manifestPath(root, v)))
         .filter(m => jsonUnescape(m.group(1)) == app).map(_.group(2).toLong)
     }.collectFirst { case Some(b) => b }
   }
@@ -456,11 +445,12 @@ object EventStore {
     require(moved.nonEmpty,
       s"createTable: the statement produced no data files for $path — an " +
         "empty table has no schema to pin; gate less or skip the CTAS")
-    withCommitLock(fs, root) {
-      require(manifestVersions(fs, root).isEmpty,
+    // v0 or nothing: a creator that loses v0 is not retried into v1
+    commit(fs, root, "createTable") { latest =>
+      require(latest.isEmpty,
         s"createTable: $path gained a manifest mid-create (concurrent " +
           "creator?) — the moved files are unmanifested debris for vacuum")
-      commitLocked(fs, root, moved)
+      moved
     }
     moved
   }
@@ -548,22 +538,21 @@ object EventStore {
     * is invisible to [[readPinned]] and fair game for [[vacuum]]. Files
     * with [[MaintenanceFile]] names that the current manifest does not
     * already list are skipped — they belong to a maintenance commit
-    * (mid-flight or crashed), never to append adoption. Returns the
-    * number of committed files. */
+    * (mid-flight or crashed), never to append adoption. A commit that
+    * loses its version to another committer lists the store again
+    * ([[commit]]). Returns the number of committed files. */
   def writeManifest(spark: SparkSession, path: String): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v).toSet).getOrElse(Set.empty[String])
+    commit(fs, root, "writeManifest") { latest =>
+      val current = latest.getOrElse(Seq.empty).toSet
       val files = listDataFiles(fs, root).filter { f =>
         current(f) || !MaintenanceFile.pattern
           .matcher(f.substring(f.indexOf('/') + 1)).matches()
       }
       require(files.nonEmpty, s"writeManifest: no data files under $path")
-      commitLocked(fs, root, files)
-      files.size
-    }
+      files
+    }._2.size
   }
 
   /** The store's current (highest) manifest version — every commit
@@ -571,10 +560,8 @@ object EventStore {
     * Pass an old version to [[readPinned]] to time-travel. */
   def manifestVersion(spark: SparkSession, path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = manifestVersions(fs, root)
-    require(versions.nonEmpty, s"manifestVersion: no manifest under $path")
-    versions.last
+    resolveVersion(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root, -1L, "manifestVersion")
   }
 
   /** Manifest-pinned read: the plan binds to the manifest's exact file
@@ -642,7 +629,7 @@ object EventStore {
       math.min(parallelism, math.max(1, affected.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val done = Future.sequence(affected.map { case (part, partPath, files, bytes, nOut) =>
+      val jobs = affected.map { case (part, partPath, files, bytes, nOut) =>
         Future {
           // gen-suffixed: a concurrent compactor must never share (and
           // then clean up) another run's staging dir — the nextGen() rule.
@@ -653,8 +640,11 @@ object EventStore {
           (files.map(f => part + "/" + f.getName), movedIn,
             PartitionCompaction(part, files.length, bytes, movedIn.size))
         }
-      })
-      val results = Await.result(done, Duration.Inf)
+      }
+      // every partition settles before a failure surfaces, so no sibling
+      // moves files in after the caller saw the error
+      jobs.foreach(Await.ready(_, Duration.Inf))
+      val results = Await.result(Future.sequence(jobs), Duration.Inf)
       // the ONE commit point: files a concurrent append committed
       // mid-compaction survive the swap
       commitRebased(fs, root, "compactInPlace",
@@ -682,9 +672,6 @@ object EventStore {
   // multiplies with [[clusterInPlace]]: z-ordered files have tight
   // per-file ranges on the clustering columns, so a selective filter
   // keeps a small fraction of the file list.
-
-  private def statsPath(root: org.apache.hadoop.fs.Path, v: Long) =
-    new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.stats.jsonl")
 
   private def jsonEscape(s: String) =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -734,14 +721,30 @@ object EventStore {
           s"""{"f":"${jsonEscape(r)}","c":"${jsonEscape(c)}","dmn":$mn,"dmx":$mx}"""
         }
     }
-    val tmp = new org.apache.hadoop.fs.Path(root, s".stats-v$v.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, statsPath(root, v)),
-      s"writeFileStats: could not commit stats for manifest v$v under $path")
+    publishSidecar(fs, root, v, "stats", "writeFileStats")(_.write(
+      (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     lines.size
+  }
+
+  private def sidecarPath(root: org.apache.hadoop.fs.Path, v: Long, kind: String) =
+    new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.$kind.jsonl")
+
+  /** Install manifest version `v`'s `kind` sidecar ("stats" or "keys"):
+    * `write` fills a hidden temp file, which is then renamed into place.
+    * A re-pin replaces the earlier sidecar, so that one is deleted first —
+    * HDFS refuses a rename onto an existing file. In between, a pruned
+    * read fails loudly for want of a sidecar; it never reads half of one. */
+  private def publishSidecar(fs: org.apache.hadoop.fs.FileSystem,
+                             root: org.apache.hadoop.fs.Path, v: Long,
+                             kind: String, op: String)
+                            (write: java.io.OutputStream => Unit): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(root, s".$kind-v$v.tmp")
+    val out = fs.create(tmp, true)
+    try write(out) finally out.close()
+    val dest = sidecarPath(root, v, kind)
+    fs.delete(dest, false)
+    require(fs.rename(tmp, dest),
+      s"$op: could not commit the $kind sidecar for manifest v$v under $root")
   }
 
   private val StatsLine =
@@ -803,9 +806,6 @@ object EventStore {
         jsonUnescape(f) -> (mx.toDouble >= lo && mn.toDouble <= hi)
     }
   }
-
-  private def keysPath(root: org.apache.hadoop.fs.Path, v: Long) =
-    new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.keys.jsonl")
 
   /** splitmix64 finalizer — the membership sidecar's base hash (public
     * constant-multiplier avalanche mix; deterministic across JVMs, unlike
@@ -970,8 +970,6 @@ object EventStore {
       val rowsPerPart = math.max(1L, driverBudgetBytes / rowBytes)
       math.max(1, math.min(1 << 16, (nRows + rowsPerPart - 1) / rowsPerPart).toInt)
     }
-    val tmp = new org.apache.hadoop.fs.Path(root, s".keys-v$v.tmp")
-    val out = fs.create(tmp, true)
     var pinned = 0
     def relOf(r: org.apache.spark.sql.Row): String = {
       val uriPath = new java.net.URI(r.getString(0)).getPath
@@ -979,14 +977,14 @@ object EventStore {
         s"writeFileKeySets: scanned file '$uriPath' resolves to no manifest " +
           s"entry of v$v — refusing to commit a short sidecar"))
     }
-    def stream(it: java.util.Iterator[org.apache.spark.sql.Row])
-              (fmt: org.apache.spark.sql.Row => String): Unit =
-      while (it.hasNext) {
-        out.write((fmt(it.next()) + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        pinned += 1
-      }
-    try {
+    try publishSidecar(fs, root, v, "keys", "writeFileKeySets") { out =>
+      def stream(it: java.util.Iterator[org.apache.spark.sql.Row])
+                (fmt: org.apache.spark.sql.Row => String): Unit =
+        while (it.hasNext) {
+          out.write((fmt(it.next()) + "\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          pinned += 1
+        }
       // hashed (string-key) entries carry distinct field names so an
       // integral reader can never mistake a hash set for raw keys
       val setField = if (hashed) "kh" else "k"
@@ -1007,14 +1005,7 @@ object EventStore {
             s""""${bloomFields._1}":$bk,"${bloomFields._2}":"$b64"}"""
         }
       }
-    } finally { out.close(); pairs.unpersist() }
-    // idempotent re-pin: content for a version is deterministic, so a
-    // pre-existing sidecar may be replaced (local/HDFS rename refuses an
-    // existing destination rather than overwriting)
-    val dest = keysPath(root, v)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    require(fs.rename(tmp, dest),
-      s"writeFileKeySets: could not commit key sets for manifest v$v under $path")
+    } finally pairs.unpersist()
     pinned
   }
 
@@ -1115,7 +1106,7 @@ object EventStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = resolveVersion(fs, root, version, op)
-    val sidecar = if (keys) keysPath(root, v) else statsPath(root, v)
+    val sidecar = sidecarPath(root, v, if (keys) "keys" else "stats")
     require(fs.exists(sidecar),
       s"$op: no ${if (keys) "key-set" else "stats"} sidecar for manifest v$v " +
         s"under $path — run $pin after the commit")
@@ -1227,7 +1218,7 @@ object EventStore {
     * idempotent against its own partial output — the destination was
     * verified empty up front, so nothing else can be overwritten), an
     * accumulator cross-checks that every task-side copy actually ran, and
-    * only then does the driver take the ONE locked manifest commit. The
+    * only then does the driver make the ONE manifest commit. The
     * driver never moves bytes — at 100 TB the copy saturates the cluster,
     * not one machine. A SHALLOW clone (manifest referencing source files)
     * is deliberately not offered, because the store's relative-path
@@ -1275,9 +1266,8 @@ object EventStore {
   // the GDPR-erasure / late-correction / CDC-upsert operations every real
   // 100 TB store eventually needs — with the same copy-on-write shape
   // table formats use: touched files are rewritten under maintenance
-  // names, untouched files are never opened, and ONE manifest commit
-  // ([[commitRebased]], under the commit lock)
-  // swaps the row change in atomically. Readers pinned to an old version
+  // names, untouched files are never opened, and ONE rebasing manifest
+  // commit ([[commitRebased]]) swaps the row change in atomically. Readers pinned to an old version
   // keep their snapshot; [[vacuum]] reclaims the replaced files later.
 
   /** Outcome of [[mergeInto]] / [[deleteWhere]]. `filesDropped` counts
@@ -1636,8 +1626,10 @@ object EventStore {
     * newest K manifest versions' files all survive, and manifests older
     * than that are dropped — [[readPinned]] time travel reaches exactly as
     * far back as the last vacuum's retention, the same contract Delta's
-    * VACUUM has. Default 1 = only the current snapshot survives. Returns
-    * the deleted data-file relative paths. */
+    * VACUUM has. Default 1 = only the current snapshot survives. Staging
+    * dirs and manifest/sidecar temp files that crashed writes left go
+    * after the same grace window. Returns the deleted data-file relative
+    * paths. */
   def vacuum(spark: SparkSession, path: String, olderThanMs: Long = 0L,
              keepVersions: Int = 1): Seq[String] = {
     require(keepVersions >= 1, s"vacuum: keepVersions must be >= 1, got $keepVersions")
@@ -1659,22 +1651,24 @@ object EventStore {
     // dangling manifest would turn a clear "vacuumed past retention"
     // error into a silent short read
     dropped.foreach { v =>
-      fs.delete(manifestPath(fs, root, v), false)
+      fs.delete(manifestPath(root, v), false)
       // sidecars die with their version
-      fs.delete(statsPath(root, v), false)
-      fs.delete(keysPath(root, v), false)
+      Seq("stats", "keys").foreach(k => fs.delete(sidecarPath(root, v, k), false))
     }
-    // crashed-maintenance STAGING dirs past the same grace window: pure
-    // scratch (their contents were either moved out or never committed).
-    // The legacy compactor's `.<part>.compact-old` parking is deliberately
-    // NOT touched — it can hold the only copy of a partition, and
-    // readRetrying's recovery message points operators at it.
+    // crashed writes' scratch past the same grace window: maintenance
+    // STAGING dirs (their contents were either moved out or never
+    // committed) and manifest/sidecar TEMP files (a version or sidecar
+    // exists only under its published name). The legacy compactor's
+    // `.<part>.compact-old` parking is deliberately NOT touched — it can
+    // hold the only copy of a partition, and readRetrying's recovery
+    // message points operators at it.
     val staging = ("""^\..*\.compact-staging(?:-\d+)?$|^\.zorder-staging(?:-\d+)?$""" +
       """|^\.(?:merge|delete)-(?:rewrite|insert)-\d+$""" +
       """|^\.(?:ingest|ctas)-staging-\d+$""").r
+    val temp = """^\.(?:manifest|stats|keys)-v\d+(?:-\d+-\d+)?\.tmp$""".r
     fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && staging.pattern.matcher(s.getPath.getName).matches()
-        && s.getModificationTime <= cutoff)
+      .filter(s => s.getModificationTime <= cutoff &&
+        (if (s.isDirectory) staging else temp).pattern.matcher(s.getPath.getName).matches())
       .foreach(s => fs.delete(s.getPath, true))
     deleted
   }

@@ -348,67 +348,63 @@ class StoreStreamSpec extends AnyFunSuite {
   }
 
   test("manifest commit race: N threads hammering commits lose nothing, versions stay unique and monotone") {
-    // The property the exclusive-create lock exists for (EventStore
-    // withCommitLock scaladoc): POSIX rename-to-destination OVERWRITES, so
-    // without arbitration two racing committers can both "succeed" at the
-    // same version and one commit is silently lost. Witness: after T
-    // threads × K commits each (every commit preceded by dropping a unique
-    // data file into the store), the number of manifest versions equals
-    // the number of successful commits (no overwrite collapsed two), and a
-    // final adoption sees EVERY dropped file (no placement lost).
-    val dir = Files.createTempDirectory("graft-race").toString + "/events"
+    // The property the no-overwrite publish exists for (EventStore.commit
+    // scaladoc): POSIX rename-to-destination OVERWRITES, so without an
+    // arbiter two racing committers can both "succeed" at the same
+    // version and one commit is silently lost. Witness: after T threads ×
+    // K commits each (every commit preceded by dropping a unique data
+    // file into the store), the number of manifest versions equals the
+    // number of successful commits (no overwrite collapsed two), and a
+    // final adoption sees EVERY dropped file (no placement lost). No
+    // caller retries: the engine rebases a lost commit itself. Run on the
+    // local scheme (hard-link publish) and on `renamehook:` (HDFS-style
+    // rename publish).
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) === 1)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.coalesce(1), dir)
-    EventStore.writeManifest(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // template data file to clone under fresh names (content irrelevant)
-    val template = EventStore.manifestFiles(spark, dir).head
-    val partDir = new org.apache.hadoop.fs.Path(template).getParent
-    val threads = 8; val perThread = 12
-    val committed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def commitWithRetry(): Unit = {
-      var done = false; var tries = 0
-      while (!done) {
-        try { EventStore.writeManifest(spark, dir); committed.incrementAndGet(); done = true }
-        catch {
-          case e: IllegalStateException if e.getMessage.contains("lock") =>
-            tries += 1
-            if (tries > 2000) throw new IllegalStateException("lock starvation", e)
-            Thread.sleep(1L)
-        }
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (scheme <- Seq("file", "renamehook")) {
+      val local = Files.createTempDirectory("graft-race").toString + "/events"
+      val dir = if (scheme == "file") local else RenameHookFs.path(conf, local)
+      EventStore.append(src.coalesce(1), dir)
+      EventStore.writeManifest(spark, dir)
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(conf)
+      // template data file to clone under fresh names (content irrelevant)
+      val template = EventStore.manifestFiles(spark, dir).head
+      val partDir = new org.apache.hadoop.fs.Path(template).getParent
+      val threads = 8; val perThread = 12
+      val committed = new java.util.concurrent.atomic.AtomicInteger(0)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val pool = (0 until threads).map { t =>
+        new Thread(() => {
+          try (0 until perThread).foreach { i =>
+            org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(template),
+              fs, new org.apache.hadoop.fs.Path(partDir, s"part-race-$t-$i.parquet"),
+              false, conf)
+            EventStore.writeManifest(spark, dir)
+            committed.incrementAndGet()
+          } catch { case e: Throwable => failures.add(e) }
+        })
       }
-    }
-    val pool = (0 until threads).map { t =>
-      new Thread(() => {
-        try (0 until perThread).foreach { i =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(template),
-            fs, new org.apache.hadoop.fs.Path(partDir, s"part-race-$t-$i.parquet"),
-            false, spark.sparkContext.hadoopConfiguration)
-          commitWithRetry()
-        } catch { case e: Throwable => failures.add(e) }
-      })
-    }
-    val v0 = EventStore.manifestVersion(spark, dir)
-    pool.foreach(_.start()); pool.foreach(_.join())
-    assert(failures.isEmpty, s"thread failures: ${failures.toArray.mkString(", ")}")
-    assert(committed.get() == threads * perThread)
-    // every successful commit produced its OWN version — none overwritten
-    val vFinal = EventStore.manifestVersion(spark, dir)
-    assert(vFinal == v0 + committed.get(),
-      s"expected ${v0 + committed.get()} as final version, got $vFinal — a commit was lost")
-    // no placement lost: one more adoption sees every dropped file
-    EventStore.writeManifest(spark, dir)
-    val finalFiles = EventStore.manifestFiles(spark, dir)
-    val raceFiles = finalFiles.count(_.contains("part-race-"))
-    assert(raceFiles == threads * perThread,
-      s"adopted $raceFiles of ${threads * perThread} race files")
-    // and the monotone version chain is fully readable (no corrupt writes)
-    ((v0 + 1) to vFinal).foreach { v =>
-      assert(EventStore.manifestFiles(spark, dir, v).nonEmpty)
+      val v0 = EventStore.manifestVersion(spark, dir)
+      pool.foreach(_.start()); pool.foreach(_.join())
+      assert(failures.isEmpty, s"$scheme: thread failures: ${failures.toArray.mkString(", ")}")
+      assert(committed.get() == threads * perThread)
+      // every successful commit produced its OWN version — none overwritten
+      val vFinal = EventStore.manifestVersion(spark, dir)
+      assert(vFinal == v0 + committed.get(),
+        s"$scheme: expected ${v0 + committed.get()} as final version, got $vFinal — a commit was lost")
+      // no placement lost: one more adoption sees every dropped file
+      EventStore.writeManifest(spark, dir)
+      val finalFiles = EventStore.manifestFiles(spark, dir)
+      val raceFiles = finalFiles.count(_.contains("part-race-"))
+      assert(raceFiles == threads * perThread,
+        s"$scheme: adopted $raceFiles of ${threads * perThread} race files")
+      // and the monotone version chain is fully readable (no corrupt writes)
+      ((v0 + 1) to vFinal).foreach { v =>
+        assert(EventStore.manifestFiles(spark, dir, v).nonEmpty)
+      }
     }
   }
 
@@ -509,7 +505,7 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(key(EventStore.readPinned(spark, store)) == key(src))
   }
 
-  test("manifest commits are lock-arbitrated; crashed-maintenance debris is quarantined, then vacuumed") {
+  test("manifest commits need no lock; crashed-maintenance debris is quarantined, then vacuumed") {
     val base = Files.createTempDirectory("graft-manlock").toString
     val store = base + "/store"
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
@@ -519,12 +515,15 @@ class StoreStreamSpec extends AnyFunSuite {
     EventStore.writeManifest(spark, store)
     val rows = src.count()
 
-    // 1) a held commit lock BLOCKS loudly — it must never silently
-    // overwrite (the local-FS rename-overwrite lost-update)
+    // 1) a `.manifest.lock` that a crashed committer left behind (stores
+    // once serialised commits on one) blocks nothing: the version file's
+    // name is the only arbiter
     val lockF = new java.io.File(store, ".manifest.lock")
     assert(lockF.createNewFile())
-    val e = intercept[IllegalStateException](EventStore.writeManifest(spark, store))
-    assert(e.getMessage.contains("commit lock") && e.getMessage.contains("crashed"))
+    val vLocked = EventStore.manifestVersion(spark, store)
+    EventStore.writeManifest(spark, store)
+    assert(EventStore.manifestVersion(spark, store) == vLocked + 1)
+    assert(EventStore.readPinned(spark, store).count() == rows)
     assert(lockF.delete())
 
     // 2) simulate a crashed compaction: a maintenance-named file moved
@@ -2316,28 +2315,15 @@ class StoreStreamSpec extends AnyFunSuite {
       val del = feed.filter(col("_change_type") === "delete").count()
       n = n + ins - del
     }).start()
-    // 3 committer threads × 3 lock-arbitrated txn appends each, racing the
-    // live poller; day ranges are disjoint so the final truth is clean
+    // 3 committer threads × 3 racing txn appends each (no caller retries:
+    // a lost commit rebases inside the engine), racing the live poller;
+    // day ranges are disjoint so the final truth is clean
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def commitWithRetry(day: Int, app: String, batch: Long): Unit = {
-      var done = false; var tries = 0
-      while (!done) {
-        try {
-          EventStore.appendCommitted(
-            ev.filter(dayofmonth(col("ts")) === day), dir, app, batch)
-          done = true
-        } catch {
-          case e: IllegalStateException if e.getMessage.contains("lock") =>
-            tries += 1
-            if (tries > 2000) throw new IllegalStateException("lock starvation", e)
-            Thread.sleep(1L)
-        }
-      }
-    }
     val threads = (0 until 3).map { t =>
       new Thread(() => {
         try (1 to 3).foreach { b =>
-          commitWithRetry(2 + t * 3 + (b - 1), s"cdc-race-$t", b.toLong)
+          EventStore.appendCommitted(ev.filter(dayofmonth(col("ts")) === 2 + t * 3 + (b - 1)),
+            dir, s"cdc-race-$t", b.toLong)
         } catch { case e: Throwable => errs.add(e) }
       })
     }
@@ -2359,23 +2345,12 @@ class StoreStreamSpec extends AnyFunSuite {
     EventStore.writeManifest(spark, dir)
     val v0 = EventStore.manifestVersion(spark, dir)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def withLockRetry(f: => Unit): Unit = {
-      var done = false; var tries = 0
-      while (!done) {
-        try { f; done = true } catch {
-          case e: IllegalStateException if e.getMessage.contains("lock") =>
-            tries += 1
-            if (tries > 2000) throw new IllegalStateException("lock starvation", e)
-            Thread.sleep(1L)
-        }
-      }
-    }
     val appenders = (0 until 2).map { t =>
       new Thread(() => {
         try (1 to 4).foreach { b =>
-          withLockRetry(EventStore.appendCommitted(
+          EventStore.appendCommitted(
             ev.filter(dayofmonth(col("ts")) === (2 + t * 4 + (b - 1))
-              ).repartition(2), dir, s"cr-app-$t", b.toLong))
+              ).repartition(2), dir, s"cr-app-$t", b.toLong)
         } catch { case e: Throwable => errs.add(e) }
       })
     }
@@ -2383,7 +2358,7 @@ class StoreStreamSpec extends AnyFunSuite {
       try (1 to 3).foreach { _ =>
         // tiny target → every multi-file partition rewrites each pass;
         // appends never remove files, so the rebase must always apply
-        withLockRetry(EventStore.compactInPlace(spark, dir, targetBytes = 1L << 30))
+        EventStore.compactInPlace(spark, dir, targetBytes = 1L << 30)
         Thread.sleep(20)
       } catch { case e: Throwable => errs.add(e) }
     })
