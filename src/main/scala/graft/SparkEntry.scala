@@ -1657,15 +1657,24 @@ object SparkEntry {
         countDistinct(col("user_id")).as("n_users"))
   }
 
+  /** Files the planned parquet scans of `df` read, after partition and
+    * sidecar pruning (`inputFiles` lists every file a read binds). */
+  private[graft] def scannedFiles(df: DataFrame): Long =
+    df.queryExecution.sparkPlan.collect {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+        scan.selectedPartitions.totalNumberOfFiles
+    }.sum
+
   /** c8: the stats-carrying manifest, oracle-checked end-to-end — fragment
     * a store copy, manifest, z-order it (c6's layout), pin per-file
     * user_id ranges against the clustered version, then answer a
-    * selective user-range aggregate through `readPinnedWhere`, which
-    * prunes files at PLANNING time from the pinned stats. The require
-    * fails the query loudly unless the plan bound strictly fewer files
-    * than the manifest lists — so the row is only green when file-level
-    * skipping actually engaged AND the pruned read still returns exactly
-    * the DuckDB answer (pruning is conservative, never lossy). */
+    * selective user-range aggregate through a plain filter on the pinned
+    * read, whose file index prunes at PLANNING time from the pinned
+    * stats. The require fails the query loudly unless the planned scan
+    * reads strictly fewer files than the manifest lists — so the row is
+    * only green when file-level skipping actually engaged AND the pruned
+    * read still returns exactly the DuckDB answer (pruning is
+    * conservative, never lossy). */
   private def c8StatsPrune(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-stats-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -1685,11 +1694,9 @@ object SparkEntry {
     val mmRow = ev.agg(min("user_id"), max("user_id")).head()
     val (uMin, uMax) = (mmRow.getLong(0), mmRow.getLong(1))
     val uHi = uMin + math.max(1L, (uMax - uMin) / 8)
-    val pruned = graft.sources.EventStore.readPinnedWhere(
-      s, path, "user_id", uMin, uHi)
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"stats pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("user_id").between(uMin, uHi))
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"stats pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned
       .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"))
       .agg(count(lit(1)).as("n"),
@@ -1704,8 +1711,8 @@ object SparkEntry {
     * file's [min, max] covers 1-2 types; bounds are pinned TRUNCATED to 4
     * chars (exercising the increment-at-the-cut upper bound at
     * verification scale — 'purchase' pins as ['purc', 'purd']), and the
-    * point read binds a strict subset of the manifest (require-gated) with
-    * results equal to the full filtered read. */
+    * equality filter's scan reads a strict subset of the manifest
+    * (require-gated) with results equal to the full filtered read. */
   private def c8bStringPrune(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-strstats-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -1720,11 +1727,9 @@ object SparkEntry {
     graft.sources.EventStore.writeManifest(s, path)
     graft.sources.EventStore.writeFileStats(s, path, Seq("user_id"),
       stringColumns = Seq("event_type"), truncateTo = 4)
-    val pruned = graft.sources.EventStore.readPinnedWhereString(
-      s, path, "event_type", "click", "click")
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"string stats pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("event_type") === "click")
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"string stats pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned
       .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"))
       .agg(count(lit(1)).as("n"),
@@ -1779,9 +1784,9 @@ object SparkEntry {
 
   /** c12: point-lookup pruning — the membership sidecar complement to
     * c8's range stats: after z-order clustering, one user's events live
-    * in a handful of files, and the exact per-file key sets bind the
-    * point query to just those (require-gated), with results equal to
-    * the full filtered read. */
+    * in a handful of files, and the exact per-file key sets prune the
+    * point filter's scan to just those (require-gated), with results
+    * equal to the full filtered read. */
   private def c12PointPrune(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-point-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -1799,11 +1804,9 @@ object SparkEntry {
       targetBytes = math.max(1L, bytes / 24))
     graft.sources.EventStore.writeFileKeySets(s, path, "user_id")
     val uMin = ev.agg(min("user_id")).head().getLong(0)
-    val pruned = graft.sources.EventStore.readPinnedPoint(
-      s, path, "user_id", uMin)
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"membership pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("user_id") === uMin)
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"membership pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 3).as("sum_value"),
@@ -1815,8 +1818,8 @@ object SparkEntry {
     * ([[graft.sources.ZOrder.fileDoubleStats]]): primitive `<=`/`>=` on
     * both sides of the prune, -0.0 == 0.0, NaN-poisoned files admitted.
     * Files hold contiguous value ranges (range repartition — the layout
-    * the bounds can separate); the narrow low slice must bind a strict
-    * file subset and return exactly the plain filter's rows. */
+    * the bounds can separate); the narrow low slice's scan must read a
+    * strict file subset and return exactly the plain filter's rows. */
   private def c8cDoublePrune(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-dblstats-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -1831,11 +1834,9 @@ object SparkEntry {
     val mm = ev.agg(min("value"), max("value")).head()
     val (vMin, vMax) = (mm.getDouble(0), mm.getDouble(1))
     val vHi = vMin + (vMax - vMin) / 8
-    val pruned = graft.sources.EventStore.readPinnedWhereDouble(
-      s, path, "value", vMin, vHi)
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"double-stats pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("value").between(vMin, vHi))
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"double-stats pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned
       .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"))
       .agg(count(lit(1)).as("n"),
@@ -1846,9 +1847,9 @@ object SparkEntry {
   /** c12b: bloom-tier point pruning — the key column is `event_id`
     * (unique per row), so EVERY manifested file is far above the
     * exact-set cap and the whole store rides the per-file bloom sidecar.
-    * The point read must still bind a strict file subset (a bloom miss
-    * proves absence; false positives only admit) and return exactly the
-    * unpruned filter's rows — this is the membership pruning that works
+    * The point filter's scan must still read a strict file subset (a
+    * bloom miss proves absence; false positives only admit) and return
+    * exactly the unpruned filter's rows — this is the membership pruning that works
     * on exactly the high-cardinality un-z-ordered files c12's exact tier
     * cannot pin. */
   private def c12bBloomPrune(s: SparkSession, dir: String): DataFrame = {
@@ -1862,11 +1863,9 @@ object SparkEntry {
     graft.sources.EventStore.writeFileKeySets(s, path, "event_id",
       maxDistinct = 16)
     val kMin = ev.agg(min("event_id")).head().getLong(0)
-    val pruned = graft.sources.EventStore.readPinnedPoint(
-      s, path, "event_id", kMin)
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"bloom pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("event_id") === kMin)
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"bloom pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned.groupBy(col("event_id"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 3).as("sum_value"),
@@ -1876,10 +1875,9 @@ object SparkEntry {
   /** c12c: STRING-key membership pruning — a synthetic string id
     * (`u<user_id>`) range-clustered so files hold disjoint key ranges;
     * the sidecar pins xxhash64 hashes (8 bytes/key whatever the string
-    * length — the only sidecar a 100 TB doc-id column can afford), the
-    * point read probes hashed and row-filters on the plain string. The
-    * prune must bind a strict file subset and return exactly the
-    * unpruned string-equality read. */
+    * length — the only sidecar a 100 TB doc-id column can afford), and
+    * the plain string-equality filter probes them hashed. Its scan must
+    * read a strict file subset and return exactly the unpruned read. */
   private def c12cStringPoint(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-strpoint-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -1892,11 +1890,9 @@ object SparkEntry {
     graft.sources.EventStore.writeManifest(s, path)
     graft.sources.EventStore.writeFileKeySets(s, path, "skey")
     val kMin = "u" + ev.agg(min("user_id")).head().getLong(0)
-    val pruned = graft.sources.EventStore.readPinnedPointString(
-      s, path, "skey", kMin)
-    require(pruned.inputFiles.length <
-      graft.sources.EventStore.manifestFiles(s, path).size,
-      s"string membership pruning must bind fewer files, bound ${pruned.inputFiles.length}")
+    val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("skey") === kMin)
+    require(scannedFiles(pruned) < graft.sources.EventStore.manifestFiles(s, path).size,
+      s"string membership pruning must scan fewer files, scanned ${scannedFiles(pruned)}")
     pruned.groupBy(col("skey"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 3).as("sum_value"),

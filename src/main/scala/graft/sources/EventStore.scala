@@ -166,16 +166,24 @@ object EventStore {
   private def manifestPath(root: org.apache.hadoop.fs.Path, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.json")
 
-  /** All committed manifest versions under the store, ascending, from one
+  /** The names of the files directly under the store root, from one
     * listing; a missing root is an empty store. */
-  private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
-                               root: org.apache.hadoop.fs.Path): Seq[Long] = {
+  private def rootFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        root: org.apache.hadoop.fs.Path): Seq[String] = {
     val listing = try fs.listStatus(root) catch {
       case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus]
     }
     listing.toSeq.filter(_.isFile).map(_.getPath.getName)
-      .collect { case ManifestVersioned(v) => v.toLong }.sorted
   }
+
+  /** The committed manifest versions a root listing shows, ascending. */
+  private def versionsIn(names: Seq[String]): Seq[Long] =
+    names.collect { case ManifestVersioned(v) => v.toLong }.sorted
+
+  /** All committed manifest versions under the store, ascending. */
+  private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
+                               root: org.apache.hadoop.fs.Path): Seq[Long] =
+    versionsIn(rootFiles(fs, root))
 
   /** Visible data files, as `partitionDir/fileName` relative paths.
     * Hidden (dot-prefixed) directories — maintenance staging and the
@@ -316,10 +324,11 @@ object EventStore {
       next
     }._1
 
-  private def readManifestText(fs: org.apache.hadoop.fs.FileSystem,
-                               root: org.apache.hadoop.fs.Path,
-                               version: Long): String = {
-    val versions = manifestVersions(fs, root)
+  /** Manifest version `version` (−1: the latest) among the committed
+    * `versions`, and the files it lists. */
+  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path, versions: Seq[Long],
+                         version: Long): (Long, Seq[String]) = {
     require(versions.nonEmpty,
       s"no manifest under $root — this store is not manifested; " +
         "call writeManifest after appends to adopt the pinned-read protocol")
@@ -327,7 +336,13 @@ object EventStore {
     require(versions.contains(v),
       s"manifest v$version does not exist under $root (have: " +
         s"${versions.mkString(", ")}) — vacuumed past retention or never committed")
-    readText(fs, manifestPath(root, v))
+    val txt = readText(fs, manifestPath(root, v))
+    // parse only the files ARRAY — a txn header carries its own quoted
+    // strings that must never read as file names
+    val fi = txt.indexOf("\"files\"")
+    val body = if (fi >= 0) txt.substring(fi) else txt
+    (v, """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body).map(_.group(1)
+      .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq.filter(_ != "files"))
   }
 
   private def readText(fs: org.apache.hadoop.fs.FileSystem,
@@ -338,27 +353,10 @@ object EventStore {
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** `version`, or the latest committed version for −1. */
-  private def resolveVersion(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path,
-                             version: Long, op: String): Long =
-    if (version >= 0) version else {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"$op: no manifest under $root")
-      vs.last
-    }
-
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
-                               version: Long = -1L): Seq[String] = {
-    val txt = readManifestText(fs, root, version)
-    // parse only the files ARRAY — a txn header carries its own quoted
-    // strings that must never read as file names
-    val fi = txt.indexOf("\"files\"")
-    val body = if (fi >= 0) txt.substring(fi) else txt
-    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body).map(_.group(1)
-      .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq.filter(_ != "files")
-  }
+                               version: Long = -1L): Seq[String] =
+    manifestAt(fs, root, manifestVersions(fs, root), version)._2
 
   private val TxnHeader =
     """"txn": \{"app": "((?:[^"\\]|\\.)*)", "batch": (-?\d+)\}""".r
@@ -560,8 +558,9 @@ object EventStore {
     * Pass an old version to [[readPinned]] to time-travel. */
   def manifestVersion(spark: SparkSession, path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
-    resolveVersion(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      root, -1L, "manifestVersion")
+    manifestVersions(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      .lastOption.getOrElse(throw new IllegalArgumentException(
+        s"manifestVersion: no manifest under $root"))
   }
 
   /** Manifest-pinned read: the plan binds to the manifest's exact file
@@ -582,14 +581,23 @@ object EventStore {
     * parquet footer is the cheapest possible "null for old rows"), and the
     * merged read unifies every footer's schema — old files' missing
     * columns surface as nulls. Off by default: the single-footer read
-    * skips the footer sweep and is the right call for a settled schema. */
+    * skips the footer sweep and is the right call for a settled schema.
+    *
+    * The version's sidecars ([[writeFileStats]], [[writeFileKeySets]])
+    * prune every scan of the read, however its filter is written — a
+    * `.filter`, a join, a ZxSql statement ([[sidecarPruner]]). */
   def readPinned(spark: SparkSession, path: String, version: Long = -1L,
                  mergeSchema: Boolean = false): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = readManifestFile(fs, root, version)
+    val names = rootFiles(fs, root)
+    val (v, files) = manifestAt(fs, root, versionsIn(names), version)
     require(files.nonEmpty, s"readPinned: empty manifest under $path")
-    readFiles(spark, path, files, mergeSchema)
+    // the sidecars the manifest's own listing shows; one pinned later
+    // prunes later reads
+    val sidecars = Seq("stats", "keys").map(sidecarPath(root, v, _))
+      .filter(p => names.contains(p.getName))
+    bind(spark, path, files, mergeSchema, sidecars)
   }
 
   /** Manifested compaction — same sizing policy as [[compact]], different
@@ -623,6 +631,9 @@ object EventStore {
       if (files.length <= nOut) None
       else Some((part, partPath, files, bytes, nOut))
     }
+    // nothing to compact commits nothing: a version repeating the file set
+    // would burn a vacuum retention slot (the appendCommitted rule)
+    if (affected.isEmpty) return Seq.empty
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -665,10 +676,12 @@ object EventStore {
   // ------------------------------------------------ stats-carrying manifest
   //
   // File-level min/max stats pinned NEXT TO a manifest version: the same
-  // idea table formats keep in their metadata layer. With them a reader
-  // prunes whole files at PLANNING time — fewer tasks scheduled, no
-  // footer even opened on the pruned files — one level above the
-  // row-group pruning the parquet reader does at read time. The payoff
+  // idea table formats keep in their metadata layer. With them every
+  // pinned read prunes whole files at PLANNING time, inside the scan's
+  // file index — fewer tasks scheduled, no footer even opened on the
+  // pruned files — one level above the row-group pruning the parquet
+  // reader does at read time. A version without sidecars, or between a
+  // re-pin's delete and rename, reads unpruned. The payoff
   // multiplies with [[clusterInPlace]]: z-ordered files have tight
   // per-file ranges on the clustering columns, so a selective filter
   // keeps a small fraction of the file list.
@@ -697,8 +710,7 @@ object EventStore {
       "writeFileStats: no columns")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = resolveVersion(fs, root, version, "writeFileStats")
-    val rel = readManifestFile(fs, root, v)
+    val (v, rel) = manifestAt(fs, root, manifestVersions(fs, root), version)
     val lines = columns.flatMap { c =>
       ZOrder.fileColumnStats(spark, rel.map(f => path + "/" + f), c)
         .zip(rel).collect { case ((_, Some((mn, mx))), r) =>
@@ -732,8 +744,8 @@ object EventStore {
   /** Install manifest version `v`'s `kind` sidecar ("stats" or "keys"):
     * `write` fills a hidden temp file, which is then renamed into place.
     * A re-pin replaces the earlier sidecar, so that one is deleted first —
-    * HDFS refuses a rename onto an existing file. In between, a pruned
-    * read fails loudly for want of a sidecar; it never reads half of one. */
+    * HDFS refuses a rename onto an existing file. A read in between is
+    * unpruned, never wrong; it never reads half of a sidecar. */
   private def publishSidecar(fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path, v: Long,
                              kind: String, op: String)
@@ -745,66 +757,6 @@ object EventStore {
     fs.delete(dest, false)
     require(fs.rename(tmp, dest),
       s"$op: could not commit the $kind sidecar for manifest v$v under $root")
-  }
-
-  private val StatsLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","mn":(-?\d+),"mx":(-?\d+)\}""".r
-
-  private val StrStatsLine =
-    ("""\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)",""" +
-      """"smn":"((?:[^"\\]|\\.)*)","smx":"((?:[^"\\]|\\.)*)"\}""").r
-
-  private val DblStatsLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","dmn":([-+0-9.eE]+),"dmx":([-+0-9.eE]+)\}""".r
-
-  /** String-stats-pruned pinned read (c8b): bind the plan to ONLY the
-    * manifest files whose pinned truncated bounds on string `column`
-    * intersect `[lo, hi]` (equality = `lo == hi`), then apply the row
-    * filter. Truncated bounds are conservative by construction
-    * ([[ZOrder.truncatedStringBounds]]: lower ≤ true min, upper ≥ true
-    * max), and files without pinned bounds are kept, so results equal
-    * `readPinned(...).filter(column between lo and hi)` exactly. ASCII
-    * bounds only (enforced at pin time) — the driver's Java-String compare
-    * and Spark's UTF-8 binary compare agree there. */
-  def readPinnedWhereString(spark: SparkSession, path: String, column: String,
-                            lo: String, hi: String, version: Long = -1L): DataFrame = {
-    require(lo <= hi, s"readPinnedWhereString: empty range ['$lo', '$hi']")
-    readPruned(spark, path, version, "readPinnedWhereString", column, keys = false,
-        s"writeFileStats(..., stringColumns = Seq(\"$column\"))",
-        col(column) >= lit(lo) && col(column) <= lit(hi),
-        Some(dt => require(dt == org.apache.spark.sql.types.StringType,
-          s"readPinnedWhereString: '$column' must be a string column, got " + dt))) {
-      case StrStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> (jsonUnescape(mx) >= lo && jsonUnescape(mn) <= hi)
-    }
-  }
-
-  /** Double-stats-pruned pinned read (c8c): bind the plan to ONLY the
-    * manifest files whose pinned float/double bounds on `column`
-    * intersect `[lo, hi]`, then apply the row filter. The comparison
-    * contract is [[ZOrder.fileDoubleStats]]'s: PRIMITIVE IEEE `<=`/`>=`
-    * on both sides of the prune — never total order — matching exactly
-    * how Spark and DuckDB evaluate the row filter (-0.0 == 0.0; NaN rows
-    * fail any finite range in both engines, and NaN-poisoned or
-    * unstatted files are always admitted). Finite bounds only: a NaN or
-    * infinite query bound has no prunable meaning and fails loudly. */
-  def readPinnedWhereDouble(spark: SparkSession, path: String, column: String,
-                            lo: Double, hi: Double, version: Long = -1L)
-      : DataFrame = {
-    require(java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi)
-        && lo <= hi,
-      s"readPinnedWhereDouble: bounds must be finite with lo <= hi, " +
-        s"got [$lo, $hi]")
-    readPruned(spark, path, version, "readPinnedWhereDouble", column, keys = false,
-        s"writeFileStats(..., doubleColumns = Seq(\"$column\"))",
-        col(column) >= lit(lo) && col(column) <= lit(hi),
-        Some(dt => require(dt == org.apache.spark.sql.types.DoubleType ||
-            dt == org.apache.spark.sql.types.FloatType,
-          s"readPinnedWhereDouble: '$column' must be float/double, got " + dt))) {
-      // primitive IEEE compare
-      case DblStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> (mx.toDouble >= lo && mn.toDouble <= hi)
-    }
   }
 
   /** splitmix64 finalizer — the membership sidecar's base hash (public
@@ -892,7 +844,7 @@ object EventStore {
     * immutable version-tied commit discipline as the stats sidecar.
     * STRING key columns (c12c) pin xxhash64 hashes in both tiers —
     * constant 8 bytes per key in the sidecar whatever the string length,
-    * probed via [[readPinnedPointString]]; a hash collision only admits
+    * probed with the filter literal's hash; a hash collision only admits
     * a file (same safe direction as a bloom false positive), never
     * corrupts a result. Most effective after [[clusterInPlace]] on the
     * key column — z-order makes per-file key sets small and disjoint. */
@@ -908,8 +860,7 @@ object EventStore {
       s"writeFileKeySets: bloomFpp must be in (0,1), got $bloomFpp")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = resolveVersion(fs, root, version, "writeFileKeySets")
-    val rel = readManifestFile(fs, root, v)
+    val (v, rel) = manifestAt(fs, root, manifestVersions(fs, root), version)
     val abs = rel.map(f => path + "/" + f)
     val df = readFiles(spark, path, rel)
     // STRING keys (c12c) ride the same two tiers through xxhash64: the
@@ -1009,115 +960,138 @@ object EventStore {
     pinned
   }
 
-  private val KeysLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","k":\[([-\d,]*)\]\}""".r
+  // sidecar lines: the file and column, then one tier's pin
+  private val FileCol = """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","""
+  private val StatsLine = (FileCol + """"mn":(-?\d+),"mx":(-?\d+)\}""").r
+  private val StrStatsLine =
+    (FileCol + """"smn":"((?:[^"\\]|\\.)*)","smx":"((?:[^"\\]|\\.)*)"\}""").r
+  private val DblStatsLine = (FileCol + """"dmn":([-+0-9.eE]+),"dmx":([-+0-9.eE]+)\}""").r
+  private val KeysLine = (FileCol + """"k":\[([-\d,]*)\]\}""").r
+  private val BloomLine = (FileCol + """"bk":(\d+),"bm":"([A-Za-z0-9+/=]*)"\}""").r
+  private val HKeysLine = (FileCol + """"kh":\[([-\d,]*)\]\}""").r
+  private val HBloomLine = (FileCol + """"bkh":(\d+),"bmh":"([A-Za-z0-9+/=]*)"\}""").r
 
-  private val BloomLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","bk":(\d+),"bm":"([A-Za-z0-9+/=]*)"\}""".r
-
-  private val HKeysLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","kh":\[([-\d,]*)\]\}""".r
-
-  private val HBloomLine =
-    """\{"f":"((?:[^"\\]|\\.)*)","c":"((?:[^"\\]|\\.)*)","bkh":(\d+),"bmh":"([A-Za-z0-9+/=]*)"\}""".r
-
-  /** Membership-pruned point lookup: bind the plan to ONLY the manifest
-    * files whose pinned key set contains `key` — exactly for ≤-cap files,
-    * bloom-probabilistically for the rest (false positives admit, misses
-    * prove absence); files with no pinned entry of either tier are
-    * admitted (conservative) — then apply the row filter. Results equal
-    * `readPinned(...).filter(column === key)` exactly. */
-  def readPinnedPoint(spark: SparkSession, path: String, column: String,
-                      key: Long, version: Long = -1L): DataFrame =
-    readPruned(spark, path, version, "readPinnedPoint", column, keys = true,
-        s"writeFileKeySets(..., \"$column\")", col(column) === lit(key))(
-      memberOf(column, key, KeysLine, BloomLine))
-
-  /** Membership-pruned point lookup on a STRING key column (c12c): the
-    * sidecar pinned xxhash64 hashes ([[writeFileKeySets]] on a string
-    * column), so both tiers probe with the hashed key — a set/bloom miss
-    * proves the string absent (xxhash64 is deterministic), a hit may be a
-    * collision and only admits a file to the scan. The row filter is the
-    * plain string equality, so results equal
-    * `readPinned(...).filter(column === key)` exactly. */
-  def readPinnedPointString(spark: SparkSession, path: String, column: String,
-                            key: String, version: Long = -1L): DataFrame = {
-    require(key != null, "readPinnedPointString: null key has no membership")
-    // the probe hash must be EXACTLY the hash the writer's xxhash64
-    // column produced: the same catalyst expression (seed 42, as
-    // functions.xxhash64 builds it), evaluated on the driver
-    val probe = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(key))).eval().asInstanceOf[Long]
-    readPruned(spark, path, version, "readPinnedPointString", column, keys = true,
-        s"writeFileKeySets(..., \"$column\")", col(column) === lit(key))(
-      memberOf(column, probe, HKeysLine, HBloomLine))
-  }
-
-  /** A key-set sidecar line's verdict on `key`: an exact set admits its
-    * members, a bloom everything it may hold (a miss proves absence). */
-  private def memberOf(column: String, key: Long, setLine: scala.util.matching.Regex,
-                       bloomLine: scala.util.matching.Regex)
-      : PartialFunction[String, (String, Boolean)] = {
-    case setLine(f, c, ks) if jsonUnescape(c) == column =>
-      jsonUnescape(f) -> ks.split(',').exists(k => k.nonEmpty && k.toLong == key)
-    case bloomLine(f, c, bk, bm) if jsonUnescape(c) == column =>
-      jsonUnescape(f) -> bloomContains(java.util.Base64.getDecoder.decode(bm), bk.toInt, key)
-  }
-
-  /** Stats-pruned pinned read: bind the plan to ONLY the manifest files
-    * whose pinned `[min, max]` on `column` intersects `[lo, hi]`, then
-    * apply the row filter. Files without a pinned range are kept (pruning
-    * is always conservative), so results equal
-    * `readPinned(...).filter(column between lo and hi)` exactly — the
-    * difference is how many files the plan ever sees. Requires
-    * [[writeFileStats]] for this version to exist; integral columns only
-    * (enforced on the bound plan's schema). */
-  def readPinnedWhere(spark: SparkSession, path: String, column: String,
-                      lo: Long, hi: Long, version: Long = -1L): DataFrame =
-    readPruned(spark, path, version, "readPinnedWhere", column, keys = false,
-        s"writeFileStats(..., Seq(\"$column\"))",
-        col(column) >= lit(lo) && col(column) <= lit(hi),
-        Some(dt => require(IntegralTypes(dt),
-          s"readPinnedWhere: '$column' must be integral (timestamps belong to " +
-            "date-partition pruning) — got " + dt))) {
-      case StatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
-        jsonUnescape(f) -> (mx.toLong >= lo && mn.toLong <= hi)
+  /** A pushed data filter a sidecar can decide: `column op v` for some v
+    * of `values` (several only for `=`, from IN and InSet). The values are
+    * all Longs, Strings or finite Doubles, by the column's type, and that
+    * class is the pin tier they probe. `nanFree`: another filter on the
+    * column rejects NaN, which passes `>` and `>=` in Spark and which
+    * double bounds may leave out. */
+  private final case class Cond(column: String, op: String, values: Seq[Any],
+                                nanFree: Boolean = false) {
+    def tier: Class[_] = values.head.getClass
+    /** Key-set probes: integral keys as pinned, strings as the pinning
+      * writer's `xxhash64` column hashed them (seed 42). */
+    lazy val probes: Seq[Long] = values.map {
+      case s: String => new org.apache.spark.sql.catalyst.expressions.XxHash64(
+        Seq(org.apache.spark.sql.catalyst.expressions.Literal(s))).eval().asInstanceOf[Long]
+      case k => k.asInstanceOf[Long]
     }
+  }
+
+  /** `e` as a [[Cond]]: attribute against literal in either order, `IN`
+    * or `InSet`, on an integral, binary-collated string or float/double
+    * column; None for anything else, and for a null or non-finite value. */
+  private def cond(e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Cond] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types._
+    def on(a: Attribute, op: String, vs: Seq[Any]): Option[Cond] = {
+      val typed = vs.flatMap(v => (a.dataType, v) match {
+        case (ByteType | ShortType | IntegerType | LongType, n: Number) => Some(n.longValue)
+        case (t: StringType, u: org.apache.spark.unsafe.types.UTF8String)
+            if t.collationId == StringType.collationId => Some(u.toString)
+        case (FloatType | DoubleType, n: Number) if java.lang.Double.isFinite(n.doubleValue) =>
+          Some(n.doubleValue)
+        case _ => None
+      })
+      if (typed.nonEmpty && typed.size == vs.size) Some(Cond(a.name, op, typed)) else None
+    }
+    def cmp(l: Expression, r: Expression, op: String, flipped: String) = (l, r) match {
+      case (a: Attribute, Literal(v, _)) => on(a, op, Seq(v))
+      case (Literal(v, _), a: Attribute) => on(a, flipped, Seq(v))
+      case _ => None
+    }
+    e match {
+      case EqualTo(l, r) => cmp(l, r, "=", "=")
+      case LessThan(l, r) => cmp(l, r, "<", ">")
+      case LessThanOrEqual(l, r) => cmp(l, r, "<=", ">=")
+      case GreaterThan(l, r) => cmp(l, r, ">", "<")
+      case GreaterThanOrEqual(l, r) => cmp(l, r, ">=", "<=")
+      case In(a: Attribute, list) if list.forall(_.isInstanceOf[Literal]) =>
+        on(a, "=", list.map(_.asInstanceOf[Literal].value))
+      case InSet(a: Attribute, set) => on(a, "=", set.toSeq)
+      case _ => None
+    }
+  }
+
+  /** One sidecar line as (file, column, pin): whether a row of that file
+    * may pass a [[Cond]] on that column. A pin answers true to a filter of
+    * another tier — a string on integral bounds, raw keys against a
+    * hashed set, or the reverse — and range tiers compare as the row
+    * filter does: truncated string bounds are ASCII, where Java's and
+    * Spark's string orders agree; doubles compare primitively, so
+    * -0.0 == 0.0. */
+  private def pin(line: String): Option[(String, String, Cond => Boolean)] = {
+    def bounds[T](tier: Class[_], mn: T, mx: T)(implicit o: Ordering[T]): Cond => Boolean =
+      c => c.tier != tier || {
+        val vs = c.values.asInstanceOf[Seq[T]]
+        c.op match {
+          case "=" => vs.exists(v => o.lteq(mn, v) && o.lteq(v, mx))
+          case "<" => o.lt(mn, vs.head)
+          case "<=" => o.lteq(mn, vs.head)
+          case ">" => o.gt(mx, vs.head)
+          case ">=" => o.gteq(mx, vs.head)
+        }
+      }
+    def keys(tier: Class[_], holds: Long => Boolean): Cond => Boolean =
+      c => c.tier != tier || c.op != "=" || c.probes.exists(holds)
+    def set(ks: String): Set[Long] = ks.split(',').filter(_.nonEmpty).map(_.toLong).toSet
+    def bloom(bk: String, bm: String): Long => Boolean =
+      bloomContains(java.util.Base64.getDecoder.decode(bm), bk.toInt, _)
+    val (longs, strings) = (classOf[java.lang.Long], classOf[String])
+    (line match {
+      case StatsLine(f, c, mn, mx) => Some((f, c, bounds(longs, mn.toLong, mx.toLong)))
+      case StrStatsLine(f, c, mn, mx) =>
+        Some((f, c, bounds(strings, jsonUnescape(mn), jsonUnescape(mx))))
+      case DblStatsLine(f, c, mn, mx) => val in = bounds(classOf[java.lang.Double],
+          mn.toDouble, mx.toDouble)(Ordering.Double.IeeeOrdering)
+        Some((f, c, (q: Cond) => (q.op.startsWith(">") && !q.nanFree) || in(q)))
+      case KeysLine(f, c, ks) => Some((f, c, keys(longs, set(ks))))
+      case HKeysLine(f, c, ks) => Some((f, c, keys(strings, set(ks))))
+      case BloomLine(f, c, bk, bm) => Some((f, c, keys(longs, bloom(bk, bm))))
+      case HBloomLine(f, c, bk, bm) => Some((f, c, keys(strings, bloom(bk, bm))))
+      case _ => None
+    }).map { case (f, c, p) => (jsonUnescape(f), jsonUnescape(c), p) }
+  }
+
+  /** The file pruner of one pinned read: given the data filters pushed to
+    * a scan, a file is kept unless one of `sidecars` (parsed at most once,
+    * on first use) proves that none of its rows passes them. A file with
+    * no pin, and a filter no pin decides, keep the file; a sidecar gone by
+    * the time it is parsed (a re-pin between its delete and rename) pins
+    * nothing. `relOf` maps each bound status path to its manifest name. */
+  private def sidecarPruner(fs: org.apache.hadoop.fs.FileSystem,
+                            sidecars: Seq[org.apache.hadoop.fs.Path],
+                            relOf: Map[org.apache.hadoop.fs.Path, String])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.hadoop.fs.FileStatus => Boolean = {
+    lazy val pins: Map[String, Map[String, Seq[Cond => Boolean]]] = sidecars.flatMap { p =>
+      try readText(fs, p).linesIterator.flatMap(pin).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }.groupBy(_._1).map { case (f, ps) => f -> ps.groupMap(_._2)(_._3) }
+    filters => {
+      val decided = filters.flatMap(cond)
+      val conds = decided.map(c =>
+        c.copy(nanFree = decided.exists(o => o.column == c.column && !o.op.startsWith(">"))))
+      if (conds.isEmpty) _ => true
+      else st => relOf.get(st.getPath).flatMap(pins.get).forall(cols =>
+        conds.forall(c => cols.getOrElse(c.column, Nil).forall(_(c))))
+    }
+  }
 
   private val IntegralTypes = Set[org.apache.spark.sql.types.DataType](
     org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
     org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-
-  /** The one sidecar-pruned read behind the five `readPinned*` filters:
-    * resolve `version`, require its sidecar (`keys` = the key-set one,
-    * else stats; `pin` names the call that writes it), parse each sidecar
-    * line through `admit` to a (file, admitted) verdict, and bind only the
-    * manifest files not rejected — a file without a line is admitted, so
-    * pruning is conservative. `check` vets `column`'s bound type, and
-    * `rows` is the row filter, so results equal
-    * `readPinned(...).filter(rows)` exactly. Every file pruned ⇒ provably
-    * empty result; one file is still bound so the plan carries the
-    * store's schema. */
-  private def readPruned(spark: SparkSession, path: String, version: Long,
-                         op: String, column: String, keys: Boolean, pin: String,
-                         rows: Column,
-                         check: Option[org.apache.spark.sql.types.DataType => Unit] = None)
-                        (admit: PartialFunction[String, (String, Boolean)]): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = resolveVersion(fs, root, version, op)
-    val sidecar = sidecarPath(root, v, if (keys) "keys" else "stats")
-    require(fs.exists(sidecar),
-      s"$op: no ${if (keys) "key-set" else "stats"} sidecar for manifest v$v " +
-        s"under $path — run $pin after the commit")
-    val verdicts = readText(fs, sidecar).linesIterator.collect(admit).toMap
-    val files = readManifestFile(fs, root, v)
-    val kept = files.filter(verdicts.getOrElse(_, true))
-    val df = readFiles(spark, path, if (kept.nonEmpty) kept else files.take(1))
-    check.foreach(_(df.schema(column).dataType))
-    val filtered = df.filter(rows)
-    if (kept.nonEmpty) filtered else filtered.limit(0)
-  }
 
   /** The file-set delta between two manifest versions: what `vNew` added
     * and what it removed relative to `vOld` (relative paths). This is the
@@ -1147,7 +1121,13 @@ object EventStore {
     * A file missing from disk fails here, loudly, as `spark.read`'s path
     * check does; it never silently drops rows. */
   def readFiles(spark: SparkSession, path: String, rel: Seq[String],
-                mergeSchema: Boolean = false): DataFrame = {
+                mergeSchema: Boolean = false): DataFrame =
+    bind(spark, path, rel, mergeSchema, Nil)
+
+  /** [[readFiles]], with scans pruned by `sidecars` ([[sidecarPruner]]). */
+  private def bind(spark: SparkSession, path: String, rel: Seq[String],
+                   mergeSchema: Boolean,
+                   sidecars: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
     require(rel.nonEmpty, "readFiles: empty file list")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1160,7 +1140,9 @@ object EventStore {
     }.toMap
     val statuses = files.map(f => listed(f.getParent)
       .getOrElse(f.getName, throw ParquetFiles.pathNotFound(f.toString)))
-    ParquetFiles.readKnown(spark, path, statuses, mergeSchema)
+    ParquetFiles.readKnown(spark, path, statuses, mergeSchema,
+      if (sidecars.isEmpty) None
+      else Some(sidecarPruner(fs, sidecars, statuses.map(_.getPath).zip(rel).toMap)))
   }
 
   /** ROW-level change feed between two manifest versions — the CDC read
@@ -1233,8 +1215,7 @@ object EventStore {
     val dfs = dst.getFileSystem(conf)
     require(!dfs.exists(dst) || dfs.listStatus(dst).isEmpty,
       s"cloneSnapshot: destination $dstPath is not empty")
-    val v = resolveVersion(sfs, src, version, "cloneSnapshot")
-    val rel = readManifestFile(sfs, src, v)
+    val (v, rel) = manifestAt(sfs, src, manifestVersions(sfs, src), version)
     require(rel.nonEmpty, s"cloneSnapshot: version $v lists no files")
     val sc = spark.sparkContext
     val ser = new org.apache.spark.util.SerializableConfiguration(conf)

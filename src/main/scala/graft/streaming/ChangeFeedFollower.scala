@@ -98,16 +98,12 @@ final class ChangeFeedFollower(spark: SparkSession, path: String,
   }
 
   /** Block until every commit visible at CALL time has been delivered —
-    * this follower's `processAllAvailable()`. Rethrows a poller failure. */
-  def processAllAvailable(timeoutMs: Long = 60000L): Unit = {
+    * this follower's `processAllAvailable()`. Returns as soon as the
+    * poller fails or its thread ends, rethrowing the failure; no wall-clock
+    * deadline, since how long a delta takes depends on its data. */
+  def processAllAvailable(): Unit = {
     val target = EventStore.manifestVersion(spark, path)
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (seen < target && failure.isEmpty && thread.isAlive) {
-      if (System.currentTimeMillis() >= deadline)
-        throw new IllegalStateException(
-          s"ChangeFeedFollower: version $target not delivered within ${timeoutMs}ms")
-      Thread.sleep(5)
-    }
+    while (seen < target && failure.isEmpty && thread.isAlive) Thread.sleep(5)
     failure.foreach(t => throw new IllegalStateException(
       "ChangeFeedFollower: poller failed", t))
     if (seen < target)

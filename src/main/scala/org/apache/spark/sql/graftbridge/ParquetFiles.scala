@@ -8,11 +8,13 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  InMemoryFileIndex, LogicalRelation, PartitionSpec, PartitioningAwareFileIndex}
+  InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitionSpec,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -45,12 +47,15 @@ object ParquetFiles {
 
   /** `spark.read.option("basePath", basePath).option("mergeSchema", …)
     * .parquet(files: _*)` over statuses the caller already holds: no
-    * listing and no path check — the statuses are the proof of existence. */
+    * listing and no path check — the statuses are the proof of existence.
+    * `prune`, given the data filters Catalyst pushes to a scan, says which
+    * files that scan keeps; it is asked only when there are filters. */
   def readKnown(spark: SparkSession, basePath: String, files: Seq[FileStatus],
-                mergeSchema: Boolean): DataFrame = {
+                mergeSchema: Boolean,
+                prune: Option[Seq[Expression] => FileStatus => Boolean] = None): DataFrame = {
     val s = spark.asInstanceOf[ClassicSession]
     val options = Map("basePath" -> basePath, "mergeSchema" -> mergeSchema.toString)
-    relation(s, new KnownFileIndex(s, files, options), options)
+    relation(s, new KnownFileIndex(s, files, options, prune), options)
   }
 
   /** The error `spark.read` raises for a path that does not exist. */
@@ -90,9 +95,11 @@ object ParquetFiles {
   * partitions are inferred from their directories under the `basePath`
   * option, exactly as a listing index would. Equal to another index over
   * the same files, as `InMemoryFileIndex` is, so exchange reuse across
-  * two reads of one snapshot still applies. */
+  * two reads of one snapshot still applies: `prune` only drops files no
+  * row of the scan can come from. */
 private class KnownFileIndex(spark: SparkSession, files: Seq[FileStatus],
-                             parameters: Map[String, String])
+                             parameters: Map[String, String],
+                             prune: Option[Seq[Expression] => FileStatus => Boolean])
     extends PartitioningAwareFileIndex(spark, parameters, None) {
   override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
     mutable.LinkedHashMap(files.map(f => f.getPath -> f): _*)
@@ -102,6 +109,18 @@ private class KnownFileIndex(spark: SparkSession, files: Seq[FileStatus],
   private lazy val partitions = inferPartitioning()
   override def partitionSpec(): PartitionSpec = partitions
   override def refresh(): Unit = ()
+  /** Partition pruning as in any index, then `prune`'s verdict per file;
+    * a directory left without files drops out. The schema and `inputFiles`
+    * still come from every file. */
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val listed = super.listFiles(partitionFilters, dataFilters)
+    prune.filter(_ => dataFilters.nonEmpty).fold(listed) { p =>
+      val keep = p(dataFilters)
+      listed.map(d => d.copy(files = d.files.filter(f => keep(f.fileStatus))))
+        .filter(_.files.nonEmpty)
+    }
+  }
   override def equals(other: Any): Boolean = other match {
     case o: KnownFileIndex => rootPaths.toSet == o.rootPaths.toSet
     case _ => false

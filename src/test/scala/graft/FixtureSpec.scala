@@ -43,6 +43,14 @@ object SparkFixture {
     }
     spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
   }
+
+  /** Files the planned scans of `df` read, after sidecar pruning. */
+  def scanned(df: DataFrame): Long = SparkEntry.scannedFiles(df)
+
+  /** A store version's files read with no sidecar pruning. */
+  def unpruned(dir: String, version: Long = -1L): DataFrame =
+    graft.sources.EventStore.readFiles(spark, dir,
+      graft.sources.EventStore.manifestFiles(spark, dir, version).map(_.stripPrefix(dir + "/")))
 }
 
 /** Golden-value parity with /root/reference/src/test.rs (hand-computed

@@ -100,8 +100,9 @@ class OpenSpec extends AnyFunSuite {
       // two reads of one snapshot are the same relation (exchange reuse)
       assert(EventStore.readPinned(spark, dir).queryExecution.analyzed
         .sameResult(pinned.queryExecution.analyzed))
-      // every sidecar-pruned read opens with no job either: sidecar and
-      // manifest are read on the driver, and a string probe hashed there
+      // planning a sidecar-pruned scan of every tier runs no job either:
+      // sidecar and manifest are read on the driver, and a string probe
+      // hashed there
       val vStats = EventStore.manifestVersion(spark, dir)
       EventStore.writeFileStats(spark, dir, Seq("user_id"),
         stringColumns = Seq("event_type"), doubleColumns = Seq("value"))
@@ -111,22 +112,23 @@ class OpenSpec extends AnyFunSuite {
       val user = pinned.agg(min("user_id")).head().getLong(0)
       val etype = pinned.where(col("event_type").isNotNull)
         .select("event_type").head().getString(0)
-      val reads: Seq[(String, () => DataFrame, Column)] = Seq(
-        ("readPinnedWhere", () => EventStore.readPinnedWhere(spark, dir, "user_id",
-          user, user + 20, vStats), col("user_id").between(user, user + 20)),
-        ("readPinnedWhereString", () => EventStore.readPinnedWhereString(spark, dir,
-          "event_type", etype, etype, vStats), col("event_type") === etype),
-        ("readPinnedWhereDouble", () => EventStore.readPinnedWhereDouble(spark, dir,
-          "value", 0.0, 10.0, vStats), col("value").between(0.0, 10.0)),
-        ("readPinnedPoint", () => EventStore.readPinnedPoint(spark, dir, "user_id",
-          user, vStats), col("user_id") === user),
-        ("readPinnedPointString", () => EventStore.readPinnedPointString(spark, dir,
-          "event_type", etype), col("event_type") === etype))
-      reads.foreach { case (name, read, rows) =>
+      // (tier, version, filter, files scanned out of 28 and of 56)
+      val reads: Seq[(String, Long, Column, Map[Int, Long])] = Seq(
+        ("integral stats", vStats, col("user_id").between(user, user + 20),
+          Map(28 -> 28, 56 -> 56)),
+        ("string stats", vStats, col("event_type") === etype, Map(28 -> 28, 56 -> 55)),
+        ("double stats", vStats, col("value").between(0.0, 10.0), Map(28 -> 27, 56 -> 41)),
+        ("integral keys", vStats, col("user_id") === user, Map(28 -> 20, 56 -> 25)),
+        ("hashed keys", -1L, col("event_type") === etype, Map(28 -> 28, 56 -> 47)))
+      reads.foreach { case (tier, version, rows, files) =>
         var df: DataFrame = null
-        val jobs = JobCount(spark.sparkContext) { df = read(); df.schema }
-        assert(jobs == 0, s"$name over $nFiles files launched $jobs job(s)")
-        assert(df.collect().toSet == pinned.filter(rows).collect().toSet, name)
+        var planned = 0L
+        val jobs = JobCount(spark.sparkContext) {
+          df = EventStore.readPinned(spark, dir, version).filter(rows); planned = scanned(df)
+        }
+        assert(jobs == 0, s"planning a $tier scan over $nFiles files launched $jobs job(s)")
+        assert(planned == files(nFiles), s"$tier: $planned files")
+        assert(df.collect().toSet == unpruned(dir, version).filter(rows).collect().toSet, tier)
       }
     }
   }

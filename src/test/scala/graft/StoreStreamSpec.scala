@@ -1905,15 +1905,18 @@ class StoreStreamSpec extends AnyFunSuite {
     val pinned = EventStore.writeFileKeySets(spark, dir, "user_id")
     assert(pinned > 0, "clustered files must pin their key sets")
     val key = src.agg(min("user_id")).head().getLong(0)
-    val point = EventStore.readPinnedPoint(spark, dir, "user_id", key)
-    assert(point.inputFiles.length < EventStore.manifestFiles(spark, dir).size,
-      "point read must bind fewer files than the manifest holds")
+    def point(k: Long) = EventStore.readPinned(spark, dir).filter(col("user_id") === k)
+    val full = unpruned(dir).filter(col("user_id") === key)
+    // exact key sets keep exactly the files holding the key (the clustered
+    // layout comes from a sampled range partitioner, so count them)
+    val holders = full.select(input_file_name()).distinct().count()
+    assert(holders < EventStore.manifestFiles(spark, dir).size)
+    assert(scanned(point(key)) == holders,
+      "point scan must read only the files holding the key")
     // result equality with the unpruned filtered read, row for row
-    val full = EventStore.readPinned(spark, dir)
-      .filter(col("user_id") === key)
-    assert(point.collect().toSet == full.collect().toSet && full.count() > 0)
-    // a key no file holds → provably empty, no scan needed
-    assert(EventStore.readPinnedPoint(spark, dir, "user_id", -12345L).count() == 0)
+    assert(point(key).collect().toSet == full.collect().toSet && full.count() > 0)
+    // a key no file holds → provably empty, no file scanned
+    assert(scanned(point(-12345L)) == 0 && point(-12345L).count() == 0)
 
     // driver-bounded streaming write: a budget so small every sidecar row
     // lands in its own shuffle partition must stream the same sidecar the
@@ -1935,8 +1938,8 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(rePinned == pinned, "tiny-budget rewrite must pin the same files")
     assert(sidecarLines().sorted == generous.sorted,
       "streamed sidecar must equal the collected-era content")
-    val point2 = EventStore.readPinnedPoint(spark, dir, "user_id", key)
-    assert(point2.collect().toSet == full.collect().toSet)
+    assert(scanned(point(key)) == holders)
+    assert(point(key).collect().toSet == full.collect().toSet)
   }
 
   test("bloom membership tier: above-cap files prune point reads, both tiers compose, results exact") {
@@ -1956,20 +1959,20 @@ class StoreStreamSpec extends AnyFunSuite {
     val pinned = EventStore.writeFileKeySets(spark, dir, "user_id",
       maxDistinct = 10)
     assert(pinned == 2, "both tiers must pin: one exact set, one bloom")
-    def full(k: Long) = EventStore.readPinned(spark, dir)
-      .filter(col("user_id") === k).collect().toSet
+    def point(k: Long) = EventStore.readPinned(spark, dir).filter(col("user_id") === k)
+    def full(k: Long) = unpruned(dir).filter(col("user_id") === k).collect().toSet
     // exact-tier key: file B's bloom must reject it (deterministic given
     // fixed data; a false positive would only admit, never corrupt)
-    val pa = EventStore.readPinnedPoint(spark, dir, "user_id", 1L)
+    val pa = point(1L)
     assert(pa.collect().toSet == full(1L) && pa.count() == 100)
-    assert(pa.inputFiles.length == 1, "bloom tier must prune file B")
+    assert(scanned(pa) == 1, "bloom tier must prune file B")
     // bloom-tier key: file A's exact set rejects, file B's bloom admits
-    val pb = EventStore.readPinnedPoint(spark, dir, "user_id", 1500L)
+    val pb = point(1500L)
     assert(pb.collect().toSet == full(1500L) && pb.count() == 1)
-    assert(pb.inputFiles.length == 1, "exact tier must prune file A")
+    assert(scanned(pb) == 1, "exact tier must prune file A")
     // absent key: exact tier proves absence; bloom tier (deterministic)
     // rejects too → provably empty
-    assert(EventStore.readPinnedPoint(spark, dir, "user_id", 999983L).count() == 0)
+    assert(scanned(point(999983L)) == 0 && point(999983L).count() == 0)
     // geometry guard: an impossible (fpp, cardinality, byte-cap) triple
     // fails loudly BEFORE any bloom materializes
     val e = intercept[IllegalArgumentException](EventStore.writeFileKeySets(
@@ -1993,29 +1996,31 @@ class StoreStreamSpec extends AnyFunSuite {
     EventStore.writeManifest(spark, dir)
     val pinned = EventStore.writeFileKeySets(spark, dir, "skey", maxDistinct = 10)
     assert(pinned == 2, "both hashed tiers must pin")
-    def full(k: String) = EventStore.readPinned(spark, dir)
-      .filter(col("skey") === k).collect().toSet
+    def read(f: org.apache.spark.sql.Column) = EventStore.readPinned(spark, dir).filter(f)
+    def full(f: org.apache.spark.sql.Column) = unpruned(dir).filter(f).collect().toSet
     // exact-hash-tier key: file B's bloom rejects it (deterministic data)
-    val pa = EventStore.readPinnedPointString(spark, dir, "skey", "u1")
-    assert(pa.collect().toSet == full("u1") && pa.count() == 100)
-    assert(pa.inputFiles.length == 1, "hashed bloom must prune file B")
+    val pa = read(col("skey") === "u1")
+    assert(pa.collect().toSet == full(col("skey") === "u1") && pa.count() == 100)
+    assert(scanned(pa) == 1, "hashed bloom must prune file B")
     // bloom-tier key: file A's exact hash set rejects, file B admits
-    val pb = EventStore.readPinnedPointString(spark, dir, "skey", "doc-1500")
-    assert(pb.collect().toSet == full("doc-1500") && pb.count() == 1)
-    assert(pb.inputFiles.length == 1, "exact hash set must prune file A")
+    val pb = read(col("skey") === "doc-1500")
+    assert(pb.collect().toSet == full(col("skey") === "doc-1500") && pb.count() == 1)
+    assert(scanned(pb) == 1, "exact hash set must prune file A")
     // absent key: both tiers reject (deterministic given fixed data)
-    assert(EventStore.readPinnedPointString(
-      spark, dir, "skey", "no-such-key-xyz").count() == 0)
-    // the INTEGRAL reader sees no raw-key entries in a hashed sidecar, so
-    // it must admit every file (conservative) — it may never misread a
-    // hash set as raw keys and wrongly prune
-    val viaInt = EventStore.readPinnedPoint(spark, dir, "event_id", 5L)
-    assert(viaInt.inputFiles.length == 2,
-      "integral reader must ADMIT everything under a hashed-only sidecar")
+    val absent = read(col("skey") === "no-such-key-xyz")
+    assert(scanned(absent) == 0 && absent.count() == 0)
+    // an INTEGRAL filter sees no raw-key entries in a hashed sidecar, so
+    // it must keep every file (conservative) — a hash set is never misread
+    // as raw keys to wrongly prune
+    val viaInt = read(col("event_id") === 5L)
+    assert(scanned(viaInt) == 2,
+      "an integral filter must keep everything under a hashed-only sidecar")
     assert(viaInt.count() == 1)
-    // and the string reader refuses a null probe
-    assertThrows[IllegalArgumentException](
-      EventStore.readPinnedPointString(spark, dir, "skey", null))
+    // a null among the probed keys decides nothing: every file is kept
+    val withNull = read(col("skey").isin("u1", null))
+    assert(scanned(withNull) == 2)
+    assert(withNull.collect().toSet == full(col("skey").isin("u1", null)))
+    assert(withNull.count() == 100)
   }
 
   test("manifested schema evolution: merged read unifies generations, old pins predate the column") {
@@ -2179,7 +2184,7 @@ class StoreStreamSpec extends AnyFunSuite {
       (_, _, _) => throw new RuntimeException("merge exploded")).start()
     EventStore.appendCommitted(
       ev.filter(dayofmonth(col("ts")) === 6), dir, "cdc-coal", 3L)
-    val e = intercept[IllegalStateException](boom.processAllAvailable(timeoutMs = 30000))
+    val e = intercept[IllegalStateException](boom.processAllAvailable())
     assert(e.getMessage.contains("poller failed"))
     intercept[IllegalStateException](boom.stop())
   }
@@ -2235,7 +2240,7 @@ class StoreStreamSpec extends AnyFunSuite {
       (_, _, _) => throw new RuntimeException("merge exploded")).start()
     EventStore.appendCommitted(
       ev.filter(dayofmonth(col("ts")) === 5), dir, "cdc-stop", 2L)
-    intercept[IllegalStateException](boom.processAllAvailable(timeoutMs = 30000))
+    intercept[IllegalStateException](boom.processAllAvailable())
     intercept[IllegalStateException](boom.stop())
     // …but stopQuietly never rethrows — the finally-block form — while
     // keeping the failure inspectable

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,17 @@ import graft.sources.{EventStore, ZOrder}
   * the ingest-ordered layout, with content preserved byte-for-byte. */
 class ZOrderSpec extends AnyFunSuite {
   import SparkFixture._
+
+  /** `dir`'s pinned read of `version` filtered by `f`: its planned scan
+    * reads `files` files, and it returns exactly the rows of the unpruned
+    * read, which are returned. */
+  private def pruned(dir: String, f: Column, files: Long, version: Long = -1L): Set[Row] = {
+    val df = EventStore.readPinned(spark, dir, version).filter(f)
+    assert(scanned(df) == files, s"$f scanned ${scanned(df)} files")
+    val rows = df.collect().toSet
+    assert(rows == unpruned(dir, version).filter(f).collect().toSet, s"$f")
+    rows
+  }
 
   test("interleave16 matches the bit-by-bit Morton model") {
     // deterministic spread of 16-bit patterns incl. the edge masks
@@ -159,29 +171,43 @@ class ZOrderSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1))
     }
     val hi = uMin + math.max(1L, (uMax - uMin) / 8)
-    val pruned = EventStore.readPinnedWhere(spark, dir, "user_id", uMin, hi)
-    val full = EventStore.readPinned(spark, dir)
-      .filter(col("user_id").between(uMin, hi))
+    val all = EventStore.manifestFiles(spark, dir).size
+    assert(all == 14)
+    // a strictly smaller file list, decided at PLANNING time, with
     // identical rows — pruning is conservative, never lossy
-    assert(pruned.collect().toSet == full.collect().toSet)
-    assert(pruned.count() > 0)
-    // ...from a strictly smaller file list, decided at PLANNING time
-    assert(pruned.inputFiles.length < EventStore.manifestFiles(spark, dir).size,
-      s"expected planning-time file pruning, bound ${pruned.inputFiles.length} files")
+    assert(pruned(dir, col("user_id").between(uMin, hi), 6).nonEmpty)
+    // the same bounds written as comparisons in either order
+    pruned(dir, lit(uMin) <= col("user_id") && col("user_id") <= hi, 6)
     // a range beyond the data prunes every file and is provably empty
-    assert(EventStore.readPinnedWhere(spark, dir, "user_id",
-      uMax + 1000, uMax + 2000).count() == 0)
-    // missing sidecar (older version) and non-integral columns fail loudly
-    val noStats = intercept[IllegalArgumentException] {
-      EventStore.readPinnedWhere(spark, dir, "user_id", uMin, hi,
-        version = vClustered - 1)
-    }
-    assert(noStats.getMessage.contains("stats sidecar"))
-    val notIntegral = intercept[IllegalArgumentException] {
-      EventStore.readPinnedWhere(spark, dir, "value", 0L, 1L)
-    }
-    assert(notIntegral.getMessage.contains("must be integral"))
+    assert(pruned(dir, col("user_id").between(uMax + 1000, uMax + 2000), 0).isEmpty)
+    // an older version has no sidecar, and the sidecar pins no double
+    // bounds: both filters keep every file
+    pruned(dir, col("user_id").between(uMin, hi),
+      EventStore.manifestFiles(spark, dir, vClustered - 1).size, vClustered - 1)
+    pruned(dir, col("value").between(0L, 1L), all)
   }
+
+  test("a ZxSql statement over warehouseCatalog scans only the files its stats admit") {
+    val wh = Files.createTempDirectory("graft-whprune").toString
+    val dir = wh + "/ev"
+    val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+      .filter(dayofmonth(col("ts")) <= 4)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    // range partitioning: each date's files hold contiguous user ranges
+    EventStore.append(src.repartitionByRange(4, col("user_id")), dir)
+    EventStore.writeManifest(spark, dir)
+    EventStore.writeFileStats(spark, dir, Seq("user_id"))
+    val uMin = src.agg(min("user_id")).head().getLong(0)
+    val stmt = "select count(*) as n, sum(value) as s from ev " +
+      s"where user_id <= $uMin group by event_type"
+    val out = graft.sql.ZxSql.runCatalog(EventStore.warehouseCatalog(spark, wh), stmt)
+    val plain = graft.sql.ZxSql.runCatalog(Map("ev" -> unpruned(dir)), stmt)
+    assert(scanned(plain) == EventStore.manifestFiles(spark, dir).size)
+    assert(scanned(out) < EventStore.manifestFiles(spark, dir).size,
+      s"scanned ${scanned(out)} of ${EventStore.manifestFiles(spark, dir).size}")
+    assert(out.collect().toSet == plain.collect().toSet && out.count() > 0)
+  }
+
   test("truncated string bounds: prefix lower, incremented upper, ASCII guard (c8b)") {
     import graft.sources.ZOrder.truncatedStringBounds
     // short strings pass through untouched
@@ -211,41 +237,43 @@ class ZOrderSpec extends AnyFunSuite {
     val base = (0 until 2000).map(i => (i.toLong, ts(i), i * 0.5 - 100.0))
     val special = Seq((9001L, ts(200), Double.NaN), (9002L, ts(201), -0.0))
     val df = (base ++ special).toDF("event_id", "ts", "value")
-    // range partitioning: files hold contiguous value ranges, so the
-    // interval bounds can actually separate them
-    EventStore.append(df.repartitionByRange(4, col("value")), dir)
+    // four value bands, one append each: files hold contiguous value
+    // ranges, so the interval bounds can actually separate them, and the
+    // layout does not hang on a sampled range partitioner (NaN sorts into
+    // the top band, and alone in its date)
+    val band = when(col("value") < 150.0, 0).when(col("value") < 400.0, 1)
+      .when(col("value") < 650.0, 2).otherwise(3)
+    (0 to 3).foreach(b => EventStore.append(df.filter(band === b).coalesce(1), dir))
     EventStore.writeManifest(spark, dir)
     assert(EventStore.writeFileStats(spark, dir, Nil,
       doubleColumns = Seq("value")) > 0)
     val all = EventStore.manifestFiles(spark, dir).size
-    // a narrow low-end range binds fewer files and equals the full filter
-    val pruned = EventStore.readPinnedWhereDouble(spark, dir, "value", -100.0, -90.0)
-    assert(pruned.inputFiles.length < all, s"bound ${pruned.inputFiles.length} of $all")
-    val full = EventStore.readPinned(spark, dir)
-      .filter(col("value").between(-100.0, -90.0))
-    assert(pruned.select("event_id").collect().map(_.getLong(0)).toSet ==
-      full.select("event_id").collect().map(_.getLong(0)).toSet && pruned.count() > 0)
+    assert(all == 6)
+    def ids(rows: Set[Row]) = rows.map(_.getAs[Long]("event_id"))
+    // a narrow low-end range scans fewer files and equals the full filter
+    assert(pruned(dir, col("value").between(-100.0, -90.0), 2).nonEmpty)
     // -0.0 == 0.0 in IEEE AND SQL comparison: the [0, 0] point range must
     // return BOTH the 0.0 row and the -0.0 row — pruning with total-order
     // compare (Double.compare: -0.0 < 0.0) could drop the -0.0 file
-    val zero = EventStore.readPinnedWhereDouble(spark, dir, "value", 0.0, 0.0)
-    assert(zero.select("event_id").collect().map(_.getLong(0)).toSet ==
-      Set(200L, 9002L), "both signed zeros must match the [0,0] range")
-    // the NaN row fails every finite range (Spark and DuckDB both order
-    // NaN above all finite values) — whether its file's stats got
-    // NaN-poisoned (admit) or NaN-excluded (prunable) is writer-version
-    // dependent, and BOTH are safe
-    val fullRange = EventStore.readPinnedWhereDouble(spark, dir, "value", -1e6, 1e6)
-    assert(fullRange.count() == 2001L, "everything but the NaN row")
-    // beyond the data → provably empty
-    assert(EventStore.readPinnedWhereDouble(spark, dir, "value", 5000.0, 6000.0).count() == 0)
-    // non-finite query bounds and non-double columns fail loudly
-    val nanB = intercept[IllegalArgumentException](
-      EventStore.readPinnedWhereDouble(spark, dir, "value", Double.NaN, 1.0))
-    assert(nanB.getMessage.contains("finite"))
-    val notDbl = intercept[IllegalArgumentException](
-      EventStore.readPinnedWhereDouble(spark, dir, "event_id", 0.0, 1.0))
-    assert(notDbl.getMessage.contains("float/double"))
+    assert(ids(pruned(dir, col("value").between(0.0, 0.0), 2)) == Set(200L, 9002L),
+      "both signed zeros must match the [0,0] range")
+    assert(ids(pruned(dir, col("value") === -0.0, 2)) == Set(200L, 9002L))
+    // the NaN row fails every range with a finite upper bound (Spark and
+    // DuckDB both order NaN above all finite values) — whether its file's
+    // stats got NaN-poisoned (admit) or NaN-excluded (prunable) is
+    // writer-version dependent, and BOTH are safe
+    assert(pruned(dir, col("value").between(-1e6, 1e6), all).size == 2001,
+      "everything but the NaN row")
+    // beyond the data: only the file without bounds is scanned, and the
+    // result is empty
+    assert(pruned(dir, col("value").between(5000.0, 6000.0), 1).isEmpty)
+    // ...but NaN passes a lower bound alone, so a bound the stats may have
+    // left the NaN out of decides nothing; neither does a NaN literal, nor
+    // a filter on an unpinned column: every file is kept
+    assert(ids(pruned(dir, col("value") > 5000.0, all)) == Set(9001L))
+    assert(ids(pruned(dir, col("value") === Double.NaN, all)) == Set(9001L))
+    pruned(dir, col("value") < Double.PositiveInfinity, all)
+    pruned(dir, col("event_id").between(0.0, 1.0), all)
   }
 
   test("string-stats-pruned reads bind fewer files yet equal the full filtered read (c8b)") {
@@ -258,28 +286,24 @@ class ZOrderSpec extends AnyFunSuite {
       (i.toLong, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1704067200L + i * 60L)),
         Seq("alpha", "bravo", "charlie", "purchaseverylongtype")(i % 4), i * 1.5)
     }.toDF("event_id", "ts", "etype", "value")
-    // range partitioning: files hold alphabetically CONTIGUOUS type ranges
-    // — interval bounds can only prune what the layout actually separates
-    EventStore.append(df.repartitionByRange(4, col("etype")), dir)
+    // one append per type: files hold alphabetically CONTIGUOUS type
+    // ranges — interval bounds can only prune what the layout separates
+    Seq("alpha", "bravo", "charlie", "purchaseverylongtype").foreach(t =>
+      EventStore.append(df.filter(col("etype") === t).coalesce(1), dir))
     EventStore.writeManifest(spark, dir)
     val pinned = EventStore.writeFileStats(spark, dir, Seq("event_id"),
       stringColumns = Seq("etype"), truncateTo = 8)
     assert(pinned > 0)
     val all = EventStore.manifestFiles(spark, dir).size
-    val pruned = EventStore.readPinnedWhereString(spark, dir, "etype", "bravo", "bravo")
-    assert(pruned.inputFiles.length < all, s"bound ${pruned.inputFiles.length} of $all")
-    val expect = EventStore.readPinned(spark, dir).filter(col("etype") === "bravo")
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    assert(pruned.select("event_id").collect().map(_.getLong(0)).toSet == expect)
+    assert(all == 8)
+    assert(pruned(dir, col("etype") === "bravo", 2).size == n / 4)
     // truncated upper bound stays conservative: the long type still matches
-    val longT = EventStore.readPinnedWhereString(spark, dir, "etype",
-      "purchaseverylongtype", "purchaseverylongtype")
-    assert(longT.count() == n / 4)
+    assert(pruned(dir, col("etype") === "purchaseverylongtype", 2).size == n / 4)
+    // IN probes each value
+    assert(pruned(dir, col("etype").isin("alpha", "bravo"), 4).size == n / 2)
     // out-of-range key prunes everything, provably empty
-    assert(EventStore.readPinnedWhereString(spark, dir, "etype", "zz", "zz").count() == 0)
-    // non-string column rejected loudly
-    val e = intercept[IllegalArgumentException](
-      EventStore.readPinnedWhereString(spark, dir, "value", "a", "b"))
-    assert(e.getMessage.contains("string column"))
+    assert(pruned(dir, col("etype") === "zz", 0).isEmpty)
+    // a string filter the bounds cannot decide keeps every file
+    assert(pruned(dir, col("etype").like("b%"), all).size == n / 4)
   }
 }
