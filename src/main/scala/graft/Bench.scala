@@ -2,7 +2,7 @@ package graft
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 object Bench {
@@ -11,13 +11,13 @@ object Bench {
     * — map-only queries were being timed as near-pure scans), this makes
     * every produced value flow through the hash, while still returning a
     * single row to the driver. The fold is bit_xor, not sum: summing 64-bit
-    * hashes overflows a long under ANSI mode and aborts the job mid-scan. */
-  def evaluate(df: DataFrame): Unit = {
-    val checksum = df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-      .agg(expr("bit_xor(__h)"))
-    checksum.collect()
-    ()
-  }
+    * hashes overflows a long under ANSI mode and aborts the job mid-scan.
+    * Returns that row, (hash fold, row count) — an order-free checksum of
+    * the result; the count catches the duplicate rows xor cancels. */
+  def evaluate(df: DataFrame): Row =
+    df.select(xxhash64(df.columns.map(col): _*).as("__h"))
+      .agg(expr("bit_xor(__h)"), count(lit(1)))
+      .collect().head
 
   /** Reset shared-JVM state between timed runs so one query's residue can't
     * tax the next: release every persisted/checkpointed RDD still in the

@@ -106,15 +106,6 @@ object SparkEntry {
     Compiler.runRaw(ev, q)
   }
 
-  /** F2 boolean WHERE (extension — the reference is AND-only, expr.rs:99):
-    * disjunction + nested negation through the SQL front door. NOT follows
-    * three-valued logic on both engines (value NULL → NOT(NULL) → dropped). */
-  private def f2Bool(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select event_id, user_id, event_type, value from events " +
-      "where event_type = error or (event_type = click and not (value >= 100))"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-  }
-
   // ------------------------------------------------- G1 + A1..A6: aggregates
 
   /** G1 nil-sentinel grouping (lib.rs:538-556) + A1 sum / A4 count / A6 mean
@@ -227,33 +218,6 @@ object SparkEntry {
       .withColumn("mean_value", stableMean("sum_value", "count_value"))
   }
 
-  /** a8c: windowed aggregation + BOOLEAN HAVING (p110's tree on the
-    * windowed path): the or/not filter runs post-aggregation per
-    * (key, window) group; mean/max/min are computed for the filter and
-    * pruned from the output. st_having replays the same query through
-    * the streaming aggregator and shares this oracle verbatim. */
-  private def a8cWindowHaving(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(value) as sv, count(*) as n group by event_type " +
-        "having (mean(value) > 55 or max(value) > 320) " +
-        "and not min(value) < 1 granularity 3600")
-      .select(col("event_type"), col("w_start"), col("w_end"),
-        round3("sv"), round3("n"))
-
-  /** a8d: the round-14 aggregate surface on the WINDOWED path —
-    * filtered sums/counts and a boolean quantifier per tumbling window.
-    * The FILTER desugar is a parse-level CASE, so the windowed
-    * aggregator (and its streaming twin below) runs it with zero new
-    * code. */
-  private def a8dWindowFilter(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(value) filter (where value > 100) as hot_sv, " +
-        "count(*) filter (where user_id % 2 = 0) as even_n, " +
-        "bool_or(value > 300) as spiked, count(*) as n " +
-        "group by event_type granularity 3600")
-      .select(col("event_type"), col("w_start"), col("w_end"),
-        round3("hot_sv"), round3("even_n"), col("spiked"), round3("n"))
-
   /** st_filter ≡ a8d through the streaming windowed aggregator —
     * filtered aggregates and bool_or fold per micro-batch exactly like
     * their batch forms (same CASE measures, same partial merge), so
@@ -334,19 +298,6 @@ object SparkEntry {
     graft.operators.GapWindows.parallel(Tables.events(s, dir), q, idCol = Some("event_id"))
   }
 
-  /** A9 session windows (extension): gap-based sessionization via Spark's
-    * native `session_window` — w_start = first event, w_end = last + gap.
-    * Oracle replays the identical rule as lag/cumsum over BIGINT seconds
-    * (Spark merges when next.start <= current.end, so split only when the
-    * gap is STRICTLY greater than 300). */
-  private def a9Session(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events " +
-      "group by event_type session 300"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("w_start"), col("w_end"),
-        round3("sum_value"), round3("count_value"))
-  }
-
   /** a9b: the SAME sessions through the two-level skew plan
     * (Compiler.runSessionTwoLevel via skewSalt) — level 1 sessionizes per
     * (group, salt) slice, level 2 merges partial-session INTERVALS with a
@@ -364,28 +315,6 @@ object SparkEntry {
       selects = Seq(Select(Agg.Sum, "value"), Select(Agg.Count, "value")),
       groupBy = Seq("event_type"), sessionGapSec = Some(300L), skewSalt = Some(16))
     Compiler.runSession(ev, q)
-      .select(col("event_type"), col("w_start"), col("w_end"),
-        round3("sum_value"), round3("count_value"))
-  }
-
-  /** A11 tail percentiles (extension): p50/p90/p99 — the latency-SLO
-    * staples — via the same exact interpolated percentile as A7's p50
-    * (Spark `percentile` ≡ DuckDB `quantile_cont`). */
-  private def a11Percentiles(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select p50(value), p90(value), p99(value) from events " +
-      "group by event_type order by p50(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), round6("p50_value"),
-        round6("p90_value"), round6("p99_value"))
-  }
-
-  /** A10 hopping windows (extension): 1h windows sliding every 15 min —
-    * each event lands in 4 windows (Spark Expand → one aggregation).
-    * Oracle: per-event unnest of the covering window starts. */
-  private def a10Hopping(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events " +
-      "group by event_type granularity 3600 slide 900"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
       .select(col("event_type"), col("w_start"), col("w_end"),
         round3("sum_value"), round3("count_value"))
   }
@@ -493,50 +422,6 @@ object SparkEntry {
 
   // ------------------------------------------------------- P1: SQL front door
 
-  /** P1 `ZX.SQL` surface (lib.rs:815-844): SQL text → IR → windowed pipeline,
-    * with `$t_start`/`$t_end` pseudo-conditions (expr.rs:170-186). */
-  private def p1Sql(s: SparkSession, dir: String): DataFrame = {
-    val sql = s"select sum(value), count(value) " +
-      s"where event_type = click and $$t_start = $T0 and $$t_end = $T1 " +
-      "group by user_id granularity 86400"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("user_id"), col("w_start"), col("w_end"),
-        round3("sum_value"), round3("count_value"))
-      .withColumn("mean_value", stableMean("sum_value", "count_value"))
-  }
-
-  /** P1+O1: ORDER BY on an aggregate routed to the sorted path — dead code in
-    * the reference (lib.rs:840), wired here. */
-  private def p2SqlSorted(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count_distinct(user_id) from events " +
-      "where props like '%7%' group by event_type order by sum(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), round3("sum_value"), col("count_distinct_user_id"))
-  }
-
-  /** P1 + count(*): the README's own example shape through the windowed SQL
-    * path — `*` counts every (weighted) row, a named column only presence. */
-  private def p3SqlStar(s: SparkSession, dir: String): DataFrame = {
-    val sql = s"select count(*), count(value) from events " +
-      s"where $$t_start = $T0 and $$t_end = $T1 " +
-      "group by event_type granularity 86400"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("w_start"), col("w_end"),
-        round3("count_star"), round3("count_value"))
-  }
-
-  /** O1 + HAVING: post-aggregation group filtering (extension — the
-    * reference cannot filter aggregates at all), including a HAVING-only
-    * aggregate computed for the filter and dropped from output. Runs on
-    * UNROUNDED aggregates; output rounding follows the parity rules. */
-  private def o4Having(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events group by user_id " +
-      "having sum(value) > 1000 and max(value) <= 249 " +
-      "order by sum(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("user_id"), round3("sum_value"), round3("count_value"))
-  }
-
   /** P1 + j2: the as-of join reached from the QUERY LANGUAGE — same
     * single-exchange AsofJoin plan as j2, same oracle shape (DuckDB native
     * ASOF LEFT JOIN), but driven by SQL text + a table catalog. */
@@ -622,108 +507,6 @@ object SparkEntry {
     }
   }
 
-  /** P1 + a12: journey mining through the SQL front door (VERDICT r9 #3 —
-    * the reference surface is SQL-first, lib.rs:815-844). The WHERE rides
-    * the shared scan/filter front half, so sequence mining over a filtered
-    * slice is one narrow filter ahead of the same two-shuffle plan. */
-  private def p6SqlJourneys(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select journeys top 15 steps 6 from events where event_type != 'error'")
-
-  /** P1 + a13: funnel conversion from SQL — `funnel view, click, purchase`
-    * with a numeric WHERE composing into the same one-window plan. */
-  private def p7SqlFunnel(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select funnel view, click, purchase from events where user_id <= 800")
-
-  /** P1 + a14: half-life decay from SQL — `decay(value) last 32` over one
-    * event type; fixed-point output, same engine-exact fold as a14. */
-  private def p8SqlDecay(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select decay(value) last 32 from events where event_type = 'click'")
-
-  /** P1 + a15: deterministic argmax from SQL — `argmax(value, event_id)`
-    * group-by with the dialect's `__nil` sentinel keys (unlike a15's raw
-    * grouping, so the null-type group shows up as a row). */
-  private def p9SqlArgmax(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select argmax(value, event_id) from events where value exists " +
-        "group by event_type")
-
-  /** o5: ROLLUP subtotals over the top-groups path (VERDICT r9 "what's
-    * missing" #5 — absent in the reference too, but the one staple of the
-    * "top groups" observability UI family O1 couldn't express without N
-    * passes). One Expand + one hash aggregate computes (type, user),
-    * (type), and the grand total together; data-missing keys stay `__nil`,
-    * rolled-up levels render `__all` (distinguishable by construction —
-    * keys coalesce BEFORE the rollup). */
-  /** o7: GROUPING SETS — caller-chosen subtotal levels {(type, user),
-    * (user), ()}: rollup's prefix rule can't produce a user-only margin
-    * and cube would add the unwanted type-only level; sets is the general
-    * form, same one-Expand-pass plan and __nil/__all sentinels. */
-  private def o7GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events " +
-      "group by sets (event_type, user_id), (user_id), () " +
-      "order by sum(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("user_id"),
-        round3("sum_value"), round3("count_value"))
-  }
-
-  private def o5Rollup(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events " +
-      "group by rollup event_type, user_id order by sum(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("user_id"),
-        round3("sum_value"), round3("count_value"))
-  }
-
-  /** o6: CUBE — every key SUBSET {(type, user), (type), (user), ()} in the
-    * same one-Expand-pass plan as o5's rollup; the per-user margin rows
-    * are what cube adds over rollup. Key count capped at 4 in the dialect
-    * (2^n level blowup is the documented cost). */
-  private def o6Cube(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value), count(value) from events " +
-      "group by cube event_type, user_id order by sum(value) desc"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("user_id"),
-        round3("sum_value"), round3("count_value"))
-  }
-
-  /** P1 + x15: span mining through the SQL front door, over the DOCUMENTS
-    * table — the dialect reaching the pipeline-operator family: WHERE
-    * gates (lang) compose ahead of the same explode → one-count-shuffle →
-    * TakeOrdered plan. */
-  private def p10SqlSpans(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select spans top 30 size 4 from documents where lang = 'en'")
-
-  /** P1 + a16: cohort retention through the SQL front door — WHERE
-    * composes ahead of the same two-exchange window + aggregation plan
-    * (cohorts computed over the FILTERED population, by design). */
-  private def p11SqlRetention(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select retention from events where user_id <= 120")
-
-  /** P1 + a18: last-touch attribution from SQL, with a non-default
-    * lookback — `attribution purchase within 1800`. */
-  private def p12SqlAttribution(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select attribution purchase within 1800 from events where user_id <= 120")
-
-  /** P1 + a20: Markov stationary distribution from SQL with a filtered
-    * chain (error events removed) and a non-default iteration count. */
-  private def p13SqlMarkov(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select markov iters 10 from events where event_type != 'error'")
-
-  /** P1 + a19: seasonal anomalies from SQL with non-default threshold and
-    * support, over the error-free slice. */
-  private def p14SqlAnomaly(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select anomaly split '2024-01-21' factor 3 support 20 " +
-        "from events where event_type != 'error'")
-
   /** P1 + c13: one-pass profiling from SQL — columns classified
     * numeric/string/timestamp from the input schema at run time, WHERE
     * composing ahead of the single aggregation. */
@@ -732,41 +515,6 @@ object SparkEntry {
       .select("event_id", "user_id", "event_type", "value", "props", "ts"),
       "select profile user_id, value, event_type, ts " +
         "from events where event_type = 'click'")
-
-  /** P1 + x18: TF-IDF similar pairs from SQL over the documents table,
-    * with a tighter df cap and a language gate. */
-  private def p16SqlSimilar(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select similar top 40 maxdfpct 10 from documents where lang = 'en'")
-
-  /** P1 + d2b: MinHash-LSH near-dup pairs from SQL — the dialect reaching
-    * the dedup family; WHERE (length gate) composes ahead of the band
-    * join. */
-  private def p17SqlNeardup(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select neardup threshold 50 from documents where n_chars >= 200")
-
-  /** P1 + s1: brute-force cosine kNN from SQL — the dialect reaching the
-    * embeddings table, with a non-default query id and a corpus filter. */
-  private def p18SqlKnn(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.embeddings(s, dir),
-      "select knn top 8 query 42 from embeddings where vec_id < 400")
-
-  /** P1 + s13: MMR diverse re-rank from SQL, non-default query/k/
-    * shortlist and a corpus filter (the query row satisfies it). */
-  private def p19SqlMmr(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.embeddings(s, dir),
-      "select mmr top 8 query 7 shortlist 30 from embeddings where vec_id < 450")
-
-  /** O1 + LIMIT through SQL: sort+limit compiles to TakeOrderedAndProject
-    * (per-partition top-k, no global sort) — the scalable "top-k services"
-    * query the reference's observability UI wants. */
-  private def o2TopkLimit(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value) from events group by user_id " +
-      "order by sum(value) desc limit 5"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("user_id"), round3("sum_value"))
-  }
 
   /** o3: top-N per group — the grouped companion of top-k: the 3 longest
     * docs per source via a rank window whose rn ≤ 3 filter compiles to
@@ -1737,15 +1485,6 @@ object SparkEntry {
         countDistinct(col("user_id")).as("n_users"))
   }
 
-  /** c9: incremental refresh off the manifest log — commit a 3-day
-    * snapshot, append 3 more days (second commit), then refresh a
-    * per-type aggregate by reading ONLY the files [[graft.sources
-    * .EventStore.manifestDiff]] says the new version added (require-gated:
-    * the plan binds exactly the added files, none removed). Partials are
-    * fixed-point `floor(value·2^20)` LONG sums, so base + delta merges
-    * exactly — the result is bit-identical to DuckDB's full 6-day
-    * aggregate, which is the whole claim: an incremental tick computed
-    * the full-scan answer without the full scan. */
   /** c11: schema evolution on the manifested store — a late batch lands
     * WITH a new column and history is never rewritten: absence at the old
     * parquet footers IS the null encoding, and the mergeSchema pinned
@@ -1899,6 +1638,15 @@ object SparkEntry {
         countDistinct(col("event_id")).as("n_events"))
   }
 
+  /** c9: incremental refresh off the manifest log — commit a 3-day
+    * snapshot, append 3 more days (second commit), then refresh a
+    * per-type aggregate by reading ONLY the files [[graft.sources
+    * .EventStore.manifestDiff]] says the new version added (require-gated:
+    * the plan binds exactly the added files, none removed). Partials are
+    * fixed-point `floor(value·2^20)` LONG sums, so base + delta merges
+    * exactly — the result is bit-identical to DuckDB's full 6-day
+    * aggregate, which is the whole claim: an incremental tick computed
+    * the full-scan answer without the full scan. */
   private def c9Incremental(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-incr-q/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
@@ -2508,47 +2256,6 @@ object SparkEntry {
   private def a21Trend(s: SparkSession, dir: String): DataFrame =
     graft.operators.Funnel.linearTrend(Tables.events(s, dir))
 
-  /** P1 + a21: linear trend from SQL over a filtered slice — the face's
-    * WHERE composes ahead of the single aggregation. */
-  private def p20SqlTrend(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select trend from events where event_type != 'error'")
-
-  /** P1 + m6: image near-dup pairs from SQL with a non-default Hamming
-    * radius — the dialect reaching the multimodal family. */
-  private def p21SqlNeardupImages(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select neardup images hamming 6 from documents")
-
-  /** P1 + s13b: batched MMR from SQL — `queries` takes the id list, one
-    * corpus pass re-ranks them all; WHERE composes into the pass. */
-  private def p22SqlMmrBatch(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.embeddings(s, dir),
-      "select mmr top 5 queries 2, 8 shortlist 20 from embeddings where vec_id < 450")
-
-  /** P1 + m7: audio near-dup pairs from SQL with a non-default Hamming
-    * radius — the second multimodal face. */
-  private def p23SqlNeardupAudio(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select neardup audio hamming 20 from documents")
-
-  /** P1 + a20b: the distributed Markov route from SQL. */
-  private def p24SqlMarkovDistributed(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select markov iters 10 distributed from events where event_type != 'error'")
-
-  /** P1 + m8: frame-set (video-shaped) near-dup from SQL, WHERE composed
-    * ahead of the digest-blocking join. */
-  private def p26SqlNeardupVideo(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select neardup video shared 2 from documents where n_chars >= 256")
-
-  /** P1 + m9: scene-change detection from SQL, WHERE composed ahead of
-    * the frame walk. */
-  private def p27SqlScenes(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select scenes from documents where lang = 'en'")
-
   /** P1 + j1: the general equi-join roll-up from SQL — the fact table
     * chains three plain joins (orders → customer → nation, the j1
     * snowflake), WHERE lands on a DIM column post-join so Catalyst pushes
@@ -2572,31 +2279,6 @@ object SparkEntry {
         col("count_distinct_o_custkey"), col("max_o_totalprice"))
   }
 
-  /** P1 + expression measures: the TPC-H q1 pricing-summary shape spelled
-    * ENTIRELY at the SQL front door — computed measures
-    * (`sum(l_extendedprice * (1 - l_discount)) as sum_disc_price`) with
-    * `as` aliases, a per-row ratio under the weighted mean, and ORDER BY
-    * referencing an alias. All columns are native doubles, so the
-    * arithmetic is bit-identical IEEE on both engines; expression
-    * measures evaluate row-wise and partial-aggregate map-side exactly
-    * like plain columns (one exchange, whole-stage codegen). */
-  private def p28SqlExprMeasures(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(l_quantity) as sum_qty, " +
-      "sum(l_extendedprice) as sum_base_price, " +
-      "sum(l_extendedprice * (1 - l_discount)) as sum_disc_price, " +
-      "sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) as sum_charge, " +
-      "mean(l_quantity) as avg_qty, " +
-      "mean(l_extendedprice / l_quantity) as avg_unit_price, " +
-      "count(*) as count_order " +
-      "from lineitem where l_quantity >= 5 " +
-      "group by l_returnflag, l_linestatus order by sum_qty desc"
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir), sql)
-      .select(col("l_returnflag"), col("l_linestatus"), round3("sum_qty"),
-        round3("sum_base_price"), round3("sum_disc_price"),
-        round3("sum_charge"), round3("avg_qty"), round3("avg_unit_price"),
-        round3("count_order"))
-  }
-
   /** P1 + expression measures THROUGH the equi-join chain: revenue by
     * nation (the q5 volume shape) with the computed measure aggregated
     * over the joined frame, HAVING referencing the measure's alias. */
@@ -2613,65 +2295,6 @@ object SparkEntry {
       "customer" -> Tables.customer(s, dir),
       "nation" -> Tables.nation(s, dir)))
       .select(col("n_name"), round3("revenue"), round3("n_items"))
-  }
-
-  /** P1 + expression predicates: the q6-forecast flavor with a COMPUTED
-    * measure in WHERE — `l_extendedprice * (1 - l_discount) > 1000`
-    * engages the numeric expression predicate (post-scan evaluation),
-    * while the plain discount/quantity conjuncts still push into the
-    * Parquet scan; the revenue measure aggregates over the surviving
-    * rows. All doubles — IEEE-identical on both engines. */
-  private def p30SqlExprWhere(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(l_extendedprice * l_discount) as revenue, " +
-      "count(*) as n from lineitem " +
-      "where l_discount >= 0.05 and l_discount <= 0.07 and l_quantity < 24 " +
-      "and l_extendedprice * (1 - l_discount) > 1000 " +
-      "group by l_returnflag order by revenue desc"
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir), sql)
-      .select(col("l_returnflag"), round3("revenue"), round3("n"))
-  }
-
-  /** P1, the full q3 shape at the front door: [[graft.sql.ZxSql.runCatalog]]
-    * resolves the BASE frame from the query's own `from lineitem` (no
-    * DataFrame in hand), DATE literals compare against the timestamp
-    * columns (`o_orderdate < '1998-01-01'` — UTC epoch seconds on both
-    * engines), the computed revenue aggregates over the chained joins,
-    * and the top-10 cut rides the deterministic sorted path (revenue
-    * desc, then the string group keys asc — mirrored in the oracle). */
-  private def p31SqlShippingCatalog(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(l_extendedprice * (1 - l_discount)) as revenue, " +
-      "count(*) as n from lineitem " +
-      "join orders on l_orderkey = o_orderkey " +
-      "join customer on o_custkey = c_custkey " +
-      "where c_mktsegment = 'BUILDING' and o_orderdate < '1998-01-01' " +
-      "and l_shipdate > '1998-01-01' " +
-      "group by l_orderkey, o_orderdate order by revenue desc limit 10"
-    graft.sql.ZxSql.runCatalog(Map(
-      "lineitem" -> Tables.lineitem(s, dir),
-      "orders" -> Tables.orders(s, dir),
-      "customer" -> Tables.customer(s, dir)), sql)
-      .select(col("l_orderkey"), col("o_orderdate"),
-        round3("revenue"), round3("n"))
-  }
-
-  /** p32: TPC-H q14 (promo revenue share) THROUGH the dialect — the
-    * round's two new layers composed: a conditional measure (`case when …
-    * then … else 0 end` INSIDE the aggregate) and a post-aggregate ratio
-    * (`100 * sum(a) / sum(b) as …`) over the broadcast equi-join, with no
-    * group by (the global roll-up shape the join grammar now takes). Both
-    * component sums ride ONE hash aggregate — the ratio is a scalar
-    * projection after the exchange, zero extra shuffles. */
-  private def p32SqlCaseRatio(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select 100 * sum(case when p_type = 'PROMO' then " +
-      "l_extendedprice * (1 - l_discount) else 0 end) / " +
-      "sum(l_extendedprice * (1 - l_discount)) as promo_revenue, " +
-      "count(*) as n " +
-      "from lineitem join part on l_partkey = p_partkey " +
-      "where l_shipdate >= '1997-03-01' and l_shipdate < '1997-04-01'"
-    graft.sql.ZxSql.runCatalog(Map(
-      "lineitem" -> Tables.lineitem(s, dir),
-      "part" -> Tables.part(s, dir)), sql)
-      .select(round3("promo_revenue"), round3("n"))
   }
 
   /** One SQL string, two engines (the st_tumbling pattern, now THROUGH a
@@ -2703,129 +2326,6 @@ object SparkEntry {
         tables = Map("customer" -> Tables.customer(s, dir)))
     }.select(col("c_mktsegment"), col("w_start"), col("w_end"),
       round3("sum_value"), round3("n"))
-
-  /** p35: top-k groups PER parent dimension at the SQL front door —
-    * `limit 2 per event_type` ranks each event_type's user groups by the
-    * aggregate and keeps two; the rank-filter compiles to per-partition
-    * WindowGroupLimit (plan-pinned), so each task forwards ≤ k rows per
-    * partition to the one window exchange. */
-  private def p35SqlTopPerGroup(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(value) as s from events " +
-      "group by event_type, user_id order by s desc limit 2 per event_type"
-    graft.sql.ZxSql.run(Tables.events(s, dir), sql)
-      .select(col("event_type"), col("user_id"), round3("s"))
-  }
-
-  /** p36: the RAW top-per-group (the o3 shape through the dialect) — the
-    * 3 longest docs per source, total-ordered by the explicit doc_id
-    * tiebreak in the ORDER BY. */
-  private def p36SqlTopRawPer(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, source, n_chars " +
-        "order by n_chars desc, doc_id limit 3 per source")
-
-  /** p37: membership subquery (the TPC-H q18 semi-join shape) THROUGH
-    * the dialect — `where l_orderkey in (select l_orderkey … group by …
-    * having sum(l_quantity) > 250)` compiles to a LEFT SEMI join of the
-    * fact scan against the subquery's native-typed key frame; the outer
-    * roll-up re-aggregates the surviving orders. */
-  private def p37SqlInSubquery(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(l_quantity) as total_qty, count(*) as n " +
-      "from lineitem where l_orderkey in (select l_orderkey from lineitem " +
-      "group by l_orderkey having sum(l_quantity) > 250) " +
-      "group by l_orderkey order by total_qty desc"
-    graft.sql.ZxSql.runCatalog(Map("lineitem" -> Tables.lineitem(s, dir)), sql)
-      .select(col("l_orderkey"), round3("total_qty"), round3("n"))
-  }
-
-  /** p38: `not in (select …)` — the ANTI join (decontamination shape):
-    * orders from customers OUTSIDE a segment. Anti-join ("not matched")
-    * semantics, spec-pinned divergence from ANSI NOT IN null-veto; the
-    * oracle replays with NOT EXISTS accordingly. */
-  private def p38SqlNotInSubquery(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select count(*) as n from orders " +
-      "where o_custkey not in (select c_custkey from customer " +
-      "where c_mktsegment = 'BUILDING') order by n desc"
-    graft.sql.ZxSql.runCatalog(Map(
-      "orders" -> Tables.orders(s, dir),
-      "customer" -> Tables.customer(s, dir)), sql)
-      .select(round3("n"))
-  }
-
-  /** p39: SCALAR subquery THROUGH the dialect — the "above corpus
-    * average" gate. The threshold is ONE tiny aggregation at plan-build,
-    * then inlined as a LITERAL that pushes into the fact scan's parquet
-    * PushedFilters (plan-pinned) — at 100 TB the alternative (a join
-    * carrying the scalar) would ride every row of the big side. */
-  private def p39SqlScalarSub(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select count(*) as n, sum(l_extendedprice) as rev " +
-      "from lineitem where l_quantity > (select mean(l_quantity) from lineitem) " +
-      "group by l_returnflag order by rev desc"
-    graft.sql.ZxSql.runCatalog(Map("lineitem" -> Tables.lineitem(s, dir)), sql)
-      .select(col("l_returnflag"), round3("n"), round3("rev"))
-  }
-
-  /** p40: DERIVED TABLE (the TPC-H q13 custdist shape) THROUGH the
-    * dialect — `from (select …)` two-level aggregation: inner counts
-    * orders per customer, outer histograms customers by order count.
-    * The outer runs the non-windowed sorted path over the inner frame;
-    * Catalyst's EliminateSorts drops the inner ORDER BY under the outer
-    * aggregate, so the plan is two back-to-back hash aggregations. */
-  private def p40SqlCustdist(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select count(*) as custdist from (select count(*) as n " +
-      "from orders group by o_custkey order by n) " +
-      "group by n order by custdist desc, n desc"
-    graft.sql.ZxSql.runCatalog(Map("orders" -> Tables.orders(s, dir)), sql)
-      .select(col("n"), round3("custdist"))
-  }
-
-  /** p41: derived-table stats with an outer WHERE gate — mean/max of
-    * per-user spend over users whose total is positive ("HAVING at the
-    * front door" via the derived frame). */
-  private def p41SqlDerivedStats(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select mean(s) as avg_spend, max(s) as max_spend, " +
-      "count(*) as n_users from (select sum(value) as s " +
-      "from events group by user_id order by s) where s > 0"
-    graft.sql.ZxSql.runCatalog(Map("events" -> Tables.events(s, dir)), sql)
-      .select(round3("avg_spend"), round3("max_spend"), round3("n_users"))
-  }
-
-  /** p42: DERIVED JOIN SIDE (the TPC-H q17 correlated-threshold shape)
-    * THROUGH the dialect — `join (select mean(…) group by key)` builds
-    * per-part quantity averages in ONE aggregation pass, the self-join
-    * carries them onto each lineitem row, and the expression predicate
-    * compares row vs own-group threshold. AQE broadcasts the aggregate
-    * side (|parts| rows, not |lineitem|). */
-  private def p42SqlQ17Shape(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(l_extendedprice) as total_price, count(*) as n " +
-      "from lineitem " +
-      "join (select mean(l_quantity) as avg_qty from lineitem group by l_partkey) " +
-      "on l_partkey = l_partkey " +
-      "where l_quantity - 0.5 * avg_qty < 0 " +
-      "group by l_returnflag order by total_price desc"
-    graft.sql.ZxSql.runCatalog(Map("lineitem" -> Tables.lineitem(s, dir)), sql)
-      .select(col("l_returnflag"), round3("total_price"), round3("n"))
-  }
-
-  /** p33: TPC-H q12 (priority class counts) THROUGH the dialect — two
-    * conditional measures whose branch predicates are IN-lists over the
-    * joined frame, grouped on the deterministic sorted path. The CASE
-    * values are exact small integers, so the double sums are
-    * bit-identical on both engines. */
-  private def p33SqlCaseGroup(s: SparkSession, dir: String): DataFrame = {
-    val sql = "select sum(case when o_orderpriority in ('1-URGENT', '2-HIGH') " +
-      "then 1 else 0 end) as high_line_count, " +
-      "sum(case when o_orderpriority in ('1-URGENT', '2-HIGH') " +
-      "then 0 else 1 end) as low_line_count " +
-      "from lineitem join orders on l_orderkey = o_orderkey " +
-      "where l_shipdate >= '1997-01-01' and l_shipdate < '1998-01-01' " +
-      "and l_returnflag = 'N' group by l_linestatus"
-    graft.sql.ZxSql.runCatalog(Map(
-      "lineitem" -> Tables.lineitem(s, dir),
-      "orders" -> Tables.orders(s, dir)), sql)
-      .select(col("l_linestatus"),
-        round3("high_line_count"), round3("low_line_count"))
-  }
 
   /** s13: MMR diverse re-rank — one exact-kNN corpus pass builds the
     * shortlist, the greedy diversity loop runs on the bounded collected
@@ -2924,41 +2424,6 @@ object SparkEntry {
   private def x19Mixture(s: SparkSession, dir: String): DataFrame =
     graft.operators.Corpus.mixtureByTokenBudget(Tables.documents(s, dir),
       budgets = Map("src1" -> 800L, "src2" -> 500L, "src3" -> 2000L))
-
-  /** p43: the mixture SQL face — `select mixture src=tokens, …` with a
-    * WHERE quality gate applied BEFORE budgeting, so each source's budget
-    * fills from the surviving documents (gate-then-mix in one statement). */
-  private def p43SqlMixture(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select mixture src1=600, src2=400, src3=1500 where n_chars > 150")
-
-  /** p44: the sampling SQL face, stratified mode — per-source keep
-    * percentages behind a WHERE quality gate; gate and sample are both
-    * narrow filters, so the whole statement rides the scan stage. */
-  private def p44SqlSample(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select sample pct 25 by src1=70, src4=5 where n_chars > 120")
-
-  /** p45: the sampling SQL face, weighted mode — acceptance probability
-    * n_chars/1500 clamped to [0,1] (longer docs kept proportionally more
-    * often: a token-level-unbiased sample from one narrow filter). */
-  private def p45SqlSampleWeight(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select sample weight n_chars scale 1500 where lang != 'zh'")
-
-  /** p46: the packing SQL face — x7's token-budget sequence packing
-    * behind a WHERE gate; one window per source, batch-only (prefix sums
-    * are stateful). */
-  private def p46SqlPack(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select pack budget 1500 where n_chars > 100")
-
-  /** p47: the chunking SQL face — x12's overlapping context windows
-    * (24-token windows, stride 12) behind a lang gate; a stateless
-    * narrow explode, so the same statement also runs on streams. */
-  private def p47SqlChunks(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select chunks size 24 stride 12 where lang = 'en'")
 
   /** x21: bigram-LM fluency scoring — the CCNet-style quality probe.
     * Tables train on the `lang = 'en'` reference slice (top-300 unigrams
@@ -3065,276 +2530,6 @@ object SparkEntry {
         "select chunks size 24 stride 12 where lang = 'en'")
     }
 
-  /** p55: the embedding near-dup SQL face — d5's label-blocked cosine
-    * pairs at a caller threshold, behind a label gate (the WHERE prunes
-    * blocks BEFORE the quadratic). */
-  private def p55SqlNeardupEmbed(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.embeddings(s, dir),
-      "select neardup embeddings threshold 35 where label != 3")
-
-  /** p56: the language-ID SQL face — x1's stopword-profile heuristic
-    * behind a source gate; stateless (the face also streams). */
-  private def p56SqlLangId(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select langid where source != 'src5'")
-
-  /** p53: the quality SQL face — per-doc C4-style metrics behind a lang
-    * gate; a stateless narrow map (the face also streams). */
-  private def p53SqlQuality(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select quality where lang = 'en'")
-
-  /** p54: the redaction SQL face — \b-literal counts + scrubbed-text
-    * fingerprint for caller-chosen terms (not x11's fixture terms). */
-  private def p54SqlRedact(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select redact spark, data where source != 'src0'")
-
-  /** d1b: NORMALIZED exact dedup — case/punctuation/whitespace variants
-    * of the same content land in one group (lower → strip non-[a-z0-9 ]
-    * → collapse runs → trim, the engine-portable canonicalization);
-    * exercised through the SQL face so the grammar path is the tested
-    * path. */
-  private def d1bDedupNormalized(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir), "select dedup normalized")
-
-  /** p71: row-wise EXPRESSION PROJECTIONS on the raw path —
-    * `select price * (1 - discount) as net` without an aggregate. The
-    * measure compiler evaluates the arithmetic (same try_divide
-    * null-on-zero contract as filters and aggregate measures), so a
-    * computed column codegens like a plain one and column pruning sees
-    * through it (the scan reads only the referenced storage columns —
-    * PlanSpec-pinned). ORDER BY binds the alias; the tiebreak keys make
-    * the LIMIT cut a total order. */
-  private def p71SqlExprProject(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir),
-      "select l_orderkey, l_linenumber, " +
-        "l_extendedprice * (1 - l_discount) as net, " +
-        "l_extendedprice / l_quantity as unit_price " +
-        "where l_quantity > 45 " +
-        "order by net desc, l_orderkey, l_linenumber limit 200")
-
-  /** p72: COMPOSITE-KEY SEMI JOIN — EXISTS at the front door: short docs
-    * whose (lang, source) pair also occurs among long docs. The right
-    * side is a gated derived key set over the SAME table (self-join:
-    * the internal key rename keeps resolution unambiguous); duplicate
-    * right pairs never multiply rows, and the filter applies BEFORE the
-    * projection, so everything downstream composes. Oracle = DuckDB
-    * EXISTS (NOT IN's three-valued null trap is exactly what this face
-    * avoids). */
-  private def p72SqlSemiJoin(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select doc_id, lang, source from documents " +
-        "semi join (select lang, source from documents where n_chars > 450) " +
-        "on lang = lang and source = source " +
-        "where n_chars < 150 order by doc_id")
-
-  /** p73: ANTI JOIN — NOT EXISTS reconciliation: per-segment counts of
-    * customers with no large order. The right side is a gated key set
-    * (every customer has SOME order in this testdata — the gate makes
-    * the anti join load-bearing); the aggregate runs on the filtered
-    * frame. */
-  private def p73SqlAntiJoin(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map(
-      "customer" -> Tables.customer(s, dir), "orders" -> Tables.orders(s, dir)),
-      "select count(*) as n from customer " +
-        "anti join (select o_custkey from orders where o_totalprice > 300000) " +
-        "on c_custkey = o_custkey " +
-        "group by c_mktsegment order by n desc")
-      .select(col("c_mktsegment"), round3("n"))
-
-  /** p74: AGGREGATE window functions — the running-total primitive:
-    * per-customer cumulative revenue in order-date order (SQL default
-    * RANGE frame on both engines) next to a whole-partition count (no
-    * ORDER BY = partition total). Both items partition on o_custkey, so
-    * they share ONE exchange (PlanSpec-pinned); window aggregates are
-    * plain SQL row semantics (unweighted — the reference's weighted
-    * forms are the grouped aggregates). */
-  private def p74SqlWindowAgg(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.orders(s, dir),
-      "select o_orderkey, o_custkey, " +
-        "sum(o_totalprice) over (partition by o_custkey " +
-        "order by o_orderdate, o_orderkey) as running, " +
-        "count(*) over (partition by o_custkey) as n_orders " +
-        "where o_custkey < 50 order by o_custkey, o_orderkey")
-      .select(col("o_orderkey"), col("o_custkey"), round3("running"),
-        col("n_orders"))
-
-  /** p75: navigation + bucketing windows — first/last value per user in
-    * event-time order (last_value over the FULL partition frame, or it
-    * would be the current row) and the ntile quartile. The (ts,
-    * event_id) order is total, so every item is deterministic. */
-  private def p75SqlWindowNav(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select event_id, user_id, " +
-        "first_value(value) over (partition by user_id order by ts, event_id) as first_v, " +
-        "last_value(value) over (partition by user_id order by ts, event_id) as last_v, " +
-        "ntile(4) over (partition by user_id order by ts, event_id) as quartile " +
-        "where value >= 1 order by user_id, event_id limit 400")
-
-  /** p76: SCALAR FUNCTIONS in the measure grammar — abs/sqrt as WHERE
-    * expression predicates, round/length as expression projections. All
-    * row-wise with identical IEEE semantics on both engines; length reads
-    * the raw string (and BIGINTs like DuckDB), round's digit count is a
-    * plan constant. The non-function conjunct still pushes into the
-    * scan. */
-  private def p76SqlScalarFuncs(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, round(n_chars / 100, 2) as hundreds, " +
-        "length(text) as len " +
-        "where abs(n_chars - 300) < 150 and sqrt(n_chars) > 12 " +
-        "and lang = 'en' order by doc_id limit 300")
-
-  /** p77: CASE expression projections — the row-labeling primitive
-    * (`case when … then … end as size_class`) on the raw path, same
-    * conditional-measure machinery as inside aggregates (first true
-    * branch wins, no else → NULL, three-valued predicates). Values are
-    * numeric (the measure grammar); the oracle CASTs DuckDB's integer
-    * literals to DOUBLE for type parity. */
-  private def p77SqlCaseProject(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, n_chars, " +
-        "case when n_chars > 400 then 2 when n_chars > 200 then 1 else 0 end " +
-        "as size_class " +
-        "where lang = 'en' order by doc_id limit 400")
-
-  /** p78: COMPUTED GROUP KEYS — bucket-then-aggregate through a derived
-    * table: the p77 CASE labels rows, the outer groups by the label.
-    * Catalyst collapses the composition into ONE scan+aggregate pass —
-    * the label becomes a direct grouping expression and the read schema
-    * shrinks to n_chars alone (doc_id pruned through the derived table;
-    * PlanSpec-pinned). The shape every curriculum/mixture bucketing
-    * starts from. */
-  private def p78SqlBucketAgg(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select count(*) as c, mean(n_chars) as m from " +
-        "(select doc_id, n_chars, case when n_chars > 400 then 2 " +
-        "when n_chars > 200 then 1 else 0 end as cls from documents) " +
-        "group by cls order by c desc")
-      .select(col("cls"), round3("c"), round3("m"))
-
-  /** p79: STRING functions — lower/upper/trim/substr as projections and
-    * the case-insensitive gate (`where lower(lang) = 'en'`). String
-    * expressions compare for EQUALITY only (order would ride collation);
-    * arithmetic over strings is a parse error. substr is 1-based on both
-    * engines. */
-  private def p79SqlStringFuncs(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, upper(lang) as lang_u, substr(source, 1, 4) as src4 " +
-        "where lower(lang) = 'en' and length(text) > 100 " +
-        "order by doc_id limit 300")
-
-  /** p80: STRING CASE LABELS feeding a computed group key — the
-    * human-readable bucket-then-aggregate: label rows 'long'/'mid'/
-    * 'short' in a derived table, group by the label. Same one-pass
-    * collapsed plan as p78; the group key is natively a string, so the
-    * rendering needs no cast on either engine. */
-  private def p80SqlCaseLabel(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select count(*) as c, mean(n_chars) as m from " +
-        "(select doc_id, n_chars, case when n_chars > 400 then 'long' " +
-        "when n_chars > 200 then 'mid' else 'short' end as bucket " +
-        "from documents) " +
-        "group by bucket order by c desc")
-      .select(col("bucket"), round3("c"), round3("m"))
-
-  /** p81: DISPERSION aggregates — `stddev`/`variance` (SAMPLE forms,
-    * plain ANSI semantics: unweighted like the percentile family, NULL
-    * when a group has < 2 values) ride the same hash-aggregate plan as
-    * every other measure, including over a computed expression. Oracle =
-    * DuckDB's native stddev_samp/var_samp; 3dp rounding absorbs the
-    * engines' different partial-merge orders (~1e-12 relative). */
-  private def p81SqlStddev(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select stddev(value) as sd, variance(value) as vr, " +
-        "stddev(value / 10) as sd10, count(*) as n " +
-        "group by event_type order by sd desc")
-      .select(col("event_type"), round3("sd"), round3("vr"),
-        round3("sd10"), round3("n"))
-
-  /** p82: CALENDAR ROLLUP — `year(o_orderdate)` labels rows in a derived
-    * table, the outer groups by the year: the "orders per year" staple
-    * the granularity windows cannot spell (they bucket epoch seconds, not
-    * calendar fields). Catalyst collapses the composition into ONE
-    * scan+aggregate pass like p78. Every aggregate here is
-    * order-independent-EXACT (counts, distinct count, max), so the row
-    * carries zero float-summation risk. */
-  private def p82SqlCalendar(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("orders" -> Tables.orders(s, dir)),
-      "select count(*) as n, count_distinct(o_custkey) as custs, " +
-        "max(o_totalprice) as mx from " +
-        "(select o_orderkey, o_custkey, o_totalprice, " +
-        "year(o_orderdate) as yr from orders) " +
-        "group by yr order by yr asc")
-      .select(col("yr"), round3("n"), col("custs"), col("mx"))
-
-  /** p83: HOUR-OF-DAY PROFILE over the events table — `hour(ts)` under
-    * the engine-wide UTC timestamp contract (Tables.events normalizes
-    * every historical parquet encoding to one session-zoned ts; DuckDB
-    * reads the same file as a naive timestamp — identical wall-clock
-    * fields). The diurnal-activity shape every observability UI draws. */
-  private def p83SqlHourProfile(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("events" -> Tables.events(s, dir)),
-      "select count(*) as n, sum(value) as sv, max(value) as mx from " +
-        "(select value, hour(ts) as hr from events " +
-        "where event_type = 'click') " +
-        "group by hr order by hr asc")
-      .select(col("hr"), round3("n"), round3("sv"), col("mx"))
-
-  /** p84: NULL-HANDLING scalars — `nullif` manufactures SQL NULLs from a
-    * sentinel (here: the sub-100 value band), `coalesce` pads them back,
-    * `greatest`/`least` clamp while SKIPPING nulls (null only when every
-    * argument is null — both engines agree). Exercises the aggregates'
-    * null discipline end-to-end: mean skips the manufactured nulls, sum
-    * treats them as zero-contribution. */
-  private def p84SqlNullSafe(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select count(*) as n, " +
-        "mean(nullif(floor(value / 100), 0)) as m_nz, " +
-        "sum(coalesce(nullif(floor(value / 100), 0), -1)) as s_pad, " +
-        "sum(least(value, 100)) as s_cap, " +
-        "max(greatest(value, 400)) as mx " +
-        "group by event_type order by n desc")
-      .select(col("event_type"), round3("n"), round6("m_nz"),
-        round3("s_pad"), round3("s_cap"), round3("mx"))
-
-  /** p85: JSON PROPS EXTRACTION — the schemaless-event staple the
-    * reference's observability store implies but cannot spell.
-    * `json_num(props, 'k')` gates, aggregates (integer-valued sums are
-    * order-independent-exact), and `json_str` feeds count_distinct (the
-    * relaxed set-semantics guard). Missing keys are NULL on both engines;
-    * a simple-identifier key is parse-enforced so path-syntax differences
-    * never engage. */
-  private def p85SqlJson(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(json_num(props, 'k')) as sk, " +
-        "count_distinct(json_str(props, 'k')) as dk " +
-        "where json_num(props, 'k') >= 10 " +
-        "group by event_type order by sk desc")
-      .select(col("event_type"), round3("sk"), col("dk"))
-
-  /** p86: EXPLODE + aggregate — the word/tag-count shape: unnest a
-    * delimited string column in a derived table, count elements in the
-    * outer (the reference stores "t1,t2" tag lists it can only
-    * CONTAINS-probe, lib.rs:486-495 — this is their relational form).
-    * The explode is ONE stateless narrow row-multiplier (zero shuffles)
-    * feeding the count's single hash exchange; top-k is
-    * group-key-tiebroken (deterministic). */
-  private def p86SqlExplode(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select count(*) as n from " +
-        "(select explode(text, ' ') as w from documents where lang = 'en') " +
-        "group by w order by n desc limit 25")
-      .select(col("w"), round3("n"))
-
-  /** p86b: the RAW exploded projection — (doc_id, element) pairs with
-    * the gate pushed into the scan; the stream-facing form (st_explode
-    * replays this row's oracle verbatim). */
-  private def p86bSqlExplodeRaw(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, explode(text, ' ') as w " +
-        "where lang = 'zh' and n_chars < 150")
-
   /** st_explode: p86b replayed as a STREAM — the explode generator is a
     * stateless narrow row-multiplier, legal in append mode; shares
     * p86b's oracle verbatim, so the streaming generator path is
@@ -3362,19 +2557,6 @@ object SparkEntry {
       .select(col("user_id"), col("event_id"), round6("mv7"))
   }
 
-  /** p114: nth_value — the partition's n-th row in ORDER BY order over
-    * the FULL frame ("who is the runner-up in each source"), composed
-    * with row_number + QUALIFY for the keep-best-with-context shape.
-    * Both windows share the one partition exchange. */
-  private def p114SqlNthValue(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select source, doc_id, n_chars, " +
-        "nth_value(doc_id, 2) over (partition by source " +
-        "order by n_chars desc, doc_id) as runner_up, " +
-        "row_number() over (partition by source " +
-        "order by n_chars desc, doc_id) as rn " +
-        "qualify rn = 1 order by source")
-
   /** p115: the TWO-SIDED moving frame — `rows between 2 preceding and 2
     * following`, the centered 5-row smoother (p87's trailing frame looks
     * back only). Same one-exchange window plan, same unique-tiebreak
@@ -3390,26 +2572,6 @@ object SparkEntry {
       .select(col("user_id"), col("event_id"), round6("ctr5"))
   }
 
-  /** p88: EXACT-count sample PER GROUP — `sample exact 50 per source`:
-    * exactly 50 docs from every source, rerun-stable (the p66 md5 coin,
-    * key-tiebroken, now ranked within each group). Unlike the global
-    * form the cut is never driver-resident: the rank window's rn <= n
-    * compiles to per-partition WindowGroupLimit — each input partition
-    * forwards ≤ 50 rows per source to one hash exchange — so the
-    * stratified split holds at 100 TB with NO bound on n. */
-  private def p88SqlSamplePer(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select sample exact 50 per source from documents where n_chars > 100")
-
-  /** p85b: the RAW JSON projection — extract-and-gate as a plain
-    * row-wise enrichment (no aggregate), the form that STREAMS;
-    * st_json replays this row's oracle verbatim. */
-  private def p85bSqlJsonRaw(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select event_id, json_num(props, 'k') as k, " +
-        "json_str(props, 'k') as ks " +
-        "where json_num(props, 'k') >= 95")
-
   /** st_json: p85b replayed as a STREAM — JSON extraction is stateless
     * row arithmetic, so the live-enrichment path ("parse props as events
     * arrive") is hash-verified against the same DuckDB oracle. */
@@ -3420,21 +2582,6 @@ object SparkEntry {
           "json_str(props, 'k') as ks " +
           "where json_num(props, 'k') >= 95")
     }
-
-  /** p89: RELATIVE-POSITION ranks — percent_rank/cume_dist complete the
-    * rank family (the "where does this doc sit in its source's length
-    * distribution" normalizer feeding curriculum-style ordering).
-    * Identical definitions on both engines; the ORDER BY is total
-    * (n_chars, then unique doc_id), one window exchange. */
-  private def p89SqlPercentRank(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, n_chars, " +
-        "percent_rank() over (partition by source order by n_chars asc, " +
-        "doc_id asc) as pr, " +
-        "cume_dist() over (partition by source order by n_chars asc, " +
-        "doc_id asc) as cd " +
-        "where lang = 'en' order by doc_id asc limit 400")
-      .select(col("doc_id"), col("n_chars"), round6("pr"), round6("cd"))
 
   /** p90: DATE ARITHMETIC across a join — `datediff(l_shipdate,
     * o_orderdate)` inside aggregate measures is the shipping-delay
@@ -3452,42 +2599,6 @@ object SparkEntry {
       tables = Map("orders" -> Tables.orders(s, dir)))
       .select(col("o_orderpriority"), round6("avg_delay"), col("mx"),
         round3("n"))
-
-  /** p91: TWO-ARGUMENT dispersion — Pearson correlation and sample
-    * covariance, arguments riding the full measure grammar
-    * (`length(text)` is a scalar-function measure): n_chars vs the
-    * actual text length correlate ≈ 1 (the data-quality sanity check —
-    * "does the metadata column actually describe the blob"), doc_id vs
-    * n_chars ≈ 0 (the null hypothesis). Pairs with either side NULL are
-    * skipped on both engines; unweighted like stddev. */
-  private def p91SqlCorr(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select corr(n_chars, length(text)) as c, " +
-        "covar_samp(n_chars, length(text)) as cv, " +
-        "corr(doc_id, n_chars) as c0, count(*) as n " +
-        "group by lang order by n desc")
-      .select(col("lang"), round6("c"), round3("cv"), round6("c0"),
-        round3("n"))
-
-  /** p92: LEAST-SQUARES REGRESSION — regr_slope/regr_intercept(y, x)
-    * with measure-grammar arguments (the x here is a JSON-extracted
-    * field): the front-door form of the a21 trend operator. Identical
-    * argument order and NULL-pair skipping on both engines. */
-  private def p92SqlRegr(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select regr_slope(value, json_num(props, 'k')) as sl, " +
-        "regr_intercept(value, json_num(props, 'k')) as ic, " +
-        "count(*) as n group by event_type order by n desc")
-      .select(col("event_type"), round6("sl"), round3("ic"), round3("n"))
-
-  /** p93: CONCAT — NULL-propagating string concatenation building
-    * composite labels (`lang-source`), feeding distinct/group-by like
-    * any string expression; the oracle spells `||` (DuckDB's own
-    * concat() SKIPS nulls — documented trap, never used). */
-  private def p93SqlConcat(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select distinct concat(lang, '-', source) as tag " +
-        "where n_chars > 450 order by tag asc")
 
   // the CTAS slice every p94 face materializes: two OVERLAPPING gates
   // composed with distinct-union (the dedup is load-bearing in the
@@ -3571,18 +2682,6 @@ object SparkEntry {
         "from documents where source = 'src1' and n_chars >= 100", wh)
   }
 
-  /** p113: max/min of STRING EXPRESSIONS — the lexical extreme ("last
-    * language seen", "first tag"). A bare string column keeps the
-    * reference's parse-on-demand NUMERIC aggregate semantics
-    * (lib.rs:566-572); a typed string expression aggregates in its type.
-    * Binary/UTF8 order agrees across engines for the ASCII corpus. */
-  private def p113SqlStrExtremes(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select max(upper(lang)) as last_lang, " +
-        "min(concat(lang, '-', source)) as first_tag, " +
-        "count(*) as n group by source order by source")
-      .select(col("source"), col("last_lang"), col("first_tag"), round3("n"))
-
   /** p112: `insert into … values (…), (…)` — literal rows, the small-
     * dimension/backfill staple that closes the write face (p95's INSERT
     * only takes SELECT bodies). Cells are positional against the STORED
@@ -3623,128 +2722,6 @@ object SparkEntry {
       .select(col("source"), round3("n"), round3("mx"))
   }
 
-  /** p118: ifnull/nvl — the two-argument coalesce spellings users type;
-    * a CASE-gated measure is null on the fall-through, ifnull turns the
-    * fall-through into the default so the sum counts every row. */
-  private def p118SqlIfnull(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(ifnull(case when value > 50 then value end, 0)) as s1, " +
-        "mean(nvl(case when value > 50 then 1 end, 0)) as heavy_rate, " +
-        "count(*) as n group by event_type order by event_type")
-      .select(col("event_type"), round3("s1"), round6("heavy_rate"),
-        round3("n"))
-
-  /** p119: ANSI FILTER clause — five differently-gated aggregates in ONE
-    * hash aggregate (the parser rewrites each `filter (where c)` into a
-    * CASE measure, so the plan keeps a single exchange; DuckDB runs its
-    * native FILTER). Contracts under filter: sum keeps missing-as-zero
-    * (the oracle coalesces), mean/max/min of an empty filtered set are
-    * NULL on both engines, count(distinct …) skips gated-out rows, and
-    * max_by gates its ORDERING value (a NULL ordering key skips the row
-    * by the p102 contract — the oracle gates the whole struct). */
-  private def p119SqlFilterAgg(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(value) filter (where value > 120) as hi_sum, " +
-        "count(*) filter (where user_id % 2 = 0) as even_n, " +
-        "mean(value) filter (where value <= 40) as lo_mean, " +
-        "count(distinct user_id) filter (where value > 150) as hot_users, " +
-        "max_by(event_id, value) filter (where value < 100) as mid_peak, " +
-        "count(*) as n group by event_type order by event_type")
-      .select(col("event_type"), round3("hi_sum"), round3("even_n"),
-        round6("lo_mean"), col("hot_users"),
-        round(col("mid_peak").cast("double"), 3).as("mid_peak"),
-        round3("n"))
-
-  /** p120: bool_and/bool_or — boolean quantifiers over a full
-    * WHERE-grammar predicate ("every row satisfies" / "some row does"),
-    * desugared to a three-valued 1/0/NULL indicator so NULL predicates
-    * are SKIPPED exactly like DuckDB's native bool_and/bool_or. One
-    * codegen'd hash aggregate; BOOLEAN outputs hash-compare directly. */
-  private def p120SqlBoolAgg(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select bool_and(value > 0.02) as all_above, " +
-        "bool_or(value > 360) as has_spike, " +
-        "bool_or(value > 120 and user_id % 2 = 0) as even_heavy, " +
-        "bool_and(value > 500) filter (where value > 400) as spikes_hot, " +
-        "count(*) as n group by event_type order by event_type")
-      .select(col("event_type"), col("all_above"), col("has_spike"),
-        col("even_heavy"), col("spikes_hot"), round3("n"))
-
-  /** p121: skewness/kurtosis — POPULATION skewness and EXCESS kurtosis
-    * (Spark's native central-moment formulas). DuckDB's own skewness()/
-    * kurtosis() are the bias-corrected SAMPLE forms — a real semantic
-    * difference — so the oracle spells the population formula explicitly
-    * via a two-pass central-moment computation (stable, no raw-moment
-    * cancellation). */
-  private def p121SqlMoments(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select skewness(value) as skew, kurtosis(value) as kurt, " +
-        "stddev(value) as sd, count(*) as n " +
-        "group by event_type order by event_type")
-      .select(col("event_type"), round6("skew"), round6("kurt"),
-        round6("sd"), round3("n"))
-
-  /** p122: count(distinct a, b) — multi-key distinct counting in ONE
-    * pass; the distinct key is the pair, and rows where EITHER side is
-    * NULL are skipped (ANSI; lineitem has no NULLs, so the spec pins
-    * the skip semantics on a null-bearing fixture instead). */
-  private def p122SqlMultiDistinct(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir),
-      "select count(distinct l_orderkey, l_partkey) as order_parts, " +
-        "count(distinct l_suppkey, l_linestatus) as supp_status, " +
-        "count(*) as n group by l_returnflag order by l_returnflag")
-      .select(col("l_returnflag"), col("order_parts"), col("supp_status"),
-        round3("n"))
-
-  /** p123: conditional-aggregation pivot — `pivot <agg>(<m>) by <col>
-    * in (…)` desugars each value to a filtered aggregate, so the whole
-    * K-column pivot is ONE hash aggregate (the plan conditional
-    * aggregation would hand-write; no pivot physical operator, no
-    * second pass). Value list explicit and literal by design: dynamic
-    * pivot's output schema would be data-dependent — two passes and a
-    * 100 TB anti-pattern. */
-  private def p123SqlPivot(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select pivot sum(value) by event_type in " +
-        "('click', 'view' as views, 'purchase'), " +
-        "pivot count(*) by event_type in ('error' as err_n, 'signup' as signup_n), " +
-        "count(*) as n group by user_id order by user_id")
-      .select(col("user_id"), round3("click"), round3("views"),
-        round3("purchase"), round3("err_n"), round3("signup_n"), round3("n"))
-
-  /** p124: deterministic mode — most frequent value per group, ties
-    * toward the SMALLEST value (Spark mode(expr, deterministic=true);
-    * ANSI/DuckDB leave ties undefined, so the oracle spells the same
-    * contract as ORDER BY count DESC, value ASC). Carriers: numeric
-    * measure, string expression, calendar field. */
-  private def p124SqlMode(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir),
-      "select mode(l_quantity) as common_qty, " +
-        "mode(upper(l_linestatus)) as common_status, " +
-        "mode(month(l_shipdate)) as common_month, " +
-        "count(*) as n group by l_returnflag order by l_returnflag")
-      .select(col("l_returnflag"), round3("common_qty"),
-        col("common_status"), col("common_month"), round3("n"))
-
-  /** p125: regexp at the front door — `col [not] regexp 'pat'`
-    * predicates (WHERE and inside bool_or), and regexp_extract as a
-    * string function feeding distinct counting. Patterns are parse-
-    * restricted to the java.regex ∩ RE2 portable subset (no lookaround/
-    * backreferences) so the two engines can never disagree; regex never
-    * pushes into the scan — the sibling LIKE/equality conjuncts still
-    * do. */
-  private def p125SqlRegexp(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select count(*) as n, " +
-        "count(distinct regexp_extract(source, '^src([0-9]+)$', 1)) " +
-        "as src_ids, " +
-        "bool_or(text regexp 'vector (join|batch)') as has_vec_pair, " +
-        "mean(n_chars) as mc " +
-        "where text regexp 'spark' and lang not regexp '^(zh|ko)$' " +
-        "group by lang order by lang")
-      .select(col("lang"), round3("n"), col("src_ids"),
-        col("has_vec_pair"), round6("mc"))
-
   /** p126: script-scoped VIEWS — `create view` registers a named
     * statement (nothing materializes); the body re-compiles against
     * each later statement's catalog, so the view RE-READS its base
@@ -3767,35 +2744,6 @@ object SparkEntry {
         "group by lang order by lang", wh)
       .select(col("lang"), round3("n"), round3("mx"))
   }
-
-  /** p127: filtered aggregates INSIDE post-aggregate arithmetic — the
-    * "share of X" shape every dashboard needs: `sum(v) filter (where c)
-    * / sum(v)`. The gated and ungated sums ride ONE hash aggregate
-    * (internal __pa aliases, deduped by shape including the gate), and
-    * the ratio is a scalar projection after the exchange. */
-  private def p127SqlFilterShare(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sum(value) filter (where event_type = 'purchase') / " +
-        "sum(value) as purchase_share, " +
-        "count(*) filter (where value > 150) / count(*) as heavy_rate, " +
-        "count(*) as n group by user_id order by user_id")
-      .select(col("user_id"), round6("purchase_share"),
-        round6("heavy_rate"), round3("n"))
-
-  /** p128: the features compose — a calendar rollup pivoted by event
-    * type: derived-table day-of-month extraction (p82) under a pivot (p123)
-    * with a gated branch (p119), still ONE hash aggregate over the
-    * derived projection. */
-  private def p128SqlMonthlyPivot(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("events" -> Tables.events(s, dir)),
-      "select pivot count(*) by event_type in " +
-        "('click', 'view' as views, 'purchase'), " +
-        "pivot sum(value) filter (where value > 100) by event_type in " +
-        "('purchase' as hot_purchase), " +
-        "count(*) as n from (select event_type, value, day(ts) as d " +
-        "from events) group by d order by d")
-      .select(col("d"), round3("click"), round3("views"),
-        round3("purchase"), round3("hot_purchase"), round3("n"))
 
   /** p129: `show tables` — the script's catalog objects (committed
     * warehouse stores + live views), one sorted name per row; a
@@ -3873,17 +2821,6 @@ object SparkEntry {
         "source = upper(source) where lang = 'en'", wh)
   }
 
-  /** p98: `select *` — the whole-row projection every SQL user types
-    * first, expanded at compile against the base frame's columns (order
-    * preserved); composes with where/order/limit like any raw
-    * projection, and the scan still prunes NOTHING here by design — the
-    * projection is the whole row. */
-  private def p98SqlStar(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(
-      Map("documents" -> Tables.documents(s, dir)),
-      "select * from documents where lang = 'en' and n_chars >= 300 " +
-        "order by doc_id limit 50")
-
   /** p99: the warehouse round trip CLOSED in SQL — `select … from
     * corpus_slice` resolves the p94-created store BY NAME through
     * EventStore.warehouseCatalog (manifest-pinned lazy frames, half-
@@ -3898,177 +2835,6 @@ object SparkEntry {
       "select max(n_chars) as mx, count(*) as n " +
         "from corpus_slice group by source order by mx desc, n desc")
   }
-
-  /** p100: positional LIKE — `_`/interior-`%` patterns compile to real
-    * SQL LIKE (edge-only patterns keep the tighter Contains/StartsWith
-    * desugar; the reference treats every pattern as raw contains,
-    * expr.rs:81-98 — documented fix). `sr_1%` matches src1 and
-    * src10-src19; NOT LIKE composes three-valued. */
-  private def p100SqlLike(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, source, n_chars where source like 'sr_1%' " +
-        "and source not like '%_9' and n_chars >= 400 order by doc_id")
-
-  /** p101: STRING SURGERY at the front door — literal replace, 1-based
-    * field extraction (out-of-range → '' on both engines), padding with
-    * truncation, reversal, and strpos (1-based, 0 when absent — BIGINT,
-    * so it gates rows in WHERE). All compile to codegen'd Catalyst
-    * string expressions; search/separator/pad arguments are
-    * parse-enforced non-empty literals so engine-specific empty-pattern
-    * conventions never engage. */
-  private def p101SqlStrings(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.orders(s, dir),
-      "select o_orderkey, replace(o_orderpriority, '-', '_') as pri, " +
-        "split_part(o_orderpriority, '-', 2) as word, " +
-        "split_part(o_orderpriority, '-', 3) as oob, " +
-        "lpad(o_orderstatus, 3, '.') as padded, " +
-        "reverse(o_orderpriority) as rev, " +
-        "strpos(o_orderpriority, 'E') as ep " +
-        "where o_orderkey < 500 and strpos(o_orderpriority, 'I') > 0 " +
-        "order by o_orderkey")
-
-  /** p102: max_by/min_by — argmax as an AGGREGATE, DETERMINISTIC by
-    * contract (ties in the ordering value break toward the larger/
-    * smaller carried value — ANSI leaves ties undefined, which no oracle
-    * can verify). Compiled to ONE struct-ordered max/min: one hash
-    * aggregate with map-side partials, no window, no second pass — at
-    * 100 TB this is "latest value per key" without a sort. The carried
-    * value keeps its RAW type (l_linestatus is a string); the oracle
-    * mirrors the tie contract with DuckDB's own struct_pack max/min. */
-  private def p102SqlMaxBy(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir),
-      "select max_by(l_linestatus, l_extendedprice) as top_status, " +
-        "min_by(l_suppkey, l_quantity) as cheap_supp, " +
-        "max_by(l_extendedprice, l_quantity) as heavy_price " +
-        "group by l_returnflag order by l_returnflag")
-      .select(col("l_returnflag"), col("top_status"), col("cheap_supp"),
-        round3("heavy_price"))
-
-  /** p103: string_agg — a group's values joined by a literal separator,
-    * SORTED ascending by value (deterministic contract: ANSI's undefined
-    * order has no oracle; DuckDB spells the same contract with
-    * `ORDER BY` inside the call). NULLs are skipped; an all-null group
-    * is NULL, not ''. The one collect_list in the SQL registry — output
-    * size is the group's value payload, the same scale class as the
-    * result row itself. */
-  private def p103SqlStringAgg(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.nation(s, dir),
-      "select string_agg(n_name, ',') as nations, count(*) as n " +
-        "group by n_regionkey order by n_regionkey")
-      .select(col("n_regionkey"), col("nations"), round3("n"))
-
-  /** p104: count(distinct x) — the ANSI spelling next to the reference's
-    * +1-nil count_distinct (a5): NULL is NOT counted, so a CASE-gated
-    * argument counts only the rows that satisfy the gate ("distinct
-    * heavy users") — the conditional-distinct staple. Compiles to
-    * Spark's count_distinct (expand + two-phase aggregate). */
-  private def p104SqlCountDistinct(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select count(distinct case when value > 90 then user_id end) " +
-        "as heavy_users, count(distinct event_type) as kinds, " +
-        "count(*) as n group by event_type order by event_type")
-      .select(col("event_type"), col("heavy_users"), col("kinds"), round3("n"))
-
-  /** p105: LIMIT/OFFSET pagination — rows m+1 … m+n of a TOTAL order
-    * (doc_id breaks n_chars ties). Spark folds offset+limit into one
-    * TakeOrdered boundary: the page costs what the first m+n rows cost,
-    * never a global materialization — the 100 TB-safe page fetch. */
-  private def p105SqlOffset(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, source, n_chars where n_chars >= 200 " +
-        "order by n_chars desc, doc_id limit 25 offset 40")
-
-  /** p106: explicit `nulls first/last` — the engines' DEFAULTS DIFFER
-    * (Spark ASC puts nulls first, DuckDB last), so a nullable sort key
-    * must spell the placement to be portable; here a CASE-gated measure
-    * is null on ~half the rows and the spelled `nulls last` makes both
-    * engines agree on the page. */
-  private def p106SqlNullsOrder(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select event_id, case when value > 50 then value end as v " +
-        "where event_id < 160 order by v desc nulls last, event_id limit 150")
-      .select(col("event_id"), round3("v"))
-
-  /** p107: date_trunc — the CALENDAR ROLLUP key (p82's field extractors
-    * label rows with numbers; this yields the real month TIMESTAMP, so
-    * the rollup keeps calendar identity). The truncation projects in a
-    * derived table and the outer groups by it — Catalyst collapses the
-    * composition into one scan+aggregate pass, and the group key renders
-    * through the engine's string carrier like every key. DuckDB returns
-    * DATE for day-and-coarser units, so the oracle casts to TIMESTAMP
-    * first. */
-  private def p107SqlDateTrunc(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("orders" -> Tables.orders(s, dir)),
-      "select count(*) as n, max(o_totalprice) as mx from " +
-        "(select date_trunc('month', o_orderdate) as mo, o_totalprice " +
-        "from orders where o_orderkey < 3000) group by mo order by mo")
-      .select(col("mo"), round3("n"), round3("mx"))
-
-  /** p109: percentile(x, q) — the ARBITRARY exact interpolated quantile
-    * (p50/p90/p99 generalize to any literal q; DuckDB: quantile_cont);
-    * expression measures quantile too. Alias required — two quantiles of
-    * one column must not collide on a default name. */
-  private def p109SqlPercentile(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.lineitem(s, dir),
-      "select percentile(l_extendedprice, 0.25) as q1, " +
-        "percentile(l_extendedprice, 0.75) as q3, " +
-        "percentile(l_quantity * (1 - l_discount), 0.9) as eff90 " +
-        "group by l_returnflag order by l_returnflag")
-      .select(col("l_returnflag"), round6("q1"), round6("q3"), round6("eff90"))
-
-  /** p110: boolean HAVING — `(… or …) and not …` over aggregate
-    * comparisons, the same OR/AND/NOT/parens structure WHERE has (the
-    * legacy HAVING was AND-only). Filter-only aggregates (max/min here)
-    * ride the same hash aggregate and are pruned from the output; the
-    * whole filter runs post-aggregation, so at scale it prunes groups
-    * before any sort stage. NOT is three-valued like SQL. */
-  private def p110SqlHavingBool(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select count(*) as n, mean(value) as m group by user_id " +
-        "having (mean(value) > 52 or max(value) > 300) " +
-        "and not min(value) < 0.5 order by user_id")
-      .select(col("user_id"), round3("n"), round6("m"))
-
-  /** p111: isodow/second — the day-of-week profile (p83's hour profile
-    * by calendar DAY instead): isodow is ISO 1=Monday…7=Sunday on both
-    * engines (Spark spells it weekday()+1), second truncates the
-    * fraction on both. Same one-pass derived-key collapse as p107. */
-  private def p111SqlDow(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("events" -> Tables.events(s, dir)),
-      "select count(*) as n, mean(value) as m, count(distinct sec) as secs " +
-        "from (select isodow(ts) as dw, second(ts) as sec, value " +
-        "from events) group by dw order by dw")
-      .select(col("dw"), round3("n"), round6("m"), col("secs"))
-
-  /** p108: `%` and sign() — modulo bucketing (the poor man's hash
-    * partition key) and signum. The remainder is C-style (sign of the
-    * DIVIDEND, null on a zero divisor) computed in double like every
-    * measure; DuckDB's `%` agrees exactly — its fmod() is the FLOORED
-    * variant and never appears in an oracle. sign() is DOUBLE here,
-    * integer-typed in DuckDB (the oracle casts). */
-  private def p108SqlModSign(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("lineitem" -> Tables.lineitem(s, dir)),
-      "select count(*) as n, sum(sign(l_extendedprice - 30000)) as bal from " +
-        "(select l_orderkey % 7 as b, l_extendedprice from lineitem) " +
-        "group by b order by b")
-      .select(col("b"), round3("n"), round3("bal"))
-
-  /** p59: `select distinct` — the raw-projection dedup primitive: one
-    * shuffle on the (narrow, already-projected) columns, ORDER BY after.
-    * Closes the r12 "set operations at the front door" gap with p60. */
-  private def p59SqlDistinct(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select distinct lang, source where n_chars > 200")
-
-  /** p60: `union` between two gated sub-queries — the corpus-slice
-    * composition shape ("the long docs plus everything from src1, as one
-    * deduped slice"). Plain `union` is SQL-standard distinct; the gates
-    * OVERLAP by construction so the dedup is load-bearing in the oracle
-    * compare. Each branch keeps its own pushed-down gate. */
-  private def p60SqlUnion(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select doc_id, source from documents where n_chars > 300 " +
-        "union select doc_id, source from documents where source = 'src1'")
 
   /** p62: FULL-OUTER equi-join — the reconciliation audit ("which side
     * matched nothing"): a per-user activity rollup FULL JOIN customer,
@@ -4087,109 +2853,6 @@ object SparkEntry {
       .select(col("c_mktsegment"), round3("n_rows"), round3("sum_ev"),
         round3("n_matched"))
   }
-
-  /** p63: `except` — subtract a slice from a slice (the "drop the
-    * contaminated sources from the long-docs cut" shape). SQL-standard
-    * DISTINCT set semantics, like p60's union. */
-  private def p63SqlExcept(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select doc_id, source from documents where n_chars > 300 " +
-        "except select doc_id, source from documents where source = 'src1'")
-
-  /** p64: `intersect` — the common core of two gated slices (the
-    * "docs that are BOTH long AND high-scoring" composition). */
-  private def p64SqlIntersect(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "select doc_id, lang from documents where n_chars > 300 " +
-        "intersect select doc_id, lang from documents where lang = 'en'")
-
-  /** p66: EXACT-count deterministic sampling — `sample exact <n>`: the
-    * n smallest hash coins of the gated frame, key-tiebroken; nested
-    * across sizes (exact-100 ⊆ exact-300, spec-pinned) and rerun-stable.
-    * One per-partition TakeOrderedAndProject over the gated scan. */
-  private def p66SqlSampleExact(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select sample exact 300 where lang != 'zh'")
-
-  /** p67: CTEs at the front door — `with` names two statement-level
-    * frames: a set-op UNION body (a compound INSIDE the CTE, which a
-    * derived table cannot spell) and an aggregate body reading the
-    * first CTE (per-key totals via the derived-table-inner rule); the
-    * main statement gates the second CTE's output. DuckDB replays the
-    * WITH natively. */
-  private def p67SqlCte(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.runCatalog(Map("documents" -> Tables.documents(s, dir)),
-      "with merged as (" +
-        "select doc_id, source, n_chars from documents where n_chars > 300 " +
-        "union " +
-        "select doc_id, source, n_chars from documents where source = 'src1'), " +
-        "per_src as (select count(*) as n, sum(n_chars) as chars " +
-        "from merged group by source) " +
-        "select source, n, chars from per_src where n > 5 order by source")
-      .select(col("source"), round3("n"), round3("chars"))
-
-  /** p68: analytic window functions + QUALIFY — the dedup-keep-best
-    * primitive: top-2 longest docs per (lang, source), ranked by a
-    * row_number with a unique tiebreak (total order ⇒ deterministic
-    * cut), filtered by `qualify rn <= 2`, which Spark rewrites to
-    * per-partition WindowGroupLimit (each input partition forwards ≤ k
-    * rows per group to the ONE window exchange — the 100 TB-safe
-    * top-N-per-group). DuckDB replays with native QUALIFY. */
-  private def p68SqlWindowQualify(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select doc_id, lang, source, n_chars, " +
-        "row_number() over (partition by lang, source " +
-        "order by n_chars desc, doc_id) as rn " +
-        "where n_chars > 100 qualify rn <= 2 order by lang, source, rn")
-
-  /** p69: lag/lead offsets — previous/next value per user in event-time
-    * order (the session-delta primitive). Both items share one window
-    * spec, so Catalyst collapses them into ONE Window operator behind
-    * ONE exchange on user_id (PlanSpec-pinned). */
-  private def p69SqlLagLead(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select event_id, user_id, value, " +
-        "lag(value) over (partition by user_id order by ts, event_id) as prev_value, " +
-        "lead(value) over (partition by user_id order by ts, event_id) as next_value " +
-        "where value >= 1 order by user_id, event_id limit 500")
-
-  /** p57: the sampling face on a NON-document table — `key event_id`
-    * points the md5 coin at the events table's stable id, so
-    * deterministic trace-sampling ("keep 10% of events, reproducibly")
-    * is the same one-liner as corpus sampling. */
-  private def p57SqlSampleEvents(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.events(s, dir),
-      "select sample pct 10 key event_id where value >= 1")
-      .select(col("event_id"), col("event_type"), col("value"))
-
-  /** p51: the exact-dedup SQL face — fingerprint groups over a gated
-    * corpus; the count shuffle carries 16-hex fingerprints, never text. */
-  private def p51SqlDedup(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select dedup where n_chars > 150")
-
-  /** p52: the decontamination SQL face — shingle-overlap report of the
-    * gated corpus against its src2/src3 slice at shingle 4 / hits 2
-    * (deliberately different from d7's 5/1 defaults). */
-  private def p52SqlDecontaminate(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select decontaminate src2, src3 shingle 4 hits 2 where n_chars > 120")
-
-  /** p50: the curriculum SQL face — gate, rank by the scaled length
-    * score, cut 6 ordered shards over the SURVIVORS (ranks re-pack after
-    * the gate, which the oracle replays). */
-  private def p50SqlCurriculum(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select curriculum score n_chars scale 2000 shards 6 where lang != 'fr'")
-
-  /** p48: the LM-scoring SQL face — gate the corpus, train the bigram
-    * tables on its en slice, rank every gated document by fluency, all
-    * in one statement. Training slices and scoring set both live behind
-    * the WHERE, unlike x21 (which trains ungated) — the two rows pin
-    * both contracts. */
-  private def p48SqlLmScore(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select lmscore ref lang = 'en' vocab 200 table 400 where n_chars > 100")
 
   /** x21b: the LARGE-MODEL LM-scoring formulation — explode + broadcast
     * hash joins + order-free integer regroup, for models where the
@@ -4216,15 +2879,6 @@ object SparkEntry {
   private def x22Curriculum(s: SparkSession, dir: String): DataFrame =
     graft.operators.Corpus.curriculumShards(Tables.documents(s, dir),
       col("n_chars").cast(DoubleType) / lit(2000.0), nShards = 8)
-
-  /** x23: QUALITY-ordered mixture — each source's token budget fills
-    * best-first (length score at scale 2000) from the gated survivors;
-    * the curation counterpart of x19's fair sample, exercised through
-    * the SQL face. */
-  private def x23MixtureScored(s: SparkSession, dir: String): DataFrame =
-    graft.sql.ZxSql.run(Tables.documents(s, dir),
-      "select mixture score n_chars scale 2000 " +
-        "src1=600, src2=400, src3=1500 where n_chars > 120")
 
   /** x20: WEIGHTED deterministic sampling — keep each document with
     * probability proportional to its own length (n_chars/2000, clamped
@@ -4327,13 +2981,6 @@ object SparkEntry {
         round(col("sum_hits").cast(DoubleType) / col("sum_bigrams"), 6))
   }
 
-  /** c4: familiarity-GATED curation — the x14 signal deployed as a filter:
-    * keep documents whose bigram hit rate against the corpus top-200 table
-    * is ≥ 20%, report the surviving corpus per (source, lang). The
-    * threshold compares exact integers (`hits·5 ≥ n_bigrams`), never a
-    * float ratio, so the gate is bit-identical across engines; scoring
-    * stays the broadcast-map fold (no join), so the whole gate runs in the
-    * scan stage before the one stats shuffle. */
   /** x15: cross-document repeated n-gram spans — the substring-level dedup
     * signal (document-level dedup is d1/d2; repeated boilerplate INSIDE
     * distinct documents is what substring dedup removes). One explode +
@@ -4394,6 +3041,13 @@ object SparkEntry {
     graft.operators.Corpus.exciseSpans(docs, spans)
   }
 
+  /** c4: familiarity-GATED curation — the x14 signal deployed as a filter:
+    * keep documents whose bigram hit rate against the corpus top-200 table
+    * is ≥ 20%, report the surviving corpus per (source, lang). The
+    * threshold compares exact integers (`hits·5 ≥ n_bigrams`), never a
+    * float ratio, so the gate is bit-identical across engines; scoring
+    * stays the broadcast-map fold (no join), so the whole gate runs in the
+    * scan stage before the one stats shuffle. */
   private def c4FamiliarityGate(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions._
     val docs = Tables.documents(s, dir)
@@ -5293,8 +3947,9 @@ object SparkEntry {
     * picked shortlist (ties by vec_id), exactly the driver loop. The
     * shortlist and the pairwise sim table are MATERIALIZED: default CTE
     * inlining re-expands the parquet scan per reference and exhausts
-    * file handles. */
-  /** `withPrefix` prepends extra CTEs (p65 passes the IVF train/assign
+    * file handles.
+    *
+    * `withPrefix` prepends extra CTEs (p65 passes the IVF train/assign
     * replay), `embFrom` overrides the candidate relation (p65 restricts
     * it to the probed cells); the query vector still resolves from the
     * candidate relation — equivalent to the engine's base-frame lookup
@@ -5463,7 +4118,6 @@ object SparkEntry {
        |  WHERE source != 'src5') t""".stripMargin
   }
 
-  /** p53's oracle, shared verbatim by `st_quality`. */
   /** p72 + st_filter_join (batch ≡ stream): EXISTS, not IN — the face's
     * null semantics are EXISTS's. The stream replay emits no ORDER BY
     * but the compare canonicalizes row order. */
@@ -5474,6 +4128,7 @@ object SparkEntry {
       |  WHERE r.n_chars > 450 AND r.lang = d.lang AND r.source = d.source)
       |ORDER BY doc_id""".stripMargin
 
+  /** p53's oracle, shared verbatim by `st_quality`. */
   private val p53OracleSql: String = {
     // x2's metric rules behind the lang gate
     val en = graft.functions.TextFunctions.langStopwords.head._2
@@ -5545,7 +4200,6 @@ object SparkEntry {
        |LIMIT 10""".stripMargin
   }
 
-  /** p47's oracle, shared verbatim by `st_chunks`. */
   /** p85b's oracle, shared verbatim by `st_json`: the raw extract-and-
     * gate enrichment — k values are integer-valued, so no rounding is
     * needed on either engine. */
@@ -5564,6 +4218,7 @@ object SparkEntry {
     """SELECT doc_id, unnest(string_split(text, ' ')) AS w
       |FROM documents WHERE lang = 'zh' AND n_chars < 150""".stripMargin
 
+  /** p47's oracle, shared verbatim by `st_chunks`. */
   private val p47OracleSql: String =
     // x12's window arithmetic at size 24 / stride 12 behind a lang gate
     """WITH t AS (
@@ -5749,6 +4404,30 @@ object SparkEntry {
       build: (SparkSession, String) => DataFrame,
       oracleSql: String, buildClass: Boolean = false)
 
+  /** Rows that are one dialect statement over unmodified test tables,
+    * declared as data. `post` runs after the statement (a rounding
+    * projection where the oracle rounds). The two entry points bind FROM
+    * differently, so each row names its own. A table name is resolved when
+    * the row is declared: an unknown one fails the registry, not a run. */
+  object QueryRow {
+    /** Positional [[graft.sql.ZxSql.run]]: the named table is the base frame. */
+    def sql(name: String, table: String, stmt: String, oracleSql: String,
+        post: DataFrame => DataFrame = identity): QueryRow = {
+      val open = Tables.open(table)
+      QueryRow(name, (s, dir) => post(graft.sql.ZxSql.run(open(s, dir), stmt)),
+        oracleSql)
+    }
+
+    /** [[graft.sql.ZxSql.runCatalog]]: FROM clauses resolve against the
+      * named tables. */
+    def catalog(name: String, tables: Seq[String], stmt: String,
+        oracleSql: String, post: DataFrame => DataFrame = identity): QueryRow = {
+      val opens = tables.map(t => t -> Tables.open(t))
+      QueryRow(name, (s, dir) => post(graft.sql.ZxSql.runCatalog(
+        opens.map { case (t, open) => t -> open(s, dir) }.toMap, stmt)), oracleSql)
+    }
+  }
+
   /** name → builder, in registry order. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     scala.collection.immutable.ListMap.from(rows.map(r => r.name -> r.build))
@@ -5757,12 +4436,15 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] =
     rows.map(r => r.name -> r.oracleSql).toMap
 
-  // Registry order is the order Verify and Bench walk. Every row that reads
-  // a fixture (an index, bucketed tables, a CTAS slice) builds it on demand,
-  // so any subset runs alone or in any order; the order only decides which
-  // row's timing carries a shared fixture's one-off build. The streaming
-  // replays (st_*) share the batch rows' oracles verbatim: the streaming
-  // path must reproduce the answer DuckDB computes from the original parquet.
+  // A row that is one dialect statement over unmodified test tables is
+  // declared here as data (QueryRow.sql / QueryRow.catalog); every other
+  // row names its builder above. Registry order is the order Verify and
+  // Bench walk. Every row that reads a fixture (an index, bucketed tables,
+  // a CTAS slice) builds it on demand, so any subset runs alone or in any
+  // order (HermeticSpec); the order only decides which row's timing
+  // carries a shared fixture's one-off build. The streaming replays (st_*)
+  // share the batch rows' oracles verbatim: the streaming path must
+  // reproduce the answer DuckDB computes from the original parquet.
   lazy val rows: Seq[QueryRow] = Seq(
     QueryRow("t1_time_scan", t1TimeScan,
       s"""SELECT event_id, user_id, event_type, value,
@@ -5780,7 +4462,12 @@ object SparkEntry {
     QueryRow("f1_null", f1Null,
       """SELECT event_id, user_id, value FROM events
         |WHERE nullif(event_type, 'error') IS NULL AND value IS NOT NULL""".stripMargin),
-    QueryRow("f2_bool", f2Bool,
+    // F2 boolean WHERE (extension — the reference is AND-only, expr.rs:99):
+    // disjunction + nested negation through the SQL front door. NOT follows
+    // three-valued logic on both engines (value NULL → NOT(NULL) → dropped).
+    QueryRow.sql("f2_bool", "events",
+      "select event_id, user_id, event_type, value from events " +
+        "where event_type = error or (event_type = click and not (value >= 100))",
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE event_type = 'error'
         |   OR (event_type = 'click' AND NOT (value >= 100))""".stripMargin),
@@ -5835,7 +4522,17 @@ object SparkEntry {
     // a8b replays the SAME serial walk in DuckDB — a hash match proves the
     // run-decomposed parallel plan computes exactly what the serial walk does
     QueryRow("a8b_gap_runs", a8bGapRuns, gapWindowOracle(3600L)),
-    QueryRow("a9_session", a9Session, a9OracleSql),
+    // A9 session windows (extension): gap-based sessionization via Spark's
+    // native `session_window` — w_start = first event, w_end = last + gap.
+    // Oracle replays the identical rule as lag/cumsum over BIGINT seconds
+    // (Spark merges when next.start <= current.end, so split only when the
+    // gap is STRICTLY greater than 300).
+    QueryRow.sql("a9_session", "events",
+      "select sum(value), count(value) from events " +
+        "group by event_type session 300",
+      a9OracleSql,
+      _.select(col("event_type"), col("w_start"), col("w_end"),
+          round3("sum_value"), round3("count_value"))),
     QueryRow("a9b_session_salted", a9bSessionSalted,
       // the a9 replay over 2^-20-quantized values: windows must equal the
       // plain plan's (the two-level merge is exact), and quantized sums are
@@ -5856,14 +4553,34 @@ object SparkEntry {
         |  round(CAST(count(e.value) AS DOUBLE), 3) AS count_value
         |FROM e JOIN sid ON e.g = sid.g AND e.t = sid.t
         |GROUP BY e.g, sid.s""".stripMargin),
-    QueryRow("a10_hopping", a10Hopping, a10OracleSql),
-    QueryRow("a11_percentiles", a11Percentiles,
+    // A10 hopping windows (extension): 1h windows sliding every 15 min —
+    // each event lands in 4 windows (Spark Expand → one aggregation).
+    // Oracle: per-event unnest of the covering window starts.
+    QueryRow.sql("a10_hopping", "events",
+      "select sum(value), count(value) from events " +
+        "group by event_type granularity 3600 slide 900",
+      a10OracleSql,
+      _.select(col("event_type"), col("w_start"), col("w_end"),
+          round3("sum_value"), round3("count_value"))),
+    // A11 tail percentiles (extension): p50/p90/p99 — the latency-SLO
+    // staples — via the same exact interpolated percentile as A7's p50
+    // (Spark `percentile` ≡ DuckDB `quantile_cont`).
+    QueryRow.sql("a11_percentiles", "events",
+      "select p50(value), p90(value), p99(value) from events " +
+        "group by event_type order by p50(value) desc",
       """SELECT event_type,
         | round(quantile_cont(value, 0.5), 6) AS p50_value,
         | round(quantile_cont(value, 0.9), 6) AS p90_value,
         | round(quantile_cont(value, 0.99), 6) AS p99_value
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p1_sql", p1Sql,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round6("p50_value"),
+          round6("p90_value"), round6("p99_value"))),
+    // P1 `ZX.SQL` surface (lib.rs:815-844): SQL text → IR → windowed pipeline,
+    // with `$t_start`/`$t_end` pseudo-conditions (expr.rs:170-186).
+    QueryRow.sql("p1_sql", "events",
+      s"select sum(value), count(value) " +
+        s"where event_type = click and $$t_start = $T0 and $$t_end = $T1 " +
+        "group by user_id granularity 86400",
       s"""SELECT CAST(user_id AS VARCHAR) AS user_id,
          | CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS w_start,
          | CAST(floor(epoch(ts) / 86400) * 86400 + 86400 AS BIGINT) AS w_end,
@@ -5873,14 +4590,27 @@ object SparkEntry {
          |   / round(CAST(count(value) AS DOUBLE), 3), 6) AS mean_value
          |FROM events
          |WHERE event_type = 'click' AND epoch(ts) >= $T0 AND epoch(ts) <= $T1
-         |GROUP BY 1, 2, 3""".stripMargin),
-    QueryRow("p2_sql_sorted", p2SqlSorted,
+         |GROUP BY 1, 2, 3""".stripMargin,
+      _.select(col("user_id"), col("w_start"), col("w_end"),
+          round3("sum_value"), round3("count_value"))
+        .withColumn("mean_value", stableMean("sum_value", "count_value"))),
+    // P1+O1: ORDER BY on an aggregate routed to the sorted path — dead code in
+    // the reference (lib.rs:840), wired here.
+    QueryRow.sql("p2_sql_sorted", "events",
+      "select sum(value), count_distinct(user_id) from events " +
+        "where props like '%7%' group by event_type order by sum(value) desc",
       """SELECT event_type, round(sum(coalesce(value, 0)), 3) AS sum_value,
         | CAST(count(DISTINCT user_id) AS BIGINT) AS count_distinct_user_id
         |FROM events WHERE props LIKE '%7%'
         |GROUP BY event_type
-        |ORDER BY sum(coalesce(value, 0)) DESC, event_type""".stripMargin),
-    QueryRow("p3_sql_star", p3SqlStar,
+        |ORDER BY sum(coalesce(value, 0)) DESC, event_type""".stripMargin,
+      _.select(col("event_type"), round3("sum_value"), col("count_distinct_user_id"))),
+    // P1 + count(*): the README's own example shape through the windowed SQL
+    // path — `*` counts every (weighted) row, a named column only presence.
+    QueryRow.sql("p3_sql_star", "events",
+      s"select count(*), count(value) from events " +
+        s"where $$t_start = $T0 and $$t_end = $T1 " +
+        "group by event_type granularity 86400",
       s"""SELECT event_type,
          | CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS w_start,
          | CAST(floor(epoch(ts) / 86400) * 86400 + 86400 AS BIGINT) AS w_end,
@@ -5888,7 +4618,9 @@ object SparkEntry {
          | round(CAST(count(value) AS DOUBLE), 3) AS count_value
          |FROM events
          |WHERE epoch(ts) >= $T0 AND epoch(ts) <= $T1
-         |GROUP BY 1, 2, 3""".stripMargin),
+         |GROUP BY 1, 2, 3""".stripMargin,
+      _.select(col("event_type"), col("w_start"), col("w_end"),
+          round3("count_star"), round3("count_value"))),
     QueryRow("p4_sql_asof", p4SqlAsof,
       // identical independent encoding to j2's (DuckDB native ASOF LEFT
       // JOIN) minus the left `value`-independent column set difference
@@ -5915,7 +4647,12 @@ object SparkEntry {
         |FROM e l JOIN e r ON l.user_id = r.user_id
         |  AND r.ts_sec BETWEEN l.ts_sec - 3600 AND l.ts_sec
         |GROUP BY l.event_id, l.user_id, l.ts_sec""".stripMargin),
-    QueryRow("p6_sql_journeys", p6SqlJourneys,
+    // P1 + a12: journey mining through the SQL front door (VERDICT r9 #3 —
+    // the reference surface is SQL-first, lib.rs:815-844). The WHERE rides
+    // the shared scan/filter front half, so sequence mining over a filtered
+    // slice is one narrow filter ahead of the same two-shuffle plan.
+    QueryRow.sql("p6_sql_journeys", "events",
+      "select journeys top 15 steps 6 from events where event_type != 'error'",
       // a12's replay behind the SQL front door's WHERE: != drops NULL
       // event_type on both engines (three-valued logic), depth 6, top 15
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d, ts, event_id, event_type
@@ -5927,7 +4664,16 @@ object SparkEntry {
         |  FROM r WHERE rn <= 6 GROUP BY user_id, d)
         |SELECT path, count(*)::BIGINT AS n_journeys FROM p
         |GROUP BY path ORDER BY n_journeys DESC, path LIMIT 15""".stripMargin),
-    QueryRow("o5_rollup", o5Rollup,
+    // o5: ROLLUP subtotals over the top-groups path (VERDICT r9 "what's
+    // missing" #5 — absent in the reference too, but the one staple of the
+    // "top groups" observability UI family O1 couldn't express without N
+    // passes). One Expand + one hash aggregate computes (type, user),
+    // (type), and the grand total together; data-missing keys stay `__nil`,
+    // rolled-up levels render `__all` (distinguishable by construction —
+    // keys coalesce BEFORE the rollup).
+    QueryRow.sql("o5_rollup", "events",
+      "select sum(value), count(value) from events " +
+        "group by rollup event_type, user_id order by sum(value) desc",
       // the engine's exact trick mirrored: keys coalesce to __nil BEFORE
       // the rollup, so a null after it can only mean a rolled-up level →
       // __all; GROUP BY ROLLUP computes all three levels in one statement
@@ -5938,8 +4684,16 @@ object SparkEntry {
         |  coalesce(uid, '__all') AS user_id,
         |  round(sum(coalesce(value, 0)), 3) AS sum_value,
         |  round(CAST(count(value) AS DOUBLE), 3) AS count_value
-        |FROM e GROUP BY ROLLUP (et, uid)""".stripMargin),
-    QueryRow("o6_cube", o6Cube,
+        |FROM e GROUP BY ROLLUP (et, uid)""".stripMargin,
+      _.select(col("event_type"), col("user_id"),
+          round3("sum_value"), round3("count_value"))),
+    // o6: CUBE — every key SUBSET {(type, user), (type), (user), ()} in the
+    // same one-Expand-pass plan as o5's rollup; the per-user margin rows
+    // are what cube adds over rollup. Key count capped at 4 in the dialect
+    // (2^n level blowup is the documented cost).
+    QueryRow.sql("o6_cube", "events",
+      "select sum(value), count(value) from events " +
+        "group by cube event_type, user_id order by sum(value) desc",
       // same null-free-input trick, all four key subsets
       """WITH e AS (SELECT coalesce(event_type, '__nil') AS et,
         |    coalesce(CAST(user_id AS VARCHAR), '__nil') AS uid, value
@@ -5948,8 +4702,17 @@ object SparkEntry {
         |  coalesce(uid, '__all') AS user_id,
         |  round(sum(coalesce(value, 0)), 3) AS sum_value,
         |  round(CAST(count(value) AS DOUBLE), 3) AS count_value
-        |FROM e GROUP BY CUBE (et, uid)""".stripMargin),
-    QueryRow("o7_grouping_sets", o7GroupingSets,
+        |FROM e GROUP BY CUBE (et, uid)""".stripMargin,
+      _.select(col("event_type"), col("user_id"),
+          round3("sum_value"), round3("count_value"))),
+    // o7: GROUPING SETS — caller-chosen subtotal levels {(type, user),
+    // (user), ()}: rollup's prefix rule can't produce a user-only margin
+    // and cube would add the unwanted type-only level; sets is the general
+    // form, same one-Expand-pass plan and __nil/__all sentinels.
+    QueryRow.sql("o7_grouping_sets", "events",
+      "select sum(value), count(value) from events " +
+        "group by sets (event_type, user_id), (user_id), () " +
+        "order by sum(value) desc",
       // the same __nil-then-__all sentinel trick over caller-chosen levels
       """WITH e AS (SELECT coalesce(event_type, '__nil') AS et,
         |    coalesce(CAST(user_id AS VARCHAR), '__nil') AS uid, value
@@ -5958,8 +4721,11 @@ object SparkEntry {
         |  coalesce(uid, '__all') AS user_id,
         |  round(sum(coalesce(value, 0)), 3) AS sum_value,
         |  round(CAST(count(value) AS DOUBLE), 3) AS count_value
-        |FROM e GROUP BY GROUPING SETS ((et, uid), (uid), ())""".stripMargin),
-    QueryRow("p7_sql_funnel", p7SqlFunnel,
+        |FROM e GROUP BY GROUPING SETS ((et, uid), (uid), ())""".stripMargin,
+      _.select(col("event_type"), col("user_id"),
+          round3("sum_value"), round3("count_value"))),
+    QueryRow.sql("p7_sql_funnel", "events",
+      "select funnel view, click, purchase from events where user_id <= 800",
       // a13's greedy k1/k2/k3 walk over the WHERE-filtered slice
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d, ts, event_id, event_type
         |  FROM events WHERE user_id IS NOT NULL AND user_id <= 800
@@ -5978,7 +4744,10 @@ object SparkEntry {
         |  WHEN k3 = 0 THEN 2 ELSE 3 END AS stage,
         |  count(*)::BIGINT AS n_entity_days
         |FROM k3t GROUP BY 1""".stripMargin),
-    QueryRow("p8_sql_decay", p8SqlDecay,
+    // P1 + a14: half-life decay from SQL — `decay(value) last 32` over one
+    // event type; fixed-point output, same engine-exact fold as a14.
+    QueryRow.sql("p8_sql_decay", "events",
+      "select decay(value) last 32 from events where event_type = 'click'",
       // a14's fold over the click slice, last-32 truncation
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d, ts, event_id,
         |    coalesce(value, 0.0) AS v
@@ -5992,7 +4761,12 @@ object SparkEntry {
         |    (acc, x) -> acc * 0.5 + x) * 1048576.0))::BIGINT AS decayed_fp,
         |  len(vs)::BIGINT AS n_events
         |FROM g""".stripMargin),
-    QueryRow("p9_sql_argmax", p9SqlArgmax,
+    // P1 + a15: deterministic argmax from SQL — `argmax(value, event_id)`
+    // group-by with the dialect's `__nil` sentinel keys (unlike a15's raw
+    // grouping, so the null-type group shows up as a row).
+    QueryRow.sql("p9_sql_argmax", "events",
+      "select argmax(value, event_id) from events where value exists " +
+        "group by event_type",
       // a15's lexicographic tiebreak, but grouped through the dialect's
       // __nil sentinel keys (groupKeys casts + coalesces)
       """WITH e AS (SELECT coalesce(event_type, '__nil') AS event_type,
@@ -6003,7 +4777,12 @@ object SparkEntry {
         |SELECT r.event_type, r.value AS max_value,
         |  r.event_id AS argmax_event_id, n.n
         |FROM r JOIN n USING (event_type) WHERE r.rn = 1""".stripMargin),
-    QueryRow("p10_sql_spans", p10SqlSpans,
+    // P1 + x15: span mining through the SQL front door, over the DOCUMENTS
+    // table — the dialect reaching the pipeline-operator family: WHERE
+    // gates (lang) compose ahead of the same explode → one-count-shuffle →
+    // TakeOrdered plan.
+    QueryRow.sql("p10_sql_spans", "documents",
+      "select spans top 30 size 4 from documents where lang = 'en'",
       // x15's window walk over the lang-gated slice, size 4, top 30
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
         |  FROM documents WHERE lang = 'en'),
@@ -6017,7 +4796,11 @@ object SparkEntry {
         |FROM spans GROUP BY span
         |HAVING count(DISTINCT doc_id) >= 2
         |ORDER BY n_occur DESC, span LIMIT 30""".stripMargin),
-    QueryRow("p11_sql_retention", p11SqlRetention,
+    // P1 + a16: cohort retention through the SQL front door — WHERE
+    // composes ahead of the same two-exchange window + aggregation plan
+    // (cohorts computed over the FILTERED population, by design).
+    QueryRow.sql("p11_sql_retention", "events",
+      "select retention from events where user_id <= 120",
       // a16's replay over the WHERE-filtered population (cohort = first
       // day WITHIN the filter, both engines)
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events
@@ -6029,7 +4812,8 @@ object SparkEntry {
         |  count(*)::BIGINT AS n_events
         |FROM e JOIN c USING (user_id)
         |GROUP BY 1, 2""".stripMargin),
-    QueryRow("p12_sql_attribution", p12SqlAttribution,
+    QueryRow.sql("p12_sql_attribution", "events",
+      "select attribution purchase within 1800 from events where user_id <= 120",
       // a18's replay with the SQL face's filter and 1800 s lookback
       """WITH e AS (SELECT user_id,
         |    CAST(floor(epoch(ts)) AS BIGINT) AS t, event_id, event_type,
@@ -6047,16 +4831,23 @@ object SparkEntry {
         |  count(*)::BIGINT AS n_conversions,
         |  sum(vfp)::BIGINT AS credited_fp
         |FROM w WHERE event_type = 'purchase' GROUP BY 1""".stripMargin),
-    QueryRow("p13_sql_markov", p13SqlMarkov,
+    QueryRow.sql("p13_sql_markov", "events",
+      "select markov iters 10 from events where event_type != 'error'",
       markovOracle(iters = 10, extraWhere = "AND event_type <> 'error'")),
-    QueryRow("p14_sql_anomaly", p14SqlAnomaly, anomalyOracle("2024-01-21", 3L, 20L,
+    QueryRow.sql("p14_sql_anomaly", "events",
+      "select anomaly split '2024-01-21' factor 3 support 20 " +
+        "from events where event_type != 'error'",
+      anomalyOracle("2024-01-21", 3L, 20L,
       extraWhere = "AND event_type <> 'error'")),
     QueryRow("p15_sql_profile", p15SqlProfile, profileOracle(Seq("user_id", "value"),
       Seq("event_type"), Seq("ts"),
       from = "events WHERE event_type = 'click'")),
-    QueryRow("p16_sql_similar", p16SqlSimilar, similarOracle(40, 2L, 0L,
+    QueryRow.sql("p16_sql_similar", "documents",
+      "select similar top 40 maxdfpct 10 from documents where lang = 'en'",
+      similarOracle(40, 2L, 0L,
       extraWhere = "AND lang = 'en'", maxDfPct = Some(10))),
-    QueryRow("p17_sql_neardup", p17SqlNeardup,
+    QueryRow.sql("p17_sql_neardup", "documents",
+      "select neardup threshold 50 from documents where n_chars >= 200",
       // d2b's replay over the SQL face's length-gated slice — the filter
       // applies BEFORE signatures, so band keys and candidates match the
       // engine's filtered scan
@@ -6064,7 +4855,9 @@ object SparkEntry {
          |SELECT id_a, id_b, $duckJaccard AS jac
          |FROM cand JOIN shd a ON cand.id_a = a.doc_id JOIN shd b ON cand.id_b = b.doc_id
          |WHERE $duckJaccard >= 0.5""".stripMargin),
-    QueryRow("p18_sql_knn", p18SqlKnn, {
+    QueryRow.sql("p18_sql_knn", "embeddings",
+      "select knn top 8 query 42 from embeddings where vec_id < 400",
+      {
       // s1's replay with the face's query id, k, and corpus filter
       val cos = graft.functions.VectorFunctions.cosineSql("embedding", "qe", 64)
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 42),
@@ -6074,18 +4867,33 @@ object SparkEntry {
          |ORDER BY $cos DESC, vec_id
          |LIMIT 8""".stripMargin
     }),
-    QueryRow("p19_sql_mmr", p19SqlMmr, mmrOracle(queryId = 7L, k = 8, shortlist = 30,
+    // P1 + s13: MMR diverse re-rank from SQL, non-default query/k/
+    // shortlist and a corpus filter (the query row satisfies it).
+    QueryRow.sql("p19_sql_mmr", "embeddings",
+      "select mmr top 8 query 7 shortlist 30 from embeddings where vec_id < 450",
+      mmrOracle(queryId = 7L, k = 8, shortlist = 30,
       relW = 0.7, divW = 0.3, extraWhere = "AND vec_id < 450")),
-    QueryRow("p20_sql_trend", p20SqlTrend, trendOracle(extraWhere = "AND event_type <> 'error'")),
-    QueryRow("p21_sql_neardup_images", p21SqlNeardupImages, imageNeardupOracle(6)),
-    QueryRow("p22_sql_mmr_batch", p22SqlMmrBatch, Seq(2L, 8L).map { qid =>
+    QueryRow.sql("p20_sql_trend", "events",
+      "select trend from events where event_type != 'error'",
+      trendOracle(extraWhere = "AND event_type <> 'error'")),
+    QueryRow.sql("p21_sql_neardup_images", "documents",
+      "select neardup images hamming 6 from documents",
+      imageNeardupOracle(6)),
+    // P1 + s13b: batched MMR from SQL — `queries` takes the id list, one
+    // corpus pass re-ranks them all; WHERE composes into the pass.
+    QueryRow.sql("p22_sql_mmr_batch", "embeddings",
+      "select mmr top 5 queries 2, 8 shortlist 20 from embeddings where vec_id < 450",
+      Seq(2L, 8L).map { qid =>
       s"""SELECT CAST($qid AS BIGINT) AS query_id, * FROM (
          |${mmrOracle(queryId = qid, k = 5, shortlist = 20, relW = 0.7,
              divW = 0.3, extraWhere = "AND vec_id < 450")}
          |)""".stripMargin
     }.mkString("\n UNION ALL \n")),
-    QueryRow("p23_sql_neardup_audio", p23SqlNeardupAudio, audioNeardupOracle(20)),
-    QueryRow("p24_sql_markov_distributed", p24SqlMarkovDistributed,
+    QueryRow.sql("p23_sql_neardup_audio", "documents",
+      "select neardup audio hamming 20 from documents",
+      audioNeardupOracle(20)),
+    QueryRow.sql("p24_sql_markov_distributed", "events",
+      "select markov iters 10 distributed from events where event_type != 'error'",
       markovOracle(iters = 10, extraWhere = "AND event_type <> 'error'")),
     QueryRow("p25_sql_equi_join", p25SqlEquiJoin,
       // the j1 snowflake replayed through the dialect's plain-join face;
@@ -6104,7 +4912,8 @@ object SparkEntry {
         |WHERE o_orderstatus = 'O'
         |GROUP BY n_name
         |ORDER BY sum(coalesce(l_quantity, 0)) DESC, n_name""".stripMargin),
-    QueryRow("p26_sql_neardup_video", p26SqlNeardupVideo,
+    QueryRow.sql("p26_sql_neardup_video", "documents",
+      "select neardup video shared 2 from documents where n_chars >= 256",
       // m8's oracle with the dialect's WHERE folded into the frame walk
       """WITH fr AS (SELECT DISTINCT doc_id,
         |    md5(substr(text, fi::INT * 64 + 1, 64)) AS f
@@ -6117,7 +4926,8 @@ object SparkEntry {
         |  count(*)::BIGINT AS n_shared
         |FROM kept l JOIN kept r ON l.f = r.f AND l.doc_id < r.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin),
-    QueryRow("p27_sql_scenes", p27SqlScenes,
+    QueryRow.sql("p27_sql_scenes", "documents",
+      "select scenes from documents where lang = 'en'",
       // m9's oracle with the dialect's WHERE folded into the frame walk
       """WITH f AS (SELECT doc_id, CAST(fi AS INT) AS frame_idx,
         |  md5(substr(text, fi::INT * 64 + 1, 64)) AS frame_md5
@@ -6133,7 +4943,24 @@ object SparkEntry {
         |  min(CASE WHEN prev IS NOT NULL AND prev != frame_md5
         |    THEN frame_idx END)::INT AS first_change_idx
         |FROM l GROUP BY doc_id""".stripMargin),
-    QueryRow("p28_sql_expr_measures", p28SqlExprMeasures,
+    // P1 + expression measures: the TPC-H q1 pricing-summary shape spelled
+    // ENTIRELY at the SQL front door — computed measures
+    // (`sum(l_extendedprice * (1 - l_discount)) as sum_disc_price`) with
+    // `as` aliases, a per-row ratio under the weighted mean, and ORDER BY
+    // referencing an alias. All columns are native doubles, so the
+    // arithmetic is bit-identical IEEE on both engines; expression
+    // measures evaluate row-wise and partial-aggregate map-side exactly
+    // like plain columns (one exchange, whole-stage codegen).
+    QueryRow.sql("p28_sql_expr_measures", "lineitem",
+      "select sum(l_quantity) as sum_qty, " +
+        "sum(l_extendedprice) as sum_base_price, " +
+        "sum(l_extendedprice * (1 - l_discount)) as sum_disc_price, " +
+        "sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) as sum_charge, " +
+        "mean(l_quantity) as avg_qty, " +
+        "mean(l_extendedprice / l_quantity) as avg_unit_price, " +
+        "count(*) as count_order " +
+        "from lineitem where l_quantity >= 5 " +
+        "group by l_returnflag, l_linestatus order by sum_qty desc",
       // the q1 pricing-summary shape through the dialect's expression
       // measures — every column is a native double, so the row-wise
       // arithmetic is bit-identical IEEE on both engines; sum = weighted
@@ -6148,7 +4975,11 @@ object SparkEntry {
         | round(avg(l_extendedprice / l_quantity), 3) AS avg_unit_price,
         | round(CAST(count(*) AS DOUBLE), 3) AS count_order
         |FROM lineitem WHERE l_quantity >= 5
-        |GROUP BY 1, 2""".stripMargin),
+        |GROUP BY 1, 2""".stripMargin,
+      _.select(col("l_returnflag"), col("l_linestatus"), round3("sum_qty"),
+          round3("sum_base_price"), round3("sum_disc_price"),
+          round3("sum_charge"), round3("avg_qty"), round3("avg_unit_price"),
+          round3("count_order"))),
     QueryRow("p29_sql_expr_join", p29SqlExprJoin,
       // computed revenue aggregated over the joined frame; HAVING binds
       // the UNROUNDED aggregate on both engines
@@ -6162,7 +4993,18 @@ object SparkEntry {
         |WHERE o_orderstatus <> 'P'
         |GROUP BY n_name
         |HAVING sum(coalesce(l_extendedprice * (1 - l_discount), 0)) > 0""".stripMargin),
-    QueryRow("p30_sql_expr_where", p30SqlExprWhere,
+    // P1 + expression predicates: the q6-forecast flavor with a COMPUTED
+    // measure in WHERE — `l_extendedprice * (1 - l_discount) > 1000`
+    // engages the numeric expression predicate (post-scan evaluation),
+    // while the plain discount/quantity conjuncts still push into the
+    // Parquet scan; the revenue measure aggregates over the surviving
+    // rows. All doubles — IEEE-identical on both engines.
+    QueryRow.sql("p30_sql_expr_where", "lineitem",
+      "select sum(l_extendedprice * l_discount) as revenue, " +
+        "count(*) as n from lineitem " +
+        "where l_discount >= 0.05 and l_discount <= 0.07 and l_quantity < 24 " +
+        "and l_extendedprice * (1 - l_discount) > 1000 " +
+        "group by l_returnflag order by revenue desc",
       // the expression predicate replays literally — doubles only, so
       // the comparison boundary is the same IEEE value on both engines
       """SELECT l_returnflag,
@@ -6171,8 +5013,23 @@ object SparkEntry {
         |FROM lineitem
         |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
         |  AND l_extendedprice * (1 - l_discount) > 1000
-        |GROUP BY 1""".stripMargin),
-    QueryRow("p31_sql_q3_catalog", p31SqlShippingCatalog,
+        |GROUP BY 1""".stripMargin,
+      _.select(col("l_returnflag"), round3("revenue"), round3("n"))),
+    // P1, the full q3 shape at the front door: `ZxSql.runCatalog`
+    // resolves the BASE frame from the query's own `from lineitem` (no
+    // DataFrame in hand), DATE literals compare against the timestamp
+    // columns (`o_orderdate < '1998-01-01'` — UTC epoch seconds on both
+    // engines), the computed revenue aggregates over the chained joins,
+    // and the top-10 cut rides the deterministic sorted path (revenue
+    // desc, then the string group keys asc — mirrored in the oracle).
+    QueryRow.catalog("p31_sql_q3_catalog", Seq("lineitem", "orders", "customer"),
+      "select sum(l_extendedprice * (1 - l_discount)) as revenue, " +
+        "count(*) as n from lineitem " +
+        "join orders on l_orderkey = o_orderkey " +
+        "join customer on o_custkey = c_custkey " +
+        "where c_mktsegment = 'BUILDING' and o_orderdate < '1998-01-01' " +
+        "and l_shipdate > '1998-01-01' " +
+        "group by l_orderkey, o_orderdate order by revenue desc limit 10",
       // the dialect's group keys surface as __nil-coalesced STRINGS and
       // its top-10 cut tiebreaks on them ascending — the oracle renders
       // and orders identically (rev cut on the UNROUNDED sum)
@@ -6190,8 +5047,23 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT l_orderkey, o_orderdate, round(rev, 3) AS revenue,
         |  round(nn, 3) AS n
-        |FROM g ORDER BY rev DESC, l_orderkey, o_orderdate LIMIT 10""".stripMargin),
-    QueryRow("p32_sql_case_ratio", p32SqlCaseRatio,
+        |FROM g ORDER BY rev DESC, l_orderkey, o_orderdate LIMIT 10""".stripMargin,
+      _.select(col("l_orderkey"), col("o_orderdate"),
+          round3("revenue"), round3("n"))),
+    // p32: TPC-H q14 (promo revenue share) THROUGH the dialect — the
+    // round's two new layers composed: a conditional measure (`case when …
+    // then … else 0 end` INSIDE the aggregate) and a post-aggregate ratio
+    // (`100 * sum(a) / sum(b) as …`) over the broadcast equi-join, with no
+    // group by (the global roll-up shape the join grammar now takes). Both
+    // component sums ride ONE hash aggregate — the ratio is a scalar
+    // projection after the exchange, zero extra shuffles.
+    QueryRow.catalog("p32_sql_case_ratio", Seq("lineitem", "part"),
+      "select 100 * sum(case when p_type = 'PROMO' then " +
+        "l_extendedprice * (1 - l_discount) else 0 end) / " +
+        "sum(l_extendedprice * (1 - l_discount)) as promo_revenue, " +
+        "count(*) as n " +
+        "from lineitem join part on l_partkey = p_partkey " +
+        "where l_shipdate >= '1997-03-01' and l_shipdate < '1997-04-01'",
       // both engines sum doubles and divide the two totals — the ratio is
       // scale-free, so 3dp rounding is far inside the float-sum parity band
       """SELECT round(100 * sum(CASE WHEN p_type = 'PROMO'
@@ -6200,8 +5072,21 @@ object SparkEntry {
         | round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin),
-    QueryRow("p33_sql_case_group", p33SqlCaseGroup,
+        |  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin,
+      _.select(round3("promo_revenue"), round3("n"))),
+    // p33: TPC-H q12 (priority class counts) THROUGH the dialect — two
+    // conditional measures whose branch predicates are IN-lists over the
+    // joined frame, grouped on the deterministic sorted path. The CASE
+    // values are exact small integers, so the double sums are
+    // bit-identical on both engines.
+    QueryRow.catalog("p33_sql_case_group", Seq("lineitem", "orders"),
+      "select sum(case when o_orderpriority in ('1-URGENT', '2-HIGH') " +
+        "then 1 else 0 end) as high_line_count, " +
+        "sum(case when o_orderpriority in ('1-URGENT', '2-HIGH') " +
+        "then 0 else 1 end) as low_line_count " +
+        "from lineitem join orders on l_orderkey = o_orderkey " +
+        "where l_shipdate >= '1997-01-01' and l_shipdate < '1998-01-01' " +
+        "and l_returnflag = 'N' group by l_linestatus",
       // CASE values are exact small integers — double sums bit-identical
       """SELECT l_linestatus,
         | round(CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
@@ -6212,9 +5097,18 @@ object SparkEntry {
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         |  AND l_returnflag = 'N'
-        |GROUP BY l_linestatus""".stripMargin),
+        |GROUP BY l_linestatus""".stripMargin,
+      _.select(col("l_linestatus"),
+          round3("high_line_count"), round3("low_line_count"))),
     QueryRow("p34_sql_enrich_windowed", p34SqlEnrichWindowed, p34OracleSql),
-    QueryRow("p35_sql_top_per_group", p35SqlTopPerGroup,
+    // p35: top-k groups PER parent dimension at the SQL front door —
+    // `limit 2 per event_type` ranks each event_type's user groups by the
+    // aggregate and keeps two; the rank-filter compiles to per-partition
+    // WindowGroupLimit (plan-pinned), so each task forwards ≤ k rows per
+    // partition to the one window exchange.
+    QueryRow.sql("p35_sql_top_per_group", "events",
+      "select sum(value) as s from events " +
+        "group by event_type, user_id order by s desc limit 2 per event_type",
       // the engine ranks by (s DESC, group keys ASC) — partition key
       // constant within a partition, so the user-key STRING tiebreak
       // makes the cut total; replay identically
@@ -6225,13 +5119,28 @@ object SparkEntry {
         |r AS (SELECT et, uid, s, row_number() OVER (
         |    PARTITION BY et ORDER BY s DESC, et, uid) AS rn FROM g)
         |SELECT et AS event_type, uid AS user_id, round(s, 3) AS s
-        |FROM r WHERE rn <= 2""".stripMargin),
-    QueryRow("p36_sql_top_raw_per", p36SqlTopRawPer,
+        |FROM r WHERE rn <= 2""".stripMargin,
+      _.select(col("event_type"), col("user_id"), round3("s"))),
+    // p36: the RAW top-per-group (the o3 shape through the dialect) — the
+    // 3 longest docs per source, total-ordered by the explicit doc_id
+    // tiebreak in the ORDER BY.
+    QueryRow.sql("p36_sql_top_raw_per", "documents",
+      "select doc_id, source, n_chars " +
+        "order by n_chars desc, doc_id limit 3 per source",
       """WITH r AS (SELECT doc_id, source, n_chars, row_number() OVER (
         |    PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
         |  FROM documents)
         |SELECT doc_id, source, n_chars FROM r WHERE rn <= 3""".stripMargin),
-    QueryRow("p37_sql_in_subquery", p37SqlInSubquery,
+    // p37: membership subquery (the TPC-H q18 semi-join shape) THROUGH
+    // the dialect — `where l_orderkey in (select l_orderkey … group by …
+    // having sum(l_quantity) > 250)` compiles to a LEFT SEMI join of the
+    // fact scan against the subquery's native-typed key frame; the outer
+    // roll-up re-aggregates the surviving orders.
+    QueryRow.catalog("p37_sql_in_subquery", Seq("lineitem"),
+      "select sum(l_quantity) as total_qty, count(*) as n " +
+        "from lineitem where l_orderkey in (select l_orderkey from lineitem " +
+        "group by l_orderkey having sum(l_quantity) > 250) " +
+        "group by l_orderkey order by total_qty desc",
       // the engine's semi join keeps every lineitem of a hot order; the
       // outer group key surfaces as the dialect's string rendering
       """WITH hot AS (SELECT l_orderkey FROM lineitem
@@ -6240,16 +5149,33 @@ object SparkEntry {
         |  round(sum(coalesce(l_quantity, 0)), 3) AS total_qty,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM lineitem WHERE l_orderkey IN (SELECT l_orderkey FROM hot)
-        |GROUP BY 1""".stripMargin),
-    QueryRow("p38_sql_not_in", p38SqlNotInSubquery,
+        |GROUP BY 1""".stripMargin,
+      _.select(col("l_orderkey"), round3("total_qty"), round3("n"))),
+    // p38: `not in (select …)` — the ANTI join (decontamination shape):
+    // orders from customers OUTSIDE a segment. Anti-join ("not matched")
+    // semantics, spec-pinned divergence from ANSI NOT IN null-veto; the
+    // oracle replays with NOT EXISTS accordingly.
+    QueryRow.catalog("p38_sql_not_in", Seq("orders", "customer"),
+      "select count(*) as n from orders " +
+        "where o_custkey not in (select c_custkey from customer " +
+        "where c_mktsegment = 'BUILDING') order by n desc",
       // NOT EXISTS, not NOT IN: the engine's `not in (select …)` is the
       // anti join (subquery nulls ignored), documented divergence from
       // ANSI three-valued NOT IN
       """SELECT round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM orders o WHERE NOT EXISTS (
         |  SELECT 1 FROM customer c
-        |  WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey)""".stripMargin),
-    QueryRow("p39_sql_scalar_sub", p39SqlScalarSub,
+        |  WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey)""".stripMargin,
+      _.select(round3("n"))),
+    // p39: SCALAR subquery THROUGH the dialect — the "above corpus
+    // average" gate. The threshold is ONE tiny aggregation at plan-build,
+    // then inlined as a LITERAL that pushes into the fact scan's parquet
+    // PushedFilters (plan-pinned) — at 100 TB the alternative (a join
+    // carrying the scalar) would ride every row of the big side.
+    QueryRow.catalog("p39_sql_scalar_sub", Seq("lineitem"),
+      "select count(*) as n, sum(l_extendedprice) as rev " +
+        "from lineitem where l_quantity > (select mean(l_quantity) from lineitem) " +
+        "group by l_returnflag order by rev desc",
       // the engine inlines mean(l_quantity) as a double literal; DuckDB's
       // avg is the same double sum/count — quantities are integral, so
       // the threshold never lands on a row value
@@ -6258,21 +5184,51 @@ object SparkEntry {
         |  round(sum(coalesce(l_extendedprice, 0)), 3) AS rev
         |FROM lineitem
         |WHERE l_quantity > (SELECT avg(l_quantity) FROM lineitem)
-        |GROUP BY 1""".stripMargin),
-    QueryRow("p40_sql_custdist", p40SqlCustdist,
+        |GROUP BY 1""".stripMargin,
+      _.select(col("l_returnflag"), round3("n"), round3("rev"))),
+    // p40: DERIVED TABLE (the TPC-H q13 custdist shape) THROUGH the
+    // dialect — `from (select …)` two-level aggregation: inner counts
+    // orders per customer, outer histograms customers by order count.
+    // The outer runs the non-windowed sorted path over the inner frame;
+    // Catalyst's EliminateSorts drops the inner ORDER BY under the outer
+    // aggregate, so the plan is two back-to-back hash aggregations.
+    QueryRow.catalog("p40_sql_custdist", Seq("orders"),
+      "select count(*) as custdist from (select count(*) as n " +
+        "from orders group by o_custkey order by n) " +
+        "group by n order by custdist desc, n desc",
       // outer group key is the dialect's string rendering of the inner
       // DOUBLE count — CAST through DOUBLE to match "5.0"
       """WITH po AS (SELECT o_custkey, count(*) AS n FROM orders GROUP BY 1)
         |SELECT CAST(CAST(n AS DOUBLE) AS VARCHAR) AS n,
         |  round(CAST(count(*) AS DOUBLE), 3) AS custdist
-        |FROM po GROUP BY 1""".stripMargin),
-    QueryRow("p41_sql_derived_stats", p41SqlDerivedStats,
+        |FROM po GROUP BY 1""".stripMargin,
+      _.select(col("n"), round3("custdist"))),
+    // p41: derived-table stats with an outer WHERE gate — mean/max of
+    // per-user spend over users whose total is positive ("HAVING at the
+    // front door" via the derived frame).
+    QueryRow.catalog("p41_sql_derived_stats", Seq("events"),
+      "select mean(s) as avg_spend, max(s) as max_spend, " +
+        "count(*) as n_users from (select sum(value) as s " +
+        "from events group by user_id order by s) where s > 0",
       """WITH pu AS (SELECT user_id, sum(coalesce(value, 0)) AS s
         |  FROM events GROUP BY 1)
         |SELECT round(avg(s), 3) AS avg_spend, round(max(s), 3) AS max_spend,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n_users
-        |FROM pu WHERE s > 0""".stripMargin),
-    QueryRow("p42_sql_q17_shape", p42SqlQ17Shape,
+        |FROM pu WHERE s > 0""".stripMargin,
+      _.select(round3("avg_spend"), round3("max_spend"), round3("n_users"))),
+    // p42: DERIVED JOIN SIDE (the TPC-H q17 correlated-threshold shape)
+    // THROUGH the dialect — `join (select mean(…) group by key)` builds
+    // per-part quantity averages in ONE aggregation pass, the self-join
+    // carries them onto each lineitem row, and the expression predicate
+    // compares row vs own-group threshold. AQE broadcasts the aggregate
+    // side (|parts| rows, not |lineitem|).
+    QueryRow.catalog("p42_sql_q17_shape", Seq("lineitem"),
+      "select sum(l_extendedprice) as total_price, count(*) as n " +
+        "from lineitem " +
+        "join (select mean(l_quantity) as avg_qty from lineitem group by l_partkey) " +
+        "on l_partkey = l_partkey " +
+        "where l_quantity - 0.5 * avg_qty < 0 " +
+        "group by l_returnflag order by total_price desc",
       // engine mean = exact-integral double sum / count, identical to
       // DuckDB avg; the predicate replays the same IEEE op order
       """WITH pa AS (SELECT l_partkey, avg(l_quantity) AS avg_qty
@@ -6281,18 +5237,25 @@ object SparkEntry {
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM lineitem l JOIN pa ON l.l_partkey = pa.l_partkey
         |WHERE l.l_quantity - 0.5 * pa.avg_qty < 0
-        |GROUP BY 1""".stripMargin),
+        |GROUP BY 1""".stripMargin,
+      _.select(col("l_returnflag"), round3("total_price"), round3("n"))),
     QueryRow("o1_top_groups", o1TopGroups,
       """SELECT event_type, round(sum(coalesce(value, 0)), 3) AS sum_value,
         | round(CAST(count(value) AS DOUBLE), 3) AS count_value
         |FROM events GROUP BY event_type
         |ORDER BY sum(coalesce(value, 0)) DESC, event_type""".stripMargin),
-    QueryRow("o2_topk_limit", o2TopkLimit,
+    // O1 + LIMIT through SQL: sort+limit compiles to TakeOrderedAndProject
+    // (per-partition top-k, no global sort) — the scalable "top-k services"
+    // query the reference's observability UI wants.
+    QueryRow.sql("o2_topk_limit", "events",
+      "select sum(value) from events group by user_id " +
+        "order by sum(value) desc limit 5",
       """SELECT CAST(user_id AS VARCHAR) AS user_id,
         | round(sum(coalesce(value, 0)), 3) AS sum_value
         |FROM events GROUP BY 1
         |ORDER BY sum(coalesce(value, 0)) DESC, CAST(user_id AS VARCHAR)
-        |LIMIT 5""".stripMargin),
+        |LIMIT 5""".stripMargin,
+      _.select(col("user_id"), round3("sum_value"))),
     QueryRow("o3_top_per_group", o3TopPerGroup,
       """SELECT doc_id, source, n_chars, CAST(rn AS INT) AS rank
         |FROM (SELECT doc_id, source, n_chars,
@@ -6300,7 +5263,14 @@ object SparkEntry {
         |    ORDER BY n_chars DESC, doc_id) AS rn
         |  FROM documents)
         |WHERE rn <= 3""".stripMargin),
-    QueryRow("o4_having", o4Having,
+    // O1 + HAVING: post-aggregation group filtering (extension — the
+    // reference cannot filter aggregates at all), including a HAVING-only
+    // aggregate computed for the filter and dropped from output. Runs on
+    // UNROUNDED aggregates; output rounding follows the parity rules.
+    QueryRow.sql("o4_having", "events",
+      "select sum(value), count(value) from events group by user_id " +
+        "having sum(value) > 1000 and max(value) <= 249 " +
+        "order by sum(value) desc",
       // HAVING on the raw (unrounded) aggregates, like the engine side;
       // user_id renders as the group key string
       """SELECT CAST(user_id AS VARCHAR) AS user_id,
@@ -6308,7 +5278,8 @@ object SparkEntry {
         | round(CAST(count(value) AS DOUBLE), 3) AS count_value
         |FROM events GROUP BY 1
         |HAVING sum(coalesce(value, 0)) > 1000 AND max(value) <= 249
-        |ORDER BY sum(coalesce(value, 0)) DESC, CAST(user_id AS VARCHAR)""".stripMargin),
+        |ORDER BY sum(coalesce(value, 0)) DESC, CAST(user_id AS VARCHAR)""".stripMargin,
+      _.select(col("user_id"), round3("sum_value"), round3("count_value"))),
     QueryRow("q1_pricing", q1Pricing,
       """SELECT l_returnflag, l_linestatus,
         | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -7066,7 +6037,13 @@ object SparkEntry {
         |SELECT doc_id, qs, rank0::BIGINT AS rank0,
         |  CAST((rank0 * 8) // (SELECT count(*) FROM s) AS BIGINT) AS shard
         |FROM r""".stripMargin),
-    QueryRow("x23_mixture_scored", x23MixtureScored,
+    // x23: QUALITY-ordered mixture — each source's token budget fills
+    // best-first (length score at scale 2000) from the gated survivors;
+    // the curation counterpart of x19's fair sample, exercised through
+    // the SQL face.
+    QueryRow.sql("x23_mixture_scored", "documents",
+      "select mixture score n_chars scale 2000 " +
+        "src1=600, src2=400, src3=1500 where n_chars > 120",
       // the scored greedy rule replayed with a full window: quality
       // bucket = 4095 - floor(clamped(n_chars/2000)·4096) (best first,
       // ×4096 exact), prefix token sums in (bucket, id) order < budget
@@ -7083,7 +6060,11 @@ object SparkEntry {
         |SELECT doc_id, source, n_tokens FROM p
         |WHERE prefix < CASE source WHEN 'src1' THEN 600
         |  WHEN 'src2' THEN 400 ELSE 1500 END""".stripMargin),
-    QueryRow("p50_sql_curriculum", p50SqlCurriculum,
+    // p50: the curriculum SQL face — gate, rank by the scaled length
+    // score, cut 6 ordered shards over the SURVIVORS (ranks re-pack after
+    // the gate, which the oracle replays).
+    QueryRow.sql("p50_sql_curriculum", "documents",
+      "select curriculum score n_chars scale 2000 shards 6 where lang != 'fr'",
       // x22's naive-global-row_number oracle over the gated survivors
       """WITH s AS (SELECT doc_id,
         |  CAST(floor(least(greatest(n_chars / 2000.0, 0.0), 1.0) * 1048576)
@@ -7093,19 +6074,32 @@ object SparkEntry {
         |SELECT doc_id, qs, rank0::BIGINT AS rank0,
         |  CAST((rank0 * 6) // (SELECT count(*) FROM s) AS BIGINT) AS shard
         |FROM r""".stripMargin),
-    QueryRow("d1b_dedup_normalized", d1bDedupNormalized,
+    // d1b: NORMALIZED exact dedup — case/punctuation/whitespace variants
+    // of the same content land in one group (lower → strip non-[a-z0-9 ]
+    // → collapse runs → trim, the engine-portable canonicalization);
+    // exercised through the SQL face so the grammar path is the tested
+    // path.
+    QueryRow.sql("d1b_dedup_normalized", "documents",
+      "select dedup normalized",
       // the same canonicalization, spelled in DuckDB's regex dialect
       """SELECT substr(md5(trim(regexp_replace(regexp_replace(lower(text),
         |    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))), 1, 16) AS fp,
         |  min(doc_id) AS keeper_id,
         |  CAST(count(*) AS BIGINT) AS n_copies
         |FROM documents GROUP BY 1""".stripMargin),
-    QueryRow("p51_sql_dedup", p51SqlDedup,
+    // p51: the exact-dedup SQL face — fingerprint groups over a gated
+    // corpus; the count shuffle carries 16-hex fingerprints, never text.
+    QueryRow.sql("p51_sql_dedup", "documents",
+      "select dedup where n_chars > 150",
       // d1's grouping rule behind the gate
       """SELECT substr(md5(text), 1, 16) AS fp, min(doc_id) AS keeper_id,
         | CAST(count(*) AS BIGINT) AS n_copies
         |FROM documents WHERE n_chars > 150 GROUP BY 1""".stripMargin),
-    QueryRow("p52_sql_decontaminate", p52SqlDecontaminate,
+    // p52: the decontamination SQL face — shingle-overlap report of the
+    // gated corpus against its src2/src3 slice at shingle 4 / hits 2
+    // (deliberately different from d7's 5/1 defaults).
+    QueryRow.sql("p52_sql_decontaminate", "documents",
+      "select decontaminate src2, src3 shingle 4 hits 2 where n_chars > 120",
       // d7's overlap rule with the face's sources/shingle/hits and the
       // WHERE gate applied to BOTH the benchmark slice and the corpus
       s"""WITH th0 AS (SELECT doc_id, source, $duckTokenHashes AS th
@@ -7123,9 +6117,22 @@ object SparkEntry {
          | CAST(coalesce(hits.n_hits, 0) AS BIGINT) AS n_hits,
          | (coalesce(hits.n_hits, 0) >= 2) AS contaminated
          |FROM corp LEFT JOIN hits USING (doc_id)""".stripMargin),
-    QueryRow("p53_sql_quality", p53SqlQuality, p53OracleSql),
-    QueryRow("p54_sql_redact", p54SqlRedact, p54OracleSql),
-    QueryRow("p55_sql_neardup_embed", p55SqlNeardupEmbed, {
+    // p53: the quality SQL face — per-doc C4-style metrics behind a lang
+    // gate; a stateless narrow map (the face also streams).
+    QueryRow.sql("p53_sql_quality", "documents",
+      "select quality where lang = 'en'",
+      p53OracleSql),
+    // p54: the redaction SQL face — \b-literal counts + scrubbed-text
+    // fingerprint for caller-chosen terms (not x11's fixture terms).
+    QueryRow.sql("p54_sql_redact", "documents",
+      "select redact spark, data where source != 'src0'",
+      p54OracleSql),
+    // p55: the embedding near-dup SQL face — d5's label-blocked cosine
+    // pairs at a caller threshold, behind a label gate (the WHERE prunes
+    // blocks BEFORE the quadratic).
+    QueryRow.sql("p55_sql_neardup_embed", "embeddings",
+      "select neardup embeddings threshold 35 where label != 3",
+      {
       // d5's pair rule at threshold 0.35 with the gate applied before
       // blocking (both the block-size count and the join see survivors)
       val cos = graft.functions.VectorFunctions.cosineSql("a.embedding", "b.embedding", 64)
@@ -7137,21 +6144,53 @@ object SparkEntry {
          | ON a.label = b.label AND a.vec_id < b.vec_id
          |WHERE $cos >= 0.35 AND a.bn <= 4096""".stripMargin
     }),
-    QueryRow("p56_sql_langid", p56SqlLangId, p56OracleSql),
-    QueryRow("p57_sql_sample_events", p57SqlSampleEvents,
+    // p56: the language-ID SQL face — x1's stopword-profile heuristic
+    // behind a source gate; stateless (the face also streams).
+    QueryRow.sql("p56_sql_langid", "documents",
+      "select langid where source != 'src5'",
+      p56OracleSql),
+    // p57: the sampling face on a NON-document table — `key event_id`
+    // points the md5 coin at the events table's stable id, so
+    // deterministic trace-sampling ("keep 10% of events, reproducibly")
+    // is the same one-liner as corpus sampling.
+    QueryRow.sql("p57_sql_sample_events", "events",
+      "select sample pct 10 key event_id where value >= 1",
       // the same md5 coin pointed at event_id, behind the value gate
       s"""SELECT event_id, event_type, value FROM events
          |WHERE value >= 1 AND
-         |  ${duckShingleHash("event_id::VARCHAR")} % 100 < 10""".stripMargin),
-    QueryRow("p66_sql_sample_exact", p66SqlSampleExact,
+         |  ${duckShingleHash("event_id::VARCHAR")} % 100 < 10""".stripMargin,
+      _.select(col("event_id"), col("event_type"), col("value"))),
+    // p66: EXACT-count deterministic sampling — `sample exact <n>`: the
+    // n smallest hash coins of the gated frame, key-tiebroken; nested
+    // across sizes (exact-100 ⊆ exact-300, spec-pinned) and rerun-stable.
+    // One per-partition TakeOrderedAndProject over the gated scan.
+    QueryRow.sql("p66_sql_sample_exact", "documents",
+      "select sample exact 300 where lang != 'zh'",
       // the same md5-prefix coin, globally smallest-300 with id tiebreak
       s"""SELECT doc_id, lang, source, n_chars FROM documents
          |WHERE lang != 'zh'
          |ORDER BY ${duckShingleHash("doc_id::VARCHAR")}, doc_id
          |LIMIT 300""".stripMargin),
-    QueryRow("p59_sql_distinct", p59SqlDistinct,
+    // p59: `select distinct` — the raw-projection dedup primitive: one
+    // shuffle on the (narrow, already-projected) columns, ORDER BY after.
+    // Closes the r12 "set operations at the front door" gap with p60.
+    QueryRow.sql("p59_sql_distinct", "documents",
+      "select distinct lang, source where n_chars > 200",
       "SELECT DISTINCT lang, source FROM documents WHERE n_chars > 200"),
-    QueryRow("p71_sql_expr_project", p71SqlExprProject,
+    // p71: row-wise EXPRESSION PROJECTIONS on the raw path —
+    // `select price * (1 - discount) as net` without an aggregate. The
+    // measure compiler evaluates the arithmetic (same try_divide
+    // null-on-zero contract as filters and aggregate measures), so a
+    // computed column codegens like a plain one and column pruning sees
+    // through it (the scan reads only the referenced storage columns —
+    // PlanSpec-pinned). ORDER BY binds the alias; the tiebreak keys make
+    // the LIMIT cut a total order.
+    QueryRow.sql("p71_sql_expr_project", "lineitem",
+      "select l_orderkey, l_linenumber, " +
+        "l_extendedprice * (1 - l_discount) as net, " +
+        "l_extendedprice / l_quantity as unit_price " +
+        "where l_quantity > 45 " +
+        "order by net desc, l_orderkey, l_linenumber limit 200",
       // row-wise IEEE arithmetic is order-free per row, so exact equality
       // holds without rounding; the ORDER BY tiebreaks make the cut total
       """SELECT l_orderkey, l_linenumber,
@@ -7159,15 +6198,50 @@ object SparkEntry {
         |  l_extendedprice / l_quantity AS unit_price
         |FROM lineitem WHERE l_quantity > 45
         |ORDER BY net DESC, l_orderkey, l_linenumber LIMIT 200""".stripMargin),
-    QueryRow("p72_sql_semi_join", p72SqlSemiJoin, p72OracleSql),
-    QueryRow("p73_sql_anti_join", p73SqlAntiJoin,
+    // p72: COMPOSITE-KEY SEMI JOIN — EXISTS at the front door: short docs
+    // whose (lang, source) pair also occurs among long docs. The right
+    // side is a gated derived key set over the SAME table (self-join:
+    // the internal key rename keeps resolution unambiguous); duplicate
+    // right pairs never multiply rows, and the filter applies BEFORE the
+    // projection, so everything downstream composes. Oracle = DuckDB
+    // EXISTS (NOT IN's three-valued null trap is exactly what this face
+    // avoids).
+    QueryRow.catalog("p72_sql_semi_join", Seq("documents"),
+      "select doc_id, lang, source from documents " +
+        "semi join (select lang, source from documents where n_chars > 450) " +
+        "on lang = lang and source = source " +
+        "where n_chars < 150 order by doc_id",
+      p72OracleSql),
+    // p73: ANTI JOIN — NOT EXISTS reconciliation: per-segment counts of
+    // customers with no large order. The right side is a gated key set
+    // (every customer has SOME order in this testdata — the gate makes
+    // the anti join load-bearing); the aggregate runs on the filtered
+    // frame.
+    QueryRow.catalog("p73_sql_anti_join", Seq("customer", "orders"),
+      "select count(*) as n from customer " +
+        "anti join (select o_custkey from orders where o_totalprice > 300000) " +
+        "on c_custkey = o_custkey " +
+        "group by c_mktsegment order by n desc",
       """SELECT coalesce(CAST(c_mktsegment AS VARCHAR), '__nil') AS c_mktsegment,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM customer WHERE NOT EXISTS (
         |  SELECT 1 FROM orders
         |  WHERE o_totalprice > 300000 AND o_custkey = c_custkey)
-        |GROUP BY 1""".stripMargin),
-    QueryRow("p74_sql_window_agg", p74SqlWindowAgg,
+        |GROUP BY 1""".stripMargin,
+      _.select(col("c_mktsegment"), round3("n"))),
+    // p74: AGGREGATE window functions — the running-total primitive:
+    // per-customer cumulative revenue in order-date order (SQL default
+    // RANGE frame on both engines) next to a whole-partition count (no
+    // ORDER BY = partition total). Both items partition on o_custkey, so
+    // they share ONE exchange (PlanSpec-pinned); window aggregates are
+    // plain SQL row semantics (unweighted — the reference's weighted
+    // forms are the grouped aggregates).
+    QueryRow.sql("p74_sql_window_agg", "orders",
+      "select o_orderkey, o_custkey, " +
+        "sum(o_totalprice) over (partition by o_custkey " +
+        "order by o_orderdate, o_orderkey) as running, " +
+        "count(*) over (partition by o_custkey) as n_orders " +
+        "where o_custkey < 50 order by o_custkey, o_orderkey",
       // both engines' DEFAULT ordered frame is RANGE UNBOUNDED
       // PRECEDING..CURRENT ROW — the running form; the (date, key) order
       // is total, so the prefix accumulation order is identical and the
@@ -7177,8 +6251,19 @@ object SparkEntry {
         |    ORDER BY o_orderdate, o_orderkey), 3) AS running,
         |  count(*) OVER (PARTITION BY o_custkey) AS n_orders
         |FROM orders WHERE o_custkey < 50
-        |ORDER BY o_custkey, o_orderkey""".stripMargin),
-    QueryRow("p75_sql_window_nav", p75SqlWindowNav,
+        |ORDER BY o_custkey, o_orderkey""".stripMargin,
+      _.select(col("o_orderkey"), col("o_custkey"), round3("running"),
+          col("n_orders"))),
+    // p75: navigation + bucketing windows — first/last value per user in
+    // event-time order (last_value over the FULL partition frame, or it
+    // would be the current row) and the ntile quartile. The (ts,
+    // event_id) order is total, so every item is deterministic.
+    QueryRow.sql("p75_sql_window_nav", "events",
+      "select event_id, user_id, " +
+        "first_value(value) over (partition by user_id order by ts, event_id) as first_v, " +
+        "last_value(value) over (partition by user_id order by ts, event_id) as last_v, " +
+        "ntile(4) over (partition by user_id order by ts, event_id) as quartile " +
+        "where value >= 1 order by user_id, event_id limit 400",
       // last_value needs the full-partition frame spelled on both engines;
       // Spark ntile is INT (DuckDB's is BIGINT)
       """SELECT event_id, user_id,
@@ -7190,7 +6275,17 @@ object SparkEntry {
         |    ORDER BY ts, event_id) AS INT) AS quartile
         |FROM events WHERE value >= 1
         |ORDER BY user_id, event_id LIMIT 400""".stripMargin),
-    QueryRow("p76_sql_scalar_funcs", p76SqlScalarFuncs,
+    // p76: SCALAR FUNCTIONS in the measure grammar — abs/sqrt as WHERE
+    // expression predicates, round/length as expression projections. All
+    // row-wise with identical IEEE semantics on both engines; length reads
+    // the raw string (and BIGINTs like DuckDB), round's digit count is a
+    // plan constant. The non-function conjunct still pushes into the
+    // scan.
+    QueryRow.sql("p76_sql_scalar_funcs", "documents",
+      "select doc_id, round(n_chars / 100, 2) as hundreds, " +
+        "length(text) as len " +
+        "where abs(n_chars - 300) < 150 and sqrt(n_chars) > 12 " +
+        "and lang = 'en' order by doc_id limit 300",
       // identical IEEE row-wise functions; length is chars on both
       """SELECT doc_id, round(n_chars / 100, 2) AS hundreds,
         |  length(text) AS len
@@ -7198,13 +6293,34 @@ object SparkEntry {
         |WHERE abs(n_chars - 300) < 150 AND sqrt(n_chars) > 12
         |  AND lang = 'en'
         |ORDER BY doc_id LIMIT 300""".stripMargin),
-    QueryRow("p77_sql_case_project", p77SqlCaseProject,
+    // p77: CASE expression projections — the row-labeling primitive
+    // (`case when … then … end as size_class`) on the raw path, same
+    // conditional-measure machinery as inside aggregates (first true
+    // branch wins, no else → NULL, three-valued predicates). Values are
+    // numeric (the measure grammar); the oracle CASTs DuckDB's integer
+    // literals to DOUBLE for type parity.
+    QueryRow.sql("p77_sql_case_project", "documents",
+      "select doc_id, n_chars, " +
+        "case when n_chars > 400 then 2 when n_chars > 200 then 1 else 0 end " +
+        "as size_class " +
+        "where lang = 'en' order by doc_id limit 400",
       """SELECT doc_id, n_chars,
         |  CAST(CASE WHEN n_chars > 400 THEN 2 WHEN n_chars > 200 THEN 1
         |    ELSE 0 END AS DOUBLE) AS size_class
         |FROM documents WHERE lang = 'en'
         |ORDER BY doc_id LIMIT 400""".stripMargin),
-    QueryRow("p78_sql_bucket_agg", p78SqlBucketAgg,
+    // p78: COMPUTED GROUP KEYS — bucket-then-aggregate through a derived
+    // table: the p77 CASE labels rows, the outer groups by the label.
+    // Catalyst collapses the composition into ONE scan+aggregate pass —
+    // the label becomes a direct grouping expression and the read schema
+    // shrinks to n_chars alone (doc_id pruned through the derived table;
+    // PlanSpec-pinned). The shape every curriculum/mixture bucketing
+    // starts from.
+    QueryRow.catalog("p78_sql_bucket_agg", Seq("documents"),
+      "select count(*) as c, mean(n_chars) as m from " +
+        "(select doc_id, n_chars, case when n_chars > 400 then 2 " +
+        "when n_chars > 200 then 1 else 0 end as cls from documents) " +
+        "group by cls order by c desc",
       // the engine renders group keys as strings (the __nil convention's
       // carrier type); DuckDB CASTs the double label to match
       """SELECT CAST(cls AS VARCHAR) AS cls,
@@ -7214,13 +6330,32 @@ object SparkEntry {
         |  CAST(CASE WHEN n_chars > 400 THEN 2 WHEN n_chars > 200 THEN 1
         |    ELSE 0 END AS DOUBLE) AS cls
         |  FROM documents)
-        |GROUP BY cls""".stripMargin),
-    QueryRow("p79_sql_string_funcs", p79SqlStringFuncs,
+        |GROUP BY cls""".stripMargin,
+      _.select(col("cls"), round3("c"), round3("m"))),
+    // p79: STRING functions — lower/upper/trim/substr as projections and
+    // the case-insensitive gate (`where lower(lang) = 'en'`). String
+    // expressions compare for EQUALITY only (order would ride collation);
+    // arithmetic over strings is a parse error. substr is 1-based on both
+    // engines.
+    QueryRow.sql("p79_sql_string_funcs", "documents",
+      "select doc_id, upper(lang) as lang_u, substr(source, 1, 4) as src4 " +
+        "where lower(lang) = 'en' and length(text) > 100 " +
+        "order by doc_id limit 300",
       """SELECT doc_id, upper(lang) AS lang_u, substr(source, 1, 4) AS src4
         |FROM documents
         |WHERE lower(lang) = 'en' AND length(text) > 100
         |ORDER BY doc_id LIMIT 300""".stripMargin),
-    QueryRow("p80_sql_case_label", p80SqlCaseLabel,
+    // p80: STRING CASE LABELS feeding a computed group key — the
+    // human-readable bucket-then-aggregate: label rows 'long'/'mid'/
+    // 'short' in a derived table, group by the label. Same one-pass
+    // collapsed plan as p78; the group key is natively a string, so the
+    // rendering needs no cast on either engine.
+    QueryRow.catalog("p80_sql_case_label", Seq("documents"),
+      "select count(*) as c, mean(n_chars) as m from " +
+        "(select doc_id, n_chars, case when n_chars > 400 then 'long' " +
+        "when n_chars > 200 then 'mid' else 'short' end as bucket " +
+        "from documents) " +
+        "group by bucket order by c desc",
       // the label is natively VARCHAR — no cast needed on either engine
       """SELECT bucket, round(CAST(count(*) AS DOUBLE), 3) AS c,
         |  round(CAST(avg(n_chars) AS DOUBLE), 3) AS m
@@ -7228,16 +6363,40 @@ object SparkEntry {
         |  CASE WHEN n_chars > 400 THEN 'long' WHEN n_chars > 200 THEN 'mid'
         |    ELSE 'short' END AS bucket
         |  FROM documents)
-        |GROUP BY bucket""".stripMargin),
-    QueryRow("p81_sql_stddev", p81SqlStddev,
+        |GROUP BY bucket""".stripMargin,
+      _.select(col("bucket"), round3("c"), round3("m"))),
+    // p81: DISPERSION aggregates — `stddev`/`variance` (SAMPLE forms,
+    // plain ANSI semantics: unweighted like the percentile family, NULL
+    // when a group has < 2 values) ride the same hash-aggregate plan as
+    // every other measure, including over a computed expression. Oracle =
+    // DuckDB's native stddev_samp/var_samp; 3dp rounding absorbs the
+    // engines' different partial-merge orders (~1e-12 relative).
+    QueryRow.sql("p81_sql_stddev", "events",
+      "select stddev(value) as sd, variance(value) as vr, " +
+        "stddev(value / 10) as sd10, count(*) as n " +
+        "group by event_type order by sd desc",
       // SAMPLE dispersion — both engines NULL a singleton group; 3dp
       // absorbs partial-merge order differences
       """SELECT event_type, round(stddev_samp(value), 3) AS sd,
         |  round(var_samp(value), 3) AS vr,
         |  round(stddev_samp(value / 10), 3) AS sd10,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p82_sql_calendar", p82SqlCalendar,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round3("sd"), round3("vr"),
+          round3("sd10"), round3("n"))),
+    // p82: CALENDAR ROLLUP — `year(o_orderdate)` labels rows in a derived
+    // table, the outer groups by the year: the "orders per year" staple
+    // the granularity windows cannot spell (they bucket epoch seconds, not
+    // calendar fields). Catalyst collapses the composition into ONE
+    // scan+aggregate pass like p78. Every aggregate here is
+    // order-independent-EXACT (counts, distinct count, max), so the row
+    // carries zero float-summation risk.
+    QueryRow.catalog("p82_sql_calendar", Seq("orders"),
+      "select count(*) as n, count_distinct(o_custkey) as custs, " +
+        "max(o_totalprice) as mx from " +
+        "(select o_orderkey, o_custkey, o_totalprice, " +
+        "year(o_orderdate) as yr from orders) " +
+        "group by yr order by yr asc",
       // the engine renders group keys as strings; year() is BIGINT on
       // both engines under the UTC contract
       """SELECT CAST(yr AS VARCHAR) AS yr,
@@ -7246,15 +6405,38 @@ object SparkEntry {
         |  max(o_totalprice) AS mx
         |FROM (SELECT o_custkey, o_totalprice, year(o_orderdate) AS yr
         |  FROM orders)
-        |GROUP BY yr""".stripMargin),
-    QueryRow("p83_sql_hour_profile", p83SqlHourProfile,
+        |GROUP BY yr""".stripMargin,
+      _.select(col("yr"), round3("n"), col("custs"), col("mx"))),
+    // p83: HOUR-OF-DAY PROFILE over the events table — `hour(ts)` under
+    // the engine-wide UTC timestamp contract (Tables.events normalizes
+    // every historical parquet encoding to one session-zoned ts; DuckDB
+    // reads the same file as a naive timestamp — identical wall-clock
+    // fields). The diurnal-activity shape every observability UI draws.
+    QueryRow.catalog("p83_sql_hour_profile", Seq("events"),
+      "select count(*) as n, sum(value) as sv, max(value) as mx from " +
+        "(select value, hour(ts) as hr from events " +
+        "where event_type = 'click') " +
+        "group by hr order by hr asc",
       """SELECT CAST(hr AS VARCHAR) AS hr,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n,
         |  round(sum(value), 3) AS sv, max(value) AS mx
         |FROM (SELECT value, hour(ts) AS hr FROM events
         |  WHERE event_type = 'click')
-        |GROUP BY hr""".stripMargin),
-    QueryRow("p84_sql_null_safe", p84SqlNullSafe,
+        |GROUP BY hr""".stripMargin,
+      _.select(col("hr"), round3("n"), round3("sv"), col("mx"))),
+    // p84: NULL-HANDLING scalars — `nullif` manufactures SQL NULLs from a
+    // sentinel (here: the sub-100 value band), `coalesce` pads them back,
+    // `greatest`/`least` clamp while SKIPPING nulls (null only when every
+    // argument is null — both engines agree). Exercises the aggregates'
+    // null discipline end-to-end: mean skips the manufactured nulls, sum
+    // treats them as zero-contribution.
+    QueryRow.sql("p84_sql_null_safe", "events",
+      "select count(*) as n, " +
+        "mean(nullif(floor(value / 100), 0)) as m_nz, " +
+        "sum(coalesce(nullif(floor(value / 100), 0), -1)) as s_pad, " +
+        "sum(least(value, 100)) as s_cap, " +
+        "max(greatest(value, 400)) as mx " +
+        "group by event_type order by n desc",
       // nullif manufactures NULLs (sub-100 band → floor() = 0 → NULL);
       // avg skips them, the engine's sum treats them as 0-contribution —
       // same value; greatest/least skip NULLs on both engines
@@ -7263,8 +6445,21 @@ object SparkEntry {
         |  round(sum(coalesce(nullif(floor(value / 100), 0), -1)), 3) AS s_pad,
         |  round(sum(least(value, 100)), 3) AS s_cap,
         |  round(max(greatest(value, 400)), 3) AS mx
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p85_sql_json", p85SqlJson,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round3("n"), round6("m_nz"),
+          round3("s_pad"), round3("s_cap"), round3("mx"))),
+    // p85: JSON PROPS EXTRACTION — the schemaless-event staple the
+    // reference's observability store implies but cannot spell.
+    // `json_num(props, 'k')` gates, aggregates (integer-valued sums are
+    // order-independent-exact), and `json_str` feeds count_distinct (the
+    // relaxed set-semantics guard). Missing keys are NULL on both engines;
+    // a simple-identifier key is parse-enforced so path-syntax differences
+    // never engage.
+    QueryRow.sql("p85_sql_json", "events",
+      "select sum(json_num(props, 'k')) as sk, " +
+        "count_distinct(json_str(props, 'k')) as dk " +
+        "where json_num(props, 'k') >= 10 " +
+        "group by event_type order by sk desc",
       // json_extract_string strips quotes like get_json_object; the k
       // values are integers, so the double sum is order-independent-exact
       """SELECT event_type,
@@ -7272,17 +6467,37 @@ object SparkEntry {
         |  CAST(count(DISTINCT json_extract_string(props, '$.k')) AS BIGINT) AS dk
         |FROM events
         |WHERE TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 10
-        |GROUP BY event_type""".stripMargin),
-    QueryRow("p85b_sql_json_raw", p85bSqlJsonRaw, p85bOracleSql),
+        |GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round3("sk"), col("dk"))),
+    // p85b: the RAW JSON projection — extract-and-gate as a plain
+    // row-wise enrichment (no aggregate), the form that STREAMS;
+    // st_json replays this row's oracle verbatim.
+    QueryRow.sql("p85b_sql_json_raw", "events",
+      "select event_id, json_num(props, 'k') as k, " +
+        "json_str(props, 'k') as ks " +
+        "where json_num(props, 'k') >= 95",
+      p85bOracleSql),
     QueryRow("st_json", stJson, buildClass = true, oracleSql = p85bOracleSql),
-    QueryRow("p89_sql_percent_rank", p89SqlPercentRank,
+    // p89: RELATIVE-POSITION ranks — percent_rank/cume_dist complete the
+    // rank family (the "where does this doc sit in its source's length
+    // distribution" normalizer feeding curriculum-style ordering).
+    // Identical definitions on both engines; the ORDER BY is total
+    // (n_chars, then unique doc_id), one window exchange.
+    QueryRow.sql("p89_sql_percent_rank", "documents",
+      "select doc_id, n_chars, " +
+        "percent_rank() over (partition by source order by n_chars asc, " +
+        "doc_id asc) as pr, " +
+        "cume_dist() over (partition by source order by n_chars asc, " +
+        "doc_id asc) as cd " +
+        "where lang = 'en' order by doc_id asc limit 400",
       """SELECT doc_id, n_chars,
         |  round(percent_rank() OVER (PARTITION BY source
         |    ORDER BY n_chars, doc_id), 6) AS pr,
         |  round(cume_dist() OVER (PARTITION BY source
         |    ORDER BY n_chars, doc_id), 6) AS cd
         |FROM documents WHERE lang = 'en'
-        |ORDER BY doc_id LIMIT 400""".stripMargin),
+        |ORDER BY doc_id LIMIT 400""".stripMargin,
+      _.select(col("doc_id"), col("n_chars"), round6("pr"), round6("cd"))),
     QueryRow("p90_sql_datediff", p90SqlDateDiff,
       // date_diff('day', start, end) boundary-counts exactly like
       // Spark's datediff(end, start) under UTC; the max is exact BIGINT
@@ -7293,19 +6508,46 @@ object SparkEntry {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderstatus = 'F'
         |GROUP BY o_orderpriority""".stripMargin),
-    QueryRow("p91_sql_corr", p91SqlCorr,
+    // p91: TWO-ARGUMENT dispersion — Pearson correlation and sample
+    // covariance, arguments riding the full measure grammar
+    // (`length(text)` is a scalar-function measure): n_chars vs the
+    // actual text length correlate ≈ 1 (the data-quality sanity check —
+    // "does the metadata column actually describe the blob"), doc_id vs
+    // n_chars ≈ 0 (the null hypothesis). Pairs with either side NULL are
+    // skipped on both engines; unweighted like stddev.
+    QueryRow.sql("p91_sql_corr", "documents",
+      "select corr(n_chars, length(text)) as c, " +
+        "covar_samp(n_chars, length(text)) as cv, " +
+        "corr(doc_id, n_chars) as c0, count(*) as n " +
+        "group by lang order by n desc",
       """SELECT lang, round(corr(n_chars, length(text)), 6) AS c,
         |  round(covar_samp(n_chars, length(text)), 3) AS cv,
         |  round(corr(doc_id, n_chars), 6) AS c0,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM documents GROUP BY lang""".stripMargin),
-    QueryRow("p92_sql_regr", p92SqlRegr,
+        |FROM documents GROUP BY lang""".stripMargin,
+      _.select(col("lang"), round6("c"), round3("cv"), round6("c0"),
+          round3("n"))),
+    // p92: LEAST-SQUARES REGRESSION — regr_slope/regr_intercept(y, x)
+    // with measure-grammar arguments (the x here is a JSON-extracted
+    // field): the front-door form of the a21 trend operator. Identical
+    // argument order and NULL-pair skipping on both engines.
+    QueryRow.sql("p92_sql_regr", "events",
+      "select regr_slope(value, json_num(props, 'k')) as sl, " +
+        "regr_intercept(value, json_num(props, 'k')) as ic, " +
+        "count(*) as n group by event_type order by n desc",
       """SELECT event_type,
         |  round(regr_slope(value, TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE)), 6) AS sl,
         |  round(regr_intercept(value, TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE)), 3) AS ic,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p93_sql_concat", p93SqlConcat,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round6("sl"), round3("ic"), round3("n"))),
+    // p93: CONCAT — NULL-propagating string concatenation building
+    // composite labels (`lang-source`), feeding distinct/group-by like
+    // any string expression; the oracle spells `||` (DuckDB's own
+    // concat() SKIPS nulls — documented trap, never used).
+    QueryRow.sql("p93_sql_concat", "documents",
+      "select distinct concat(lang, '-', source) as tag " +
+        "where n_chars > 450 order by tag asc",
       // `||` NULL-propagates on both engines (DuckDB's concat() skips
       // NULLs — never use it in an oracle)
       """SELECT DISTINCT lang || '-' || source AS tag
@@ -7347,7 +6589,14 @@ object SparkEntry {
         |  CASE WHEN lang = 'en' THEN upper(source) ELSE source END AS source,
         |  CASE WHEN lang = 'en' THEN n_chars * 2 + 1 ELSE n_chars END AS n_chars
         |FROM documents WHERE n_chars >= 200""".stripMargin),
-    QueryRow("p98_sql_star", p98SqlStar,
+    // p98: `select *` — the whole-row projection every SQL user types
+    // first, expanded at compile against the base frame's columns (order
+    // preserved); composes with where/order/limit like any raw
+    // projection, and the scan still prunes NOTHING here by design — the
+    // projection is the whole row.
+    QueryRow.catalog("p98_sql_star", Seq("documents"),
+      "select * from documents where lang = 'en' and n_chars >= 300 " +
+        "order by doc_id limit 50",
       """SELECT * FROM documents WHERE lang = 'en' AND n_chars >= 300
         |ORDER BY doc_id LIMIT 50""".stripMargin),
     QueryRow("p99_sql_warehouse", p99SqlWarehouse,
@@ -7361,11 +6610,33 @@ object SparkEntry {
         |  SELECT doc_id, lang, source, n_chars FROM documents
         |  WHERE source = 'src1' AND n_chars >= 100)
         |GROUP BY source ORDER BY mx DESC, n DESC""".stripMargin),
-    QueryRow("p100_sql_like", p100SqlLike,
+    // p100: positional LIKE — `_`/interior-`%` patterns compile to real
+    // SQL LIKE (edge-only patterns keep the tighter Contains/StartsWith
+    // desugar; the reference treats every pattern as raw contains,
+    // expr.rs:81-98 — documented fix). `sr_1%` matches src1 and
+    // src10-src19; NOT LIKE composes three-valued.
+    QueryRow.sql("p100_sql_like", "documents",
+      "select doc_id, source, n_chars where source like 'sr_1%' " +
+        "and source not like '%_9' and n_chars >= 400 order by doc_id",
       """SELECT doc_id, source, n_chars FROM documents
         |WHERE source LIKE 'sr_1%' AND source NOT LIKE '%_9'
         |  AND n_chars >= 400 ORDER BY doc_id""".stripMargin),
-    QueryRow("p101_sql_strings", p101SqlStrings,
+    // p101: STRING SURGERY at the front door — literal replace, 1-based
+    // field extraction (out-of-range → '' on both engines), padding with
+    // truncation, reversal, and strpos (1-based, 0 when absent — BIGINT,
+    // so it gates rows in WHERE). All compile to codegen'd Catalyst
+    // string expressions; search/separator/pad arguments are
+    // parse-enforced non-empty literals so engine-specific empty-pattern
+    // conventions never engage.
+    QueryRow.sql("p101_sql_strings", "orders",
+      "select o_orderkey, replace(o_orderpriority, '-', '_') as pri, " +
+        "split_part(o_orderpriority, '-', 2) as word, " +
+        "split_part(o_orderpriority, '-', 3) as oob, " +
+        "lpad(o_orderstatus, 3, '.') as padded, " +
+        "reverse(o_orderpriority) as rev, " +
+        "strpos(o_orderpriority, 'E') as ep " +
+        "where o_orderkey < 500 and strpos(o_orderpriority, 'I') > 0 " +
+        "order by o_orderkey",
       // literal search/replace and 1-based field ops — identical edge
       // semantics (out-of-range split_part → '', lpad truncates)
       """SELECT o_orderkey, replace(o_orderpriority, '-', '_') AS pri,
@@ -7377,7 +6648,19 @@ object SparkEntry {
         |FROM orders
         |WHERE o_orderkey < 500 AND strpos(o_orderpriority, 'I') > 0
         |ORDER BY o_orderkey""".stripMargin),
-    QueryRow("p102_sql_max_by", p102SqlMaxBy,
+    // p102: max_by/min_by — argmax as an AGGREGATE, DETERMINISTIC by
+    // contract (ties in the ordering value break toward the larger/
+    // smaller carried value — ANSI leaves ties undefined, which no oracle
+    // can verify). Compiled to ONE struct-ordered max/min: one hash
+    // aggregate with map-side partials, no window, no second pass — at
+    // 100 TB this is "latest value per key" without a sort. The carried
+    // value keeps its RAW type (l_linestatus is a string); the oracle
+    // mirrors the tie contract with DuckDB's own struct_pack max/min.
+    QueryRow.sql("p102_sql_max_by", "lineitem",
+      "select max_by(l_linestatus, l_extendedprice) as top_status, " +
+        "min_by(l_suppkey, l_quantity) as cheap_supp, " +
+        "max_by(l_extendedprice, l_quantity) as heavy_price " +
+        "group by l_returnflag order by l_returnflag",
       // DuckDB's max_by leaves ties undefined — the struct-ordered
       // max/min spells the SAME deterministic tie contract as the engine
       // (ties in o break toward the larger/smaller v)
@@ -7388,33 +6671,79 @@ object SparkEntry {
         |    AS cheap_supp,
         |  round((max(struct_pack(o := l_quantity, v := l_extendedprice))).v,
         |    3) AS heavy_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
-    QueryRow("p103_sql_string_agg", p103SqlStringAgg,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+      _.select(col("l_returnflag"), col("top_status"), col("cheap_supp"),
+          round3("heavy_price"))),
+    // p103: string_agg — a group's values joined by a literal separator,
+    // SORTED ascending by value (deterministic contract: ANSI's undefined
+    // order has no oracle; DuckDB spells the same contract with
+    // `ORDER BY` inside the call). NULLs are skipped; an all-null group
+    // is NULL, not ''. The one collect_list in the SQL registry — output
+    // size is the group's value payload, the same scale class as the
+    // result row itself.
+    QueryRow.sql("p103_sql_string_agg", "nation",
+      "select string_agg(n_name, ',') as nations, count(*) as n " +
+        "group by n_regionkey order by n_regionkey",
       // ORDER BY inside the call = the engine's sorted-ascending contract
       """SELECT CAST(n_regionkey AS VARCHAR) AS n_regionkey,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM nation GROUP BY n_regionkey""".stripMargin),
-    QueryRow("p104_sql_count_distinct", p104SqlCountDistinct,
+        |FROM nation GROUP BY n_regionkey""".stripMargin,
+      _.select(col("n_regionkey"), col("nations"), round3("n"))),
+    // p104: count(distinct x) — the ANSI spelling next to the reference's
+    // +1-nil count_distinct (a5): NULL is NOT counted, so a CASE-gated
+    // argument counts only the rows that satisfy the gate ("distinct
+    // heavy users") — the conditional-distinct staple. Compiles to
+    // Spark's count_distinct (expand + two-phase aggregate).
+    QueryRow.sql("p104_sql_count_distinct", "events",
+      "select count(distinct case when value > 90 then user_id end) " +
+        "as heavy_users, count(distinct event_type) as kinds, " +
+        "count(*) as n group by event_type order by event_type",
       // ANSI distinct: NULL (the CASE fall-through) is NOT counted
       """SELECT event_type,
         |  CAST(count(DISTINCT CASE WHEN value > 90 THEN user_id END)
         |    AS BIGINT) AS heavy_users,
         |  CAST(count(DISTINCT event_type) AS BIGINT) AS kinds,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p105_sql_offset", p105SqlOffset,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), col("heavy_users"), col("kinds"), round3("n"))),
+    // p105: LIMIT/OFFSET pagination — rows m+1 … m+n of a TOTAL order
+    // (doc_id breaks n_chars ties). Spark folds offset+limit into one
+    // TakeOrdered boundary: the page costs what the first m+n rows cost,
+    // never a global materialization — the 100 TB-safe page fetch.
+    QueryRow.sql("p105_sql_offset", "documents",
+      "select doc_id, source, n_chars where n_chars >= 200 " +
+        "order by n_chars desc, doc_id limit 25 offset 40",
       """SELECT doc_id, source, n_chars FROM documents
         |WHERE n_chars >= 200
         |ORDER BY n_chars DESC, doc_id LIMIT 25 OFFSET 40""".stripMargin),
-    QueryRow("p106_sql_nulls_order", p106SqlNullsOrder,
+    // p106: explicit `nulls first/last` — the engines' DEFAULTS DIFFER
+    // (Spark ASC puts nulls first, DuckDB last), so a nullable sort key
+    // must spell the placement to be portable; here a CASE-gated measure
+    // is null on ~half the rows and the spelled `nulls last` makes both
+    // engines agree on the page.
+    QueryRow.sql("p106_sql_nulls_order", "events",
+      "select event_id, case when value > 50 then value end as v " +
+        "where event_id < 160 order by v desc nulls last, event_id limit 150",
       // the spelled placement is what makes the two engines agree —
       // their ASC/DESC defaults for NULLs are opposite
       """SELECT event_id,
         |  round(CASE WHEN value > 50 THEN value END, 3) AS v
         |FROM events WHERE event_id < 160
-        |ORDER BY v DESC NULLS LAST, event_id LIMIT 150""".stripMargin),
-    QueryRow("p107_sql_date_trunc", p107SqlDateTrunc,
+        |ORDER BY v DESC NULLS LAST, event_id LIMIT 150""".stripMargin,
+      _.select(col("event_id"), round3("v"))),
+    // p107: date_trunc — the CALENDAR ROLLUP key (p82's field extractors
+    // label rows with numbers; this yields the real month TIMESTAMP, so
+    // the rollup keeps calendar identity). The truncation projects in a
+    // derived table and the outer groups by it — Catalyst collapses the
+    // composition into one scan+aggregate pass, and the group key renders
+    // through the engine's string carrier like every key. DuckDB returns
+    // DATE for day-and-coarser units, so the oracle casts to TIMESTAMP
+    // first.
+    QueryRow.catalog("p107_sql_date_trunc", Seq("orders"),
+      "select count(*) as n, max(o_totalprice) as mx from " +
+        "(select date_trunc('month', o_orderdate) as mo, o_totalprice " +
+        "from orders where o_orderkey < 3000) group by mo order by mo",
       // DuckDB date_trunc returns DATE for day-and-coarser units — cast
       // to TIMESTAMP to match the engine's timestamp contract; the group
       // key then renders through the string carrier like every key
@@ -7423,8 +6752,18 @@ object SparkEntry {
         |  round(CAST(count(*) AS DOUBLE), 3) AS n,
         |  round(max(o_totalprice), 3) AS mx
         |FROM orders WHERE o_orderkey < 3000
-        |GROUP BY 1""".stripMargin),
-    QueryRow("p108_sql_mod_sign", p108SqlModSign,
+        |GROUP BY 1""".stripMargin,
+      _.select(col("mo"), round3("n"), round3("mx"))),
+    // p108: `%` and sign() — modulo bucketing (the poor man's hash
+    // partition key) and signum. The remainder is C-style (sign of the
+    // DIVIDEND, null on a zero divisor) computed in double like every
+    // measure; DuckDB's `%` agrees exactly — its fmod() is the FLOORED
+    // variant and never appears in an oracle. sign() is DOUBLE here,
+    // integer-typed in DuckDB (the oracle casts).
+    QueryRow.catalog("p108_sql_mod_sign", Seq("lineitem"),
+      "select count(*) as n, sum(sign(l_extendedprice - 30000)) as bal from " +
+        "(select l_orderkey % 7 as b, l_extendedprice from lineitem) " +
+        "group by b order by b",
       // `%` (NOT fmod — DuckDB's fmod is floored): sign-of-dividend
       // remainder, double like the engine's measures; sign() casts to
       // DOUBLE (DuckDB's is integer-typed)
@@ -7432,8 +6771,17 @@ object SparkEntry {
         |  round(CAST(count(*) AS DOUBLE), 3) AS n,
         |  round(sum(CAST(sign(l_extendedprice - 30000) AS DOUBLE)), 3)
         |    AS bal
-        |FROM lineitem GROUP BY 1""".stripMargin),
-    QueryRow("p109_sql_percentile", p109SqlPercentile,
+        |FROM lineitem GROUP BY 1""".stripMargin,
+      _.select(col("b"), round3("n"), round3("bal"))),
+    // p109: percentile(x, q) — the ARBITRARY exact interpolated quantile
+    // (p50/p90/p99 generalize to any literal q; DuckDB: quantile_cont);
+    // expression measures quantile too. Alias required — two quantiles of
+    // one column must not collide on a default name.
+    QueryRow.sql("p109_sql_percentile", "lineitem",
+      "select percentile(l_extendedprice, 0.25) as q1, " +
+        "percentile(l_extendedprice, 0.75) as q3, " +
+        "percentile(l_quantity * (1 - l_discount), 0.9) as eff90 " +
+        "group by l_returnflag order by l_returnflag",
       // exact interpolated quantiles — quantile_cont is DuckDB's
       // spelling of the same interpolation; 6dp like a11
       """SELECT l_returnflag,
@@ -7441,8 +6789,18 @@ object SparkEntry {
         |  round(quantile_cont(l_extendedprice, 0.75), 6) AS q3,
         |  round(quantile_cont(l_quantity * (1 - l_discount), 0.9), 6)
         |    AS eff90
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
-    QueryRow("p110_sql_having_bool", p110SqlHavingBool,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+      _.select(col("l_returnflag"), round6("q1"), round6("q3"), round6("eff90"))),
+    // p110: boolean HAVING — `(… or …) and not …` over aggregate
+    // comparisons, the same OR/AND/NOT/parens structure WHERE has (the
+    // legacy HAVING was AND-only). Filter-only aggregates (max/min here)
+    // ride the same hash aggregate and are pruned from the output; the
+    // whole filter runs post-aggregation, so at scale it prunes groups
+    // before any sort stage. NOT is three-valued like SQL.
+    QueryRow.sql("p110_sql_having_bool", "events",
+      "select count(*) as n, mean(value) as m group by user_id " +
+        "having (mean(value) > 52 or max(value) > 300) " +
+        "and not min(value) < 0.5 order by user_id",
       // boolean HAVING over aggregate comparisons — the group key
       // renders through the engine's string carrier
       """SELECT CAST(user_id AS VARCHAR) AS user_id,
@@ -7450,14 +6808,23 @@ object SparkEntry {
         |  round(avg(value), 6) AS m
         |FROM events GROUP BY user_id
         |HAVING (avg(value) > 52 OR max(value) > 300)
-        |  AND NOT min(value) < 0.5""".stripMargin),
-    QueryRow("p111_sql_dow", p111SqlDow,
+        |  AND NOT min(value) < 0.5""".stripMargin,
+      _.select(col("user_id"), round3("n"), round6("m"))),
+    // p111: isodow/second — the day-of-week profile (p83's hour profile
+    // by calendar DAY instead): isodow is ISO 1=Monday…7=Sunday on both
+    // engines (Spark spells it weekday()+1), second truncates the
+    // fraction on both. Same one-pass derived-key collapse as p107.
+    QueryRow.catalog("p111_sql_dow", Seq("events"),
+      "select count(*) as n, mean(value) as m, count(distinct sec) as secs " +
+        "from (select isodow(ts) as dw, second(ts) as sec, value " +
+        "from events) group by dw order by dw",
       // isodow is 1=Monday on both engines; second truncates fractions
       """SELECT CAST(isodow(ts) AS VARCHAR) AS dw,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n,
         |  round(avg(value), 6) AS m,
         |  CAST(count(DISTINCT second(ts)) AS BIGINT) AS secs
-        |FROM events GROUP BY 1""".stripMargin),
+        |FROM events GROUP BY 1""".stripMargin,
+      _.select(col("dw"), round3("n"), round6("m"), col("secs"))),
     QueryRow("p112_sql_insert_values", p112SqlInsertValues,
       // the created slice plus the literal rows, as a bag — DuckDB types
       // VALUES per column, the casts pin BIGINT/VARCHAR parity
@@ -7469,14 +6836,33 @@ object SparkEntry {
         |   CAST('manual' AS VARCHAR), CAST(42 AS BIGINT)),
         |  (CAST(9000002 AS BIGINT), NULL, 'manual', CAST(7 AS BIGINT)))
         |  v(doc_id, lang, source, n_chars)""".stripMargin),
-    QueryRow("p113_sql_str_extremes", p113SqlStrExtremes,
+    // p113: max/min of STRING EXPRESSIONS — the lexical extreme ("last
+    // language seen", "first tag"). A bare string column keeps the
+    // reference's parse-on-demand NUMERIC aggregate semantics
+    // (lib.rs:566-572); a typed string expression aggregates in its type.
+    // Binary/UTF8 order agrees across engines for the ASCII corpus.
+    QueryRow.sql("p113_sql_str_extremes", "documents",
+      "select max(upper(lang)) as last_lang, " +
+        "min(concat(lang, '-', source)) as first_tag, " +
+        "count(*) as n group by source order by source",
       // lexical max/min of string EXPRESSIONS — `||` NULL-propagates
       // like the engine's concat; binary order on ASCII data
       """SELECT source, max(upper(lang)) AS last_lang,
         |  min(lang || '-' || source) AS first_tag,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM documents GROUP BY source""".stripMargin),
-    QueryRow("p114_sql_nth_value", p114SqlNthValue,
+        |FROM documents GROUP BY source""".stripMargin,
+      _.select(col("source"), col("last_lang"), col("first_tag"), round3("n"))),
+    // p114: nth_value — the partition's n-th row in ORDER BY order over
+    // the FULL frame ("who is the runner-up in each source"), composed
+    // with row_number + QUALIFY for the keep-best-with-context shape.
+    // Both windows share the one partition exchange.
+    QueryRow.sql("p114_sql_nth_value", "documents",
+      "select source, doc_id, n_chars, " +
+        "nth_value(doc_id, 2) over (partition by source " +
+        "order by n_chars desc, doc_id) as runner_up, " +
+        "row_number() over (partition by source " +
+        "order by n_chars desc, doc_id) as rn " +
+        "qualify rn = 1 order by source",
       // nth_value needs the FULL frame spelled in DuckDB (its default
       // running frame nulls the result until the n-th row arrives)
       """SELECT source, doc_id, n_chars, runner_up, rn FROM (
@@ -7511,7 +6897,13 @@ object SparkEntry {
       // version-0 EXCEPT current = exactly the deleted rows
       """SELECT doc_id, lang, n_chars FROM documents
         |WHERE n_chars >= 450 AND n_chars < 470""".stripMargin),
-    QueryRow("p118_sql_ifnull", p118SqlIfnull,
+    // p118: ifnull/nvl — the two-argument coalesce spellings users type;
+    // a CASE-gated measure is null on the fall-through, ifnull turns the
+    // fall-through into the default so the sum counts every row.
+    QueryRow.sql("p118_sql_ifnull", "events",
+      "select sum(ifnull(case when value > 50 then value end, 0)) as s1, " +
+        "mean(nvl(case when value > 50 then 1 end, 0)) as heavy_rate, " +
+        "count(*) as n group by event_type order by event_type",
       // ifnull is DuckDB-native; both engines take the first non-null
       """SELECT event_type,
         |  round(sum(ifnull(CASE WHEN value > 50 THEN value END, 0)), 3)
@@ -7519,8 +6911,24 @@ object SparkEntry {
         |  round(avg(ifnull(CASE WHEN value > 50 THEN 1 END, 0)), 6)
         |    AS heavy_rate,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p119_sql_filter_agg", p119SqlFilterAgg,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round3("s1"), round6("heavy_rate"),
+          round3("n"))),
+    // p119: ANSI FILTER clause — five differently-gated aggregates in ONE
+    // hash aggregate (the parser rewrites each `filter (where c)` into a
+    // CASE measure, so the plan keeps a single exchange; DuckDB runs its
+    // native FILTER). Contracts under filter: sum keeps missing-as-zero
+    // (the oracle coalesces), mean/max/min of an empty filtered set are
+    // NULL on both engines, count(distinct …) skips gated-out rows, and
+    // max_by gates its ORDERING value (a NULL ordering key skips the row
+    // by the p102 contract — the oracle gates the whole struct).
+    QueryRow.sql("p119_sql_filter_agg", "events",
+      "select sum(value) filter (where value > 120) as hi_sum, " +
+        "count(*) filter (where user_id % 2 = 0) as even_n, " +
+        "mean(value) filter (where value <= 40) as lo_mean, " +
+        "count(distinct user_id) filter (where value > 150) as hot_users, " +
+        "max_by(event_id, value) filter (where value < 100) as mid_peak, " +
+        "count(*) as n group by event_type order by event_type",
       // native DuckDB FILTER; sum coalesced (engine missing-as-zero
       // contract), max_by via the p102 struct trick with FILTER on the
       // struct max (NULL gate = row skipped, same as the engine's gated
@@ -7539,8 +6947,22 @@ object SparkEntry {
         |  round(CAST((max(struct_pack(o := value, v := event_id))
         |    FILTER (WHERE value < 100)).v AS DOUBLE), 3) AS mid_peak,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p120_sql_bool_agg", p120SqlBoolAgg,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), round3("hi_sum"), round3("even_n"),
+          round6("lo_mean"), col("hot_users"),
+          round(col("mid_peak").cast("double"), 3).as("mid_peak"),
+          round3("n"))),
+    // p120: bool_and/bool_or — boolean quantifiers over a full
+    // WHERE-grammar predicate ("every row satisfies" / "some row does"),
+    // desugared to a three-valued 1/0/NULL indicator so NULL predicates
+    // are SKIPPED exactly like DuckDB's native bool_and/bool_or. One
+    // codegen'd hash aggregate; BOOLEAN outputs hash-compare directly.
+    QueryRow.sql("p120_sql_bool_agg", "events",
+      "select bool_and(value > 0.02) as all_above, " +
+        "bool_or(value > 360) as has_spike, " +
+        "bool_or(value > 120 and user_id % 2 = 0) as even_heavy, " +
+        "bool_and(value > 500) filter (where value > 400) as spikes_hot, " +
+        "count(*) as n group by event_type order by event_type",
       // DuckDB-native quantifiers: NULL predicates skipped on both
       // engines (our 1/0/NULL indicator ≡ its native skip); the
       // filtered quantifier over an empty subset is NULL on both
@@ -7550,8 +6972,19 @@ object SparkEntry {
         |  bool_or(value > 120 AND user_id % 2 = 0) AS even_heavy,
         |  bool_and(value > 500) FILTER (WHERE value > 400) AS spikes_hot,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY event_type""".stripMargin),
-    QueryRow("p121_sql_moments", p121SqlMoments,
+        |FROM events GROUP BY event_type""".stripMargin,
+      _.select(col("event_type"), col("all_above"), col("has_spike"),
+          col("even_heavy"), col("spikes_hot"), round3("n"))),
+    // p121: skewness/kurtosis — POPULATION skewness and EXCESS kurtosis
+    // (Spark's native central-moment formulas). DuckDB's own skewness()/
+    // kurtosis() are the bias-corrected SAMPLE forms — a real semantic
+    // difference — so the oracle spells the population formula explicitly
+    // via a two-pass central-moment computation (stable, no raw-moment
+    // cancellation).
+    QueryRow.sql("p121_sql_moments", "events",
+      "select skewness(value) as skew, kurtosis(value) as kurt, " +
+        "stddev(value) as sd, count(*) as n " +
+        "group by event_type order by event_type",
       // POPULATION skewness / EXCESS kurtosis spelled as explicit
       // central moments (DuckDB's own skewness/kurtosis are the
       // bias-corrected SAMPLE forms — different statistics); two-pass
@@ -7566,8 +6999,17 @@ object SparkEntry {
         |  round(stddev_samp(e.value), 6) AS sd,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM events e JOIN m ON e.event_type = m.event_type
-        |GROUP BY e.event_type""".stripMargin),
-    QueryRow("p122_sql_multi_distinct", p122SqlMultiDistinct,
+        |GROUP BY e.event_type""".stripMargin,
+      _.select(col("event_type"), round6("skew"), round6("kurt"),
+          round6("sd"), round3("n"))),
+    // p122: count(distinct a, b) — multi-key distinct counting in ONE
+    // pass; the distinct key is the pair, and rows where EITHER side is
+    // NULL are skipped (ANSI; lineitem has no NULLs, so the spec pins
+    // the skip semantics on a null-bearing fixture instead).
+    QueryRow.sql("p122_sql_multi_distinct", "lineitem",
+      "select count(distinct l_orderkey, l_partkey) as order_parts, " +
+        "count(distinct l_suppkey, l_linestatus) as supp_status, " +
+        "count(*) as n group by l_returnflag order by l_returnflag",
       // the pair-struct distinct — equal to Spark's multi-arg
       // countDistinct on null-free keys (the ANSI any-null skip is
       // spec-pinned on a null-bearing fixture)
@@ -7575,8 +7017,21 @@ object SparkEntry {
         |  count(DISTINCT (l_orderkey, l_partkey)) AS order_parts,
         |  count(DISTINCT (l_suppkey, l_linestatus)) AS supp_status,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
-    QueryRow("p123_sql_pivot", p123SqlPivot,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+      _.select(col("l_returnflag"), col("order_parts"), col("supp_status"),
+          round3("n"))),
+    // p123: conditional-aggregation pivot — `pivot <agg>(<m>) by <col>
+    // in (…)` desugars each value to a filtered aggregate, so the whole
+    // K-column pivot is ONE hash aggregate (the plan conditional
+    // aggregation would hand-write; no pivot physical operator, no
+    // second pass). Value list explicit and literal by design: dynamic
+    // pivot's output schema would be data-dependent — two passes and a
+    // 100 TB anti-pattern.
+    QueryRow.sql("p123_sql_pivot", "events",
+      "select pivot sum(value) by event_type in " +
+        "('click', 'view' as views, 'purchase'), " +
+        "pivot count(*) by event_type in ('error' as err_n, 'signup' as signup_n), " +
+        "count(*) as n group by user_id order by user_id",
       // the pivot IS conditional aggregation — the oracle writes the
       // desugared form directly; sum cells keep missing-as-zero
       """SELECT CAST(user_id AS VARCHAR) AS user_id,
@@ -7591,8 +7046,19 @@ object SparkEntry {
         |  round(CAST(count(*) FILTER (WHERE event_type = 'signup')
         |    AS DOUBLE), 3) AS signup_n,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY user_id""".stripMargin),
-    QueryRow("p124_sql_mode", p124SqlMode,
+        |FROM events GROUP BY user_id""".stripMargin,
+      _.select(col("user_id"), round3("click"), round3("views"),
+          round3("purchase"), round3("err_n"), round3("signup_n"), round3("n"))),
+    // p124: deterministic mode — most frequent value per group, ties
+    // toward the SMALLEST value (Spark mode(expr, deterministic=true);
+    // ANSI/DuckDB leave ties undefined, so the oracle spells the same
+    // contract as ORDER BY count DESC, value ASC). Carriers: numeric
+    // measure, string expression, calendar field.
+    QueryRow.sql("p124_sql_mode", "lineitem",
+      "select mode(l_quantity) as common_qty, " +
+        "mode(upper(l_linestatus)) as common_status, " +
+        "mode(month(l_shipdate)) as common_month, " +
+        "count(*) as n group by l_returnflag order by l_returnflag",
       // deterministic mode = ORDER BY count DESC, value ASC, rank 1 —
       // one two-level block per carrier, joined on the group
       """WITH q AS (SELECT l_returnflag g, l_quantity v, count(*) c
@@ -7618,8 +7084,24 @@ object SparkEntry {
         |  CAST(mm.v AS BIGINT) AS common_month,
         |  round(CAST(base.n AS DOUBLE), 3) AS n
         |FROM base JOIN qm ON base.g = qm.g JOIN sm ON base.g = sm.g
-        |  JOIN mm ON base.g = mm.g""".stripMargin),
-    QueryRow("p125_sql_regexp", p125SqlRegexp,
+        |  JOIN mm ON base.g = mm.g""".stripMargin,
+      _.select(col("l_returnflag"), round3("common_qty"),
+          col("common_status"), col("common_month"), round3("n"))),
+    // p125: regexp at the front door — `col [not] regexp 'pat'`
+    // predicates (WHERE and inside bool_or), and regexp_extract as a
+    // string function feeding distinct counting. Patterns are parse-
+    // restricted to the java.regex ∩ RE2 portable subset (no lookaround/
+    // backreferences) so the two engines can never disagree; regex never
+    // pushes into the scan — the sibling LIKE/equality conjuncts still
+    // do.
+    QueryRow.sql("p125_sql_regexp", "documents",
+      "select count(*) as n, " +
+        "count(distinct regexp_extract(source, '^src([0-9]+)$', 1)) " +
+        "as src_ids, " +
+        "bool_or(text regexp 'vector (join|batch)') as has_vec_pair, " +
+        "mean(n_chars) as mc " +
+        "where text regexp 'spark' and lang not regexp '^(zh|ko)$' " +
+        "group by lang order by lang",
       // regexp_matches = regexp_like; both engines '' -extract on no
       // match; the portable-subset pattern means RE2 and java.regex
       // read it identically
@@ -7633,7 +7115,9 @@ object SparkEntry {
         |FROM documents
         |WHERE regexp_matches(text, 'spark')
         |  AND NOT regexp_matches(lang, '^(zh|ko)$')
-        |GROUP BY lang""".stripMargin),
+        |GROUP BY lang""".stripMargin,
+      _.select(col("lang"), round3("n"), col("src_ids"),
+          col("has_vec_pair"), round6("mc"))),
     QueryRow("p126_sql_view", p126SqlView,
       // the script as one relational expression: the view layers are
       // plain CTEs with the post-view insert INSIDE the base — exactly
@@ -7649,7 +7133,16 @@ object SparkEntry {
         |SELECT lang, round(CAST(count(*) AS DOUBLE), 3) AS n,
         |  round(CAST(max(n_chars) AS DOUBLE), 3) AS mx
         |FROM west_big GROUP BY lang""".stripMargin),
-    QueryRow("p127_sql_filter_share", p127SqlFilterShare,
+    // p127: filtered aggregates INSIDE post-aggregate arithmetic — the
+    // "share of X" shape every dashboard needs: `sum(v) filter (where c)
+    // / sum(v)`. The gated and ungated sums ride ONE hash aggregate
+    // (internal __pa aliases, deduped by shape including the gate), and
+    // the ratio is a scalar projection after the exchange.
+    QueryRow.sql("p127_sql_filter_share", "events",
+      "select sum(value) filter (where event_type = 'purchase') / " +
+        "sum(value) as purchase_share, " +
+        "count(*) filter (where value > 150) / count(*) as heavy_rate, " +
+        "count(*) as n group by user_id order by user_id",
       // the engine's sum keeps missing-as-zero, so the numerator
       // coalesces; division by the never-zero denominator matches the
       // null-on-zero-divisor contract on both engines
@@ -7659,8 +7152,20 @@ object SparkEntry {
         |  round(CAST(count(*) FILTER (WHERE value > 150) AS DOUBLE)
         |    / count(*), 6) AS heavy_rate,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
-        |FROM events GROUP BY user_id""".stripMargin),
-    QueryRow("p128_sql_monthly_pivot", p128SqlMonthlyPivot,
+        |FROM events GROUP BY user_id""".stripMargin,
+      _.select(col("user_id"), round6("purchase_share"),
+          round6("heavy_rate"), round3("n"))),
+    // p128: the features compose — a calendar rollup pivoted by event
+    // type: derived-table day-of-month extraction (p82) under a pivot (p123)
+    // with a gated branch (p119), still ONE hash aggregate over the
+    // derived projection.
+    QueryRow.catalog("p128_sql_monthly_pivot", Seq("events"),
+      "select pivot count(*) by event_type in " +
+        "('click', 'view' as views, 'purchase'), " +
+        "pivot sum(value) filter (where value > 100) by event_type in " +
+        "('purchase' as hot_purchase), " +
+        "count(*) as n from (select event_type, value, day(ts) as d " +
+        "from events) group by d order by d",
       // month() under a pivot — conditional aggregation over the
       // derived calendar key; sum cells keep missing-as-zero
       """SELECT CAST(d AS VARCHAR) AS d,
@@ -7674,7 +7179,9 @@ object SparkEntry {
         |    'purchase' AND value > 100), 0), 3) AS hot_purchase,
         |  round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM (SELECT event_type, value, day(ts) AS d FROM events)
-        |GROUP BY d""".stripMargin),
+        |GROUP BY d""".stripMargin,
+      _.select(col("d"), round3("click"), round3("views"),
+          round3("purchase"), round3("hot_purchase"), round3("n"))),
     QueryRow("p129_sql_show_tables", p129SqlShowTables,
       // the literal expected catalog: sh2 dropped, sh1 + the view live
       """SELECT 'sh1' AS table_name UNION ALL SELECT 'shv'"""),
@@ -7694,13 +7201,30 @@ object SparkEntry {
         |FROM e ASOF LEFT JOIN m
         |  ON e.user_id = m.r_user AND e.event_type = m.r_type
         |  AND e.ts_sec >= m.r_ts""".stripMargin),
-    QueryRow("p86_sql_explode", p86SqlExplode,
+    // p86: EXPLODE + aggregate — the word/tag-count shape: unnest a
+    // delimited string column in a derived table, count elements in the
+    // outer (the reference stores "t1,t2" tag lists it can only
+    // CONTAINS-probe, lib.rs:486-495 — this is their relational form).
+    // The explode is ONE stateless narrow row-multiplier (zero shuffles)
+    // feeding the count's single hash exchange; top-k is
+    // group-key-tiebroken (deterministic).
+    QueryRow.catalog("p86_sql_explode", Seq("documents"),
+      "select count(*) as n from " +
+        "(select explode(text, ' ') as w from documents where lang = 'en') " +
+        "group by w order by n desc limit 25",
       // engine top-k appends the group key ascending as the tiebreak
       """SELECT w, round(CAST(count(*) AS DOUBLE), 3) AS n
         |FROM (SELECT unnest(string_split(text, ' ')) AS w
         |  FROM documents WHERE lang = 'en')
-        |GROUP BY w ORDER BY count(*) DESC, w ASC LIMIT 25""".stripMargin),
-    QueryRow("p86b_sql_explode_raw", p86bSqlExplodeRaw, p86bOracleSql),
+        |GROUP BY w ORDER BY count(*) DESC, w ASC LIMIT 25""".stripMargin,
+      _.select(col("w"), round3("n"))),
+    // p86b: the RAW exploded projection — (doc_id, element) pairs with
+    // the gate pushed into the scan; the stream-facing form (st_explode
+    // replays this row's oracle verbatim).
+    QueryRow.sql("p86b_sql_explode_raw", "documents",
+      "select doc_id, explode(text, ' ') as w " +
+        "where lang = 'zh' and n_chars < 150",
+      p86bOracleSql),
     QueryRow("st_explode", stExplode, buildClass = true, oracleSql = p86bOracleSql),
     QueryRow("p87_sql_moving_avg", p87SqlMovingAvg,
       """SELECT user_id, event_id,
@@ -7709,23 +7233,45 @@ object SparkEntry {
         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS mv7
         |FROM events WHERE user_id < 20
         |ORDER BY user_id, event_id LIMIT 500""".stripMargin),
-    QueryRow("p88_sql_sample_per", p88SqlSamplePer,
+    // p88: EXACT-count sample PER GROUP — `sample exact 50 per source`:
+    // exactly 50 docs from every source, rerun-stable (the p66 md5 coin,
+    // key-tiebroken, now ranked within each group). Unlike the global
+    // form the cut is never driver-resident: the rank window's rn <= n
+    // compiles to per-partition WindowGroupLimit — each input partition
+    // forwards ≤ 50 rows per source to one hash exchange — so the
+    // stratified split holds at 100 TB with NO bound on n.
+    QueryRow.catalog("p88_sql_sample_per", Seq("documents"),
+      "select sample exact 50 per source from documents where n_chars > 100",
       // the p66 md5 coin ranked WITHIN each source; QUALIFY is DuckDB's
       // native per-group cut; the sample faces prune the text blob
       s"""SELECT doc_id, lang, source, n_chars FROM documents
          |WHERE n_chars > 100
          |QUALIFY row_number() OVER (PARTITION BY source
          |  ORDER BY ${duckShingleHash("doc_id::VARCHAR")}, doc_id) <= 50""".stripMargin),
-    QueryRow("p60_sql_union", p60SqlUnion,
+    // p60: `union` between two gated sub-queries — the corpus-slice
+    // composition shape ("the long docs plus everything from src1, as one
+    // deduped slice"). Plain `union` is SQL-standard distinct; the gates
+    // OVERLAP by construction so the dedup is load-bearing in the oracle
+    // compare. Each branch keeps its own pushed-down gate.
+    QueryRow.catalog("p60_sql_union", Seq("documents"),
+      "select doc_id, source from documents where n_chars > 300 " +
+        "union select doc_id, source from documents where source = 'src1'",
       // overlapping gates, so the UNION's dedup is load-bearing
       """SELECT doc_id, source FROM documents WHERE n_chars > 300
         |UNION
         |SELECT doc_id, source FROM documents WHERE source = 'src1'""".stripMargin),
-    QueryRow("p63_sql_except", p63SqlExcept,
+    // p63: `except` — subtract a slice from a slice (the "drop the
+    // contaminated sources from the long-docs cut" shape). SQL-standard
+    // DISTINCT set semantics, like p60's union.
+    QueryRow.catalog("p63_sql_except", Seq("documents"),
+      "select doc_id, source from documents where n_chars > 300 " +
+        "except select doc_id, source from documents where source = 'src1'",
       """SELECT doc_id, source FROM documents WHERE n_chars > 300
         |EXCEPT
         |SELECT doc_id, source FROM documents WHERE source = 'src1'""".stripMargin),
-    QueryRow("p64_sql_intersect", p64SqlIntersect,
+    QueryRow.catalog("p64_sql_intersect", Seq("documents"),
+      "select doc_id, lang from documents where n_chars > 300 " +
+        "intersect select doc_id, lang from documents where lang = 'en'",
       """SELECT doc_id, lang FROM documents WHERE n_chars > 300
         |INTERSECT
         |SELECT doc_id, lang FROM documents WHERE lang = 'en'""".stripMargin),
@@ -7755,7 +7301,20 @@ object SparkEntry {
         |  CAST(count(n_events) AS DOUBLE) AS n_matched
         |FROM prof FULL JOIN customer ON user_id = c_custkey
         |GROUP BY 1""".stripMargin),
-    QueryRow("p67_sql_cte", p67SqlCte,
+    // p67: CTEs at the front door — `with` names two statement-level
+    // frames: a set-op UNION body (a compound INSIDE the CTE, which a
+    // derived table cannot spell) and an aggregate body reading the
+    // first CTE (per-key totals via the derived-table-inner rule); the
+    // main statement gates the second CTE's output. DuckDB replays the
+    // WITH natively.
+    QueryRow.catalog("p67_sql_cte", Seq("documents"),
+      "with merged as (" +
+        "select doc_id, source, n_chars from documents where n_chars > 300 " +
+        "union " +
+        "select doc_id, source, n_chars from documents where source = 'src1'), " +
+        "per_src as (select count(*) as n, sum(n_chars) as chars " +
+        "from merged group by source) " +
+        "select source, n, chars from per_src where n > 5 order by source",
       // the same WITH, replayed natively; engine counts/sums are weighted
       // DOUBLEs and the group key renders as the output column
       """WITH merged AS (
@@ -7767,15 +7326,35 @@ object SparkEntry {
         |    CAST(sum(coalesce(n_chars, 0)) AS DOUBLE) AS chars
         |  FROM merged GROUP BY source)
         |SELECT source, round(n, 3) AS n, round(chars, 3) AS chars
-        |FROM per_src WHERE n > 5 ORDER BY source""".stripMargin),
-    QueryRow("p68_sql_window_qualify", p68SqlWindowQualify,
+        |FROM per_src WHERE n > 5 ORDER BY source""".stripMargin,
+      _.select(col("source"), round3("n"), round3("chars"))),
+    // p68: analytic window functions + QUALIFY — the dedup-keep-best
+    // primitive: top-2 longest docs per (lang, source), ranked by a
+    // row_number with a unique tiebreak (total order ⇒ deterministic
+    // cut), filtered by `qualify rn <= 2`, which Spark rewrites to
+    // per-partition WindowGroupLimit (each input partition forwards ≤ k
+    // rows per group to the ONE window exchange — the 100 TB-safe
+    // top-N-per-group). DuckDB replays with native QUALIFY.
+    QueryRow.sql("p68_sql_window_qualify", "documents",
+      "select doc_id, lang, source, n_chars, " +
+        "row_number() over (partition by lang, source " +
+        "order by n_chars desc, doc_id) as rn " +
+        "where n_chars > 100 qualify rn <= 2 order by lang, source, rn",
       // native QUALIFY; Spark row_number is INT (DuckDB's is BIGINT)
       """SELECT doc_id, lang, source, n_chars,
         |  CAST(row_number() OVER (PARTITION BY lang, source
         |    ORDER BY n_chars DESC, doc_id) AS INT) AS rn
         |FROM documents WHERE n_chars > 100
         |QUALIFY rn <= 2 ORDER BY lang, source, rn""".stripMargin),
-    QueryRow("p69_sql_lag_lead", p69SqlLagLead,
+    // p69: lag/lead offsets — previous/next value per user in event-time
+    // order (the session-delta primitive). Both items share one window
+    // spec, so Catalyst collapses them into ONE Window operator behind
+    // ONE exchange on user_id (PlanSpec-pinned).
+    QueryRow.sql("p69_sql_lag_lead", "events",
+      "select event_id, user_id, value, " +
+        "lag(value) over (partition by user_id order by ts, event_id) as prev_value, " +
+        "lead(value) over (partition by user_id order by ts, event_id) as next_value " +
+        "where value >= 1 order by user_id, event_id limit 500",
       // one shared window spec; ts order replays identically on the raw
       // parquet timestamp (same total order under the UTC normalization)
       """SELECT event_id, user_id, value,
@@ -7783,7 +7362,13 @@ object SparkEntry {
         |  lead(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_value
         |FROM events WHERE value >= 1
         |ORDER BY user_id, event_id LIMIT 500""".stripMargin),
-    QueryRow("p48_sql_lmscore", p48SqlLmScore, buildClass = true, oracleSql =
+    // p48: the LM-scoring SQL face — gate the corpus, train the bigram
+    // tables on its en slice, rank every gated document by fluency, all
+    // in one statement. Training slices and scoring set both live behind
+    // the WHERE, unlike x21 (which trains ungated) — the two rows pin
+    // both contracts.
+    QueryRow.sql("p48_sql_lmscore", "documents",
+      "select lmscore ref lang = 'en' vocab 200 table 400 where n_chars > 100",
       // x21's replay with the WHERE gate applied to BOTH the training
       // slice and the scoring set, at the face's vocab/table sizes
       """WITH g AS (SELECT doc_id, lang, text FROM documents WHERE n_chars > 100),
@@ -7821,7 +7406,7 @@ object SparkEntry {
         |  CASE WHEN coalesce(pd.n_bigrams, 0) > 0
         |    THEN round(pd.lm_sum_fp::DOUBLE / (pd.n_bigrams * 1073741824), 6)
         |  END AS mean_p
-        |FROM g d LEFT JOIN perdoc pd USING (doc_id)""".stripMargin),
+        |FROM g d LEFT JOIN perdoc pd USING (doc_id)""".stripMargin).copy(buildClass = true),
     QueryRow("st_lmscore", stLmScore, buildClass = true, oracleSql = x21OracleSql),
     QueryRow("st_sample", stSample, buildClass = true, oracleSql = p45OracleSql),
     QueryRow("st_chunks", stChunks, buildClass = true, oracleSql = p47OracleSql),
@@ -7845,13 +7430,26 @@ object SparkEntry {
         |WHERE ps_min_price < 20000
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin),
-    QueryRow("p44_sql_sample", p44SqlSample,
+    // p44: the sampling SQL face, stratified mode — per-source keep
+    // percentages behind a WHERE quality gate; gate and sample are both
+    // narrow filters, so the whole statement rides the scan stage.
+    QueryRow.sql("p44_sql_sample", "documents",
+      "select sample pct 25 by src1=70, src4=5 where n_chars > 120",
       // gate-then-stratified-sample: x10's hash rule with p44's rates
       s"""SELECT doc_id, lang, source, n_chars FROM documents
          |WHERE n_chars > 120 AND ${duckShingleHash("doc_id::VARCHAR")} % 100 <
          |  CASE source WHEN 'src1' THEN 70 WHEN 'src4' THEN 5 ELSE 25 END""".stripMargin),
-    QueryRow("p45_sql_sample_weight", p45SqlSampleWeight, p45OracleSql),
-    QueryRow("p46_sql_pack", p46SqlPack,
+    // p45: the sampling SQL face, weighted mode — acceptance probability
+    // n_chars/1500 clamped to [0,1] (longer docs kept proportionally more
+    // often: a token-level-unbiased sample from one narrow filter).
+    QueryRow.sql("p45_sql_sample_weight", "documents",
+      "select sample weight n_chars scale 1500 where lang != 'zh'",
+      p45OracleSql),
+    // p46: the packing SQL face — x7's token-budget sequence packing
+    // behind a WHERE gate; one window per source, batch-only (prefix sums
+    // are stateful).
+    QueryRow.sql("p46_sql_pack", "documents",
+      "select pack budget 1500 where n_chars > 100",
       // x7's packing rule behind the gate — SQL's WHERE applies before
       // window functions, matching the engine's gate-then-pack order
       """SELECT doc_id, source,
@@ -7861,8 +7459,17 @@ object SparkEntry {
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 1500)
         |   AS BIGINT) AS chunk_id
         |FROM documents WHERE n_chars > 100""".stripMargin),
-    QueryRow("p47_sql_chunks", p47SqlChunks, p47OracleSql),
-    QueryRow("p43_sql_mixture", p43SqlMixture,
+    // p47: the chunking SQL face — x12's overlapping context windows
+    // (24-token windows, stride 12) behind a lang gate; a stateless
+    // narrow explode, so the same statement also runs on streams.
+    QueryRow.sql("p47_sql_chunks", "documents",
+      "select chunks size 24 stride 12 where lang = 'en'",
+      p47OracleSql),
+    // p43: the mixture SQL face — `select mixture src=tokens, …` with a
+    // WHERE quality gate applied BEFORE budgeting, so each source's budget
+    // fills from the surviving documents (gate-then-mix in one statement).
+    QueryRow.sql("p43_sql_mixture", "documents",
+      "select mixture src1=600, src2=400, src3=1500 where n_chars > 150",
       // x19's replay with the WHERE gate applied pre-budget and the
       // dialect row's budgets
       s"""WITH d AS (SELECT doc_id, source,
@@ -8741,9 +8348,32 @@ object SparkEntry {
         |  count(DISTINCT user_id)::BIGINT AS n_users
         |FROM events WHERE day(ts) <= 8 GROUP BY 1""".stripMargin),
     QueryRow("st_tumbling", stTumbling, buildClass = true, oracleSql = a8OracleSql),
-    QueryRow("a8c_window_having", a8cWindowHaving, a8cOracleSql),
+    // a8c: windowed aggregation + BOOLEAN HAVING (p110's tree on the
+    // windowed path): the or/not filter runs post-aggregation per
+    // (key, window) group; mean/max/min are computed for the filter and
+    // pruned from the output. st_having replays the same query through
+    // the streaming aggregator and shares this oracle verbatim.
+    QueryRow.sql("a8c_window_having", "events",
+      "select sum(value) as sv, count(*) as n group by event_type " +
+        "having (mean(value) > 55 or max(value) > 320) " +
+        "and not min(value) < 1 granularity 3600",
+      a8cOracleSql,
+      _.select(col("event_type"), col("w_start"), col("w_end"),
+          round3("sv"), round3("n"))),
     QueryRow("st_having", stHaving, buildClass = true, oracleSql = a8cOracleSql),
-    QueryRow("a8d_window_filter", a8dWindowFilter, a8dOracleSql),
+    // a8d: the round-14 aggregate surface on the WINDOWED path —
+    // filtered sums/counts and a boolean quantifier per tumbling window.
+    // The FILTER desugar is a parse-level CASE, so the windowed
+    // aggregator (and its streaming twin below) runs it with zero new
+    // code.
+    QueryRow.sql("a8d_window_filter", "events",
+      "select sum(value) filter (where value > 100) as hot_sv, " +
+        "count(*) filter (where user_id % 2 = 0) as even_n, " +
+        "bool_or(value > 300) as spiked, count(*) as n " +
+        "group by event_type granularity 3600",
+      a8dOracleSql,
+      _.select(col("event_type"), col("w_start"), col("w_end"),
+          round3("hot_sv"), round3("even_n"), col("spiked"), round3("n"))),
     QueryRow("st_filter", stFilter, buildClass = true, oracleSql = a8dOracleSql),
     QueryRow("st_session", stSession, buildClass = true, oracleSql = a9OracleSql),
     QueryRow("st_hopping", stHopping, buildClass = true, oracleSql = a10OracleSql),

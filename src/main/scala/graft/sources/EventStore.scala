@@ -246,9 +246,10 @@ object EventStore {
                     (build: Option[Seq[String]] => Seq[String]): (Long, Seq[String]) = {
     @annotation.tailrec
     def attempt(n: Int): (Long, Seq[String]) = {
-      val latest = manifestVersions(fs, root).lastOption
+      val versions = manifestVersions(fs, root)
+      val latest = versions.lastOption
       val next = latest.fold(0L)(_ + 1L)
-      val files = build(latest.map(readManifestFile(fs, root, _)))
+      val files = build(latest.map(manifestAt(fs, root, versions, _)._2))
       if (publish(fs, root, next, files, txn)) (next, files)
       else if (n >= MaxCommitAttempts) throw new IllegalStateException(
         s"$op: lost the race for a manifest version under $root " +
@@ -262,10 +263,14 @@ object EventStore {
   /** Install `files` (and `txn`) as manifest version `v` unless another
     * committer took it first (false). A per-attempt temp file is written,
     * then installed by a step that never overwrites: on `file:` a hard
-    * link (POSIX `link(2)` is atomic and fails on an existing name, where a
-    * local rename replaces it), elsewhere `rename`, which HDFS refuses onto
-    * an existing file. Object stores are NOT covered: S3A's rename is an
-    * overwriting copy, so racing committers there can lose a version. */
+    * link (POSIX `link(2)` is atomic and fails on an existing name), because
+    * no local rename refuses atomically — Hadoop's `LocalFileSystem`
+    * replaces an existing file, and the Hive `ProxyLocalFileSystem` that
+    * `file:` resolves to when Hive is on the classpath returns false only
+    * after a separate existence check; elsewhere `rename`, which HDFS
+    * refuses onto an existing file. Object stores are NOT covered: S3A's
+    * rename is an overwriting copy, so racing committers there can lose a
+    * version. */
   private def publish(fs: org.apache.hadoop.fs.FileSystem,
                       root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String],
                       txn: Option[(String, Long)]): Boolean = {
@@ -470,10 +475,11 @@ object EventStore {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(manifestVersions(fs, root).nonEmpty,
+    val versions = manifestVersions(fs, root)
+    require(versions.nonEmpty,
       s"insertInto: $path is not a manifested store — create table first " +
         "(or append + writeManifest)")
-    val partitioned = readManifestFile(fs, root).head.contains("/")
+    val partitioned = manifestAt(fs, root, versions, -1L)._2.head.contains("/")
     val stored = readPinned(spark, path).schema
     val want =
       if (partitioned) stored.fields.toSeq.filter(_.name != "event_date")
@@ -1107,8 +1113,9 @@ object EventStore {
       : (Seq[String], Seq[String]) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = readManifestFile(fs, root, vOld).toSet
-    val neu = readManifestFile(fs, root, vNew).toSet
+    val versions = manifestVersions(fs, root)
+    val old = manifestAt(fs, root, versions, vOld)._2.toSet
+    val neu = manifestAt(fs, root, versions, vNew)._2.toSet
     ((neu -- old).toSeq.sorted, (old -- neu).toSeq.sorted)
   }
 
@@ -1619,7 +1626,7 @@ object EventStore {
     val versions = manifestVersions(fs, root)
     require(versions.nonEmpty, s"vacuum: no manifest under $path")
     val (dropped, retained) = versions.splitAt(math.max(0, versions.size - keepVersions))
-    val keep = retained.flatMap(v => readManifestFile(fs, root, v)).toSet
+    val keep = retained.flatMap(manifestAt(fs, root, versions, _)._2).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val deleted = listDataFiles(fs, root).filter { rel =>
       !keep(rel) && {

@@ -93,6 +93,19 @@ object Tables {
       case Some(_: TimestampType) | _ => raw
     }
   }
+
+  /** The test tables (TESTDATA.md), by name. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The loader of one of [[names]]; `events` is [[events]], which
+    * normalises `ts` and sets the session confs it needs. */
+  def open(name: String): (SparkSession, String) => DataFrame = name match {
+    case "events" => events
+    case n if names.contains(n) => table(_, _, n)
+    case n => throw new IllegalArgumentException(s"unknown test table '$n'")
+  }
+
   def lineitem(s: SparkSession, dir: String): DataFrame   = table(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame     = table(s, dir, "orders")
   def customer(s: SparkSession, dir: String): DataFrame   = table(s, dir, "customer")

@@ -56,14 +56,8 @@ object Harness {
 
   /** The ten test tables by name, each opened once: the catalog that
     * `runCatalog` statements resolve their FROM clauses against. */
-  private def catalog(spark: SparkSession, dir: String): Map[String, DataFrame] = Map(
-    "region" -> Tables.region(spark, dir), "nation" -> Tables.nation(spark, dir),
-    "customer" -> Tables.customer(spark, dir),
-    "supplier" -> Tables.supplier(spark, dir), "part" -> Tables.part(spark, dir),
-    "orders" -> Tables.orders(spark, dir),
-    "lineitem" -> Tables.lineitem(spark, dir), "events" -> Tables.events(spark, dir),
-    "documents" -> Tables.documents(spark, dir),
-    "embeddings" -> Tables.embeddings(spark, dir))
+  private def catalog(spark: SparkSession, dir: String): Map[String, DataFrame] =
+    Tables.names.map(n => n -> Tables.open(n)(spark, dir)).toMap
 
   /** Times each dialect statement (named q0, q1, … in argument order)
     * against the catalog with Bench's loop, then shows its first rows. */

@@ -25,6 +25,18 @@ class PlanSpec extends AnyFunSuite {
     // every streaming replay runs a full lifecycle per call
     val stProbe = SparkEntry.rows.filter(r => r.name.startsWith("st_") && !r.buildClass)
     assert(stProbe.isEmpty, s"st_* rows outside the build class: ${stProbe.map(_.name)}")
+    // a row declared as data resolves its table names through the by-name
+    // open when the registry is built, and that open runs no job
+    val bogus = intercept[IllegalArgumentException](
+      SparkEntry.QueryRow.catalog("x", Seq("events", "evnts"), "select 1", "SELECT 1"))
+    assert(bogus.getMessage.contains("evnts"))
+    val tables = graft.sources.Tables
+    val opened = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+    val jobs = org.apache.spark.JobCount(spark.sparkContext)(
+      tables.names.foreach(n => opened(n) = tables.open(n)(spark, dir)))
+    assert(jobs == 0, s"opening the ${opened.size} tables by name ran $jobs jobs")
+    // events goes through Tables.events: a zoned ts, whatever the encoding
+    assert(opened("events").schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
   }
 
   test("tools harness: time runs a registry row, sql a catalog statement") {

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -15,8 +15,8 @@ import org.apache.hadoop.util.Progressable
   *  - a hook that runs once before the first rename onto a matching name —
   *    where a spec injects a concurrent committer;
   *  - a fault: an `IOException` thrown just before, or just after, the
-  *    k-th rename, create or delete of a matching path — a crash at that
-  *    step.
+  *    k-th rename, create, delete or listing of a matching path — a crash
+  *    at that step.
   *
   * Like HDFS, and unlike a POSIX rename, a rename onto an existing file
   * returns false; the check and the rename are one step within the JVM. */
@@ -44,6 +44,9 @@ class RenameHookFs extends FilterFileSystem(new RawLocalFileSystem {
 
   override def delete(f: Path, recursive: Boolean): Boolean =
     RenameHookFs.step("delete", f)(super.delete(f, recursive))
+
+  override def listStatus(f: Path): Array[FileStatus] =
+    RenameHookFs.step("listStatus", f)(super.listStatus(f))
 }
 
 object RenameHookFs {
@@ -66,7 +69,7 @@ object RenameHookFs {
     if (a != null && a._1(name) && armed.compareAndSet(a, null)) a._2()
   }
 
-  /** Counts, per kind, the mutations on paths `when` accepts (a rename
+  /** Counts, per kind, the steps on paths `when` accepts (a rename
     * counts when it accepts both); the `k`-th `op` fails, when `op` is
     * set. */
   private final class Watch(val when: Path => Boolean, val op: String,
@@ -77,13 +80,16 @@ object RenameHookFs {
 
   private val watch = new AtomicReference[Watch]()
 
-  /** Mutations per kind ("rename", "create", "delete") on paths `when`
+  /** The steps that change the store. */
+  val Mutations: Seq[String] = Seq("rename", "create", "delete")
+
+  /** Steps per kind ([[Mutations]] and "listStatus") on paths `when`
     * accepts (a rename: both of them) while `body` runs. */
   def tally(when: Path => Boolean)(body: => Unit): Map[String, Int] = {
     val w = new Watch(when, "", 0, after = false)
     watch.set(w)
     try body finally watch.set(null)
-    Seq("rename", "create", "delete")
+    (Mutations :+ "listStatus")
       .map(op => op -> Option(w.counts.get(op)).fold(0)(_.get)).toMap
   }
 
