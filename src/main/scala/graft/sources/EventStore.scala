@@ -265,9 +265,9 @@ object EventStore {
     * then installed by a step that never overwrites: on `file:` a hard
     * link (POSIX `link(2)` is atomic and fails on an existing name), because
     * no local rename refuses atomically — Hadoop's `LocalFileSystem`
-    * replaces an existing file, and the Hive `ProxyLocalFileSystem` that
-    * `file:` resolves to when Hive is on the classpath returns false only
-    * after a separate existence check; elsewhere `rename`, which HDFS
+    * replaces an existing file, and the engine's [[LocalFs]] (like Hive's
+    * `ProxyLocalFileSystem`) returns false only after a separate existence
+    * check; elsewhere `rename`, which HDFS
     * refuses onto an existing file. Object stores are NOT covered: S3A's
     * rename is an overwriting copy, so racing committers there can lose a
     * version. */

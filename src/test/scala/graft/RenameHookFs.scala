@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FilterFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -19,8 +19,10 @@ import org.apache.hadoop.util.Progressable
   *    at that step.
   *
   * Like HDFS, and unlike a POSIX rename, a rename onto an existing file
-  * returns false; the check and the rename are one step within the JVM. */
-class RenameHookFs extends FilterFileSystem(new RawLocalFileSystem {
+  * returns false; the check and the rename are one step within the JVM.
+  * The files go through the engine's raw local filesystem
+  * ([[graft.sources.LocalFs.Raw]]), so a create starts no `chmod`. */
+class RenameHookFs extends FilterFileSystem(new graft.sources.LocalFs.Raw {
   override def getUri: URI = RenameHookFs.Uri
 }) {
   override def getScheme: String = RenameHookFs.Uri.getScheme
