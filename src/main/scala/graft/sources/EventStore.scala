@@ -57,7 +57,9 @@ object EventStore {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Per-partition outcome of [[compact]]. */
+  /** Per-partition outcome of [[compactInPlace]] (and the legacy
+    * [[compact]]): the files and bytes it replaced, and the files it wrote
+    * for the partition. */
   final case class PartitionCompaction(partition: String, filesBefore: Int,
                                        bytes: Long, filesAfter: Int)
 
@@ -268,9 +270,11 @@ object EventStore {
     * replaces an existing file, and the engine's [[LocalFs]] (like Hive's
     * `ProxyLocalFileSystem`) returns false only after a separate existence
     * check; elsewhere `rename`, which HDFS
-    * refuses onto an existing file. Object stores are NOT covered: S3A's
-    * rename is an overwriting copy, so racing committers there can lose a
-    * version. */
+    * refuses onto an existing file. On `file:` the winner then links the
+    * temp's `.crc` under the version's name too, so every read of the
+    * version through the checksummed filesystem is verified. Object stores
+    * are NOT covered: S3A's rename is an overwriting copy, so racing
+    * committers there can lose a version. */
   private def publish(fs: org.apache.hadoop.fs.FileSystem,
                       root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String],
                       txn: Option[(String, Long)]): Boolean = {
@@ -287,11 +291,20 @@ object EventStore {
     finally out.close()
     val local = fs.getScheme == "file"
     def nio(p: org.apache.hadoop.fs.Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+    def crc(p: org.apache.hadoop.fs.Path) = nio(new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.crc"))
     val won =
       if (local)
         try { java.nio.file.Files.createLink(nio(manifestPath(root, v)), nio(tmp)); true }
         catch { case _: java.nio.file.FileAlreadyExistsException => false }
       else fs.rename(tmp, manifestPath(root, v))
+    // the version keeps the temp's checksum, so a read through the
+    // checksummed filesystem verifies it; without it the version still
+    // reads, unverified, so a failed link must not fail a landed commit
+    if (local && won && java.nio.file.Files.exists(crc(tmp)))
+      try {
+        java.nio.file.Files.deleteIfExists(crc(manifestPath(root, v)))
+        java.nio.file.Files.createLink(crc(manifestPath(root, v)), crc(tmp))
+      } catch { case _: java.io.IOException => () }
     // once the version is decided the temp name is scratch: a failed
     // delete leaves debris for vacuum, and must not report a landed
     // commit as failed
@@ -614,60 +627,66 @@ object EventStore {
     * the old files (still present); readers pinning after the swap see
     * exactly the compacted set; a crash before the swap leaves only
     * unmanifested garbage for [[vacuum]]. Old files are NOT deleted here —
-    * run vacuum after a grace window longer than the longest query. */
+    * run vacuum after a grace window longer than the longest query.
+    *
+    * Every affected partition is rewritten by ONE Spark job: a single read
+    * of all their files (`event_date` from the path), a shuffle into
+    * `min(Σ nOut, defaultParallelism)` reducers on `event_date`, and one
+    * date-partitioned staged write. The shuffle exists to put each date in
+    * ONE reducer, so a date sized to one file (nOut = 1) gets exactly one;
+    * a date sized to more is salted by a hash of each row's input file,
+    * mod its nOut — at most nOut files, and an input file's rows stay
+    * together, as a per-partition `coalesce(nOut)` kept them. At small
+    * sizes the time is fixed cost per job, not bytes (a 4,000-row write
+    * job took 0.15–0.19 s on a 4-core host, about 30 ms of it writing),
+    * so one job for all partitions beats one job per partition; the price
+    * is that the rewritten bytes cross the shuffle once. */
   def compactInPlace(spark: SparkSession, path: String,
-                     targetBytes: Long = 128L * 1024 * 1024,
-                     parallelism: Int = 8): Seq[PartitionCompaction] = {
-    require(targetBytes > 0 && parallelism > 0,
-      s"compactInPlace: need targetBytes > 0 and parallelism > 0, got $targetBytes/$parallelism")
+                     targetBytes: Long = 128L * 1024 * 1024): Seq[PartitionCompaction] = {
+    require(targetBytes > 0, s"compactInPlace: need targetBytes > 0, got $targetBytes")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_spark_metadata")),
       s"compactInPlace: $path is a streaming-sink output — compact would " +
         "desync the metadata log's readers")
-    val manifest = readManifestFile(fs, root)
-    val byPart = manifest.groupBy(_.takeWhile(_ != '/'))
-    val gen = nextGen()
-    val affected = byPart.toSeq.sortBy(_._1).flatMap { case (part, rel) =>
-      val partPath = new org.apache.hadoop.fs.Path(root, part)
-      val files = rel.map(r => new org.apache.hadoop.fs.Path(root, r))
-        .filter(fs.exists(_))
-      val bytes = files.map(fs.getFileStatus(_).getLen).sum
-      val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      if (files.length <= nOut) None
-      else Some((part, partPath, files, bytes, nOut))
-    }
+    def at(rel: String) = new org.apache.hadoop.fs.Path(root, rel)
+    // (partition, its files, bytes, nOut)
+    val affected = readManifestFile(fs, root).groupBy(_.takeWhile(_ != '/'))
+      .toSeq.sortBy(_._1).flatMap { case (part, rel) =>
+        val files = rel.filter(r => fs.exists(at(r)))
+        val bytes = files.map(r => fs.getFileStatus(at(r)).getLen).sum
+        val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+        if (files.length <= nOut) None else Some((part, files, bytes, nOut))
+      }
     // nothing to compact commits nothing: a version repeating the file set
     // would burn a vacuum retention slot (the appendCommitted rule)
     if (affected.isEmpty) return Seq.empty
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, affected.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val jobs = affected.map { case (part, partPath, files, bytes, nOut) =>
-        Future {
-          // gen-suffixed: a concurrent compactor must never share (and
-          // then clean up) another run's staging dir — the nextGen() rule.
-          // Flat: the partition column lives in the directory name.
-          val movedIn = stagedWrite(fs, root, "." + part + s".compact-staging-$gen",
-            readFiles(spark, partPath.toString, files.map(_.getName)).coalesce(nOut),
-            partitioned = false, "compact", gen, into = part)
-          (files.map(f => part + "/" + f.getName), movedIn,
-            PartitionCompaction(part, files.length, bytes, movedIn.size))
-        }
-      }
-      // every partition settles before a failure surfaces, so no sibling
-      // moves files in after the caller saw the error
-      jobs.foreach(Await.ready(_, Duration.Inf))
-      val results = Await.result(Future.sequence(jobs), Duration.Inf)
-      // the ONE commit point: files a concurrent append committed
-      // mid-compaction survive the swap
-      commitRebased(fs, root, "compactInPlace",
-        results.flatMap(_._1).toSet, results.flatMap(_._2))
-      results.map(_._3).sortBy(_.partition)
-    } finally pool.shutdown()
+    val date = col("event_date")
+    val nOuts = affected.map { case (part, _, _, nOut) => part.stripPrefix("event_date=") -> nOut }
+    val salt = pmod(xxhash64(col("_metadata.file_path")),
+      element_at(typedLit(nOuts.toMap), date.cast("string")))
+    val keys = if (nOuts.exists(_._2 > 1)) Seq(date, salt) else Seq(date)
+    val reducers = math.min(nOuts.map(_._2).sum, spark.sparkContext.defaultParallelism)
+    // a read takes its schema from one footer, as each partition's own
+    // read did; where the partitions' first footers differ (a column added
+    // later in the store's history) the rewrite reads them merged, so no
+    // partition loses a column
+    val merged = ParquetFiles.footerSchemas(spark,
+      affected.map { case (_, files, _, _) => fs.getFileStatus(at(files.head)) }).distinct.size > 1
+    val inputs = affected.flatMap(_._2)
+    val gen = nextGen()
+    // gen-suffixed: a concurrent compactor must never share (and then
+    // clean up) another run's staging dir — the nextGen() rule
+    val movedIn = stagedWrite(fs, root, s".compact-staging-$gen",
+      readFiles(spark, path, inputs, merged).repartition(reducers, keys: _*),
+      partitioned = true, "compact", gen)
+    // the ONE commit point: files a concurrent append committed
+    // mid-compaction survive the swap
+    commitRebased(fs, root, "compactInPlace", inputs.toSet, movedIn)
+    val after = movedIn.groupBy(_.takeWhile(_ != '/'))
+    affected.map { case (part, files, bytes, _) =>
+      PartitionCompaction(part, files.length, bytes, after.get(part).fold(0)(_.size))
+    }
   }
 
   /** The manifest's file set as absolute paths — the input an audit tool
@@ -1652,7 +1671,7 @@ object EventStore {
     // message points operators at it.
     val staging = ("""^\..*\.compact-staging(?:-\d+)?$|^\.zorder-staging(?:-\d+)?$""" +
       """|^\.(?:merge|delete)-(?:rewrite|insert)-\d+$""" +
-      """|^\.(?:ingest|ctas)-staging-\d+$""").r
+      """|^\.(?:ingest|ctas|compact)-staging-\d+$""").r
     val temp = """^\.(?:manifest|stats|keys)-v\d+(?:-\d+-\d+)?\.tmp$""".r
     fs.listStatus(root).toSeq
       .filter(s => s.getModificationTime <= cutoff &&

@@ -79,14 +79,21 @@ object ParquetFiles {
     val schema =
       if (new ParquetOptions(options, sqlConf).mergeSchema)
         new ParquetFileFormat().inferSchema(s, options, files)
-      else files.headOption.map { f =>
-        val conf = s.sessionState.newHadoopConfWithOptions(options)
-        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(sqlConf))
-      }
+      else footerSchemas(s, files.take(1), options).headOption
     schema.getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
+  }
+
+  /** The data schema each file's footer declares, read on the driver. */
+  def footerSchemas(spark: SparkSession, files: Seq[FileStatus],
+                    options: Map[String, String] = Map.empty): Seq[StructType] = {
+    val s = spark.asInstanceOf[ClassicSession]
+    val conf = s.sessionState.newHadoopConfWithOptions(options)
+    val converter = new ParquetToSparkSchemaConverter(s.sessionState.conf)
+    files.map { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+    }
   }
 }
 

@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.ProcessStarts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -153,8 +153,8 @@ class LocalFsSpec extends AnyFunSuite {
       val meta = Files.list(Paths.get(store)).iterator().asScala.toSeq
         .map(_.getFileName.toString).filter(_.startsWith("_graft_manifest")).sorted
       assert(meta.size == 3, meta)
-      // a manifest version is a hard link to its temp file, so it has no
-      // .crc of its own; the sidecars have one
+      // a manifest version and its .crc are hard links to its temp
+      // file's, so each of the three is checked
       val checked = meta.count { name =>
         val in = fs.open(new Path(store, name))
         val bytes = try in.readAllBytes() finally in.close()
@@ -168,7 +168,24 @@ class LocalFsSpec extends AnyFunSuite {
           true
         }
       }
-      assert(checked == 2)
+      assert(checked == 3)
     } finally prev.close()
+  }
+
+  test("a flipped byte in a manifest version fails its read with a ChecksumException") {
+    val store = Files.createTempDirectory("graft-crc").resolve("store").toString
+    EventStore.appendCommitted(events(20), store, "a", 0L)
+    val rows = EventStore.readPinned(spark, store).count()
+    val version = Paths.get(store, "_graft_manifest.v0.json")
+    val bytes = Files.readAllBytes(version)
+    // the last character of the last file name: the text still parses,
+    // to a file list naming a file that is not there
+    bytes(bytes.length - 4) = (bytes(bytes.length - 4) ^ 1).toByte
+    Files.write(version, bytes)
+    intercept[ChecksumException](EventStore.readPinned(spark, store))
+    intercept[ChecksumException](EventStore.manifestFiles(spark, store))
+    bytes(bytes.length - 4) = (bytes(bytes.length - 4) ^ 1).toByte
+    Files.write(version, bytes)
+    assert(EventStore.readPinned(spark, store).count() == rows)
   }
 }

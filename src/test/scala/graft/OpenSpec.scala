@@ -61,11 +61,11 @@ class OpenSpec extends AnyFunSuite {
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 
-  /** A manifested events store over 14 date partitions, one file per
+  /** A manifested events store over `days` date partitions, one file per
     * partition per batch. */
-  private def store(batches: Int): String = {
+  private def store(batches: Int, days: Int = 14): String = {
     val dir = Files.createTempDirectory("graft-open").toString + "/events"
-    val src = Tables.events(spark, sf).filter(dayofmonth(col("ts")) <= 14)
+    val src = Tables.events(spark, sf).filter(dayofmonth(col("ts")) <= days)
       .select("event_id", "ts", "user_id", "event_type", "value")
     (0 until batches).foreach { b =>
       EventStore.append(src.filter(pmod(col("event_id"), lit(batches)) === b).coalesce(1), dir)
@@ -133,15 +133,20 @@ class OpenSpec extends AnyFunSuite {
     }
   }
 
-  test("compactInPlace runs one job per compacted partition, none to open them") {
-    val dir = store(4)
-    val before = EventStore.readPinned(spark, dir).collect().toSet
-    var compacted = Seq.empty[EventStore.PartitionCompaction]
-    val jobs = JobCount(spark.sparkContext) { compacted = EventStore.compactInPlace(spark, dir) }
-    assert(compacted.size == 14 && compacted.forall(_.filesBefore == 4))
-    assert(jobs == compacted.size, s"$jobs jobs for ${compacted.size} partitions")
-    assert(EventStore.manifestFiles(spark, dir).size == 14)
-    assert(EventStore.readPinned(spark, dir).collect().toSet == before)
+  test("compactInPlace runs the same jobs for 4 partitions as for 14, none to open them") {
+    val jobs = Seq(4, 14).map { days =>
+      val dir = store(4, days)
+      val before = EventStore.readPinned(spark, dir).collect().toSet
+      var compacted = Seq.empty[EventStore.PartitionCompaction]
+      val n = JobCount(spark.sparkContext) { compacted = EventStore.compactInPlace(spark, dir) }
+      assert(compacted.size == days && compacted.forall(_.filesBefore == 4))
+      assert(EventStore.manifestFiles(spark, dir).size == days)
+      assert(EventStore.readPinned(spark, dir).collect().toSet == before)
+      n
+    }
+    // the rewrite's shuffle map stage and its write: opening the files
+    // and each further partition add none
+    assert(jobs == Seq(2, 2), s"jobs for 4 and 14 partitions: $jobs")
   }
 
   test("a manifest file deleted from disk fails the pinned read at open") {
