@@ -1213,30 +1213,29 @@ object SparkEntry {
         sum(col("n_tokens")).as("sum_tokens"))
   }
 
-  /** c3: ingest-then-compact round trip — fragment a store copy with four
-    * interleaved appends (the micro-batch pattern that breeds small
-    * files), run [[graft.sources.EventStore.compact]], and prove content
-    * preservation by aggregating the COMPACTED store against the original
-    * table's oracle. The require fails the query loudly if compaction
-    * didn't actually reduce any partition's file count — so the oracle
-    * row only goes green when the maintenance op both rewrote files AND
-    * preserved every row. */
+  /** c3: ingest-then-compact round trip — commit a store copy fragmented
+    * into four files per date (the micro-batch pattern that breeds small
+    * files), run [[graft.sources.EventStore.compactInPlace]], and prove
+    * content preservation by aggregating the COMPACTED store, through the
+    * pinned read, against the original table's oracle. The require fails
+    * the query loudly if compaction didn't actually reduce any
+    * partition's file count — so the oracle row only goes green when the
+    * maintenance op both rewrote files AND preserved every row. */
   private def c3Compact(s: SparkSession, dir: String): DataFrame = {
     val path = "target/graft-compact/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
     graft.sources.EventStore.reset(s, path)
-    // first 6 days only: enough partitions to prove the mechanics without
-    // turning the fixture into 30 per-partition rewrite jobs
+    // first 6 days only: enough partitions to prove the mechanics
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     // repartition(4) fragments every date dir into 4 files in ONE write —
-    // the same layout 4 micro-batch appends produce (that path is
-    // spec-pinned in StoreStreamSpec) at a quarter of the job count
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    val stats = graft.sources.EventStore.compact(s, path)
+    // the same layout 4 micro-batch appends produce, at a quarter of the
+    // job count
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
+    val stats = graft.sources.EventStore.compactInPlace(s, path)
     require(stats.nonEmpty && stats.forall(p => p.filesAfter < p.filesBefore),
       s"compact must reduce file counts, got: $stats")
-    graft.sources.EventStore.read(s, path)
+    graft.sources.EventStore.readPinned(s, path)
       .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 3).as("sum_value"),
@@ -1244,7 +1243,7 @@ object SparkEntry {
   }
 
   /** c5: the MANIFESTED maintenance cycle, oracle-checked end-to-end —
-    * fragment a store copy, adopt the manifest, compact in place (no live
+    * commit a fragmented store copy, compact in place (no live
     * file ever renamed away; the manifest swap is the commit point),
     * vacuum the replaced inputs, then aggregate via the PINNED read
     * against DuckDB on the original table. Requires fail the query loudly
@@ -1257,8 +1256,7 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val stats = graft.sources.EventStore.compactInPlace(s, path)
     require(stats.nonEmpty && stats.forall(p => p.filesAfter < p.filesBefore),
       s"compactInPlace must reduce file counts, got: $stats")
@@ -1289,8 +1287,7 @@ object SparkEntry {
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     // repartition(4): hash-random files, i.e. every file spans the whole
     // user space — the layout ingest naturally produces
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val mmRow = ev.agg(min("user_id"), max("user_id")).head()
     val (uMin, uMax) = (mmRow.getLong(0), mmRow.getLong(1))
     val uHi = uMin + math.max(1L, (uMax - uMin) / 8)
@@ -1337,8 +1334,7 @@ object SparkEntry {
       .filter(dayofmonth(col("ts")) <= 6)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .withColumn("svc", pmod(col("event_id"), lit(16)))
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val mmRow = ev.agg(min("user_id"), max("user_id")).head()
     val (uMin, uMax) = (mmRow.getLong(0), mmRow.getLong(1))
     val uHi = uMin + math.max(1L, (uMax - uMin) / 8)
@@ -1384,13 +1380,11 @@ object SparkEntry {
     graft.sources.EventStore.reset(s, path)
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val v1 = graft.sources.EventStore.manifestVersion(s, path)
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.insertInto(
       ev.filter(dayofmonth(col("ts")).between(4, 6)).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val stats = graft.sources.EventStore.compactInPlace(s, path)
     require(stats.nonEmpty && stats.forall(p => p.filesAfter < p.filesBefore),
       s"compactInPlace must reduce file counts, got: $stats")
@@ -1429,8 +1423,7 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val conf = s.sparkContext.hadoopConfiguration
     val bytes = graft.sources.EventStore.manifestFiles(s, path).map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
@@ -1470,9 +1463,8 @@ object SparkEntry {
         col("event_type"), col("value"))
     // range partitioning, not hash: files must hold alphabetically
     // CONTIGUOUS event types for interval bounds to separate them
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.repartitionByRange(4, col("event_type")), path)
-    graft.sources.EventStore.writeManifest(s, path)
     graft.sources.EventStore.writeFileStats(s, path, Seq("user_id"),
       stringColumns = Seq("event_type"), truncateTo = 4)
     val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("event_type") === "click")
@@ -1497,20 +1489,18 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 5).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     // generation 2: the same feed, now carrying a derived quality score.
     // Fixed-point floor(x·2^20) LONG (the a14/x17 form) instead of
     // round(x, 6): decimal-round-of-double can diverge on a 6dp tie
     // between Spark's BigDecimal HALF_UP and DuckDB's float rounding;
     // floor of an IEEE-exact division cannot. Null value ⇒ null score.
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.appendCommitted(
       ev.filter(dayofmonth(col("ts")).between(6, 10))
         .withColumn("q_score",
           floor(col("value") / lit(250.0) * lit(1048576.0)).cast(LongType))
-        .repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
+        .repartition(2), path, "evolve-q", 1L)
     val snap = graft.sources.EventStore.readPinned(s, path, mergeSchema = true)
     require(snap.columns.contains("q_score"),
       "merged read must surface the evolved column")
@@ -1532,8 +1522,7 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6 && col("user_id").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val conf = s.sparkContext.hadoopConfiguration
     val bytes = graft.sources.EventStore.manifestFiles(s, path).map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
@@ -1565,9 +1554,8 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.repartitionByRange(8, col("value")), path)
-    graft.sources.EventStore.writeManifest(s, path)
     graft.sources.EventStore.writeFileStats(s, path, Nil,
       doubleColumns = Seq("value"))
     val mm = ev.agg(min("value"), max("value")).head()
@@ -1597,8 +1585,7 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .filter(dayofmonth(col("ts")) <= 6 && col("user_id").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     graft.sources.EventStore.writeFileKeySets(s, path, "event_id",
       maxDistinct = 16)
     val kMin = ev.agg(min("event_id")).head().getLong(0)
@@ -1624,9 +1611,8 @@ object SparkEntry {
       .filter(dayofmonth(col("ts")) <= 6 && col("user_id").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"),
         concat(lit("u"), col("user_id").cast(StringType)).as("skey"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.repartitionByRange(6, col("user_id")), path)
-    graft.sources.EventStore.writeManifest(s, path)
     graft.sources.EventStore.writeFileKeySets(s, path, "skey")
     val kMin = "u" + ev.agg(min("user_id")).head().getLong(0)
     val pruned = graft.sources.EventStore.readPinned(s, path).filter(col("skey") === kMin)
@@ -1653,13 +1639,11 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val vBase = graft.sources.EventStore.manifestVersion(s, path)
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.insertInto(
       ev.filter(dayofmonth(col("ts")).between(4, 6)).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val vNew = graft.sources.EventStore.manifestVersion(s, path)
     val (added, removed) = graft.sources.EventStore.manifestDiff(s, path, vBase, vNew)
     require(removed.isEmpty && added.nonEmpty,
@@ -1699,8 +1683,7 @@ object SparkEntry {
     val all = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val ev = all.filter(dayofmonth(col("ts")) <= 6)
-    graft.sources.EventStore.append(ev.repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
+    graft.sources.EventStore.createTable(ev.repartition(4), path)
     val corrected = ev.filter(pmod(col("user_id"), lit(7)) === 0)
       .withColumn("value", col("value") * 2)
     val fresh = all.filter(dayofmonth(col("ts")) === 7)
@@ -1733,13 +1716,11 @@ object SparkEntry {
     graft.sources.EventStore.reset(s, path)
     val all = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       all.filter(dayofmonth(col("ts")) <= 5).repartition(4), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val v1 = graft.sources.EventStore.manifestVersion(s, path)
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.insertInto(
       all.filter(dayofmonth(col("ts")).between(6, 7)).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val comps = graft.sources.EventStore.compactInPlace(s, path)
     require(comps.nonEmpty, "compaction must rewrite at least one partition")
     val d = graft.sources.EventStore.deleteWhere(
@@ -1769,9 +1750,8 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 10).repartition(3), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val v1 = graft.sources.EventStore.manifestVersion(s, path)
     val fp = floor(coalesce(col("value"), lit(0.0)) * lit(1048576.0))
       .cast(LongType)
@@ -1823,9 +1803,8 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 10).repartition(3), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val v1 = graft.sources.EventStore.manifestVersion(s, path)
     val fp = floor(coalesce(col("value"), lit(0.0)) * lit(1048576.0))
       .cast(LongType)
@@ -1894,9 +1873,8 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 10).repartition(3), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val fp = floor(coalesce(col("value"), lit(0.0)) * lit(1048576.0))
       .cast(LongType)
     def keyed(df: DataFrame, sign: Column) = df
@@ -1930,7 +1908,7 @@ object SparkEntry {
   }
 
   /** c16: deep snapshot clone — pin a version, copy exactly its files to
-    * a fresh root, commit them as the clone's manifest v1, then ERASE the
+    * a fresh root, commit them as the clone's manifest v0, then ERASE the
     * source past recognition (delete + vacuum past the cloned version):
     * the clone must still read the original snapshot bit-for-bit. The
     * oracle recomputes that snapshot (days ≤ 8) directly. */
@@ -1943,9 +1921,8 @@ object SparkEntry {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    graft.sources.EventStore.append(
+    graft.sources.EventStore.createTable(
       ev.filter(dayofmonth(col("ts")) <= 8).repartition(2), path)
-    graft.sources.EventStore.writeManifest(s, path)
     val vSnap = graft.sources.EventStore.manifestVersion(s, path)
     graft.sources.EventStore.appendCommitted(
       ev.filter(dayofmonth(col("ts")).between(9, 12)), path, "clone-q", 1L)

@@ -10,10 +10,11 @@ import org.apache.spark.sql.graftbridge.ParquetFiles
   * | reference | here |
   * |---|---|
   * | `insert` — per-row ZADDs + fsync per column (lib.rs:263-303, self-
-  *   described slow) | [[append]] — batch append of a DataFrame, columnar
-  *   encoding + stats for free |
+  *   described slow) | [[createTable]] for the first batch, then
+  *   [[appendCommitted]] (or [[insertInto]]) — each batch one committed
+  *   manifest version, columnar encoding + stats for free |
   * | `init`/`flushall` (lib.rs:248-261) | [[reset]] — overwrite the path |
-  * | bulk load via redis-cli pipe (Makefile:1-2) | [[append]] of any
+  * | bulk load via redis-cli pipe (Makefile:1-2) | [[createTable]] of any
   *   `spark.read` source; Structured Streaming ingest in
   *   [[graft.streaming.EventStream.ingest]] |
   * | row ids via `INCR LAST-ID` (lib.rs:265-267) | [[withEventIds]] —
@@ -34,134 +35,22 @@ object EventStore {
   private def withEventDate(df: DataFrame, tsCol: String): DataFrame =
     df.withColumn("event_date", to_date(col(tsCol)))
 
-  /** S1: batch append into the date-partitioned store. */
-  def append(df: DataFrame, path: String, tsCol: String = "ts"): Unit =
-    withEventDate(df, tsCol)
-      .write.mode(SaveMode.Append)
-      .partitionBy("event_date")
-      .parquet(path)
-
-  /** S1 at join scale: append as a BUCKETED catalog table. Bucketing
-    * pre-shuffles the data once at write time — every later equi-join or
-    * aggregation on the bucket key reads co-located buckets and skips its
-    * exchange entirely (PlanSpec-pinned). At 100 TB this converts the
-    * recurring per-query shuffle of fact⨝fact joins into a one-off write
-    * cost; pick the dominant join key (`user_id` for events) and a bucket
-    * count ~= the cluster's target parallelism. */
-  def appendBucketed(df: DataFrame, table: String, bucketCol: String,
-                     buckets: Int = 32, tsCol: String = "ts"): Unit =
-    withEventDate(df, tsCol)
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Per-partition outcome of [[compactInPlace]] (and the legacy
-    * [[compact]]): the files and bytes it replaced, and the files it wrote
-    * for the partition. */
+  /** Per-partition outcome of [[compactInPlace]]: the files and bytes it
+    * replaced, and the files it wrote for the partition. */
   final case class PartitionCompaction(partition: String, filesBefore: Int,
                                        bytes: Long, filesAfter: Int)
 
-  /** Compact the small files that per-batch and streaming appends
-    * accumulate — the maintenance job every 100 TB ingest path needs:
-    * thousands of KB-scale files per partition collapse scan throughput
-    * (per-file open cost, tiny row groups that defeat min/max pruning)
-    * and every appended micro-batch makes it worse.
-    *
-    * Shape: a driver-side metadata pass sizes each partition
-    * (ceil(bytes/targetBytes) output files); partitions already at or
-    * under that count are untouched. Each affected partition is rewritten
-    * by its own narrow job — `read partition → coalesce(nOut) → write
-    * staging` (no shuffle; the partition column lives in the directory
-    * name, so bytes round-trip unchanged) — and swapped in with two
-    * renames, so a crash leaves the old or the new directory, never a
-    * mix. Jobs run `parallelism`-wide from the driver (the Delta
-    * OPTIMIZE file-group pattern): partitions are independent, so the
-    * scheduler overlaps them. A reader that LISTS during the two-rename
-    * window can momentarily miss the swapping partition — single-writer
-    * maintenance windows are the operating assumption here; fully
-    * concurrent swaps need a manifest/table format (that's the problem
-    * transaction logs solve, see the `_spark_metadata` guard below). */
-  def compact(spark: SparkSession, path: String,
-              targetBytes: Long = 128L * 1024 * 1024,
-              parallelism: Int = 8): Seq[PartitionCompaction] = {
-    require(targetBytes > 0 && parallelism > 0,
-      s"compact: need targetBytes > 0 and parallelism > 0, got $targetBytes/$parallelism")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a streaming parquet sink's _spark_metadata log is the source of truth
-    // for batch readers of that directory — renaming its files would leave
-    // the log pointing at deleted paths and silently corrupt every read.
-    // (This composition gap is why table formats with transaction logs
-    // exist; for a plain-parquet streaming index, stop the stream and
-    // rewrite WITHOUT the log, or re-ingest.)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_spark_metadata")),
-      s"compact: $path is a streaming-sink output (_spark_metadata present) — " +
-        "compacting under the metadata log would desync batch readers")
-    val affected = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .flatMap { p =>
-        val files = fs.listStatus(p.getPath).filter(isDataFile)
-        val bytes = files.map(_.getLen).sum
-        val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        if (files.length <= nOut) None
-        else Some((p.getPath, files.length, bytes, nOut))
-      }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, affected.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val done = Future.sequence(affected.map { case (part, nBefore, bytes, nOut) =>
-        Future {
-          val staged = new org.apache.hadoop.fs.Path(
-            part.getParent, "." + part.getName + ".compact-staging")
-          val old = new org.apache.hadoop.fs.Path(
-            part.getParent, "." + part.getName + ".compact-old")
-          fs.delete(staged, true); fs.delete(old, true)
-          spark.read.parquet(part.toString).coalesce(nOut)
-            .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-          // two-step swap with explicit recovery: after a FIRST-rename
-          // failure the partition is untouched; after a SECOND-rename
-          // failure the data would be parked in the hidden old dir (which
-          // readers skip), so roll the original back into place and say
-          // exactly where everything is. A CRASH between the renames
-          // leaves the same parked state — recover by manually renaming
-          // `.<part>.compact-old` back to `<part>`.
-          require(fs.rename(part, old),
-            s"compact: rename $part -> $old failed; partition untouched, " +
-              s"compacted output remains at $staged")
-          if (!fs.rename(staged, part)) {
-            val rolledBack = fs.rename(old, part)
-            throw new IllegalStateException(
-              if (rolledBack)
-                s"compact: swap-in of $staged failed for $part; original " +
-                  s"data ROLLED BACK in place, compacted output left at $staged"
-              else
-                s"compact: swap-in of $staged failed for $part AND rollback " +
-                  s"failed — original data is parked at $old (hidden from " +
-                  s"readers); recover by renaming it back to $part")
-          }
-          fs.delete(old, true)
-          PartitionCompaction(part.getName, nBefore, bytes, nOut)
-        }
-      })
-      Await.result(done, Duration.Inf).sortBy(_.partition)
-    } finally pool.shutdown()
-  }
-
   // ------------------------------------------------- manifest-pinned store
   //
-  // The "properly" answer to compaction-vs-readers: a tiny file manifest
-  // the readers pin, so maintenance and queries never race on directory
-  // listings (the same idea transaction-log table formats scale up).
-  // Protocol: appends are followed by writeManifest; readers use
-  // readPinned (atomic snapshot); compactInPlace never touches live files
-  // — it moves compacted files IN and swaps the manifest as its single
-  // commit point; vacuum reclaims unmanifested bytes after a grace window
-  // longer than the longest running query.
+  // A tiny file manifest the readers pin, so maintenance and queries never
+  // race on directory listings (the same idea transaction-log table
+  // formats scale up). Protocol: every write stages its files, moves them
+  // in under `<prefix>-<gen>-` names and commits them as a new manifest
+  // version (createTable, appendCommitted, insertInto, the maintenance and
+  // row-mutation verbs); readers use readPinned (atomic snapshot);
+  // nothing on disk is visible until a version lists it; vacuum reclaims
+  // unmanifested bytes after a grace window longer than the longest
+  // running query.
 
   private val ManifestVersioned = """^_graft_manifest\.v(\d+)\.json$""".r
 
@@ -187,12 +76,11 @@ object EventStore {
                                root: org.apache.hadoop.fs.Path): Seq[Long] =
     versionsIn(rootFiles(fs, root))
 
-  /** Visible data files, as `partitionDir/fileName` relative paths.
-    * Hidden (dot-prefixed) directories — maintenance staging and the
-    * legacy compactor's `.<part>.compact-old` recovery parking — are NOT
-    * data, however partition-like their names look: listing them would
-    * let [[writeManifest]] adopt crash debris and [[vacuum]] delete the
-    * very files [[readRetrying]]'s recovery message points at. */
+  /** Visible data files, as `partitionDir/fileName` relative paths — what
+    * [[createTable]] refuses to overwrite and what [[vacuum]] weighs
+    * against the retained versions. Hidden (dot-prefixed) directories are
+    * write staging, NOT data, however partition-like their names look;
+    * [[vacuum]] reclaims them by name. */
   private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path): Seq[String] = {
     val listing = fs.listStatus(root).toSeq
@@ -213,16 +101,6 @@ object EventStore {
     * temp file or staging entry (dot-prefixed). */
   private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
     st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-
-  /** Files that only a MAINTENANCE commit may introduce to the manifest:
-    * [[compactInPlace]]/[[clusterInPlace]] move their outputs into the
-    * live dirs under these names BEFORE their manifest swap, so a
-    * concurrent (or later) [[writeManifest]] listing must not adopt ones
-    * the manifest does not already contain — they are either mid-flight
-    * (their commit is coming) or crash debris (vacuum's to reclaim).
-    * Without this rule, a crashed compaction's moved-in files would be
-    * double-counted next to the originals they never replaced. */
-  private val MaintenanceFile = """(?:compact|zorder|merge|delete|ingest|ctas)-\d+-.*""".r
 
   /** Lost version races one commit survives: each loss means another
     * commit landed meanwhile. */
@@ -313,8 +191,8 @@ object EventStore {
     won
   }
 
-  /** The rebasing commit every write but [[createTable]]'s and
-    * [[writeManifest]]'s goes through ([[commit]]): take the manifest AS
+  /** The rebasing commit every write but [[createTable]]'s goes through
+    * ([[commit]]): take the manifest AS
     * OF COMMIT TIME (empty for a fresh store), remove `replaced`, add
     * `added`, and commit the result with `txn`. Rebasing keeps files a
     * concurrent committer added mid-run. It fails loudly, committing
@@ -349,7 +227,7 @@ object EventStore {
                          version: Long): (Long, Seq[String]) = {
     require(versions.nonEmpty,
       s"no manifest under $root — this store is not manifested; " +
-        "call writeManifest after appends to adopt the pinned-read protocol")
+        "create it with createTable, then grow it with appendCommitted")
     val v = if (version < 0) versions.last else version
     require(versions.contains(v),
       s"manifest v$version does not exist under $root (have: " +
@@ -395,10 +273,10 @@ object EventStore {
 
   /** Transactionally-committed append (the exactly-once ingest primitive):
     * write `batch` date-partitioned to hidden staging, move the files in
-    * under `ingest-{gen}-*` maintenance names, and commit them PLUS the
+    * under `ingest-{gen}-*` names, and commit them PLUS the
     * `(app, batchId)` txn id as ONE manifest version. Every crash window
-    * is safe: before/mid-move leaves only unmanifested maintenance-named
-    * files ([[writeManifest]] never adopts those; [[vacuum]] reclaims),
+    * is safe: before/mid-move leaves only unmanifested files (no reader
+    * sees them; [[vacuum]] reclaims them),
     * and after the commit a replay of the same batch sees its id via
     * [[lastTxn]] and skips — so a batch lands EXACTLY once no matter where
     * the writer dies, without leaning on the caller's checkpoint. */
@@ -426,15 +304,14 @@ object EventStore {
     * timestamp (full store parity — partition pruning, compaction,
     * z-order, time travel all apply), FLAT otherwise (arbitrary result
     * schemas: a grouped aggregate or a documents slice has no event
-    * time; flat stores still get manifest-pinned reads, writeManifest
-    * refresh, time travel, and vacuum — partition-level maintenance is
-    * date-store-only by construction).
+    * time; flat stores still get manifest-pinned reads, inserts, time
+    * travel, and vacuum — partition-level maintenance is date-store-only
+    * by construction).
     *
     * Protocol is [[appendCommitted]]'s: write to hidden staging, move the
-    * files in under `ctas-{gen}-*` maintenance names, commit them as
-    * manifest v0. Every crash window leaves only unmanifested debris
-    * ([[vacuum]]'s to reclaim, [[writeManifest]] never adopts maintenance
-    * names) — never a half-visible table.
+    * files in under `ctas-{gen}-*` names, commit them as manifest v0.
+    * Every crash window leaves only unmanifested debris ([[vacuum]]'s to
+    * reclaim) — never a half-visible table.
     *
     * Collisions are LOUD: an existing manifest, data files, or non-empty
     * directory at `path` fails the call — CTAS creates, it never
@@ -490,8 +367,8 @@ object EventStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val versions = manifestVersions(fs, root)
     require(versions.nonEmpty,
-      s"insertInto: $path is not a manifested store — create table first " +
-        "(or append + writeManifest)")
+      s"insertInto: $path is not a manifested store — create it first " +
+        "(create table … as, or createTable)")
     val partitioned = manifestAt(fs, root, versions, -1L)._2.head.contains("/")
     val stored = readPinned(spark, path).schema
     val want =
@@ -549,31 +426,9 @@ object EventStore {
     }.toMap
   }
 
-  /** Adopt (or refresh) the manifest: snapshot the CURRENT visible data
-    * files as the store's committed set, as a NEW immutable manifest
-    * version. Run after every append batch; anything not in the manifest
-    * is invisible to [[readPinned]] and fair game for [[vacuum]]. Files
-    * with [[MaintenanceFile]] names that the current manifest does not
-    * already list are skipped — they belong to a maintenance commit
-    * (mid-flight or crashed), never to append adoption. A commit that
-    * loses its version to another committer lists the store again
-    * ([[commit]]). Returns the number of committed files. */
-  def writeManifest(spark: SparkSession, path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commit(fs, root, "writeManifest") { latest =>
-      val current = latest.getOrElse(Seq.empty).toSet
-      val files = listDataFiles(fs, root).filter { f =>
-        current(f) || !MaintenanceFile.pattern
-          .matcher(f.substring(f.indexOf('/') + 1)).matches()
-      }
-      require(files.nonEmpty, s"writeManifest: no data files under $path")
-      files
-    }._2.size
-  }
-
   /** The store's current (highest) manifest version — every commit
-    * ([[writeManifest]], [[compactInPlace]], [[clusterInPlace]]) bumps it.
+    * ([[createTable]], [[appendCommitted]], [[compactInPlace]],
+    * [[clusterInPlace]], …) bumps it.
     * Pass an old version to [[readPinned]] to time-travel. */
   def manifestVersion(spark: SparkSession, path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -619,11 +474,15 @@ object EventStore {
     bind(spark, path, files, mergeSchema, sidecars)
   }
 
-  /** Manifested compaction — same sizing policy as [[compact]], different
-    * commitment protocol: compacted files are written to hidden staging,
-    * MOVED INTO the live partition dirs under fresh names (no live file or
-    * directory is ever renamed away), and the manifest swap is the single
-    * atomic commit point. Readers pinned to the old manifest keep reading
+  /** Compact the small files that per-batch and streaming appends
+    * accumulate — thousands of KB-scale files per partition collapse scan
+    * throughput (per-file open cost, tiny row groups that defeat min/max
+    * pruning). A driver-side metadata pass sizes each partition
+    * (ceil(bytes/targetBytes) output files); partitions already at or
+    * under that count are untouched. Compacted files are written to
+    * hidden staging, MOVED INTO the live partition dirs under fresh names
+    * (no live file or directory is ever renamed away), and the manifest
+    * swap is the single atomic commit point. Readers pinned to the old manifest keep reading
     * the old files (still present); readers pinning after the swap see
     * exactly the compacted set; a crash before the swap leaves only
     * unmanifested garbage for [[vacuum]]. Old files are NOT deleted here —
@@ -647,8 +506,8 @@ object EventStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_spark_metadata")),
-      s"compactInPlace: $path is a streaming-sink output — compact would " +
-        "desync the metadata log's readers")
+      s"compactInPlace: $path is a streaming-sink output (_spark_metadata " +
+        "present) — compacting would desync the metadata log's readers")
     def at(rel: String) = new org.apache.hadoop.fs.Path(root, rel)
     // (partition, its files, bytes, nOut)
     val affected = readManifestFile(fs, root).groupBy(_.takeWhile(_ != '/'))
@@ -667,13 +526,13 @@ object EventStore {
       element_at(typedLit(nOuts.toMap), date.cast("string")))
     val keys = if (nOuts.exists(_._2 > 1)) Seq(date, salt) else Seq(date)
     val reducers = math.min(nOuts.map(_._2).sum, spark.sparkContext.defaultParallelism)
-    // a read takes its schema from one footer, as each partition's own
-    // read did; where the partitions' first footers differ (a column added
-    // later in the store's history) the rewrite reads them merged, so no
-    // partition loses a column
-    val merged = ParquetFiles.footerSchemas(spark,
-      affected.map { case (_, files, _, _) => fs.getFileStatus(at(files.head)) }).distinct.size > 1
     val inputs = affected.flatMap(_._2)
+    // a read takes its schema from one footer; where the inputs' writes
+    // differ in schema (a column added later in the store's history) the
+    // rewrite reads them merged, so no file loses a column. All files of
+    // one write share its schema, so one footer per write decides it
+    val merged = ParquetFiles.footerSchemas(spark, inputs.groupBy(writeOf).values
+      .map(files => fs.getFileStatus(at(files.head))).toSeq).distinct.size > 1
     val gen = nextGen()
     // gen-suffixed: a concurrent compactor must never share (and then
     // clean up) another run's staging dir — the nextGen() rule
@@ -687,6 +546,16 @@ object EventStore {
     affected.map { case (part, files, bytes, _) =>
       PartitionCompaction(part, files.length, bytes, after.get(part).fold(0)(_.size))
     }
+  }
+
+  private val WriteUuid = """part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})""".r.unanchored
+
+  /** The write a data file came from: the job uuid Spark's writer puts in
+    * every part-file name (`part-NNNNN-<uuid>.c000…`), which a moved-in
+    * `<prefix>-<gen>-` name keeps; a name without one is its own write. */
+  private def writeOf(rel: String): String = rel match {
+    case WriteUuid(uuid) => uuid
+    case _ => rel
   }
 
   /** The manifest's file set as absolute paths — the input an audit tool
@@ -1190,12 +1059,8 @@ object EventStore {
     * evolved stores, diff within a generation). An UPDATE appears as
     * delete(old row) + insert(new row), the classic CDF encoding.
     *
-    * Lifecycle caveat: append batches AFTER a maintenance commit via
-    * [[appendCommitted]], not a bare [[writeManifest]] — the replaced
-    * originals a compaction leaves on disk for time travel are
-    * indistinguishable from fresh un-adopted appends, so a blanket
-    * re-adopt would resurrect them (double-counting the store AND
-    * polluting this feed with phantom inserts). */
+    * Every commit names its files, so the replaced originals a compaction
+    * leaves on disk for time travel never re-enter a later version. */
   def changeFeed(spark: SparkSession, path: String, vOld: Long, vNew: Long)
       : DataFrame = {
     require(vOld <= vNew, s"changeFeed: need vOld ≤ vNew, got $vOld > $vNew")
@@ -1216,7 +1081,7 @@ object EventStore {
 
   /** Deep snapshot clone: copy exactly the files version `version` pins
     * into a fresh store root and commit them there as the new store's
-    * manifest v1 — the backup / environment-promotion primitive ("ship
+    * manifest v0 — the backup / environment-promotion primitive ("ship
     * yesterday's snapshot to staging"). The clone is a fully independent
     * store: the source can compact, rewrite, or [[vacuum]] past the
     * cloned version afterwards without touching it. The copy IS the
@@ -1312,14 +1177,14 @@ object EventStore {
   /** The one staged write: `df` goes to the hidden dir `staging` under
     * `root` — date-partitioned on its `event_date` column when
     * `partitioned`, flat otherwise — and its data files then move into the
-    * live store under `prefix-gen-` maintenance names: a partitioned write
+    * live store under `prefix-gen-` names: a partitioned write
     * into the matching partition dirs (created when new — a merge may
     * insert into brand-new dates), a flat one into the dir `into` (the
     * root when empty). No live file is renamed away and nothing is visible
-    * before the caller's commit: a crash leaves only staging and
-    * unmanifested maintenance names, which [[writeManifest]] never adopts
-    * and [[vacuum]] reclaims. Returns the moved files' manifest-relative
-    * paths. */
+    * before the caller's commit ([[commitRebased]], or [[createTable]]'s
+    * create-only one): a crash leaves only staging and unmanifested
+    * files, which no reader lists and [[vacuum]] reclaims. Returns the
+    * moved files' manifest-relative paths. */
   private def stagedWrite(fs: org.apache.hadoop.fs.FileSystem,
                           root: org.apache.hadoop.fs.Path, staging: String,
                           df: DataFrame, partitioned: Boolean, prefix: String,
@@ -1350,7 +1215,7 @@ object EventStore {
   /** Copy-on-write MERGE (upsert) into the manifested store, with
     * DELETE-THEN-INSERT semantics: every store row whose `keyCols` tuple
     * appears in `updates` is removed, and every `updates` row is inserted
-    * (date-partitioned on `tsCol`, like [[append]] — an update may move a
+    * (date-partitioned on `tsCol`, like [[appendCommitted]] — an update may move a
     * row across partitions, carry several rows per key, or introduce keys
     * the store never held). This is the CDC-upsert contract for an event
     * store, where a key does not promise uniqueness.
@@ -1361,7 +1226,7 @@ object EventStore {
     * files that contain matching keys; ONE rewrite job reads ONLY those
     * files and anti-joins the keys out; ONE insert job writes the update
     * rows. Untouched files are never opened. Both jobs write to hidden
-    * staging, move in under `merge-{gen}-*` maintenance names, and a
+    * staging, move in under `merge-{gen}-*` names, and a
     * single optimistic-rebase manifest commit swaps rewrites + inserts in
     * atomically — a crash before the commit leaves only unmanifested
     * garbage for [[vacuum]], never a half-merged store.
@@ -1558,8 +1423,8 @@ object EventStore {
     require(est <= driverBudgetBytes,
       s"$op: the per-file detection map over $nFiles manifested files is " +
         s"~$est bytes on the driver, over driverBudgetBytes=" +
-        s"$driverBudgetBytes — compact the store first (compact/" +
-        "compactInPlace) or raise the budget deliberately")
+        s"$driverBudgetBytes — compact the store first (compactInPlace) " +
+        "or raise the budget deliberately")
   }
 
   /** Outcome of [[clusterInPlace]]. */
@@ -1628,7 +1493,7 @@ object EventStore {
     * their grace window, and debris from crashed maintenance. `olderThanMs`
     * is the grace: only files whose modification time is at least that old
     * are removed, so in-flight readers pinned to a recent manifest (and
-    * appends awaiting their writeManifest) survive a conservatively-
+    * writes moved in but not yet committed) survive a conservatively-
     * scheduled vacuum. `keepVersions` is the time-travel retention: the
     * newest K manifest versions' files all survive, and manifests older
     * than that are dropped — [[readPinned]] time travel reaches exactly as
@@ -1662,16 +1527,11 @@ object EventStore {
       // sidecars die with their version
       Seq("stats", "keys").foreach(k => fs.delete(sidecarPath(root, v, k), false))
     }
-    // crashed writes' scratch past the same grace window: maintenance
-    // STAGING dirs (their contents were either moved out or never
-    // committed) and manifest/sidecar TEMP files (a version or sidecar
-    // exists only under its published name). The legacy compactor's
-    // `.<part>.compact-old` parking is deliberately NOT touched — it can
-    // hold the only copy of a partition, and readRetrying's recovery
-    // message points operators at it.
-    val staging = ("""^\..*\.compact-staging(?:-\d+)?$|^\.zorder-staging(?:-\d+)?$""" +
-      """|^\.(?:merge|delete)-(?:rewrite|insert)-\d+$""" +
-      """|^\.(?:ingest|ctas|compact)-staging-\d+$""").r
+    // crashed writes' scratch past the same grace window: STAGING dirs
+    // (their contents were either moved out or never committed) and
+    // manifest/sidecar TEMP files (a version or sidecar exists only under
+    // its published name)
+    val staging = """^\.(?:(?:ingest|ctas|compact|zorder)-staging|(?:merge|delete)-(?:rewrite|insert))-\d+$""".r
     val temp = """^\.(?:manifest|stats|keys)-v\d+(?:-\d+-\d+)?\.tmp$""".r
     fs.listStatus(root).toSeq
       .filter(s => s.getModificationTime <= cutoff &&
@@ -1688,49 +1548,5 @@ object EventStore {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     ()
-  }
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Swap-aware read: a plain [[read]] that LISTS the store while
-    * [[compact]] is mid-swap can momentarily miss the swapping partition —
-    * and a directory listing has no way to know data is absent, so the
-    * result is silently short, the worst failure mode a store can have.
-    *
-    * compact's protocol makes the window DETECTABLE: for the whole swap the
-    * hidden `.<part>.compact-old` (and before it `.compact-staging`) marker
-    * exists next to the partition. This reader polls the listing until no
-    * partition is mid-swap (marker present but live dir absent), then binds
-    * the plan. A swap that STARTS after the check is still invisible — that
-    * remaining race is what manifest/transaction-log table formats exist
-    * for (see the `_spark_metadata` guard in [[compact]]); within
-    * single-compactor operation this closes the observed gap.
-    *
-    * Fails loudly after `maxWaitMs` — a marker without a live partition
-    * that never resolves means a crashed compactor, and the error says how
-    * to recover. */
-  def readRetrying(spark: SparkSession, path: String,
-                   maxWaitMs: Long = 30000, pollMs: Long = 100): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = """^\.(.*)\.compact-(old|staging)$""".r
-    def midSwap(): Set[String] = {
-      val names = fs.listStatus(root).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).toSet
-      names.collect { case marker(part, _) if !names.contains(part) => part }
-    }
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var missing = midSwap()
-    while (missing.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(pollMs)
-      missing = midSwap()
-    }
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"readRetrying: partitions ${missing.mkString(", ")} stayed mid-swap " +
-        s"for ${maxWaitMs}ms — a compactor likely crashed between renames; " +
-        "recover by renaming the hidden '.<part>.compact-old' dir back to " +
-        "'<part>' under " + path)
-    spark.read.parquet(path)
   }
 }

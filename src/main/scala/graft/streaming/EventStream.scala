@@ -307,9 +307,9 @@ object EventStream {
     * the txn id is durable in the same atomic rename that publishes the
     * files, so a batch replayed after a crash-before-checkpoint is
     * detected via [[graft.sources.EventStore.lastTxn]] and skipped — and a
-    * crash BEFORE the commit leaves only unmanifested maintenance-named
-    * files that [[graft.sources.EventStore.writeManifest]] never adopts
-    * and [[graft.sources.EventStore.vacuum]] reclaims. No duplicate can
+    * crash BEFORE the commit leaves only unmanifested files, which no
+    * pinned read lists and [[graft.sources.EventStore.vacuum]] reclaims.
+    * No duplicate can
     * become visible in either window. ([[graft.sources.EventStore.vacuum]]
     * retention must keep ≥1 version between checkpoints — any sane
     * retention does: the latest ingest commit is by definition recent.)

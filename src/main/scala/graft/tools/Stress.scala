@@ -114,8 +114,8 @@ object Stress {
       graft.operators.Similarity.ivfPqProbe(spark, pqPath, cents, books, q, k = 10).count()
     }
     // compaction at 10× events fragmented 8 ways: the driver metadata pass
-    // + parallel per-partition rewrites; watch for linear scaling in bytes,
-    // flat in partition count
+    // + one rewrite job for all partitions; watch for linear scaling in
+    // bytes, flat in partition count
     val evPath = "target/graft-stress-compact"
     graft.sources.EventStore.reset(spark, evPath)
     val ev = graft.sources.Tables.events(spark, dir)
@@ -124,10 +124,10 @@ object Stress {
       .map(i => ev.withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L)))
       .reduce(_ union _)
     time("c3_compact_10x") {
-      graft.sources.EventStore.append(ev10.repartition(8), evPath)
-      val stats = graft.sources.EventStore.compact(spark, evPath)
+      graft.sources.EventStore.createTable(ev10.repartition(8), evPath)
+      val stats = graft.sources.EventStore.compactInPlace(spark, evPath)
       require(stats.nonEmpty && stats.forall(p => p.filesAfter < p.filesBefore))
-      graft.sources.EventStore.read(spark, evPath).count()
+      graft.sources.EventStore.readPinned(spark, evPath).count()
     }
     // -------- windowed-family skew: ONE group holding all 10^6 events
     // (every event of the 10× corpus remapped to a single event_type) vs
@@ -255,9 +255,8 @@ object Stress {
     val zPath = "target/graft-stress-zorder"
     graft.sources.EventStore.reset(spark, zPath)
     time("c6_zorder_ingest_write_10x") {
-      graft.sources.EventStore.append(
+      graft.sources.EventStore.createTable(
         ev10.repartitionByRange(64, col("ts")).sortWithinPartitions("ts"), zPath)
-      graft.sources.EventStore.writeManifest(spark, zPath)
       graft.sources.EventStore.readPinned(spark, zPath).count()
     }
     val uRow = ev.agg(min("user_id"), max("user_id")).head()

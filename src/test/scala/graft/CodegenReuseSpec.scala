@@ -124,8 +124,7 @@ class CodegenReuseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("scans keep their pushed filters, partition filters and files") {
     val store = Files.createTempDirectory("graft-params-store").toString + "/events"
-    EventStore.append(events.select("event_id", "ts", "user_id", "event_type", "value"), store)
-    EventStore.writeManifest(spark, store)
+    EventStore.createTable(events.select("event_id", "ts", "user_id", "event_type", "value"), store)
     val reads: Seq[(String, () => DataFrame)] = Seq(
       "events" -> (() => run(grouped(31, Jan1 + 2 * Day, Jan1 + 9 * Day))),
       "readPinned" -> (() => ZxSql.run(EventStore.readPinned(spark, store)

@@ -108,6 +108,17 @@ class CompactSpec extends AnyFunSuite {
       .filter(col("q_score").isNotNull).count() == 48)
   }
 
+  test("a column only a date's later write carries survives compaction") {
+    // 48 hourly rows over two dates, then 48 more over the same dates with
+    // a column the first write lacks: every date's first file lacks it
+    val dir = store(Seq(0 -> 24, 1 -> 24))
+    EventStore.appendCommitted(day(0, 24, 100L).union(day(1, 24, 200L))
+      .withColumn("q_score", col("value") * 2).coalesce(1), dir, "compact-spec", 1L)
+    compact(dir, 128L << 20, mergeSchema = true)
+    assert(EventStore.readPinned(spark, dir, mergeSchema = true)
+      .filter(col("q_score").isNotNull).count() == 48)
+  }
+
   test("dates already compact are neither rewritten nor replaced") {
     val dir = store(Seq(0 -> 24, 1 -> 24, 2 -> 24), Seq(0 -> 24), Seq(0 -> 24, 2 -> 24))
     val (out, before, after) = compact(dir, 128L << 20)

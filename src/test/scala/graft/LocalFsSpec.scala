@@ -41,6 +41,11 @@ class LocalFsSpec extends AnyFunSuite {
         .cast("timestamp").as("ts"),
       (col("id") % 37).as("user_id"), (col("id") * 0.5).as("value"))
 
+  // first in the suite: in a JVM of its own no session exists yet
+  test("ProcessStarts works as a suite's first statement") {
+    assert(ProcessStarts(()).isEmpty)
+  }
+
   test("file: resolves to the engine's filesystem after create and after register") {
     assert(new Path(FileUri).getFileSystem(conf).getClass == classOf[LocalFs])
     assert(org.apache.hadoop.fs.AbstractFileSystem.get(FileUri, conf).getClass ==

@@ -39,13 +39,12 @@ class ManifestCommitSpec extends AnyFunSuite {
 
   private val baseIds = 0L until 48L
 
-  /** A store of ids 0..47 over two days, two files a day, manifested at
-    * v0, under `renamehook:` (or the local scheme); (local path, store). */
+  /** A store of ids 0..47 over two days, two files a day, created at v0,
+    * under `renamehook:` (or the local scheme); (local path, store). */
   private def baseStore(scheme: String = "renamehook"): (String, String) = {
     val local = Files.createTempDirectory("graft-commit").toString + "/store"
     val dir = if (scheme == "file") local else RenameHookFs.path(conf, local)
-    EventStore.append(events(0, 48).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(events(0, 48).repartition(2), dir)
     (local, dir)
   }
 
@@ -75,9 +74,9 @@ class ManifestCommitSpec extends AnyFunSuite {
     for (scheme <- Seq("file", "renamehook")) {
       val local = Files.createTempDirectory("graft-commit").toString + "/store"
       val dir = if (scheme == "file") local else RenameHookFs.path(conf, local)
-      // maintenance names only: writeManifest never adopts them, so it
-      // cannot resurrect the inputs a compaction replaced
-      EventStore.appendCommitted(events(0, 48).repartition(2), dir, "base", 0L)
+      EventStore.createTable(events(0, 48).repartition(2), dir)
+      val root = new Path(dir)
+      val fs = root.getFileSystem(conf)
       val errs = new ConcurrentLinkedQueue[Throwable]()
       val appenders = (0 until 4).map { t =>
         new Thread(() => {
@@ -95,13 +94,13 @@ class ManifestCommitSpec extends AnyFunSuite {
           Thread.sleep(50)
         } catch { case e: Throwable => errs.add(e) }
       })
-      // commits with no Spark job in them, so one is nearly always in
-      // flight when an appender publishes: an overwriting publish loses
-      // that appender's batch
+      // commits with no Spark job in them (each repeats the file set), so
+      // one is nearly always in flight when an appender publishes: an
+      // overwriting publish loses that appender's batch
       val manifests = new AtomicInteger()
       val manifester = new Thread(() => {
         try while (appending) {
-          EventStore.writeManifest(spark, dir)
+          EventStore.commitRebased(fs, root, "race", Set.empty, Seq.empty)
           manifests.incrementAndGet()
         } catch { case e: Throwable => errs.add(e) }
       })
@@ -131,8 +130,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     def text(name: String) = new String(Files.readAllBytes(Paths.get(local, name)), "UTF-8")
     assert(text("_graft_manifest.v0.json") ==
       s"""{"txn": {"app": "fmt \\"app\\"", "batch": 4}, "files": ["$file"]}""")
-    EventStore.append(events(24, 2).coalesce(1), local)
-    EventStore.writeManifest(spark, local)
+    EventStore.insertInto(events(24, 2).coalesce(1), local)
     val files = EventStore.manifestFiles(spark, local).map(_.stripPrefix(local + "/"))
     assert(files.size == 2)
     assert(text("_graft_manifest.v1.json") ==
@@ -262,14 +260,28 @@ class ManifestCommitSpec extends AnyFunSuite {
   private def prunedRead(f: Column, want: Seq[Long])(dir: String): Unit =
     assert(ids(EventStore.readPinned(spark, dir).filter(f)) == want)
 
+  /** The names a staged write moves its files in under. */
+  private val StagedName = """(?:ingest|ctas|compact|zorder|merge|delete)-\d+-.+""".r
+
   private val ops: Seq[(String, Op)] = Seq(
     "appendCommitted" -> new Op(
       dir => EventStore.appendCommitted(events(100, 10), dir, "matrix", 1L),
       Some(baseIds), baseIds ++ (100L until 110L)),
-    "writeManifest" -> new Op(
-      dir => EventStore.writeManifest(spark, dir),
-      Some(baseIds), baseIds ++ (200L until 205L),
-      prepare = dir => EventStore.append(events(200, 5).coalesce(1), dir)),
+    "insertInto" -> new Op(
+      dir => EventStore.insertInto(events(200, 5).coalesce(1), dir),
+      Some(baseIds), baseIds ++ (200L until 205L)),
+    // ids 40..47 replaced, 48..55 new (one of them on a new date)
+    "mergeInto" -> new Op(
+      dir => EventStore.mergeInto(spark, dir, events(40, 16), Seq("event_id")),
+      Some(baseIds), 0L until 56L),
+    // the first day matches whole (dropped), the second in part (rewritten)
+    "deleteWhere" -> new Op(
+      dir => EventStore.deleteWhere(spark, dir, col("event_id") < 24L || col("event_id") % 3L === 0L),
+      Some(baseIds), baseIds.filter(i => i >= 24L && i % 3L != 0L)),
+    "updateWhere" -> new Op(
+      dir => EventStore.updateWhere(spark, dir, col("event_id") < 10L,
+        Map("event_id" -> (col("event_id") + 2000L))),
+      Some(baseIds), (10L until 48L) ++ (2000L until 2010L)),
     "createTable" -> new Op(
       dir => EventStore.createTable(events(300, 10), dir),
       None, 300L until 310L,
@@ -323,6 +335,10 @@ class ManifestCommitSpec extends AnyFunSuite {
         EventStore.vacuum(spark, dir)
         val left = debris(local, dir)
         assert(left.isEmpty, s"$what: vacuum left $left")
+        // no file enters the store but through a staged write's move-in
+        val unstaged = EventStore.manifestFiles(spark, dir).map(new Path(_).getName)
+          .filterNot(StagedName.pattern.matcher(_).matches())
+        assert(unstaged.isEmpty, s"$what: committed without staging: $unstaged")
         assert(pinnedIds(dir) == (seen.getOrElse(Nil) ++ (1000L until 1003L)).sorted,
           s"$what: rows changed")
       }

@@ -67,10 +67,10 @@ class OpenSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-open").toString + "/events"
     val src = Tables.events(spark, sf).filter(dayofmonth(col("ts")) <= days)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    (0 until batches).foreach { b =>
-      EventStore.append(src.filter(pmod(col("event_id"), lit(batches)) === b).coalesce(1), dir)
-    }
-    EventStore.writeManifest(spark, dir)
+    val parts = (0 until batches).map(b =>
+      src.filter(pmod(col("event_id"), lit(batches)) === b).coalesce(1))
+    EventStore.createTable(parts.head, dir)
+    parts.tail.foreach(EventStore.insertInto(_, dir))
     dir
   }
 
@@ -107,7 +107,10 @@ class OpenSpec extends AnyFunSuite {
       EventStore.writeFileStats(spark, dir, Seq("user_id"),
         stringColumns = Seq("event_type"), doubleColumns = Seq("value"))
       EventStore.writeFileKeySets(spark, dir, "user_id")
-      EventStore.writeManifest(spark, dir) // one key-set sidecar per version
+      // one key-set sidecar per version: a job-free commit of the same files
+      val root = new org.apache.hadoop.fs.Path(dir)
+      EventStore.commitRebased(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        root, "re-pin", Set.empty, Nil)
       EventStore.writeFileKeySets(spark, dir, "event_type")
       val user = pinned.agg(min("user_id")).head().getLong(0)
       val etype = pinned.where(col("event_type").isNotNull)
@@ -167,11 +170,9 @@ class OpenSpec extends AnyFunSuite {
   test("mergeSchema reads every footer over the same file set and unifies columns") {
     val dir = Files.createTempDirectory("graft-open-merge").toString + "/events"
     val src = Tables.events(spark, sf).select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.filter(col("event_id") % 2 === 0), dir)
-    EventStore.writeManifest(spark, dir)
-    EventStore.append(src.filter(col("event_id") % 2 === 1)
-      .withColumn("q_score", col("value") / 2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.filter(col("event_id") % 2 === 0), dir)
+    EventStore.appendCommitted(src.filter(col("event_id") % 2 === 1)
+      .withColumn("q_score", col("value") / 2), dir, "open-merge", 1L)
     val files = EventStore.manifestFiles(spark, dir)
     val merged = EventStore.readPinned(spark, dir, mergeSchema = true)
     val plain = spark.read.option("basePath", dir).option("mergeSchema", "true")

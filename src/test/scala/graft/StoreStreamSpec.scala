@@ -16,12 +16,19 @@ import graft.streaming.EventStream
 class StoreStreamSpec extends AnyFunSuite {
   import SparkFixture._
 
+  /** A store committed from `batches`: the first creates it, each later
+    * one is one more committed version. */
+  private def commitStore(dir: String, batches: org.apache.spark.sql.DataFrame*): Unit = {
+    EventStore.createTable(batches.head, dir)
+    batches.tail.foreach(EventStore.insertInto(_, dir))
+  }
+
   test("S1/S2: append is date-partitioned and re-readable; reset clears") {
     val dir = Files.createTempDirectory("graft-store").toString + "/events"
     // testdata events use TIMESTAMP(NANOS) → must go through Tables
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    EventStore.append(src, dir)
-    val back = EventStore.read(spark, dir)
+    EventStore.createTable(src, dir)
+    val back = EventStore.readPinned(spark, dir)
     assert(back.count() == src.count())
     assert(back.columns.contains("event_date")) // partition column
     // partition pruning: a one-day filter must prune input files
@@ -31,52 +38,14 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(!new java.io.File(dir).exists())
   }
 
-  test("compact collapses fragmented partitions to sized file counts and preserves bytes") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/events"
-    val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "ts", "user_id", "value")
-    // 5 micro-batch appends → ≥5 files per date partition
-    (0 until 5).foreach { i =>
-      EventStore.append(src.filter(pmod(col("event_id"), lit(5)) === i), dir)
-    }
-    def filesPerPartition(): Map[String, Int] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.contains("=")).map { p =>
-        p.getName -> p.listFiles().count(f =>
-          f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      }.toMap
-    }
-    val before = filesPerPartition()
-    assert(before.nonEmpty && before.values.forall(_ >= 5))
-    val beforeRows = EventStore.read(spark, dir).collect().toSet
-    val stats = EventStore.compact(spark, dir)
-    // tiny partitions → exactly ONE file each; stats report the rewrite
-    val after = filesPerPartition()
-    assert(after.keySet == before.keySet, "no partition may appear or vanish")
-    assert(after.values.forall(_ == 1), s"expected 1 file/partition, got $after")
-    assert(stats.map(_.partition).toSet == before.keySet)
-    assert(stats.forall(p => p.filesAfter == 1 && p.filesBefore >= 5))
-    // content identical, row for row (partition column included)
-    assert(EventStore.read(spark, dir).collect().toSet == beforeRows)
-    // idempotent: a second pass finds nothing to do
-    assert(EventStore.compact(spark, dir).isEmpty)
-    // no staging/old debris survives the swap
-    val debris = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.contains("compact-"))
-    assert(debris.isEmpty, s"staging debris left behind: ${debris.mkString(",")}")
-  }
-
   test("manifest store: pinned readers survive a full compaction cycle; vacuum reclaims exactly the replaced files") {
     val dir = Files.createTempDirectory("graft-manifest").toString + "/events"
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "value")
-    (0 until 5).foreach { i =>
-      EventStore.append(src.filter(pmod(col("event_id"), lit(5)) === i), dir)
-    }
-    // adopt the protocol: manifest == current files; pinned == plain
-    val nFiles = EventStore.writeManifest(spark, dir)
-    assert(nFiles >= 5)
-    val fullRows = EventStore.read(spark, dir).collect().toSet
+    commitStore(dir, (0 until 5).map(i => src.filter(pmod(col("event_id"), lit(5)) === i)): _*)
+    // five committed batches: manifest == files on disk; pinned == listing
+    assert(EventStore.manifestFiles(spark, dir).size >= 5)
+    val fullRows = spark.read.parquet(dir).collect().toSet
     assert(EventStore.readPinned(spark, dir).collect().toSet == fullRows)
     // a reader pinned BEFORE compaction (plan bound to the old file set)
     val pinnedOld = EventStore.readPinned(spark, dir)
@@ -90,19 +59,21 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(EventStore.readPinned(spark, dir).inputFiles.length == stats.map(_.filesAfter).sum)
     // the failure mode pinning exists for: a LISTING read in the
     // compact→vacuum window sees old+new files and double-counts
-    assert(EventStore.read(spark, dir).count() > fullRows.size,
+    assert(spark.read.parquet(dir).count() > fullRows.size,
       "listing reads double-count during the grace window — use readPinned")
     // vacuum reclaims exactly the replaced inputs; everything still reads
     val deleted = EventStore.vacuum(spark, dir)
     assert(deleted.size == stats.map(_.filesBefore).sum,
       s"vacuum should delete the ${stats.map(_.filesBefore).sum} replaced files, got $deleted")
-    assert(EventStore.read(spark, dir).collect().toSet == fullRows)
+    assert(spark.read.parquet(dir).collect().toSet == fullRows)
     assert(EventStore.readPinned(spark, dir).collect().toSet == fullRows)
     // idempotent: nothing left to compact or vacuum
     assert(EventStore.compactInPlace(spark, dir).isEmpty)
     assert(EventStore.vacuum(spark, dir).isEmpty)
-    // a grace window protects unmanifested (e.g. freshly appended) files
-    EventStore.append(src.limit(10), dir)
+    // a grace window protects unmanifested (e.g. moved in, commit still
+    // to come) files
+    src.limit(10).withColumn("event_date", to_date(col("ts")))
+      .write.mode("append").partitionBy("event_date").parquet(dir)
     assert(EventStore.vacuum(spark, dir, olderThanMs = 3600000L).isEmpty,
       "files younger than the grace window must survive vacuum")
     // pinning must not cost partition pruning: a one-day filter over the
@@ -122,10 +93,8 @@ class StoreStreamSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) <= 6)
       .select("event_id", "ts", "user_id", "value")
-    (0 until 3).foreach { i =>
-      EventStore.append(src.filter(pmod(col("event_id"), lit(3)) === i), dir)
-    }
-    val nFiles = EventStore.writeManifest(spark, dir)
+    commitStore(dir, (0 until 3).map(i => src.filter(pmod(col("event_id"), lit(3)) === i)): _*)
+    val nFiles = EventStore.manifestFiles(spark, dir).size
     val v0 = EventStore.manifestVersion(spark, dir)
     val baseline = EventStore.readPinned(spark, dir)
       .select("event_id", "ts", "user_id", "value").collect().toSet
@@ -206,9 +175,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdf").toString + "/events"
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(
-      src.filter(dayofmonth(col("ts")) <= 5).repartition(3), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.filter(dayofmonth(col("ts")) <= 5).repartition(3), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     // a feed across nothing is empty; a backwards range refuses
     assert(EventStore.changeFeed(spark, dir, v1, v1).count() == 0)
@@ -219,8 +186,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val v2 = EventStore.manifestVersion(spark, dir)
     assert(EventStore.changeFeed(spark, dir, v1, v2).count() == 0,
       "pure re-layout must produce an empty feed")
-    // real changes: append days 6-7 (TXN path — a bare writeManifest here
-    // would re-adopt the compaction's retained originals), erase day 2
+    // real changes: append days 6-7, erase day 2
     EventStore.appendCommitted(
       src.filter(dayofmonth(col("ts")).between(6, 7)), dir, "cdf-spec", 1L)
     EventStore.deleteWhere(spark, dir, dayofmonth(col("ts")) === 2)
@@ -250,9 +216,8 @@ class StoreStreamSpec extends AnyFunSuite {
         .groupBy(identity).map { case (k, v) => k -> v.length }
     for (round <- 1 to 3) {
       val dir = Files.createTempDirectory(s"graft-cdfprop$round").toString + "/events"
-      EventStore.append(
+      EventStore.createTable(
         src.filter(pmod(col("event_id"), lit(3)) === 0).repartition(2), dir)
-      EventStore.writeManifest(spark, dir)
       val v1 = EventStore.manifestVersion(spark, dir)
       val before = rows(EventStore.readPinned(spark, dir, v1))
       var batch = 0L
@@ -296,8 +261,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dstDir = base + "/dst"
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.filter(dayofmonth(col("ts")) <= 4).repartition(2), srcDir)
-    EventStore.writeManifest(spark, srcDir)
+    EventStore.createTable(src.filter(dayofmonth(col("ts")) <= 4).repartition(2), srcDir)
     val v1 = EventStore.manifestVersion(spark, srcDir)
     val want = EventStore.readPinned(spark, srcDir, v1)
       .select("event_id", "ts", "user_id", "value").collect().toSet
@@ -333,8 +297,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) <= 3)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.repartition(2), dir)
     val acc = spark.sparkContext.longAccumulator("updEvals")
     import spark.implicits._
     val updates = src.orderBy("event_id").limit(20)
@@ -352,13 +315,13 @@ class StoreStreamSpec extends AnyFunSuite {
     // scaladoc): POSIX rename-to-destination OVERWRITES, so without an
     // arbiter two racing committers can both "succeed" at the same
     // version and one commit is silently lost. Witness: after T threads ×
-    // K commits each (every commit preceded by dropping a unique data
-    // file into the store), the number of manifest versions equals the
-    // number of successful commits (no overwrite collapsed two), and a
-    // final adoption sees EVERY dropped file (no placement lost). No
-    // caller retries: the engine rebases a lost commit itself. Run on the
-    // local scheme (hard-link publish) and on `renamehook:` (HDFS-style
-    // rename publish).
+    // K commits each (every commit adds one unique data file, copied in
+    // first and committed with a job-free rebasing commit), the number of
+    // manifest versions equals the number of successful commits (no
+    // overwrite collapsed two), and the final version lists EVERY copied
+    // file (no commit lost). No caller retries: the engine rebases a lost
+    // commit itself. Run on the local scheme (hard-link publish) and on
+    // `renamehook:` (HDFS-style rename publish).
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) === 1)
       .select("event_id", "ts", "user_id", "value")
@@ -366,8 +329,7 @@ class StoreStreamSpec extends AnyFunSuite {
     for (scheme <- Seq("file", "renamehook")) {
       val local = Files.createTempDirectory("graft-race").toString + "/events"
       val dir = if (scheme == "file") local else RenameHookFs.path(conf, local)
-      EventStore.append(src.coalesce(1), dir)
-      EventStore.writeManifest(spark, dir)
+      EventStore.createTable(src.coalesce(1), dir)
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(conf)
       // template data file to clone under fresh names (content irrelevant)
@@ -379,10 +341,10 @@ class StoreStreamSpec extends AnyFunSuite {
       val pool = (0 until threads).map { t =>
         new Thread(() => {
           try (0 until perThread).foreach { i =>
+            val name = s"part-race-$t-$i.parquet"
             org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(template),
-              fs, new org.apache.hadoop.fs.Path(partDir, s"part-race-$t-$i.parquet"),
-              false, conf)
-            EventStore.writeManifest(spark, dir)
+              fs, new org.apache.hadoop.fs.Path(partDir, name), false, conf)
+            EventStore.commitRebased(fs, root, "race", Set.empty, Seq(s"${partDir.getName}/$name"))
             committed.incrementAndGet()
           } catch { case e: Throwable => failures.add(e) }
         })
@@ -395,12 +357,11 @@ class StoreStreamSpec extends AnyFunSuite {
       val vFinal = EventStore.manifestVersion(spark, dir)
       assert(vFinal == v0 + committed.get(),
         s"$scheme: expected ${v0 + committed.get()} as final version, got $vFinal — a commit was lost")
-      // no placement lost: one more adoption sees every dropped file
-      EventStore.writeManifest(spark, dir)
+      // no commit lost: the final version lists every copied file
       val finalFiles = EventStore.manifestFiles(spark, dir)
       val raceFiles = finalFiles.count(_.contains("part-race-"))
       assert(raceFiles == threads * perThread,
-        s"$scheme: adopted $raceFiles of ${threads * perThread} race files")
+        s"$scheme: committed $raceFiles of ${threads * perThread} race files")
       // and the monotone version chain is fully readable (no corrupt writes)
       ((v0 + 1) to vFinal).foreach { v =>
         assert(EventStore.manifestFiles(spark, dir, v).nonEmpty)
@@ -414,12 +375,10 @@ class StoreStreamSpec extends AnyFunSuite {
       .select("event_id", "ts", "user_id", "value")
     val batch1 = src.filter(dayofmonth(col("ts")) <= 2)
     val batch2 = src.filter(dayofmonth(col("ts")).between(3, 4))
-    EventStore.append(batch1.repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(batch1.repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     val rows1 = EventStore.readPinned(spark, dir).collect().toSet
-    EventStore.append(batch2.repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.insertInto(batch2.repartition(2), dir)
     val v2 = EventStore.manifestVersion(spark, dir)
     assert(v2 == v1 + 1, "every commit bumps the version by one")
     val fullRows = EventStore.readPinned(spark, dir).collect().toSet
@@ -511,9 +470,10 @@ class StoreStreamSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) <= 2)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src, store)
-    EventStore.writeManifest(spark, store)
+    EventStore.createTable(src, store)
     val rows = src.count()
+    def later(n: Int, batch: Long) = EventStore.appendCommitted(
+      src.orderBy("event_id").limit(n), store, "debris-spec", batch)
 
     // 1) a `.manifest.lock` that a crashed committer left behind (stores
     // once serialised commits on one) blocks nothing: the version file's
@@ -521,14 +481,14 @@ class StoreStreamSpec extends AnyFunSuite {
     val lockF = new java.io.File(store, ".manifest.lock")
     assert(lockF.createNewFile())
     val vLocked = EventStore.manifestVersion(spark, store)
-    EventStore.writeManifest(spark, store)
+    later(5, 0L)
     assert(EventStore.manifestVersion(spark, store) == vLocked + 1)
-    assert(EventStore.readPinned(spark, store).count() == rows)
+    assert(EventStore.readPinned(spark, store).count() == rows + 5)
     assert(lockF.delete())
 
-    // 2) simulate a crashed compaction: a maintenance-named file moved
-    // into a live partition dir but never committed, plus hidden staging
-    // and legacy recovery-parking dirs whose names LOOK partition-like
+    // 2) simulate a crashed compaction: a compaction-named file moved into
+    // a live partition dir but never committed, plus its hidden staging
+    // dir, whose partition dir LOOKS like the store's own
     val storeDir = new java.io.File(store)
     val partDir = storeDir.listFiles().filter(f =>
       f.isDirectory && f.getName.contains("=")).minBy(_.getName)
@@ -536,28 +496,23 @@ class StoreStreamSpec extends AnyFunSuite {
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")).head
     val debris = new java.io.File(partDir, "compact-9999-debris.parquet")
     java.nio.file.Files.copy(dataFile.toPath, debris.toPath)
-    val staging = new java.io.File(storeDir, ".event_date=2099-01-01.compact-staging")
-    val parking = new java.io.File(storeDir, ".event_date=2099-01-02.compact-old")
-    for (d <- Seq(staging, parking)) {
-      assert(d.mkdir())
-      java.nio.file.Files.copy(dataFile.toPath, new java.io.File(d, "junk.parquet").toPath)
-    }
-    // writeManifest must adopt NONE of it — else readers double-count the
+    val staging = new java.io.File(storeDir, ".compact-staging-9999")
+    val stagedPart = new java.io.File(staging, "event_date=2099-01-01")
+    assert(stagedPart.mkdirs())
+    java.nio.file.Files.copy(dataFile.toPath, new java.io.File(stagedPart, "junk.parquet").toPath)
+    // a later commit lists NONE of it — else readers double-count the
     // debris copy next to its original
-    EventStore.writeManifest(spark, store)
+    later(3, 1L)
     val manifested = EventStore.manifestFiles(spark, store)
-    assert(!manifested.exists(_.contains("compact-9999")), "debris adopted!")
-    assert(!manifested.exists(_.contains("2099")), "hidden dirs listed as partitions!")
-    assert(EventStore.readPinned(spark, store).count() == rows)
+    assert(!manifested.exists(_.contains("compact-9999")), "debris committed!")
+    assert(!manifested.exists(_.contains("2099")), "staging listed as a partition!")
+    assert(EventStore.readPinned(spark, store).count() == rows + 8)
 
-    // 3) vacuum reclaims the debris file and the staging dir — but NEVER
-    // the .compact-old parking (it can hold the only copy of a partition;
-    // readRetrying's recovery message points operators at it)
+    // 3) vacuum reclaims the debris file and the staging dir
     val deleted = EventStore.vacuum(spark, store)
     assert(deleted.exists(_.contains("compact-9999-debris")), s"debris not reclaimed: $deleted")
     assert(!staging.exists(), "crashed staging must be reclaimed")
-    assert(parking.exists(), "recovery parking must survive vacuum")
-    assert(EventStore.readPinned(spark, store).count() == rows)
+    assert(EventStore.readPinned(spark, store).count() == rows + 8)
   }
 
   test("ingestBatch: a replayed batch lands exactly once; crashed pre-commit files never become visible") {
@@ -567,8 +522,8 @@ class StoreStreamSpec extends AnyFunSuite {
     //  (a) crash AFTER the commit, BEFORE the checkpoint → the batch
     //      replays with the same id → lastTxn detects it → skip;
     //  (b) crash BEFORE the commit → moved-in ingest-named files are
-    //      unmanifested → writeManifest refuses to adopt them and vacuum
-    //      reclaims them.
+    //      unmanifested → no later commit lists them and vacuum reclaims
+    //      them.
     val base = Files.createTempDirectory("graft-ing1x").toString
     val store = base + "/store"
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
@@ -605,16 +560,16 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(EventStore.lastTxn(spark, store, app).contains(1L),
       "another app's commit must not clobber this app's txn high-water mark")
     // (b) crashed pre-commit attempt: ingest-named files moved in but
-    // never committed — invisible to adoption, reclaimed by vacuum
+    // never committed — invisible to later commits, reclaimed by vacuum
     val visible = EventStore.readPinned(spark, store).count()
     val partDir = new java.io.File(store).listFiles()
       .filter(f => f.isDirectory && f.getName.contains("=")).minBy(_.getName)
     val donor = partDir.listFiles().filter(_.getName.endsWith(".parquet")).head
     val orphan = new java.io.File(partDir, "ingest-99999-crashed.parquet")
     java.nio.file.Files.copy(donor.toPath, orphan.toPath)
-    EventStore.writeManifest(spark, store)
-    assert(EventStore.readPinned(spark, store).count() == visible,
-      "adoption must not resurrect a crashed ingest attempt's files")
+    assert(EventStream.ingestBatch(src.limit(2), store, app, 3L))
+    assert(EventStore.readPinned(spark, store).count() == visible + 2,
+      "a later commit must not resurrect a crashed ingest attempt's files")
     assert(EventStore.vacuum(spark, store).exists(_.contains("ingest-99999")),
       "vacuum must reclaim the crashed attempt")
   }
@@ -697,53 +652,14 @@ class StoreStreamSpec extends AnyFunSuite {
       .getMessage.contains("static"))
   }
 
-  test("mid-swap reads: plain read silently misses the partition; readRetrying survives; a dead swap fails loudly") {
-    val dir = Files.createTempDirectory("graft-swapread").toString + "/events"
-    val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src, dir)
-    val fullRows = EventStore.read(spark, dir).count()
-    val root = new java.io.File(dir)
-    val part = root.listFiles().filter(f => f.isDirectory && f.getName.contains("="))
-      .minBy(_.getName)
-    // reproduce compact's exact mid-swap state: live dir renamed to the
-    // hidden old marker, compacted output staged next to it
-    val old = new java.io.File(root, "." + part.getName + ".compact-old")
-    val staged = new java.io.File(root, "." + part.getName + ".compact-staging")
-    assert(part.renameTo(old))
-    assert(old.listFiles().nonEmpty)
-    org.apache.commons.io.FileUtils.copyDirectory(old, staged)
-    // the failure the helper exists for: a listing read returns a SHORT
-    // result with no error at all
-    val shortCount = EventStore.read(spark, dir).count()
-    assert(shortCount < fullRows, "mid-swap plain read should silently lose the partition")
-    // readRetrying blocks on the marker until the swap completes, then
-    // sees the full store
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val pending = Future(
-      EventStore.readRetrying(spark, dir, maxWaitMs = 20000, pollMs = 50).count())
-    Thread.sleep(400) // let it observe the mid-swap state at least once
-    assert(!pending.isCompleted, "reader must wait while the swap is in flight")
-    assert(staged.renameTo(part)) // complete the swap
-    org.apache.commons.io.FileUtils.deleteDirectory(old)
-    assert(Await.result(pending, 30.seconds) == fullRows)
-    // a marker whose swap never completes (crashed compactor) must turn
-    // into a loud, actionable error — not an eternal poll
-    val part2 = root.listFiles().filter(f => f.isDirectory && f.getName.contains("="))
-      .maxBy(_.getName)
-    assert(part2.renameTo(new java.io.File(root, "." + part2.getName + ".compact-old")))
-    val e = intercept[IllegalStateException](
-      EventStore.readRetrying(spark, dir, maxWaitMs = 300, pollMs = 50))
-    assert(e.getMessage.contains("compact-old") && e.getMessage.contains(part2.getName))
-  }
-
   test("bucketed table: self-join and aggregation on the bucket key skip the shuffle") {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "value") // ns-mirror col not needed here
     spark.sql("DROP TABLE IF EXISTS ev_bucketed")
-    EventStore.appendBucketed(src, "ev_bucketed", "user_id", buckets = 8)
+    // bucketing pre-shuffles once at write time, so joins and aggregations
+    // on the bucket key read co-located buckets (as ensureBucketedTables
+    // writes the registry's bucketed tables)
+    src.write.bucketBy(8, "user_id").sortBy("user_id").saveAsTable("ev_bucketed")
     // at this toy scale the planner would just broadcast the table — turn
     // that off so the plan shows what bucketing buys on two FACT-sized sides
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1789,7 +1705,7 @@ class StoreStreamSpec extends AnyFunSuite {
       Seq(0L, 2L, 1L), "probe must rank both micro-batches' rows by exact cosine")
     // compaction under a _spark_metadata log would desync batch readers —
     // the guard must fire instead of silently corrupting the index
-    val e = intercept[IllegalArgumentException](EventStore.compact(spark, idx))
+    val e = intercept[IllegalArgumentException](EventStore.compactInPlace(spark, idx))
     assert(e.getMessage.contains("_spark_metadata"))
   }
 
@@ -1893,8 +1809,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(col("user_id").isNotNull)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.repartition(4), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.repartition(4), dir)
     // cluster on the key so per-file key sets are small and disjoint
     val bytes = EventStore.manifestFiles(spark, dir).map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
@@ -1952,8 +1867,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val b = spark.range(2000).selectExpr("id + 10000 AS event_id",
       "timestamp_seconds(1704153700 + id) AS ts",
       "id + 1000 AS user_id", "2.0 AS value").repartition(1)
-    EventStore.append(a, dir); EventStore.append(b, dir)
-    EventStore.writeManifest(spark, dir)
+    commitStore(dir, a, b)
     val nFiles = EventStore.manifestFiles(spark, dir).size
     assert(nFiles == 2, s"fixture should land exactly 2 files, got $nFiles")
     val pinned = EventStore.writeFileKeySets(spark, dir, "user_id",
@@ -1992,8 +1906,7 @@ class StoreStreamSpec extends AnyFunSuite {
       "timestamp_seconds(1704153700 + id) AS ts",
       "concat('doc-', CAST(id AS STRING)) AS skey", "2.0 AS value")
       .repartition(1)
-    EventStore.append(a, dir); EventStore.append(b, dir)
-    EventStore.writeManifest(spark, dir)
+    commitStore(dir, a, b)
     val pinned = EventStore.writeFileKeySets(spark, dir, "skey", maxDistinct = 10)
     assert(pinned == 2, "both hashed tiers must pin")
     def read(f: org.apache.spark.sql.Column) = EventStore.readPinned(spark, dir).filter(f)
@@ -2030,9 +1943,10 @@ class StoreStreamSpec extends AnyFunSuite {
     val gen1 = src.filter(col("event_id") % 2 === 0)
     val gen2 = src.filter(col("event_id") % 2 === 1)
       .withColumn("q_score", round(col("value") / 250.0, 6))
-    EventStore.append(gen1, dir); EventStore.writeManifest(spark, dir)
+    EventStore.createTable(gen1, dir)
     val v1 = EventStore.manifestVersion(spark, dir)
-    EventStore.append(gen2, dir); EventStore.writeManifest(spark, dir)
+    // insertInto refuses a schema change; a committed append takes it
+    EventStore.appendCommitted(gen2, dir, "evolve-spec", 1L)
     val merged = EventStore.readPinned(spark, dir, mergeSchema = true)
     assert(merged.columns.contains("q_score"))
     // the evolved column is null exactly for generation-1 rows
@@ -2064,8 +1978,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) <= 6)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.repartition(8), srcDir)
-    EventStore.writeManifest(spark, srcDir)
+    EventStore.createTable(src.repartition(8), srcDir)
     val nFiles = EventStore.manifestFiles(spark, srcDir).size
     assert(nFiles >= 8, s"want a many-file store, got $nFiles files")
     // the ONLY Spark job cloneSnapshot runs is the distributed copy
@@ -2103,8 +2016,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdc-follow").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) <= 6).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) <= 6).repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     val fp = floor(coalesce(col("value"), lit(0.0)) * lit(1048576.0))
       .cast(org.apache.spark.sql.types.LongType)
@@ -2152,8 +2064,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdc-coal").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     // UNSTARTED follower = deterministic synchronous mode
     var feeds = List.empty[(Long, Long, Map[(String, Long), Int])]
@@ -2194,8 +2105,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdc-vac").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     val f = new ChangeFeedFollower(spark, dir, v1,
       (_, _, feed) => { feed.count(); () })
@@ -2215,8 +2125,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdc-stop").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) <= 3).repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     val consuming = new java.util.concurrent.CountDownLatch(1)
     // the consumer WRAPS the interrupt the way a Spark action or Hadoop
@@ -2254,8 +2163,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val stateDir = Files.createTempDirectory("graft-cdc-dur-state").toString + "/agg"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) <= 6).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) <= 6).repartition(2), dir)
     val fp = floor(coalesce(col("value"), lit(0.0)) * lit(1048576.0))
       .cast(org.apache.spark.sql.types.LongType)
     def agg(df: org.apache.spark.sql.DataFrame, sign: org.apache.spark.sql.Column) =
@@ -2311,8 +2219,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-cdc-race").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) === 1).repartition(2), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) === 1).repartition(2), dir)
     val v1 = EventStore.manifestVersion(spark, dir)
     @volatile var n = EventStore.readPinned(spark, dir, v1).count()
     val f = new ChangeFeedFollower(spark, dir, v1, (_, _, feed) => {
@@ -2346,8 +2253,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-compact-race").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    EventStore.append(ev.filter(dayofmonth(col("ts")) === 1).repartition(4), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(ev.filter(dayofmonth(col("ts")) === 1).repartition(4), dir)
     val v0 = EventStore.manifestVersion(spark, dir)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val appenders = (0 until 2).map { t =>
@@ -2384,8 +2290,7 @@ class StoreStreamSpec extends AnyFunSuite {
     val ev = spark.range(300).selectExpr("id AS event_id",
       "timestamp_seconds(1704067200 + id * 600) AS ts", "id % 7 AS user_id",
       "CAST(id AS DOUBLE) AS value")
-    EventStore.append(ev.repartition(4), local)
-    EventStore.writeManifest(spark, local)
+    EventStore.createTable(ev.repartition(4), local)
     val rows = ev.count()
     val v0 = EventStore.manifestVersion(spark, local)
     // the rewrite's first move-in runs one compaction: it commits the
@@ -2430,7 +2335,7 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(out.columns.toSeq == Seq("doc_id", "lang", "n_chars"))
     assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 4L))
     // the store is durable + manifested: a fresh pinned read agrees, and
-    // writeManifest-style refresh machinery sees the flat files
+    // the create is the store's first committed version
     assert(EventStore.readPinned(spark, s"$wh/en_slice").count() == 3)
     assert(EventStore.manifestVersion(spark, s"$wh/en_slice") == 0L)
     // CTE body + aggregate body: per-key totals (the table rule, never

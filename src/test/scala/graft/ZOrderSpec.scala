@@ -112,9 +112,8 @@ class ZOrderSpec extends AnyFunSuite {
       .select("event_id", "ts", "user_id", "value")
     // ingest-order layout: time-sliced files (the natural append order) —
     // every file's user_id stats span the whole id space
-    EventStore.append(
+    EventStore.createTable(
       src.repartitionByRange(6, col("ts")).sortWithinPartitions("ts"), dir)
-    EventStore.writeManifest(spark, dir)
     val before = EventStore.readPinned(spark, dir).collect().toSet
     val (uMin, uMax) = {
       val r = src.agg(min("user_id"), max("user_id")).head()
@@ -159,8 +158,7 @@ class ZOrderSpec extends AnyFunSuite {
     val src = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(dayofmonth(col("ts")) <= 4)
       .select("event_id", "ts", "user_id", "value")
-    EventStore.append(src.repartition(4), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.repartition(4), dir)
     EventStore.clusterInPlace(spark, dir, "user_id", "ts", targetBytes = 2048)
     val vClustered = EventStore.manifestVersion(spark, dir)
     assert(EventStore.writeFileStats(spark, dir, Seq("user_id")) ==
@@ -194,8 +192,7 @@ class ZOrderSpec extends AnyFunSuite {
       .filter(dayofmonth(col("ts")) <= 4)
       .select("event_id", "ts", "user_id", "event_type", "value")
     // range partitioning: each date's files hold contiguous user ranges
-    EventStore.append(src.repartitionByRange(4, col("user_id")), dir)
-    EventStore.writeManifest(spark, dir)
+    EventStore.createTable(src.repartitionByRange(4, col("user_id")), dir)
     EventStore.writeFileStats(spark, dir, Seq("user_id"))
     val uMin = src.agg(min("user_id")).head().getLong(0)
     val stmt = "select count(*) as n, sum(value) as s from ev " +
@@ -243,8 +240,9 @@ class ZOrderSpec extends AnyFunSuite {
     // the top band, and alone in its date)
     val band = when(col("value") < 150.0, 0).when(col("value") < 400.0, 1)
       .when(col("value") < 650.0, 2).otherwise(3)
-    (0 to 3).foreach(b => EventStore.append(df.filter(band === b).coalesce(1), dir))
-    EventStore.writeManifest(spark, dir)
+    val bands = (0 to 3).map(b => df.filter(band === b).coalesce(1))
+    EventStore.createTable(bands.head, dir)
+    bands.tail.foreach(EventStore.insertInto(_, dir))
     assert(EventStore.writeFileStats(spark, dir, Nil,
       doubleColumns = Seq("value")) > 0)
     val all = EventStore.manifestFiles(spark, dir).size
@@ -288,9 +286,10 @@ class ZOrderSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "etype", "value")
     // one append per type: files hold alphabetically CONTIGUOUS type
     // ranges — interval bounds can only prune what the layout separates
-    Seq("alpha", "bravo", "charlie", "purchaseverylongtype").foreach(t =>
-      EventStore.append(df.filter(col("etype") === t).coalesce(1), dir))
-    EventStore.writeManifest(spark, dir)
+    val types = Seq("alpha", "bravo", "charlie", "purchaseverylongtype")
+      .map(t => df.filter(col("etype") === t).coalesce(1))
+    EventStore.createTable(types.head, dir)
+    types.tail.foreach(EventStore.insertInto(_, dir))
     val pinned = EventStore.writeFileStats(spark, dir, Seq("event_id"),
       stringColumns = Seq("etype"), truncateTo = 8)
     assert(pinned > 0)
