@@ -51,6 +51,13 @@ object SparkFixture {
   def unpruned(dir: String, version: Long = -1L): DataFrame =
     graft.sources.EventStore.readFiles(spark, dir,
       graft.sources.EventStore.manifestFiles(spark, dir, version).map(_.stripPrefix(dir + "/")))
+
+  /** A store committed from `batches`: the first creates it, each later
+    * one (same schema) is one more committed version. */
+  def commitStore(dir: String, batches: DataFrame*): Unit = {
+    graft.sources.EventStore.createTable(batches.head, dir)
+    batches.tail.foreach(graft.sources.EventStore.insertInto(_, dir))
+  }
 }
 
 /** Golden-value parity with /root/reference/src/test.rs (hand-computed

@@ -67,10 +67,8 @@ class OpenSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-open").toString + "/events"
     val src = Tables.events(spark, sf).filter(dayofmonth(col("ts")) <= days)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val parts = (0 until batches).map(b =>
-      src.filter(pmod(col("event_id"), lit(batches)) === b).coalesce(1))
-    EventStore.createTable(parts.head, dir)
-    parts.tail.foreach(EventStore.insertInto(_, dir))
+    commitStore(dir, (0 until batches).map(b =>
+      src.filter(pmod(col("event_id"), lit(batches)) === b).coalesce(1)): _*)
     dir
   }
 

@@ -16,13 +16,6 @@ import graft.streaming.EventStream
 class StoreStreamSpec extends AnyFunSuite {
   import SparkFixture._
 
-  /** A store committed from `batches`: the first creates it, each later
-    * one is one more committed version. */
-  private def commitStore(dir: String, batches: org.apache.spark.sql.DataFrame*): Unit = {
-    EventStore.createTable(batches.head, dir)
-    batches.tail.foreach(EventStore.insertInto(_, dir))
-  }
-
   test("S1/S2: append is date-partitioned and re-readable; reset clears") {
     val dir = Files.createTempDirectory("graft-store").toString + "/events"
     // testdata events use TIMESTAMP(NANOS) → must go through Tables

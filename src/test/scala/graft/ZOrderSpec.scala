@@ -240,9 +240,7 @@ class ZOrderSpec extends AnyFunSuite {
     // the top band, and alone in its date)
     val band = when(col("value") < 150.0, 0).when(col("value") < 400.0, 1)
       .when(col("value") < 650.0, 2).otherwise(3)
-    val bands = (0 to 3).map(b => df.filter(band === b).coalesce(1))
-    EventStore.createTable(bands.head, dir)
-    bands.tail.foreach(EventStore.insertInto(_, dir))
+    commitStore(dir, (0 to 3).map(b => df.filter(band === b).coalesce(1)): _*)
     assert(EventStore.writeFileStats(spark, dir, Nil,
       doubleColumns = Seq("value")) > 0)
     val all = EventStore.manifestFiles(spark, dir).size
@@ -286,10 +284,8 @@ class ZOrderSpec extends AnyFunSuite {
     }.toDF("event_id", "ts", "etype", "value")
     // one append per type: files hold alphabetically CONTIGUOUS type
     // ranges — interval bounds can only prune what the layout separates
-    val types = Seq("alpha", "bravo", "charlie", "purchaseverylongtype")
-      .map(t => df.filter(col("etype") === t).coalesce(1))
-    EventStore.createTable(types.head, dir)
-    types.tail.foreach(EventStore.insertInto(_, dir))
+    commitStore(dir, Seq("alpha", "bravo", "charlie", "purchaseverylongtype")
+      .map(t => df.filter(col("etype") === t).coalesce(1)): _*)
     val pinned = EventStore.writeFileStats(spark, dir, Seq("event_id"),
       stringColumns = Seq("etype"), truncateTo = 8)
     assert(pinned > 0)
