@@ -167,8 +167,8 @@ object Bench {
     // attributable by inference. These two probes measure the box's disk
     // path with the exact operations those rows pay, so a cross-round
     // ratio on an I/O-bound row can be normalized by the artifact itself:
-    //  - io_calib_sec: drop + bucketed saveAsTable (2M rows, 8 buckets)
-    //    through the warehouse dir + full read-back checksum — j6's
+    //  - io_calib_sec: bucketed saveAsTable (2M rows, 8 buckets) into an
+    //    emptied scratch directory + full read-back checksum — j6's
     //    build-and-probe shape, data-independent;
     //  - stream_calib_sec: one complete checkpointed micro-stream
     //    lifecycle (stage parquet input → readStream → parquet sink +
@@ -182,6 +182,7 @@ object Bench {
         spark.range(0, 2L << 20, 1, 8)
           .selectExpr("id", "id % 997 as k", "cast(id as string) as s")
           .write.bucketBy(8, "k").sortBy("k")
+          .option("path", Scratch.fresh(spark, "bench-io", "io-probe"))
           .format("parquet").saveAsTable("graft_io_probe")
         spark.table("graft_io_probe")
           .selectExpr("bit_xor(xxhash64(id, k, s)) as h").collect()
@@ -191,10 +192,9 @@ object Bench {
       ts(1)
     }
     val streamCalibSec = {
-      val base = "target/graft-bench-io/stream-probe"
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+        val base = Scratch.fresh(spark, "bench-io", "stream-probe")
         spark.range(0, 200000, 1, 4).selectExpr("id", "id % 97 as k")
           .write.parquet(base + "/in")
         val st = spark.readStream
@@ -208,7 +208,6 @@ object Bench {
           .selectExpr("bit_xor(xxhash64(id, k)) as h").collect()
         (System.nanoTime() - t0) / 1e9
       }.sorted
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
       ts(1)
     }
     val timings = timeRows(spark, sfDir, SparkEntry.queries.toSeq, runs)

@@ -369,11 +369,12 @@ object EventStore {
     require(versions.nonEmpty,
       s"insertInto: $path is not a manifested store — create it first " +
         "(create table … as, or createTable)")
-    val partitioned = manifestAt(fs, root, versions, -1L)._2.head.contains("/")
-    val stored = readPinned(spark, path).schema
-    val want =
-      if (partitioned) stored.fields.toSeq.filter(_.name != "event_date")
-      else stored.fields.toSeq
+    val first = manifestAt(fs, root, versions, -1L)._2.head
+    val partitioned = first.contains("/")
+    // the footer a pinned read takes its schema from; a date-partitioned
+    // store's files never hold event_date
+    val want = ParquetFiles.footerSchemas(spark,
+      Seq(fs.getFileStatus(new org.apache.hadoop.fs.Path(root, first)))).head.fields.toSeq
     val got = df.schema.fields.toSeq
     def sig(fs0: Seq[org.apache.spark.sql.types.StructField]) =
       fs0.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ")
@@ -1151,11 +1152,13 @@ object EventStore {
                               filesDropped: Int, filesInserted: Int,
                               rowsDeleted: Long, rowsInserted: Long)
 
-  /** Relative `dir/file` path of the file a scanned row came from —
-    * Spark's `_metadata` hidden column, cut to the store-relative form the
-    * manifest speaks. */
-  private def relFileCol =
-    regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)
+  /** The manifest's name for the file a scanned row came from: Spark's
+    * `_metadata` hidden column cut to its last `segments` path parts
+    * (`dir/file` on a date-partitioned store, the bare name on a flat one).
+    * A suffix cut, not a regex: an unanchored regex re-scans every long
+    * directory name of the path, on every row. */
+  private def relFileCol(segments: Int) =
+    substring_index(col("_metadata.file_path"), "/", -segments)
 
   /** Generation nonce for staging dirs and maintenance file names —
     * UNIQUE across threads and (probabilistically) processes, digits-only.
@@ -1257,7 +1260,7 @@ object EventStore {
       // rows they lose — file-granular output (#files rows), one job
       val pinned = readPinned(spark, path)
       val hits = pinned
-        .select(relFileCol.as("__file"), struct(keyCols.map(col): _*).as("__k"))
+        .select(relFileCol(2).as("__file"), struct(keyCols.map(col): _*).as("__k"))
         .join(keys.select(struct(keyCols.map(col): _*).as("__k")), Seq("__k"), "left_semi")
         .groupBy(col("__file")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1305,9 +1308,7 @@ object EventStore {
     // names — the relative-path extraction must match, or detection keys
     // miss the manifest entirely and the delete silently no-ops
     val partitioned = manifest.head.contains("/")
-    val fileKeyCol =
-      if (partitioned) relFileCol
-      else regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1)
+    val fileKeyCol = relFileCol(if (partitioned) 2 else 1)
     // detection: per-file (matching, total) counts — one job, file-granular
     val counts = readPinned(spark, path)
       .select(fileKeyCol.as("__file"),
@@ -1353,9 +1354,7 @@ object EventStore {
     requireDetectionBudget("updateWhere", manifest.size, driverBudgetBytes)
     val gen = nextGen()
     val partitioned = manifest.head.contains("/")
-    val fileKeyCol =
-      if (partitioned) relFileCol
-      else regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1)
+    val fileKeyCol = relFileCol(if (partitioned) 2 else 1)
     val stored = readPinned(spark, path)
     val dataSchema =
       if (partitioned) org.apache.spark.sql.types.StructType(

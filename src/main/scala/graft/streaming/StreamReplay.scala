@@ -53,11 +53,6 @@ object StreamReplay {
       .map(p => Option(p.durationMs.get("triggerExecution"))
         .map(_.longValue).getOrElse(0L))
 
-  /** The staged (data + sentinel) input is IMMUTABLE per source dir, so
-    * it is built once per JVM and shared by every st_* query and every
-    * bench re-run (the ensure* artifact pattern) — only the checkpoint
-    * and sink are per-call lifecycle. A `_STAGED_OK` marker commits the
-    * staging: a half-written stage from a crashed run re-stages. */
   /** Staged events-file count — the replays' map-side parallelism (file
     * stream source = 1 partition/file). r15 TimeN A/B on st_tumbling/
     * st_session/st_gap/st_having at 1/4/8 files (A/B/A, 32 cpus, sf0.1):
@@ -67,84 +62,56 @@ object StreamReplay {
     * overhead), confirming r14's 33-file result from the other end. */
   private[graft] val EventStagingFiles = 1
 
-  private val stagedInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** The staged (data + sentinel) input is IMMUTABLE per source dir, so
+    * it is built once per session, in the session's scratch root
+    * ([[graft.Scratch]]), and shared by every st_* query and every bench
+    * re-run — only the checkpoint and sink are per-call lifecycle. */
   private def ensureStagedInput(s: SparkSession, dir: String): String =
-    stagedInputs.computeIfAbsent(dir, _ => {
-      // source fingerprint in the path: a driver-side testdata
-      // regeneration (the round-8 failure mode) must never be served
-      // from a previous generation's staging
-      val srcP = new org.apache.hadoop.fs.Path(dir + "/events.parquet")
-      val st = srcP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getFileStatus(srcP)
-      // "v3" = staging FORMAT version (bump when the sentinel or file
-      // layout changes — a stale staging from older code must never be
-      // reused)
-      val in = s"target/graft-stream-q/in-v4-f$EventStagingFiles/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-        s"-${st.getLen}-${st.getModificationTime}"
-      val ok = new java.io.File(in, "_STAGED_OK")
-      if (!ok.exists()) {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(in))
-        val ev = graft.sources.Tables.events(s, dir)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        // staged data file COUNT (file stream source = 1 partition/file):
-        // r14 measured parallelism-many (33) files SLOWER for the stateful
-        // events replays (per-file open + 33-way-to-few shuffle) and kept
-        // ONE file; r15 A/B'd the middle ground — see EventStagingFiles
-        ev.repartition(EventStagingFiles).write.mode("overwrite").parquet(in)
-        val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-        val sentinelTs =
-          new java.sql.Timestamp(maxTs.getTime + 30L * 86400 * 1000L)
-        // the sentinel carries a NON-NULL value: predicates that don't
-        // reference the watermarked ts column push BELOW the watermark
-        // node (EventStream.preFilter scaladoc), so a query filtering on
-        // `value` (the heatmap's isNotNull) only advances its clock on
-        // rows that SURVIVE the filter — a null-valued sentinel would
-        // leave the final window open. Its own group/window still never
-        // emits (nothing ever closes it), and callers filter the
-        // SentinelType group besides.
-        // user_id is -1, NOT null: an INNER equi-join on user_id infers
-        // `isnotnull(user_id)` and Catalyst pushes it BELOW the watermark
-        // into the scan (user_id is not the event-time column, so the
-        // push is legal) — a null-keyed sentinel would be filtered before
-        // ever advancing the clock and the stream's final window would
-        // stay open (caught by st_enrich, off-by-one-window vs its
-        // oracle). -1 matches no dimension row, so the join itself still
-        // drops the sentinel — AFTER the watermark has seen it.
-        val sentinel = s.createDataFrame(
-          java.util.Collections.singletonList(
-            Row(-1L, sentinelTs, -1L, SentinelType, 0.0, null)),
-          EventStream.eventsSchema)
-        sentinel.write.mode("append").parquet(in)
-        java.nio.file.Files.writeString(ok.toPath, "ok")
-      }
+    graft.Scratch.once(s, "stream-in", dir) {
+      val in = graft.Scratch.fresh(s, "stream-in", dir)
+      val ev = graft.sources.Tables.events(s, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      // staged data file COUNT (file stream source = 1 partition/file):
+      // r14 measured parallelism-many (33) files SLOWER for the stateful
+      // events replays (per-file open + 33-way-to-few shuffle) and kept
+      // ONE file; r15 A/B'd the middle ground — see EventStagingFiles
+      ev.repartition(EventStagingFiles).write.parquet(in)
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      val sentinelTs =
+        new java.sql.Timestamp(maxTs.getTime + 30L * 86400 * 1000L)
+      // the sentinel carries a NON-NULL value: predicates that don't
+      // reference the watermarked ts column push BELOW the watermark
+      // node (EventStream.preFilter scaladoc), so a query filtering on
+      // `value` (the heatmap's isNotNull) only advances its clock on
+      // rows that SURVIVE the filter — a null-valued sentinel would
+      // leave the final window open. Its own group/window still never
+      // emits (nothing ever closes it), and callers filter the
+      // SentinelType group besides.
+      // user_id is -1, NOT null: an INNER equi-join on user_id infers
+      // `isnotnull(user_id)` and Catalyst pushes it BELOW the watermark
+      // into the scan (user_id is not the event-time column, so the
+      // push is legal) — a null-keyed sentinel would be filtered before
+      // ever advancing the clock and the stream's final window would
+      // stay open (caught by st_enrich, off-by-one-window vs its
+      // oracle). -1 matches no dimension row, so the join itself still
+      // drops the sentinel — AFTER the watermark has seen it.
+      val sentinel = s.createDataFrame(
+        java.util.Collections.singletonList(
+          Row(-1L, sentinelTs, -1L, SentinelType, 0.0, null)),
+        EventStream.eventsSchema)
+      sentinel.write.mode("append").parquet(in)
       in
-    })
-
-  private val stagedDocInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   private def ensureStagedDocs(s: SparkSession, dir: String): String =
-    stagedDocInputs.computeIfAbsent(dir, _ => {
-      val srcP = new org.apache.hadoop.fs.Path(dir + "/documents.parquet")
-      val st = srcP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getFileStatus(srcP)
-      val in = "target/graft-stream-q/docs-v2/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-        s"-${st.getLen}-${st.getModificationTime}"
-      val ok = new java.io.File(in, "_STAGED_OK")
-      if (!ok.exists()) {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(in))
-        // parallelism-many staged files — see ensureStagedInput
-        graft.sources.Tables.documents(s, dir)
-          .repartition(s.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(in)
-        java.nio.file.Files.writeString(ok.toPath, "ok")
-      }
+    graft.Scratch.once(s, "stream-docs", dir) {
+      val in = graft.Scratch.fresh(s, "stream-docs", dir)
+      // parallelism-many staged files — see ensureStagedInput
+      graft.sources.Tables.documents(s, dir)
+        .repartition(s.sparkContext.defaultParallelism)
+        .write.parquet(in)
       in
-    })
+    }
 
   /** Scale-ADAPTIVE shuffle/state partitioning for one replay (opt guide
     * §2: derive partitioning from the input, never a constant): a
@@ -176,14 +143,12 @@ object StreamReplay {
     * of its event-time machinery: no watermark, no sentinel, because a
     * stateless operator emits every row inside the first micro-batch, so
     * the sink holds the complete result after `processAllAvailable`. Same
-    * per-(dir, generation) staging cache; same driver-oracle purpose —
+    * per-(session, dir) staging; same driver-oracle purpose —
     * the batch row's DuckDB SQL verifies the streaming path verbatim. */
   def replayDocs(s: SparkSession, dir: String, name: String)
                 (build: DataFrame => DataFrame): DataFrame = {
     val in = ensureStagedDocs(s, dir)
-    val stage = "target/graft-stream-q/" + name + "/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+    val stage = graft.Scratch.fresh(s, "stream/" + name, dir)
     val schema = graft.sources.Tables.documents(s, dir).schema
     withAdaptiveShuffle(s, in) {
       val out = build(s.readStream.schema(schema).parquet(in))
@@ -198,7 +163,7 @@ object StreamReplay {
     s.read.parquet(stage + "/out")
   }
 
-  /** Stage `events` (cached per dir — data + sentinel), run
+  /** Stage `events` (once per session and dir — data + sentinel), run
     * `build(stream)` to a parquet sink with `processAllAvailable`, and
     * return the sink contents. Callers filter out the sentinel's own group
     * (its window can never close, so it should never emit — the filter is
@@ -206,9 +171,7 @@ object StreamReplay {
   def replayEvents(s: SparkSession, dir: String, name: String)
                   (build: DataFrame => DataFrame): DataFrame = {
     val in = ensureStagedInput(s, dir)
-    val stage = "target/graft-stream-q/" + name + "/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+    val stage = graft.Scratch.fresh(s, "stream/" + name, dir)
     withAdaptiveShuffle(s, in) {
       val out = build(EventStream.read(s, in))
       val query = out.writeStream.format("parquet")

@@ -98,7 +98,7 @@ object Stress {
     val emb10 = (0 until 10)
       .map(i => emb.withColumn("vec_id", col("vec_id") + lit(i.toLong * 100000000L)))
       .reduce(_ union _)
-    val pqPath = "target/graft-stress-ivfpq"
+    val pqPath = graft.Scratch.fresh(spark, "stress-ivfpq", dir)
     var cents: Seq[(Int, Seq[Double])] = null
     var books: Seq[Seq[(Int, Seq[Double])]] = null
     time("s9_ivfpq_build_10x") {
@@ -116,8 +116,7 @@ object Stress {
     // compaction at 10× events fragmented 8 ways: the driver metadata pass
     // + one rewrite job for all partitions; watch for linear scaling in
     // bytes, flat in partition count
-    val evPath = "target/graft-stress-compact"
-    graft.sources.EventStore.reset(spark, evPath)
+    val evPath = graft.Scratch.fresh(spark, "stress-compact", dir)
     val ev = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     val ev10 = (0 until 10)
@@ -252,8 +251,7 @@ object Stress {
     // fraction is the scale-invariant signal (it IS the scan cost at
     // 100 TB, where row groups are 128 MB instead of KBs); local NVMe
     // makes the wall-time delta a floor, not the headline.
-    val zPath = "target/graft-stress-zorder"
-    graft.sources.EventStore.reset(spark, zPath)
+    val zPath = graft.Scratch.fresh(spark, "stress-zorder", dir)
     time("c6_zorder_ingest_write_10x") {
       graft.sources.EventStore.createTable(
         ev10.repartitionByRange(64, col("ts")).sortWithinPartitions("ts"), zPath)

@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-import scala.util.{Random, Using}
+import scala.util.Random
 
 import org.apache.commons.io.FileUtils
 
@@ -35,16 +34,9 @@ class HermeticSpec extends AnyFunSuite {
 
   private def checksums(names: Seq[String]): Seq[(String, Row)] = {
     val dir = freshCopy()
+    // what the rows build lives in the session's scratch root
     try names.map(n => n -> Bench.evaluate(SparkEntry.queries(n)(spark, dir)))
-    finally {
-      // the copy, and the fixtures and stores rows keyed by its path
-      val id = Paths.get(dir).getParent.getFileName.toString.stripPrefix("graft-")
-      val keyed = Seq("target", "spark-warehouse").map(Paths.get(_))
-        .filter(Files.isDirectory(_))
-        .flatMap(d => Using.resource(Files.walk(d, 3))(_.iterator.asScala.toList))
-        .filter(_.getFileName.toString.contains(id))
-      (Paths.get(dir).getParent +: keyed).foreach(p => FileUtils.deleteQuietly(p.toFile))
-    }
+    finally FileUtils.deleteQuietly(Paths.get(dir).getParent.toFile)
   }
 
   test("a seeded shuffle of rows, each fixture read before it is built, matches registry order") {
